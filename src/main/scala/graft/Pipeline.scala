@@ -43,22 +43,14 @@ object Pipeline {
       arrangePartitions: Option[Int] = None,
       // CANONICAL-BUCKET layout (opt-in): when Some(B), the assign /
       // nodes / edges snapshots gain a cb = pmod(canonicalId, B)
-      // partition column, which is what lets an epoch-pinned ingest
-      // REWRITE ONLY THE BUCKETS whose canonical components changed
-      // (Snapshots.stagePatch) instead of recomputing the tables
-      // globally. B is baked into the snapshot layout (recorded in the
-      // manifests); size it so one bucket ≈ a comfortable task input
-      // at the corpus scale — B is the knob that keeps per-merge patch
-      // IO ≈ |touched buckets| × corpus/B as the corpus grows (the
-      // same sizing contract as maxPartitionBytes). None (default) =
-      // today's layout, zero cost to non-incremental runs.
+      // partition column, and epoch-pinned ingests take the O(delta)
+      // merge-on-read tail (see deferMerges) instead of recomputing
+      // the tables globally. B is baked into the snapshot layout
+      // (recorded in the manifests, checked by every pinned ingest);
+      // size it so one bucket ≈ a comfortable task input at the corpus
+      // scale (the same sizing contract as maxPartitionBytes). None
+      // (default) = today's layout, zero cost to non-incremental runs.
       canonBuckets: Option[Int] = None,
-      // Use the O(delta) canonicalize tail on pinned ingests (driver
-      // union-find over the delta's component-pair graph + bucket
-      // patches). Requires canonBuckets on the base run; falls back to
-      // the global tail when preconditions fail. false = always global
-      // (the A/B lever IncrementalBench measures).
-      incrementalCanon: Boolean = true,
       // Refuse a pinned ingest whose census drift exceeds this bound
       // (fraction of the delta's distinct (pred, shingle) keys whose
       // hot/stop classification differs between the pinned census and
@@ -73,34 +65,33 @@ object Pipeline {
       // near-cap keys classified correctly (row-sampling does not;
       // see censusDrift).
       driftSample: Double = 1.0,
-      // Append-maintenance trigger for the O(delta) tail: after a
-      // patched ingest, any of assign/nodes/edges whose net append
-      // rows exceed this fraction of the table folds into a fresh
-      // FULL snapshot (Snapshots.compact — the Iceberg
-      // rewrite_data_files shape). Amortization: a fold costs
-      // O(table) but only fires every ~frac·table/delta ingests, so
-      // the amortized per-ingest cost stays O(delta/frac); between
-      // folds, tiered tombstoned append sets keep per-ingest append
-      // work O(delta·log). None (default) = never fold here — run
+      // Fold trigger for the merge-on-read tail: after a pinned
+      // ingest, if the append rows of any of assign/nodes/edges (or
+      // the canon log's rows, against assign) reach this fraction of
+      // the table, all three fold into fresh FULL snapshots with the
+      // log applied (compactTail → Snapshots.compact — the Iceberg
+      // rewrite_data_files shape). Amortization: a fold costs O(table)
+      // but only fires every ~frac·table/delta ingests, so the
+      // amortized per-ingest cost stays O(delta/frac); between folds
+      // the tiered append sets keep per-ingest append work
+      // O(delta·log). None (default) = never fold here — run
       // compactTail as an explicit maintenance job instead, the
       // Iceberg operational shape.
       compactAppendFrac: Option[Double] = None,
-      // MERGE-ON-READ canonicalization for pinned ingests (requires
-      // canonBuckets + incrementalCanon). The copy-on-write tail
-      // rewrites every bucket a merge touches; merge coverage is
-      // ≈ B·(1−e^(−merges/B)), so in the FREQUENT-SMALL-INGEST regime
-      // even a few hundred merges force a large-fraction table
-      // rewrite per micro-batch (SteadyStateBench measured ~45% of
-      // the table per 500-file delta). With deferMerges the ingest
-      // writes only O(delta) appends plus a tiny compressed CANON LOG
-      // (old root → new root, single-hop); readers resolve stale
-      // canonicals through one broadcast join (Pipeline.readNodes /
-      // readEdges — nodes additionally re-aggregate, which their
-      // schema combines associatively), and compactTail folds the log
-      // physically past compactAppendFrac. The LSM/Iceberg
-      // merge-on-read trade: O(delta) writes, a bounded read tax
-      // until the next fold.
-      deferMerges: Boolean = false,
+      // MERGE-ON-READ canonicalization for pinned ingests over a
+      // canonBuckets layout (default on). The ingest writes only
+      // O(delta) appends plus a tiny compressed CANON LOG (old root →
+      // new root, single-hop); readers resolve stale canonicals
+      // through one broadcast join (Pipeline.readNodes / readEdges —
+      // nodes additionally re-aggregate, which their schema combines
+      // associatively), and compactTail folds the log physically past
+      // compactAppendFrac. The LSM/Iceberg merge-on-read trade:
+      // O(delta) writes, a bounded read tax until the next fold.
+      // false = apply merges through the global tail (global CC + full
+      // assign/nodes/edges rewrite), which also clears a dirty log.
+      // The global tail stays the automatic fallback whenever the
+      // O(delta) preconditions fail.
+      deferMerges: Boolean = true,
       // Consolidate a lineage stage (entities / link_edges /
       // ep_shingles / ep_keys) into a fresh full version whenever its
       // delta count exceeds this, at the START of the next pinned
@@ -220,7 +211,7 @@ object Pipeline {
     // deterministic per-partition lineage and co-locates each repo's
     // files (north star verbatim).
     // Extract-stage layout choices are write-cost choices at 10^12
-    // files (all WriteProbe-measured):
+    // files (all measured in single-thread write A/Bs at 200k files):
     //  - subj ("repo/path") is derivable — dropped on write,
     //    re-derived on read (~15% fewer bytes, ~20% less write wall);
     //  - partitioned by the quarantine FLAG, not by pred: the only
@@ -546,11 +537,11 @@ object Pipeline {
       })
     val deltaLinkRows = deltaRowsOf(runDir, "link_edges", runId)
 
-    // 5. canonicalize + materialize: O(delta) bucket patches when the
-    // layout and bounds allow (see incrementalCanonicalize), else the
-    // global tail over the full (narrow) unions
+    // 5. canonicalize + materialize: the O(delta) merge-on-read tail
+    // when the layout and bounds allow (see mergeOnReadTail), else
+    // the global tail over the full (narrow) unions
     val ccIters = graft.store.IOStat.timed("pin.canon")(
-      incrementalCanonicalize(spark, runDir, runId, cfg,
+      mergeOnReadTail(spark, runDir, runId, cfg,
         deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows))
       .getOrElse {
         val allTriples = Snapshots.versions(runDir, "extract")
@@ -566,61 +557,61 @@ object Pipeline {
   }
 
   // ------------------------------------------------------------------
-  // O(delta) canonicalize tail. The pinned path above made extraction
-  // and linking delta-proportional, but a global CC + full rewrite of
-  // assign/nodes/edges per ingest reads AND writes the whole corpus —
-  // at daily ingests over 10^12 files that tail IS the cost. The
-  // observation that makes it incremental: delta link edges can only
+  // O(delta) canonicalize tail: MERGE-ON-READ. The pinned path above
+  // made extraction and linking delta-proportional, but a global CC +
+  // full rewrite of assign/nodes/edges per ingest reads AND writes the
+  // whole corpus — at daily ingests over 10^12 files that tail IS the
+  // cost. The observation that makes it incremental: delta link edges
+  // can only
   //   (a) land inside one existing component — a no-op, or
   //   (b) MERGE components — and the set of touched components is
   //       bounded by the delta edge count.
   // So: resolve the delta edges' endpoints to their current canonical
   // ids (ONE broadcast-filtered narrow scan of the stored assign
-  // table — the same probe-scan shape as the stored-key scans above),
-  // union-find the resulting component-pair graph ON THE DRIVER
-  // (bounded by the delta, same driver-capacity contract as
-  // ConnectedComponents' local fast path), then publish COPY-ON-WRITE
-  // PATCHES (Snapshots.stagePatch) that rewrite only the cb buckets
-  // whose components changed:
-  //   assign — rewrite buckets of merged-away roots (their member
-  //            rows remap to the new root and leave the bucket);
-  //            append the delta entities' rows;
-  //   nodes  — rewrite buckets of every old root in the pair graph
-  //            (absorbed rows vanish, absorbing rows recombine);
-  //            merged rows rebuild from the constituent node rows'
-  //            (canonicalNorm, canonical) argmin structs + the delta
-  //            members' aggregate — min/min/sum are associative, so
-  //            NO member rows are read;
-  //   edges  — rewrite buckets of merged-away roots (remap
-  //            canonicalId); append the delta triples' edges.
-  // Per-ingest IO = |touched buckets| × corpus/B reads + delta-sized
-  // writes; Config.canonBuckets is the knob that holds bucket size
-  // flat as the corpus grows. Equality with the global tail is
-  // spec-gated (PipelineSpec) and the path is oracle-gated end to end
-  // (kg_nodes_pinned).
+  // table — the same probe-scan shape as the stored-key scans above —
+  // then through the dirty canon log), union-find the resulting
+  // component-pair graph ON THE DRIVER (bounded by the delta, same
+  // driver-capacity contract as ConnectedComponents' local fast
+  // path), and publish:
+  //   assign/nodes/edges — APPEND-ONLY snapshots (Snapshots
+  //            .stageAppend): the delta entities' rows with their
+  //            final canonical, the delta members' node aggregates,
+  //            and the delta triples' edges. No stored row is
+  //            rewritten, so a merged-away root's stored rows stay
+  //            stale;
+  //   canon_log — the compressed single-hop remap of every root
+  //            merged away since the last fold (old root → current
+  //            root), published LAST as the ingest's commit record.
+  // Readers resolve stale canonicals through the log (readNodes /
+  // readEdges); compactTail applies it physically past the fold
+  // threshold. Per-ingest IO = a non-identity probe + delta-sized
+  // writes, whatever the merge count. Equality with the global tail
+  // and a from-scratch run is spec-gated (PipelineSpec), and the path
+  // is oracle-gated end to end (kg_nodes_pinned: a resolving read
+  // through a dirty log; kg_nodes_deferred: after the fold).
   // ------------------------------------------------------------------
 
-  /** Returns Some(ccIterations=0) when the incremental tail ran, None
-    * when the caller must fall back to the global tail: canonBuckets
-    * unset or mismatched with the stored layout, delta beyond the
-    * driver/broadcast bounds, or a crash-retry that finds the three
-    * tail stages PARTIALLY patched by this runId (the pair graph can
-    * only be derived from the pre-patch assign, so a half-applied
-    * ingest recovers through the global tail — correct, just not
-    * O(delta)). A FULLY patched retry is a no-op (idempotent per
-    * runId, like every appended stage).
+  /** Returns Some(ccIterations=0) when the merge-on-read tail ran,
+    * None when the caller must fall back to the global tail:
+    * deferMerges off, canonBuckets unset or mismatched with the stored
+    * layout, delta or canon log beyond the driver/broadcast bounds, or
+    * a crash-retry that finds this runId's tail PARTIALLY applied (the
+    * pair graph can only be derived from the pre-ingest state, so a
+    * half-applied ingest recovers through the global tail — correct,
+    * just not O(delta)). A FULLY applied retry is a no-op (idempotent
+    * per runId, like every appended stage).
     */
-  private def incrementalCanonicalize(spark: SparkSession, runDir: String,
-                                      runId: String, cfg: Config,
-                                      deltaTriples: DataFrame,
-                                      newEnts: DataFrame,
-                                      deltaLinks: DataFrame,
-                                      deltaLinkRows: Long,
-                                      deltaExtractRows: Long): Option[Int] = {
+  private def mergeOnReadTail(spark: SparkSession, runDir: String,
+                              runId: String, cfg: Config,
+                              deltaTriples: DataFrame,
+                              newEnts: DataFrame,
+                              deltaLinks: DataFrame,
+                              deltaLinkRows: Long,
+                              deltaExtractRows: Long): Option[Int] = {
     import spark.implicits._
     val Tail = Seq("assign", "nodes", "edges")
     val b = cfg.canonBuckets match {
-      case Some(v) if cfg.incrementalCanon => v
+      case Some(v) if cfg.deferMerges => v
       case _ => return None
     }
     // a tail stage whose live manifest is missing (crash window) can
@@ -629,36 +620,24 @@ object Pipeline {
     if (!Tail.forall(st => Snapshots.isComplete(runDir, st))) return None
     if (!Tail.forall(st => Snapshots.readManifest(runDir, st)
       .metrics.get("canonBuckets").contains(b.toString))) return None
-    // bounds: the probe set, delta maps, and pair graph all ride the
-    // driver/broadcast — the same capacity contracts as the rest of
-    // the pinned path (BroadcastableRightRows) and the CC fast path
-    // (ccLocalThreshold)
+    // bounds: the probe set, delta maps, pair graph and canon log all
+    // ride the driver/broadcast — the same capacity contracts as the
+    // rest of the pinned path (BroadcastableRightRows) and the CC fast
+    // path (ccLocalThreshold)
     if (deltaExtractRows > SkewJoin.BroadcastableRightRows ||
       deltaLinkRows > cfg.ccLocalThreshold) return None
-    val deferred = cfg.deferMerges
     val hadDirtyLog = canonLogDirty(runDir)
-    // a dirty canon log means stored canonicals are stale: the
-    // copy-on-write patch tail would bake the staleness into rewritten
-    // buckets — only the deferred tail (which resolves through the
-    // log) or the global tail (which recomputes from source and
-    // clears it) may run
-    if (hadDirtyLog && !deferred) return None
-    val prevLog: Map[Long, Long] =
-      if (deferred) canonLogMap(spark, runDir) else Map.empty
+    val prevLog = canonLogMap(spark, runDir)
     if (prevLog.size > cfg.ccLocalThreshold) return None
-    // crash-retry idempotence. In deferred mode the canon log is
-    // published LAST and acts as the ingest's commit record — a
-    // crash anywhere before it leaves a PARTIAL application, healed
-    // by the global tail exactly like a half-patched CoW ingest.
+    // crash-retry idempotence: the canon log is published LAST and
+    // acts as the ingest's commit record — a crash anywhere before it
+    // leaves a PARTIAL application, healed by the global tail
     val done = Tail.map(st =>
-      Snapshots.readManifest(runDir, st).runId == runId) ++
-      (if (deferred) Seq(Snapshots.isComplete(runDir, CanonLogStage) &&
+      Snapshots.readManifest(runDir, st).runId == runId) :+
+      (Snapshots.isComplete(runDir, CanonLogStage) &&
         Snapshots.readManifest(runDir, CanonLogStage).runId == runId)
-      else Nil)
     if (done.forall(identity)) return Some(0)
     if (done.exists(identity)) return None
-
-    def bucketOf(id: Long): Int = (((id % b) + b) % b).toInt
 
     // --- 1. ONE narrow probe of the stored assign table, pruned to
     // the ident=false partitions: current canonical of every delta
@@ -668,12 +647,12 @@ object Pipeline {
     // every consumer defaults a missing id to canonical = itself, so
     // scanning them only ever confirmed that default. The one thing
     // the full scan additionally established — does this endpoint
-    // EXIST in the stored corpus, i.e. should a merge remap STORED
-    // rows (oldRoots) or only delta rows (deltaMoved)? — is answered
-    // exactly by newEnts: extraction anti-joined duplicates away, so
-    // delta ids are disjoint from stored ids, and "old" = "not in
-    // newEnts". Probe IO is therefore O(non-identity rows), i.e.
-    // proportional to merge density, not corpus size.
+    // EXIST in the stored corpus, i.e. is it an OLD root whose stored
+    // rows a merge leaves stale, or a delta id? — is answered exactly
+    // by newEnts: extraction anti-joined duplicates away, so delta ids
+    // are disjoint from stored ids, and "old" = "not in newEnts".
+    // Probe IO is therefore O(non-identity rows), i.e. proportional to
+    // merge density, not corpus size.
     var tProbe = 0L; var tUf = 0L
     def timing[T](acc: Long => Unit)(body: => T): T = {
       val t0 = System.nanoTime(); val r = body
@@ -718,11 +697,9 @@ object Pipeline {
     // old endpoints (not in newIds) resolve through the probed
     // non-identity map, defaulting to canonical = self — identity
     // rows were pruned from the probe precisely because this default
-    // reconstructs them. Their canonical is an OLD root either way:
-    // a merge must remap stored rows, not just delta appends.
-    // stored canonicals resolve through the dirty canon log (deferred
-    // mode: prior merges were recorded, not rewritten — the stored
-    // value may be a merged-away root)
+    // reconstructs them — and then through the dirty canon log (prior
+    // merges were recorded, not rewritten: the stored value may be a
+    // merged-away root). Their canonical is an OLD root either way.
     def resolve(c: Long): Long = prevLog.getOrElse(c, c)
     def rep(e: Long): Long =
       if (newIds.contains(e)) e
@@ -745,261 +722,124 @@ object Pipeline {
           i += 2
         }
       })
-    // roots that actually merged (vs. delta edges that landed inside
-    // one existing component — no-ops)
+    // old roots that actually merged away (vs. delta edges that landed
+    // inside one existing component — no-ops)
     val mergedOldRoots = touched.keysIterator
       .filter(r => oldRoots.contains(r) && find(r) != r).toArray
-    val changedOldRoots = touched.keysIterator
-      .filter(oldRoots.contains).toArray // absorbed OR absorbing
     val deltaMoved = touched.keysIterator
       .filterNot(oldRoots.contains).toArray // delta ids in real merges
 
     // --- 3. driver-bounded maps shipped back as broadcast frames
-    val rootMapDf = mergedOldRoots.toSeq
-      .map(r => (r, find(r))).toDF("canonicalId", "newCanon")
     val deltaCompDf = deltaMoved.toSeq
       .map(d => (d, find(d))).filter { case (d, f) => f != d }
       .toDF("entityId", "comp")
     // final canonical of every distinct delta-triple form (old forms:
-    // stored canonical, then through the root remap; new forms: their
-    // union-find root or themselves)
+    // stored canonical, then through the log and this ingest's
+    // union-find; new forms: their union-find root or themselves)
     val finalCanonDf = tripleIds.toSeq.map { id =>
       (id, find(resolve(oldCanon.getOrElse(id, id))))
     }.toDF("entityId", "fc")
 
     val cbOf = (c: org.apache.spark.sql.Column) =>
       pmod(c, lit(b.toLong)).cast("int")
-    def dirs(roots: Array[Long]): Seq[String] =
-      roots.map(bucketOf).distinct.toSeq.map(v => s"cb=$v")
-    def buckets(roots: Array[Long]): Seq[Int] =
-      roots.map(bucketOf).distinct.toSeq
     // delta appends sized by rows (~4M narrow rows per file):
     // repartition(1) would funnel a large delta into one giant
     // single-task file at real ingest sizes
     val appendParts = math.min(64L,
       math.max(1L, deltaExtractRows / 4000000L)).toInt
-    def tailMetrics = Map(
+    val tailMetrics = Map(
       "canonBuckets" -> b.toString,
       "ccIterations" -> "0",
       "merges" -> mergedOldRoots.length.toString,
       "probeSec" -> f"${tProbe / 1e9}%.2f",
       "ufSec" -> f"${tUf / 1e9}%.2f",
-      "delta" -> "patch")
+      "delta" -> "append")
 
-    // delta frames SHARED by both tails (one source of truth for the
-    // canonical-assignment semantics — the deferred and CoW graphs
-    // must never diverge): every delta entity row with its final
-    // canonical, and every delta triple resolved to its final edge
+    // --- 4. the delta's rows at their final canonicals. Partition
+    // columns carry the READ-BACK types (ident: string, cb: int), as
+    // Snapshots.stageAppend requires.
     val deltaAssign = newEnts
       .join(broadcast(deltaCompDf), Seq("entityId"), "left")
       .select($"pred", $"obj", $"norm", $"entityId",
         coalesce($"comp", $"entityId").as("canonicalId"))
-    val deltaE = deltaTriples
+    val assignApp = deltaAssign
+      .withColumn("ident",
+        ($"canonicalId" === $"entityId").cast("string"))
+      .withColumn("cb", cbOf($"canonicalId"))
+      .repartition(appendParts).sortWithinPartitions($"cb")
+    val nodesApp = deltaAssign.groupBy($"canonicalId")
+      .agg(min(struct($"norm", $"obj")).as("m"),
+        min($"pred").as("kind"), count(lit(1)).as("memberCount"))
+      .select($"canonicalId", $"m.obj".as("canonical"),
+        $"m.norm".as("canonicalNorm"), $"kind", $"memberCount")
+      .withColumn("cb", cbOf($"canonicalId"))
+      .repartition(appendParts).sortWithinPartitions($"cb", $"kind")
+    val edgesApp = deltaTriples
       .withColumn("subj", concat($"repo", lit("/"), $"path"))
       .withColumn("entityId", Linking.idCol($"pred", $"obj"))
       .join(broadcast(finalCanonDf), Seq("entityId"), "left")
       .select($"subj", $"pred",
         coalesce($"fc", $"entityId").as("canonicalId"),
         $"conf", $"repo", $"path", $"commit")
+      .withColumn("cb", cbOf($"canonicalId"))
+      .repartition(appendParts).sortWithinPartitions($"cb", $"pred")
 
-    // --- DEFERRED TAIL (Config.deferMerges): merge-on-read. No
-    // bucket rewrite at all — the three tables take O(delta)
-    // append-only patches and this ingest's merges are RECORDED in
-    // the compressed canon log instead of applied. Readers resolve
-    // (readNodes/readEdges); compactTail applies the log physically
-    // past the threshold. The log publishes LAST as the ingest's
-    // commit record (see the done-check above).
-    if (deferred) {
-      val assignApp = deltaAssign
-        .withColumn("ident",
-          ($"canonicalId" === $"entityId").cast("string"))
-        .withColumn("cb", cbOf($"canonicalId"))
-        .repartition(appendParts).sortWithinPartitions($"cb")
-      val nodesApp = deltaAssign.groupBy($"canonicalId")
-        .agg(min(struct($"norm", $"obj")).as("m"),
-          min($"pred").as("kind"), count(lit(1)).as("memberCount"))
-        .select($"canonicalId", $"m.obj".as("canonical"),
-          $"m.norm".as("canonicalNorm"), $"kind", $"memberCount")
-        .withColumn("cb", cbOf($"canonicalId"))
-        .repartition(appendParts).sortWithinPartitions($"cb", $"kind")
-      val edgesApp = deltaE
-        .withColumn("cb", cbOf($"canonicalId"))
-        .repartition(appendParts).sortWithinPartitions($"cb", $"pred")
+    // captured BEFORE the appends publish: the live nodes manifest is
+    // about to gain this delta's constituent rows
+    val prevLogical =
+      if (hadDirtyLog)
+        Snapshots.readManifest(runDir, CanonLogStage)
+          .metrics("logicalNodes").toLong
+      else Snapshots.readManifest(runDir, "nodes").rows
 
-      // captured BEFORE the appends publish: the live nodes manifest
-      // is about to gain this delta's constituent rows
-      val prevLogical =
-        if (hadDirtyLog)
-          Snapshots.readManifest(runDir, CanonLogStage)
-            .metrics("logicalNodes").toLong
-        else Snapshots.readManifest(runDir, "nodes").rows
-
-      def appendOnly(st: String, partBy: Seq[String],
-                     app: DataFrame): Unit =
-        Snapshots.stagePatch(spark, runDir, st, runId, Nil, partBy,
-          tailMetrics + ("defer" -> "true")) {
-          app.filter(lit(false))
-        } { app }
-
-      parallelRun(Seq(
-        () => appendOnly("assign", Seq("ident", "cb"), assignApp),
-        () => appendOnly("nodes", Seq("cb"), nodesApp),
-        () => appendOnly("edges", Seq("cb"), edgesApp)))
-
-      // compressed single-hop: prior targets re-resolve through this
-      // ingest's union-find, so a reader never follows a chain
-      val fullLog = prevLog.map { case (k, v) => (k, find(v)) } ++
-        mergedOldRoots.map(r => (r, find(r)))
-      // logical node count by driver arithmetic (stored node ROWS
-      // over-count merged components until the next fold): previous
-      // logical count, plus delta components that created a NEW root,
-      // minus old roots merged away
-      val newDeltaRoots = {
-        val seen = scala.collection.mutable.LongMap.empty[Unit]
-        newIds.keysIterator.foreach { e =>
-          val r = find(e); if (newIds.contains(r)) seen(r) = ()
-        }
-        seen.size
-      }
-      val logical = prevLogical + newDeltaRoots - mergedOldRoots.length
-      Snapshots.stage(spark, runDir, CanonLogStage, runId,
-        resume = false,
-        metrics = tailMetrics ++ Map("dirty" -> "true",
-          "logicalNodes" -> logical.toString)) {
-        fullLog.toSeq.toDF("oldRoot", "newRoot").coalesce(1)
-      }
-      cfg.compactAppendFrac.foreach(compactTail(spark, runDir, runId, _))
-      return Some(0)
-    }
-
-    // --- 4. assign patch: member rows of merged-away roots remap (and
-    // leave their bucket — those buckets rewrite); delta entity rows
-    // append wherever their canonical lands
-    val aBuckets = buckets(mergedOldRoots)
-    // patch writes: rewritten buckets repartition on the dir columns
-    // (files ≈ rewritten dirs, not tasks × dirs); everything landing
-    // OUTSIDE a rewritten bucket — delta entities hash anywhere —
-    // goes to the snapshot's unpartitioned append set (see
-    // Snapshots.stagePatch: one file set per ingest instead of ~B
-    // scattered dir touches, which measured as THE dominant patch
-    // cost). Partition columns in the append set carry the
-    // READ-BACK types (ident: string, cb: int).
-    def inRew(buckets: Seq[Int]) =
-      if (buckets.isEmpty) lit(false) else $"cb".isin(buckets: _*)
-    def assignContent = {
-      val oldRows = assignOld
-        .filter(inRew(aBuckets))
-        .select($"pred", $"obj", $"norm", $"entityId", $"canonicalId")
-      val remapped = oldRows
-        .join(broadcast(rootMapDf), Seq("canonicalId"), "left")
-        .select($"pred", $"obj", $"norm", $"entityId",
-          coalesce($"newCanon", $"canonicalId").as("canonicalId"))
-      remapped.unionByName(deltaAssign)
-        .withColumn("ident",
-          ($"canonicalId" === $"entityId").cast("string"))
-        .withColumn("cb", cbOf($"canonicalId"))
-    }
-    def patchAssign(): Unit =
-      Snapshots.stagePatch(spark, runDir, "assign", runId,
-        dirs(mergedOldRoots), Seq("ident", "cb"), tailMetrics) {
-        assignContent.filter(inRew(aBuckets)).repartition($"ident", $"cb")
-      } {
-        assignContent.filter(!inRew(aBuckets))
-          .repartition(appendParts).sortWithinPartitions($"cb")
-      }
-
-    // --- 5. nodes patch: every old root in a real merge loses or
-    // recombines its row; merged rows rebuild from the constituent
-    // rows + the delta members' aggregate (no member rows read)
-    val nodesOld = Snapshots.read(spark, runDir, "nodes")
-    val nBuckets = buckets(changedOldRoots)
-    val changedDf = changedOldRoots.toSeq
-      .map(r => (r, find(r))).toDF("canonicalId", "fRoot")
-    def nodesContent = {
-      val pruned = nodesOld
-        .filter(inRew(nBuckets))
-        .select($"canonicalId", $"canonical", $"canonicalNorm", $"kind",
-          $"memberCount")
-      val keep = pruned
-        .join(broadcast(changedDf.select($"canonicalId")), Seq("canonicalId"),
-          "left_anti")
-      val oldContrib = pruned
-        .join(broadcast(changedDf), Seq("canonicalId"))
-        .select($"fRoot".as("canonicalId"),
-          struct($"canonicalNorm".as("norm"), $"canonical".as("obj")).as("m"),
-          $"kind", $"memberCount")
-      val deltaContrib = deltaAssign.groupBy($"canonicalId")
-        .agg(min(struct($"norm", $"obj")).as("m"),
-          min($"pred").as("kind"), count(lit(1)).as("memberCount"))
-      val combined = oldContrib.unionByName(deltaContrib)
-        .groupBy($"canonicalId")
-        .agg(min($"m").as("m"), min($"kind").as("kind"),
-          sum($"memberCount").as("memberCount"))
-        .select($"canonicalId", $"m.obj".as("canonical"),
-          $"m.norm".as("canonicalNorm"), $"kind", $"memberCount")
-      keep.unionByName(combined).withColumn("cb", cbOf($"canonicalId"))
-    }
-    def patchNodes(): Unit =
-      Snapshots.stagePatch(spark, runDir, "nodes", runId,
-        dirs(changedOldRoots), Seq("cb"), tailMetrics) {
-        nodesContent.filter(inRew(nBuckets))
-          .repartition($"cb").sortWithinPartitions($"cb", $"kind")
-      } {
-        nodesContent.filter(!inRew(nBuckets))
-          .repartition(appendParts).sortWithinPartitions($"cb", $"kind")
-      }
-
-    // --- 6. edges patch: stored edge rows change ONLY when their
-    // canonicalId was a merged-away root (absorbing roots keep their
-    // id); the delta's own triples append
-    val edgesOld = Snapshots.read(spark, runDir, "edges")
-    def edgesContent = {
-      val pruned = edgesOld
-        .filter(inRew(aBuckets))
-        .select($"subj", $"pred", $"canonicalId", $"conf", $"repo",
-          $"path", $"commit")
-      val remapped = pruned
-        .join(broadcast(rootMapDf), Seq("canonicalId"), "left")
-        .select($"subj", $"pred",
-          coalesce($"newCanon", $"canonicalId").as("canonicalId"),
-          $"conf", $"repo", $"path", $"commit")
-      remapped.unionByName(deltaE).withColumn("cb", cbOf($"canonicalId"))
-    }
-    def patchEdges(): Unit =
-      Snapshots.stagePatch(spark, runDir, "edges", runId,
-        dirs(mergedOldRoots), Seq("cb"), tailMetrics) {
-        edgesContent.filter(inRew(aBuckets))
-          .repartition($"cb").sortWithinPartitions($"cb", $"pred")
-      } {
-        edgesContent.filter(!inRew(aBuckets))
-          .repartition(appendParts).sortWithinPartitions($"cb", $"pred")
-      }
-
-    // --- 7. publish the three patches CONCURRENTLY: each touches
-    // ONLY its own stage (the pre-patch frames above were assembled
-    // from the pre-patch manifests, pinned to their file lists), so
-    // the three narrow publish jobs overlap instead of serializing
-    // three rounds of write + commit + footer latency — the dominant
-    // term of the O(delta) tail once the data is delta-sized. Crash
-    // semantics are unchanged: ANY partially-patched subset (now any
-    // of 2^3 - 2 instead of a prefix) is caught by the
-    // `done.exists(identity)` guard above and heals through the
-    // global tail. Each future is awaited — a failure propagates
-    // only after all three publishes finished or failed, so no write
-    // is still in flight when the caller sees the error.
+    // --- 5. publish the three appends CONCURRENTLY: each touches ONLY
+    // its own stage, so the three narrow publish jobs overlap instead
+    // of serializing three rounds of write + commit + footer latency.
+    // ANY partially-published subset is caught by the done-check above
+    // on retry and heals through the global tail.
+    def append(st: String, partBy: Seq[String], app: DataFrame): Unit =
+      Snapshots.stageAppend(spark, runDir, st, runId, partBy,
+        tailMetrics + ("defer" -> "true"))(app)
     parallelRun(Seq(
-      () => patchAssign(), () => patchNodes(), () => patchEdges()))
+      () => append("assign", Seq("ident", "cb"), assignApp),
+      () => append("nodes", Seq("cb"), nodesApp),
+      () => append("edges", Seq("cb"), edgesApp)))
+
+    // --- 6. the canon log, LAST (commit record). Compressed
+    // single-hop: prior targets re-resolve through this ingest's
+    // union-find, so a reader never follows a chain
+    val fullLog = prevLog.map { case (k, v) => (k, find(v)) } ++
+      mergedOldRoots.map(r => (r, find(r)))
+    // logical node count by driver arithmetic (stored node ROWS
+    // over-count merged components until the next fold): previous
+    // logical count, plus delta components that created a NEW root,
+    // minus old roots merged away
+    val newDeltaRoots = {
+      val seen = scala.collection.mutable.LongMap.empty[Unit]
+      newIds.keysIterator.foreach { e =>
+        val r = find(e); if (newIds.contains(r)) seen(r) = ()
+      }
+      seen.size
+    }
+    val logical = prevLogical + newDeltaRoots - mergedOldRoots.length
+    Snapshots.stage(spark, runDir, CanonLogStage, runId,
+      resume = false,
+      metrics = tailMetrics ++ Map("dirty" -> "true",
+        "logicalNodes" -> logical.toString)) {
+      fullLog.toSeq.toDF("oldRoot", "newRoot").coalesce(1)
+    }
     cfg.compactAppendFrac.foreach(compactTail(spark, runDir, runId, _))
     Some(0)
   }
 
-  /** Append maintenance for the patched tail tables (see
-    * Config.compactAppendFrac): fold any of assign/nodes/edges whose
-    * net append rows exceed `frac` of the table into a fresh full
-    * snapshot, re-clustered the way the full-run publishes cluster
-    * them. Idempotent per runId (a crash between folds re-runs only
-    * the stages still over threshold; a re-run after all folds is a
-    * no-op). Returns the stages folded.
+  /** Fold maintenance for the merge-on-read tail tables (see
+    * Config.compactAppendFrac): when any of assign/nodes/edges has
+    * append rows reaching `frac` of the table, or the dirty canon log
+    * reaches `frac` of assign, fold the tables into fresh full
+    * snapshots with the log applied (re-clustered the way the full-run
+    * publishes cluster them) and clear the log. Idempotent per runId
+    * (a crash between folds re-folds all three on retry; a re-run
+    * after all folds is a no-op). Returns the stages folded.
     */
   def compactTail(spark: SparkSession, runDir: String, runId: String,
                   frac: Double): Seq[String] = {
@@ -1019,15 +859,12 @@ object Pipeline {
       val am = Snapshots.readManifest(runDir, "assign")
       am.rows > 0 && lm.rows.toDouble / am.rows >= frac
     }
-    // deferred mode folds ALL-OR-NOTHING: applying the log to one
-    // table while the others stay log-resolved would mix canonical
-    // spaces. (A crash between the folds and the log-clear below is
-    // harmless: re-resolving an already-folded table is a no-op —
-    // the log's keys no longer appear as canonicalIds.)
-    val toFold: Seq[String] =
-      if (dirty) { if (stages.exists(over) || logOver) stages else Nil }
-      else stages.filter(over)
-    if (toFold.isEmpty) return Nil
+    // folds are ALL-OR-NOTHING: applying a dirty log to one table
+    // while the others stay log-resolved would mix canonical spaces.
+    // (A crash between the folds and the log-clear below is harmless:
+    // re-resolving an already-folded table is a no-op — the log's keys
+    // no longer appear as canonicalIds.)
+    if (!stages.exists(over) && !logOver) return Nil
 
     def resolveIf(st: String, d: DataFrame): DataFrame =
       if (!dirty) d
@@ -1052,14 +889,13 @@ object Pipeline {
         .sortWithinPartitions(col("cb"), col("pred"))))
     // the folds publish DISJOINT stages from already-published inputs
     // — run them concurrently, same shape and crash contract as the
-    // tail-patch parallel publish in incrementalCanonicalize (each
-    // fold re-checks its own manifest; a crashed subset re-folds on
-    // retry, an already-folded stage is below threshold and skipped)
+    // tail-append parallel publish in mergeOnReadTail (a crashed
+    // subset re-folds on retry while the log is still dirty)
     def fold(st: String): Unit = {
       val m = Snapshots.readManifest(runDir, st)
       val (appendRows, sets) = Snapshots.appendStats(m)
-      // carry the layout stamp: the next ingest's patch precondition
-      // reads canonBuckets off the live manifest
+      // carry the layout stamp: the next ingest's O(delta)
+      // precondition reads canonBuckets off the live manifest
       val keep = m.metrics.view
         .filterKeys(Set("canonBuckets", "epoch")).toMap
       Snapshots.compact(spark, runDir, st, runId,
@@ -1067,7 +903,7 @@ object Pipeline {
           "appendSetsFolded" -> sets.toString))(shapes(st))
       (): Unit
     }
-    parallelRun(toFold.map(st => () => fold(st)))
+    parallelRun(stages.map(st => () => fold(st)))
     if (dirty) {
       import spark.implicits._
       val logical = Snapshots.readManifest(runDir, CanonLogStage)
@@ -1078,7 +914,7 @@ object Pipeline {
         Seq.empty[(Long, Long)].toDF("oldRoot", "newRoot")
       }
     }
-    toFold
+    stages
   }
 
   /** LINEAGE maintenance: the pinned-ingest path unions a stage's
@@ -1509,8 +1345,8 @@ object Pipeline {
 
     // nodes and edges both derive from the PUBLISHED assign snapshot
     // and publish disjoint stages — run the two narrow materializations
-    // concurrently (same shape and crash contract as the tail-patch
-    // parallel publish in incrementalCanonicalize: resume re-checks
+    // concurrently (same shape and crash contract as the tail-append
+    // parallel publish in mergeOnReadTail: resume re-checks
     // each stage's own manifest, so any crashed subset heals)
     parallelRun(Seq(() => nodesStage(), () => edgesStage()))
 

@@ -907,15 +907,19 @@ object SparkEntry {
       }
       asksNodes(s, runDir)
     }),
-    // the EPOCH-PINNED ingest with the round-7 O(delta) canonicalize
-    // tail, under the hash gate: base run (bucketed layout) → pinEpoch
-    // → pinned ingest whose assign/nodes/edges are COPY-ON-WRITE BUCKET
-    // PATCHES (Pipeline.incrementalCanonicalize: driver union-find over
-    // the delta's component-pair graph; only changed cb buckets
-    // rewrite). The require below pins the patched path — a silent
-    // global fallback would still hash-match, and that is exactly what
-    // must not pass unnoticed. 'asks' is not a fuzzy pred, so the
-    // pinned census is empty and the norm-class twin is exact.
+    // the EPOCH-PINNED ingest with the O(delta) merge-on-read
+    // canonicalize tail, under the hash gate: base run (bucketed
+    // layout) → pinEpoch → pinned ingest whose assign/nodes/edges take
+    // APPEND-ONLY snapshots and whose merges land in the canon log
+    // (Pipeline.mergeOnReadTail: driver union-find over the
+    // delta's component-pair graph). Nothing folds afterwards, so the
+    // hash is taken through a RESOLVING read (Pipeline.readNodes
+    // joins the dirty log and re-aggregates) — the read path
+    // kg_nodes_deferred never hashes, because it folds first. The
+    // require below pins that path: a silent global fallback would
+    // still hash-match, and that is exactly what must not pass
+    // unnoticed. 'asks' is not a fuzzy pred, so the pinned census is
+    // empty and the norm-class twin is exact.
     "kg_nodes_pinned" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import sp.implicits._
@@ -926,8 +930,8 @@ object SparkEntry {
       // (Config.canonBuckets) — and B=64 at gate scale meant ~128
       // near-empty ident×cb partition dirs per publish, whose dynamic-
       // partition commit + footer reads dominated the stage walls
-      // (assign 1.7s of a 4.8s base run, PinProfile r8). B=16 keeps
-      // the patched-tail machinery identical (results are
+      // (assign 1.7s of a 4.8s base run; OPTIMIZATION_r08.md §10).
+      // B=16 keeps the O(delta) tail identical (results are
       // layout-independent) at a quarter the dir count.
       val cfg = graft.Pipeline.Config(resume = false,
         arrangePartitions = Some(4), canonBuckets = Some(16))
@@ -941,16 +945,17 @@ object SparkEntry {
             .as[SourceFile], runDir, "pin-delta", cfg)
       }
       require(graft.store.Snapshots.readManifest(runDir, "nodes")
-        .metrics.get("patched").contains("true"),
-        "kg_nodes_pinned must exercise the O(delta) patched tail, " +
-          "not the global fallback")
+        .metrics.get("defer").contains("true") &&
+        graft.Pipeline.canonLogDirty(runDir),
+        "kg_nodes_pinned must read through the merge-on-read tail's " +
+          "dirty canon log, not the global fallback")
       asksNodes(s, runDir)
     }),
     // ---- MERGE-ON-READ lifecycle under the hash gate: the pinned
-    // delta ingests with Config.deferMerges (append-only patches +
-    // canon log, zero bucket rewrites), then the threshold fold
-    // applies the log physically — the final nodes must still hash-
-    // match the norm-class twin
+    // delta ingests through the merge-on-read tail (append-only
+    // snapshots + canon log), then the threshold fold applies the log
+    // physically — the final nodes must still hash-match the
+    // norm-class twin
     "kg_nodes_deferred" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import sp.implicits._
@@ -960,7 +965,7 @@ object SparkEntry {
       // (quarter the partition dirs per publish AND per fold)
       val cfg = graft.Pipeline.Config(resume = false,
         arrangePartitions = Some(4), canonBuckets = Some(16),
-        deferMerges = true, compactAppendFrac = Some(1e-9))
+        compactAppendFrac = Some(1e-9))
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,
           filesDf.filter(col("doc_id") % 2 === 0).drop("doc_id")
@@ -970,16 +975,16 @@ object SparkEntry {
           filesDf.filter(col("doc_id") % 2 =!= 0).drop("doc_id")
             .as[SourceFile], runDir, "def-delta", cfg)
       }
-      // the ingest really deferred (an append-only patch version by
-      // this runId exists) AND the fold really applied+cleared the
+      // the ingest really deferred (an append-only version by this
+      // runId exists) AND the fold really applied+cleared the
       // log — no silent fallback on either side of the lifecycle
-      val deferredPatched = graft.store.Snapshots.versions(runDir, "nodes")
+      val deferredAppend = graft.store.Snapshots.versions(runDir, "nodes")
         .exists { v =>
           val m = graft.store.Snapshots
             .readManifestVersion(runDir, "nodes", v)
           m.runId == "def-delta" && m.metrics.get("defer").contains("true")
         }
-      require(deferredPatched &&
+      require(deferredAppend &&
         graft.store.Snapshots.readManifest(runDir, "nodes")
           .metrics.get("compacted").contains("true") &&
         !graft.Pipeline.canonLogDirty(runDir),
@@ -1694,7 +1699,7 @@ object SparkEntry {
     // what this twin cannot see and therefore checks. Shared verbatim
     // by all four orchestrations over the asks corpus: two-batch
     // global relink (kg_nodes_incremental), epoch-pinned ingest with
-    // the O(delta) patched tail (kg_nodes_pinned), single full run
+    // the O(delta) merge-on-read tail (kg_nodes_pinned), single full run
     // (kg_pipeline_nodes), and Structured-Streaming maintenance
     // (stream_kg_ingest).
     "kg_nodes_incremental" -> asksNormClassSql,

@@ -223,7 +223,7 @@ object Linking {
     // + 4-long struct). A 64-bit collision merges two unrelated
     // buckets — it can only ADD candidates (scored exactly
     // downstream), never drop one, so the recall analysis in
-    // [[lshEdgesImpl]] is a lower bound either way.
+    // [[lshEdges]] is a lower bound either way.
     val bandKeys = (0 until cfg.bands).map { b =>
       xxhash64(lit(b) +: col("pred") +: (0 until cfg.rowsPerBand).map(r =>
         col("sigs").getItem(b * cfg.rowsPerBand + r)): _*)
@@ -294,20 +294,6 @@ object Linking {
       .select(col("x").as("src"), col("y").as("dst"))
     star.unionByName(clique)
   }
-
-  /** Debug view of LSH pairs with distances (test use only). */
-  def lshEdges2Debug(ents: DataFrame, cfg: Config): Dataset[(Long, Long, Double)] = {
-    val spark = ents.sparkSession
-    import spark.implicits._
-    lshEdgesWithDist(ents, cfg).as[(Long, Long, Double)]
-  }
-
-  private[link] def lshEdgesWithDist(ents: DataFrame, cfg: Config): DataFrame =
-    lshEdgesImpl(ents, cfg, ents.count(), keepDist = true)
-
-  /** Path 2: banded-MinHash candidate generation + exact-Jaccard scoring. */
-  private[link] def lshEdges(ents: DataFrame, cfg: Config, n: Long): DataFrame =
-    lshEdgesImpl(ents, cfg, n, keepDist = false)
 
   /** Distinct character k-shingles of the padded norm, computed with
     * codegen'd higher-order functions (no UDF), REPRESENTED by their
@@ -428,8 +414,7 @@ object Linking {
     * rule).
     */
   private def scorePairs(cand: DataFrame, shingled: DataFrame,
-                         cfg: Config, keepDist: Boolean,
-                         shjHint: Boolean = false): DataFrame = {
+                         cfg: Config, shjHint: Boolean = false): DataFrame = {
     // join on entityId ALONE: candidates are within-pred by
     // construction (every generator buckets on pred), and entityId =
     // xxhash64(pred, obj) is unique per form, so the pred equi-term
@@ -457,14 +442,12 @@ object Linking {
     def hinted(df: DataFrame): DataFrame =
       if (shjHint) df.hint("SHUFFLE_HASH") else df
     val pairs = cand.select(col("src"), col("dst"))
-    val scored = pairs
+    pairs
       .join(hinted(sets.as("sa")), pairs("src") === col("sa.entityId"))
       .join(hinted(sets.as("sb")), pairs("dst") === col("sb.entityId"))
       .select(col("src"), col("dst"), (inter / uni).as("j"))
       .filter(col("j") >= cfg.threshold)
-    if (keepDist)
-      scored.select(col("src"), col("dst"), (lit(1.0) - col("j")).as("dist"))
-    else scored.select(col("src"), col("dst"))
+      .select(col("src"), col("dst"))
   }
 
   /** Small-set fuzzy path: exact shingle-block join. Candidates = all
@@ -488,7 +471,7 @@ object Linking {
           col("a.entityId") < col("b.entityId"))
       .select(col("a.entityId").as("src"), col("b.entityId").as("dst"))
       .distinct()
-    scorePairs(cand, shingled, cfg, keepDist = false)
+    scorePairs(cand, shingled, cfg)
   }
 
   /** Scale fuzzy path: banded MinHash candidates — `bands` compound
@@ -501,21 +484,21 @@ object Linking {
     * common substring) → 0.016 — candidate volume stays ~linear in the
     * corpus instead of quadratic.
     */
-  private def lshEdgesImpl(ents: DataFrame, cfg: Config, n: Long,
-                           keepDist: Boolean): DataFrame = {
+  private[link] def lshEdges(ents: DataFrame, cfg: Config,
+                             n: Long): DataFrame = {
     val shingled = sharedShingles(ents, cfg)
     // no distinct before scoring. True near-dup pairs collide in most
     // of the 20 bands, so candidates carry ~2× duplication (9.06M →
     // 4.46M distinct at 200k files), and halving the scoring join
-    // looks tempting — but the same-JVM interleaved A/B
-    // (tools/ScoreAB, 3 alternations) reads raw 12.3s min vs
+    // looks tempting — but the same-JVM interleaved A/B (3
+    // alternations, BENCH.md §0) reads raw 12.3s min vs
     // distinct-first 14.3s min: the extra full-width shuffle + dedup
     // of 9M rows costs more than the join rows it trims (the scoring
     // join's per-row work is one codegen'd array_intersect; the
     // arrays ride the SETS side, which shuffles identically either
     // way). The post-score distinct (tiny output) removes the repeats.
     val cand = lshCandidates(shingled, cfg, n)
-    scorePairs(cand, shingled, cfg, keepDist, shjHint = true).distinct()
+    scorePairs(cand, shingled, cfg, shjHint = true).distinct()
   }
 
   // ------------------------------------------------------------------
@@ -588,7 +571,7 @@ object Linking {
     // landing in pathological buckets can make cand arbitrarily large.
     // AQE plans the scoring join from cand's RUNTIME size instead
     // (broadcasts it when it really is small, shuffles when not).
-    scorePairs(cand, shingledAll, cfg, keepDist = false, shjHint = true)
+    scorePairs(cand, shingledAll, cfg, shjHint = true)
       .distinct()
   }
 

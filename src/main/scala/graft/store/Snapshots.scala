@@ -36,14 +36,14 @@ object Snapshots {
       // manifests written before versioning existed (data then lives
       // directly under the stage dir)
       version: Option[Int] = None,
-      // COPY-ON-WRITE patches (stagePatch): files CARRIED from earlier
+      // APPEND snapshots (stageAppend): files CARRIED from earlier
       // snapshots, keyed by stage-relative path (snap=<w>/...). The
       // effective table = these + this version's own fileRows; `rows`
       // counts both. None/empty on full snapshots.
       baseFiles: Option[Map[String, Long]] = None,
       // ----- scan-planning info (manifest-planned reads, round 7) ----
       // byte sizes keyed like fileRows / baseFiles; StructType.json of
-      // the main (full/patch) data files, of the unpartitioned append
+      // the main (partitioned) data files, of the unpartitioned append
       // files, and of the dir-encoded partition columns. All optional:
       // a manifest missing any piece a read needs falls back to the
       // directory-listing path (older manifests keep working).
@@ -51,30 +51,16 @@ object Snapshots {
       baseFileBytes: Option[Map[String, Long]] = None,
       dataSchema: Option[String] = None,
       appendSchema: Option[String] = None,
-      partSchema: Option[String] = None,
-      // ----- tiered append sets (round 7, steady-state ingest) -------
-      // Per append-set TOMBSTONES: read root (stage-relative, e.g.
-      // "snap=3/append/d") -> partition-dir segments ("cb=7") whose
-      // rows a LATER rewrite superseded. Readers drop those rows with
-      // a data filter instead of the writer rewriting the whole append
-      // set every patch — the Iceberg equality-delete shape, scoped to
-      // partition values. Cleared when a set is physically merged.
-      appendExcludes: Option[Map[String, Seq[String]]] = None,
-      // Per append set: rows per partition-value COMBINATION (dir-path
-      // key in partitionBy order, e.g. "ident=false/cb=7"), computed
-      // once when the set is written. Lets every later patch maintain
-      // an EXACT `rows` total under arbitrary tombstones by manifest
-      // arithmetic alone — no data read. Bounded by the partition-
-      // value cross product (ident × canonBuckets here).
-      appendDirRows: Option[Map[String, Map[String, Long]]] = None
+      partSchema: Option[String] = None
   )
 
   private val ManifestName = "_MANIFEST.json"
 
   /** Stage parquet codec: lz4 measurably beats snappy on encode CPU
-    * for these string-heavy triple tables (WriteProbe: ~30% less write
-    * wall at equal size) — and stage files are only ever read back by
-    * this engine, so cross-tool codec compatibility is not a concern.
+    * for these string-heavy triple tables (~30% less write wall at
+    * equal size in a codec write A/B) — and stage files are only ever
+    * read back by this engine, so cross-tool codec compatibility is
+    * not a concern.
     */
   val StageCompression = "lz4"
 
@@ -112,8 +98,8 @@ object Snapshots {
   }
 
   /** The snapshot a manifest describes. A FULL snapshot is one parquet
-    * dir; a PATCH (baseFiles non-empty) assembles its own files plus
-    * the carried files of earlier snapshots — grouped per source
+    * dir; an APPEND snapshot (baseFiles non-empty) assembles its own
+    * files plus the carried files of earlier snapshots — grouped per source
     * snapshot so partition columns parse against each snapshot's own
     * basePath (the Iceberg manifest-list read shape).
     *
@@ -129,7 +115,7 @@ object Snapshots {
       IOStat.timed("snap.assemble.listed") {
         val carried = m.baseFiles.getOrElse(Map.empty)
         if (carried.isEmpty) spark.read.parquet(dataDir(runDir, stage, m))
-        else assemblePatch(spark, runDir, stage, m, carried)
+        else assembleCarried(spark, runDir, stage, m, carried)
       }
     }
   }
@@ -141,7 +127,7 @@ object Snapshots {
     sys.props.get("graft.snapshots.manifestPlan").forall(_.toBoolean)
 
   /** Read root of a stage-relative file path: snap=<w> plus any
-    * non-partition subdirs (patch/, append/). Partition columns parse
+    * non-partition subdirs (append/d, append/m). Partition columns parse
     * relative to the root, and a root with no k=v segments below it
     * reads as plain files whose partition columns ride as data
     * columns (the append set).
@@ -184,55 +170,31 @@ object Snapshots {
           .getOrElse(return None)
         val rm = if (w == v) m else readManifestVersion(runDir, stage, w)
         val (dataJson, pSchema) =
-          if (isAppendRoot(r)) (rm.appendSchema, StructType(Nil))
+          if (isAppend(r)) (rm.appendSchema, StructType(Nil))
           else (rm.dataSchema,
             parseStruct(rm.partSchema.getOrElse(return None)))
         val dSchema = parseStruct(dataJson.getOrElse(return None))
         val rel = fs.map { case (p, b) => (p.stripPrefix(r + "/"), b) }
         val idx = new ManifestFileIndex(spark, new HPath(s"$sd/$r"), rel,
           pSchema)
-        val df = spark.baseRelationToDataFrame(HadoopFsRelation(idx, pSchema,
+        spark.baseRelationToDataFrame(HadoopFsRelation(idx, pSchema,
           dSchema, None, new ParquetFileFormat,
           Map.empty[String, String])(spark))
-        excludeFilter(df, excludesOf(m, r))
       }
     Some(parts.reduce(_ unionByName _))
   }
 
-  /** A read root holding unpartitioned append files (the partition
-    * columns ride as data columns there).
-    */
-  private def isAppendRoot(r: String): Boolean =
-    r.split('/').contains("append")
-
-  private def excludesOf(m: Manifest, root: String): Seq[String] =
-    m.appendExcludes.flatMap(_.get(root)).getOrElse(Nil)
-
-  /** Tombstone filter over an append-set scan: drop rows whose
-    * partition column matches any excluded dir segment (same matching
-    * rule as carried-file drops — a row matches "c=v" iff col c casts
-    * to the string v).
-    */
-  private def excludeFilter(df: DataFrame, excl: Seq[String]): DataFrame =
-    if (excl.isEmpty) df
-    else excl.map(_.split("=", 2)).groupBy(_.head)
-      .foldLeft(df) { case (d, (c, svs)) =>
-        d.filter(!col(c).cast("string").isin(svs.map(_(1)).toSeq: _*))
-      }
-
-  private def assemblePatch(spark: SparkSession, runDir: String, stage: String,
-                            m: Manifest,
-                            carried: Map[String, Long]): DataFrame = {
+  private def assembleCarried(spark: SparkSession, runDir: String,
+                              stage: String, m: Manifest,
+                              carried: Map[String, Long]): DataFrame = {
     val sd = stageDir(runDir, stage)
     val own = m.fileRows.keys.map(k => s"snap=${m.version.get}/$k")
     (own ++ carried.keys).toVector
       .groupBy(rootOf)
       .toSeq.sortBy(_._1)
       .map { case (r, paths) =>
-        excludeFilter(
-          spark.read.option("basePath", s"$sd/$r")
-            .parquet(paths.map(p => s"$sd/$p"): _*),
-          excludesOf(m, r))
+        spark.read.option("basePath", s"$sd/$r")
+          .parquet(paths.map(p => s"$sd/$p"): _*)
       }
       .reduce(_ unionByName _)
   }
@@ -295,15 +257,15 @@ object Snapshots {
     val current = readManifest(runDir, stage).version
     require(!current.contains(version),
       s"cannot expire the current snapshot v$version of $stage")
-    // copy-on-write patches CARRY files of earlier snapshots: deleting
-    // a snapshot some published patch still references would corrupt
+    // append snapshots CARRY files of earlier snapshots: deleting a
+    // snapshot some published append still references would corrupt
     // that (readable, possibly live) version
     val prefix = s"snap=$version/"
     versions(runDir, stage).filter(_ != version).foreach { v =>
       val m = readManifestVersion(runDir, stage, v)
       require(!m.baseFiles.exists(_.keys.exists(_.startsWith(prefix))),
-        s"cannot expire v$version of $stage: patch snapshot v$v still " +
-          "carries its files (expire v$v first)")
+        s"cannot expire v$version of $stage: append snapshot v$v still " +
+          s"carries its files (expire v$v first)")
     }
     deleteDir(snapshotDir(runDir, stage, version))
     Files.deleteIfExists(
@@ -337,11 +299,24 @@ object Snapshots {
       Paths.get(stageDir(runDir, stage), versionedManifestName(version)))
   }
 
+  /** Parses a manifest, refusing one written by the removed
+    * copy-on-write tail: its `appendExcludes` tombstones hid rows of
+    * carried append sets that a bucket rewrite had superseded, and a
+    * reader that ignores them would resurface those stale rows.
+    */
   private def parseManifest(p: Path): Manifest = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     implicit val fmts: Formats = DefaultFormats
-    JsonMethods.parse(Files.readString(p)).extract[Manifest]
+    val json = JsonMethods.parse(Files.readString(p))
+    require(json \ "appendExcludes" match {
+      case JNothing | JNull => true
+      case _                => false
+    }, s"$p was written by a copy-on-write ingest: its appendExcludes " +
+      "tombstones are no longer supported, and reading past them would " +
+      "resurface superseded rows. Rebuild the run: Pipeline.run into a " +
+      "fresh runDir, then pinEpoch before further pinned ingests.")
+    json.extract[Manifest]
   }
 
   /** Compute-or-resume: if the stage is complete, read it back;
@@ -417,241 +392,128 @@ object Snapshots {
     live + 1
   }
 
-  /** PARTIAL-OVERWRITE publish (the Iceberg copy-on-write MERGE
-    * shape): a new snapshot version whose data =
-    *   - snap=<v+1>/patch/  — `rewrite`'s output, partitioned: the
-    *     FULL new content of every dir in `rewrittenDirs`;
-    *   - snap=<v+1>/append/d — `append`'s output, UNPARTITIONED (the
-    *     partition columns ride as data columns): genuinely new rows
-    *     for dirs that are NOT rewritten, and that the `append` frame
-    *     must therefore not place in a rewritten dir. Appends scatter
+  /** APPEND publish: a new snapshot version whose data =
+    *   - every file of the current snapshot, CARRIED by reference in
+    *     the manifest, never copied;
+    *   - snap=<v+1>/append/d — `append`'s rows, UNPARTITIONED (the
+    *     partition columns ride as data columns). Appends scatter
     *     across arbitrary partition values (new entities hash
     *     anywhere), and writing them through the partitioned layout
-    *     would touch one dir+file per value per ingest — measured as
-    *     THE dominant patch cost (dynamic-commit + footer + listing
-    *     over ~B tiny files). As unpartitioned delta files they cost
-    *     O(1) files per ingest; readers filter them by column stats
-    *     instead of dir pruning, which is proportionate to their
-    *     (delta) size. The Iceberg analog: rewritten data files vs
-    *     appended delta files in one snapshot.
-    * plus every file of the current snapshot NOT under one of
-    * `rewrittenDirs` — carried by reference in the manifest, never
-    * copied. `rewrittenDirs` entries are single partition-path
-    * segments (e.g. "cb=7"): a carried file is dropped iff any of its
-    * path segments matches one.
+    *     would touch one dir+file per value per ingest (dynamic commit
+    *     + footer + listing over ~B tiny files). As unpartitioned delta
+    *     files they cost O(1) files per ingest; readers filter them by
+    *     column stats instead of dir pruning, which is proportionate to
+    *     their (delta) size. The Iceberg analog: appended data files in
+    *     a new snapshot.
     *
-    * PRIOR APPEND SETS are carried by reference too, under TOMBSTONES
-    * (appendExcludes): a later rewrite of dir "cb=7" re-emits any
-    * append rows living there, so each carried set accumulates the
-    * rewritten segments and readers drop matching rows with a data
-    * filter — never a rewrite. A binary-counter cascade keeps the
-    * live set count logarithmic: each patch absorbs (physically
-    * merges, tombstones applied) every prior set no larger than the
-    * accumulated carry, starting from the delta's size. Consolidating
-    * EVERY patch instead — the pre-round-7 behavior, kept as the
-    * appendTiering=false A/B — re-reads O(cumulative appended rows)
-    * per ingest, a per-ingest cost that grows without bound under
-    * steady ingestion (SteadyStateBench measures exactly this).
-    * Append mass itself is bounded by the compaction trigger
-    * ([[compact]]).
+    * A binary-counter cascade keeps the live append-set count
+    * logarithmic: each append absorbs (physically merges, into
+    * snap=<v+1>/append/m) every prior set no larger than the
+    * accumulated carry, starting from the delta's size. Per-ingest
+    * append cost is O(delta) amortized ×log(total/delta); re-reading
+    * every prior set per ingest instead would grow without bound
+    * under steady ingestion. Append mass itself is bounded by the
+    * compaction trigger ([[compact]]).
     *
     * NOTE for callers: partition columns read back with
     * partition-inference types (ident: string, cb: int) — the append
-    * frame must carry them with exactly those types.
+    * frame must carry `partitionBy` with exactly those types.
     *
     * Same publish protocol as [[stage]] (data → versioned manifest →
-    * live pointer last), so a crashed patch is invisible and the
+    * live pointer last), so a crashed append is invisible and the
     * retry republishes under the same version number.
     */
-  def stagePatch(spark: SparkSession, runDir: String, stageName: String,
-                 runId: String, rewrittenDirs: Seq[String],
-                 partitionBy: Seq[String],
-                 metrics: => Map[String, String] = Map.empty)
-                (rewrite: => DataFrame)(append: => DataFrame): Unit = {
+  def stageAppend(spark: SparkSession, runDir: String, stageName: String,
+                  runId: String, partitionBy: Seq[String],
+                  metrics: => Map[String, String] = Map.empty)
+                 (append: => DataFrame): Unit = {
     val base = readManifest(runDir, stageName)
     require(base.version.isDefined,
-      s"stage $stageName predates snapshot versioning — cannot patch")
+      s"stage $stageName predates snapshot versioning — cannot append")
     val version = prepareNextVersion(runDir, stageName)
     val dir = snapshotDir(runDir, stageName, version)
     val sd = stageDir(runDir, stageName)
-    val rewritten = rewrittenDirs.toSet
     val baseEff = effectiveFiles(base)
 
-    // Prior append sets, one per read root, with their tombstones and
-    // per-combination row counts. Every set carried forward bears this
-    // patch's rewrittenDirs as NEW tombstones — the rewrite re-emitted
-    // any of its rows living in those dirs, so the stale copies must
-    // become invisible without rewriting the set.
-    final case class ASet(root: String, files: Vector[String],
-                          excl: Seq[String],
-                          dirRows: Option[Map[String, Long]]) {
-      def net: Option[Long] = dirRows.map(netOf(_, excl))
-      def read(): DataFrame = excludeFilter(
-        spark.read.parquet(files.map(f => s"$sd/$f"): _*), excl)
-    }
-    val priorSets = baseEff.keys.filter(isAppendFile).toVector
-      .groupBy(rootOf).toVector.sortBy(_._1)
-      .map { case (r, fs) =>
-        ASet(r, fs.sorted, (excludesOf(base, r) ++ rewrittenDirs).distinct,
-          base.appendDirRows.flatMap(_.get(r)))
-      }
+    // prior append sets, one per read root: (root, files, rows)
+    val priorSets = baseEff.filter { case (p, _) => isAppend(p) }
+      .groupBy { case (p, _) => rootOf(p) }.toVector.sortBy(_._1)
+      .map { case (r, fs) => (r, fs.keys.toVector.sorted, fs.values.sum) }
 
     val t0 = System.nanoTime()
-    val rdf = rewrite
-    val w1 = rdf.write.mode(SaveMode.Overwrite)
-      .option("compression", StageCompression)
-    (if (partitionBy.nonEmpty) w1.partitionBy(partitionBy: _*) else w1)
-      .parquet(s"$dir/patch")
     val adf = append
-
-    // ---- append handling -------------------------------------------
-    // TIERED (default): the delta writes its own small set; prior sets
-    // are CARRIED by reference under tombstones, except those absorbed
-    // by a binary-counter cascade (merge every set no larger than the
-    // accumulated carry). Per-ingest append cost is O(delta) amortized
-    // ×log(total/delta), and the live set count stays O(log) — the
-    // LSM/logarithmic-method shape. The pre-round-7 behavior
-    // (consolidate EVERYTHING every patch) re-read O(cumulative
-    // appended rows) per ingest: flat in TailBench's single-ingest
-    // runs, linear growth under steady ingestion (SteadyStateBench).
-    // LEGACY mode (appendTiering=false) keeps that behavior as the
-    // measured A/B lever.
-    var keptSets = Vector.empty[ASet]
-    var ownDirRows = Map.empty[String, Map[String, Long]]
-    var absorbedSets = 0
-    if (appendTiering) {
-      adf.write.mode(SaveMode.Overwrite)
+    adf.write.mode(SaveMode.Overwrite)
+      .option("compression", StageCompression)
+      .parquet(s"$dir/append/d")
+    val deltaStats = footerStats(s"$dir/append/d")
+    // cascade: absorb sets smallest-first while they fit in the carry
+    var carry = deltaStats.values.map(_._1).sum
+    val keep = Vector.newBuilder[String]
+    val absorb = Vector.newBuilder[Vector[String]]
+    priorSets.sortBy(_._3).foreach { case (r, files, n) =>
+      if (n <= carry) { carry += n; absorb += files }
+      else keep += r
+    }
+    val absorbed = absorb.result()
+    if (absorbed.nonEmpty) {
+      val deltaBack =
+        if (deltaStats.isEmpty) Vector.empty
+        else Vector(spark.read.parquet(s"$dir/append/d"))
+      val merged = (deltaBack ++ absorbed.map(fs =>
+        spark.read.parquet(fs.map(f => s"$sd/$f"): _*)))
+        .reduce(_ unionByName _)
+      val nFiles = math.min(64L,
+        math.max(1L, carry / MergedAppendRowsPerFile)).toInt
+      val shaped0 = merged.repartition(nFiles)
+      val shaped = if (partitionBy.nonEmpty)
+        shaped0.sortWithinPartitions(partitionBy.map(col): _*)
+      else shaped0
+      shaped.write.mode(SaveMode.Overwrite)
         .option("compression", StageCompression)
-        .parquet(s"$dir/append/d")
-      val deltaStats = footerStats(s"$dir/append/d")
-      val deltaRows = deltaStats.values.map(_._1).sum
-      val deltaCombos: Map[String, Long] =
-        if (deltaStats.isEmpty || deltaRows == 0L) Map.empty
-        else comboRows(spark, s"$dir/append/d", partitionBy)
-      // cascade: absorb knowable sets smallest-first while they fit in
-      // the carry; sets with unknowable accounting (written before
-      // per-combo counts existed) fold unconditionally
-      val (known, legacy) = priorSets.partition(_.net.isDefined)
-      var carry = deltaRows
-      val keep = Vector.newBuilder[ASet]
-      val absorb = Vector.newBuilder[ASet]
-      known.sortBy(_.net.get).foreach { s =>
-        if (s.net.get <= carry) { carry += s.net.get; absorb += s }
-        else keep += s
-      }
-      absorb ++= legacy
-      val absorbed = absorb.result()
-      absorbedSets = absorbed.size
-      if (absorbed.nonEmpty) {
-        val deltaBack =
-          if (deltaStats.isEmpty) Vector.empty
-          else Vector(spark.read.parquet(s"$dir/append/d"))
-        val merged = (deltaBack ++ absorbed.map(_.read()))
-          .reduce(_ unionByName _)
-        val nFiles = math.min(64L,
-          math.max(1L, carry / MergedAppendRowsPerFile)).toInt
-        val shaped0 = merged.repartition(nFiles)
-        val shaped = if (partitionBy.nonEmpty)
-          shaped0.sortWithinPartitions(partitionBy.map(col): _*)
-        else shaped0
-        shaped.write.mode(SaveMode.Overwrite)
-          .option("compression", StageCompression)
-          .parquet(s"$dir/append/m")
-        deleteDir(s"$dir/append/d")
-        val mRoot = s"snap=$version/append/m"
-        val mCombos =
-          if (legacy.isEmpty)
-            (deltaCombos.toSeq ++ absorbed.flatMap(s =>
-              s.dirRows.get.toSeq.filterNot { case (combo, _) =>
-                comboExcluded(combo, s.excl) }))
-              .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-          else comboRows(spark, s"$dir/append/m", partitionBy)
-        ownDirRows = Map(mRoot -> mCombos)
-      } else if (deltaCombos.nonEmpty) {
-        ownDirRows = Map(s"snap=$version/append/d" -> deltaCombos)
-      }
-      keptSets = keep.result()
-    } else {
-      // legacy consolidation: every prior set re-reads and folds into
-      // this patch's single append file set
-      val adfAll = priorSets.map(_.read()).foldLeft(adf)(_ unionByName _)
-      adfAll.write.mode(SaveMode.Overwrite)
-        .option("compression", StageCompression)
-        .parquet(s"$dir/append")
+        .parquet(s"$dir/append/m")
+      deleteDir(s"$dir/append/d")
     }
     val wallMs = (System.nanoTime() - t0) / 1000000L
 
-    val keptRoots = keptSets.map(_.root).toSet
+    val keptRoots = keep.result().toSet
     val carried = baseEff.filter { case (path, _) =>
-      if (isAppendFile(path)) keptRoots.contains(rootOf(path))
-      else !path.split('/').exists(rewritten.contains)
+      !isAppend(path) || keptRoots.contains(rootOf(path))
     }
     val tF0 = System.nanoTime()
     val perFile = footerStats(dir)
     val footerSec = (System.nanoTime() - tF0) / 1e9
     // carried-file bytes for planned reads: the base's effective bytes
-    // restricted to what this patch still carries (None when the base
-    // predates byte tracking — the patch then reads via listing)
+    // restricted to what this append still carries (None when the base
+    // predates byte tracking — the snapshot then reads via listing)
     val carriedBytes = effectiveBytesOpt(base)
       .map(_.filter { case (k, _) => carried.contains(k) })
       .filter(cb => carried.keys.forall(cb.contains))
-    val patchFiles = perFile.keys.filter(_.startsWith("patch/")).toSeq.sorted
-    val appendFiles = perFile.keys.filter(isAppendFile).toSeq.sorted
-    // kept sets always carry per-combo counts (unknowable ones were
-    // force-absorbed above), so `rows` stays EXACT under tombstones:
-    // carried raw rows minus each kept set's tombstoned combinations
-    val tombstonedRows = keptSets
-      .map(s => s.dirRows.get.values.sum - s.net.get).sum
-    val newExcludes = keptSets.map(s => s.root -> s.excl)
-      .filter(_._2.nonEmpty).toMap
-    val newDirRows = ownDirRows ++
-      keptSets.flatMap(s => s.dirRows.map(s.root -> _))
-    val ownAppendRows = perFile
-      .collect { case (k, (r, _)) if isAppendFile(k) => r }.sum
     val m = Manifest(runId, stageName,
-      rows = perFile.values.map(_._1).sum + carried.values.sum
-        - tombstonedRows,
+      rows = perFile.values.map(_._1).sum + carried.values.sum,
       fileRows = perFile.map { case (k, (r, _)) => k -> r }, wallMs = wallMs,
-      metrics = metrics ++ Map("patched" -> "true",
-        "rewrittenDirs" -> rewrittenDirs.length.toString,
+      metrics = metrics ++ Map(
         "footerSec" -> f"$footerSec%.2f",
         "newFiles" -> perFile.size.toString,
-        "appendSets" -> (keptSets.size + ownDirRows.size).toString,
-        "absorbedSets" -> absorbedSets.toString,
-        "appendNetRows" ->
-          (ownAppendRows + keptSets.map(_.net.get).sum).toString),
+        "appendSets" ->
+          (keptRoots.size + (if (perFile.nonEmpty) 1 else 0)).toString,
+        "absorbedSets" -> absorbed.size.toString),
       version = Some(version),
       baseFiles = Some(carried),
       fileBytes = Some(perFile.map { case (k, (_, b)) => k -> b }),
       baseFileBytes = carriedBytes,
-      dataSchema = derivedSchema(rdf, partitionBy)
-        .orElse(patchFiles.headOption.map(f =>
-          fileSchema(spark, s"$dir/$f"))).map(_.json),
+      // the partitioned data files are all carried: their schemas are
+      // the base's
+      dataSchema = base.dataSchema,
       appendSchema = derivedSchema(adf, Nil)
-        .orElse(appendFiles.headOption.map(f =>
+        .orElse(perFile.keys.toSeq.sorted.headOption.map(f =>
           fileSchema(spark, s"$dir/$f"))).map(_.json),
-      // an APPEND-ONLY patch (empty rewrite) has no partitioned files
-      // of its own to infer from — inherit the base's partition
-      // schema, or a later compact() would fold the stage
-      // unpartitioned
-      partSchema = inferPartSchema(partitionBy,
-        patchFiles.map(_.stripPrefix("patch/"))).map(_.json)
-        .orElse(base.partSchema),
-      appendExcludes = Some(newExcludes).filter(_.nonEmpty),
-      appendDirRows = Some(newDirRows).filter(_.nonEmpty))
+      partSchema = base.partSchema)
     writeManifest(sd, versionedManifestName(version), m)
     writeManifest(sd, ManifestName, m)
     // NOTE: deliberately returns Unit — an eager `assemble` here costs
     // a full listing of every carried file, and no caller consumes it
-    // (patch consumers re-open the stage via `read` when they need it)
+    // (append consumers re-open the stage via `read` when they need it)
   }
-
-  /** Tiered append maintenance (round 7): false restores the
-    * consolidate-every-patch behavior — the SteadyStateBench A/B
-    * lever, and a correctness twin for the equality spec.
-    */
-  private[graft] var appendTiering: Boolean =
-    sys.props.get("graft.snapshots.appendTiering").forall(_.toBoolean)
 
   /** Target rows per file when a cascade merge rewrites append sets
     * (append rows are narrow — assign/nodes/edges schemas — so 4M
@@ -659,33 +521,11 @@ object Snapshots {
     */
   private val MergedAppendRowsPerFile = 4L * 1000 * 1000
 
-  private def isAppendFile(p: String): Boolean =
-    p.split('/').contains("append")
-
-  private def comboExcluded(combo: String, excl: Seq[String]): Boolean =
-    combo.split('/').exists(excl.contains)
-
-  /** Rows of an append set visible under its tombstones. */
-  private def netOf(dirRows: Map[String, Long], excl: Seq[String]): Long =
-    dirRows.collect { case (combo, n) if !comboExcluded(combo, excl) => n }
-      .sum
-
-  /** Per-partition-value-combination row counts of a just-written
-    * append set (one tiny job over delta-sized files; combos are
-    * bounded by the partition-value cross product).
+  /** A stage-relative file path or read root inside an append set
+    * (unpartitioned files; the partition columns ride as data columns).
     */
-  private def comboRows(spark: SparkSession, dir: String,
-                        partitionBy: Seq[String]): Map[String, Long] =
-    IOStat.timed("snap.comboRows") {
-      val df = spark.read.parquet(dir)
-      if (partitionBy.isEmpty) Map("" -> df.count())
-      else {
-        val key = concat_ws("/", partitionBy.map(c =>
-          concat_ws("=", lit(c), col(c).cast("string"))): _*)
-        df.groupBy(key.as("__combo")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-    }
+  private def isAppend(p: String): Boolean =
+    p.split('/').contains("append")
 
   /** Partition columns a snapshot was published with (empty when
     * unpartitioned or unrecorded).
@@ -693,28 +533,18 @@ object Snapshots {
   def partitionColsOf(m: Manifest): Seq[String] =
     m.partSchema.map(j => parseStruct(j).fieldNames.toSeq).getOrElse(Nil)
 
-  /** Net append rows and live append-set count of a snapshot (the
-    * compaction trigger's inputs). Sets without tombstone accounting
-    * count raw — an upper bound, which is the safe direction for a
-    * "compact when appends are a large fraction" trigger.
+  /** Append rows and live append-set count of a snapshot (the
+    * compaction trigger's inputs).
     */
   def appendStats(m: Manifest): (Long, Int) = {
-    val eff = effectiveFiles(m)
-    val roots = eff.filter { case (p, _) => isAppendFile(p) }
-      .groupBy { case (p, _) => rootOf(p) }
-    val net = roots.map { case (r, fs) =>
-      m.appendDirRows.flatMap(_.get(r)) match {
-        case Some(dr) => netOf(dr, excludesOf(m, r))
-        case None     => fs.values.sum
-      }
-    }.sum
-    (net, roots.size)
+    val appended = effectiveFiles(m).filter { case (p, _) => isAppend(p) }
+    (appended.values.sum, appended.keys.map(rootOf).toSet.size)
   }
 
-  /** MAINTENANCE: fold the current snapshot — carried buckets, patch
-    * files, every append set under its tombstones — into a fresh FULL
-    * version (the Iceberg rewrite_data_files analog). Append mass and
-    * set count reset to zero, carry chains break, and every older
+  /** MAINTENANCE: fold the current snapshot — carried partitioned
+    * files and every append set — into a fresh FULL version (the
+    * Iceberg rewrite_data_files analog). Append mass and set count
+    * reset to zero, carry chains break, and every older
     * version becomes expirable. `shape` lets the caller re-cluster
     * (sortWithinPartitions etc.) on the way through; partitioning is
     * taken from the live manifest. Costs O(table) — run it when
@@ -725,11 +555,9 @@ object Snapshots {
               runId: String, metrics: Map[String, String] = Map.empty)
              (shape: DataFrame => DataFrame = identity): DataFrame = {
     val m = readManifest(runDir, stageName)
-    val partCols = m.partSchema
-      .map(j => parseStruct(j).fieldNames.toSeq).getOrElse(Nil)
     val df = shape(assemble(spark, runDir, stageName, m))
     stage(spark, runDir, stageName, runId, resume = false,
-      partitionBy = partCols,
+      partitionBy = partitionColsOf(m),
       metrics = metrics + ("compacted" -> "true"))(df)
   }
 

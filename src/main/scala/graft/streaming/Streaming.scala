@@ -134,10 +134,10 @@ object Streaming {
     // log, published after the three appends: an edges manifest with
     // this runId and the defer marker but no matching log version is
     // a crash window, and the replay must re-apply (it heals through
-    // the global tail — incrementalCanonicalize sees the partial
+    // the global tail — mergeOnReadTail sees the partial
     // application). Without this, a skipped replay would make the
     // partial state permanent.
-    def deferredPartial = cfg.deferMerges &&
+    def deferredPartial =
       Snapshots.readManifest(runDir, "edges")
         .metrics.get("defer").contains("true") &&
       !(Snapshots.isComplete(runDir, graft.Pipeline.CanonLogStage) &&

@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * stream_kg_ingest) RUN their side-effecting pipelines when the query
   * function is invoked; the captured plan is the returned frame's —
   * the maintained-graph read — which is what the query returns to the
-  * driver. Per-stage pipeline plans are captured by the dedicated
-  * stage tools (TailBench, PinProfile) instead.
+  * driver. Per-stage pipeline work is measured by the dedicated
+  * stage tools (TailBench, SteadyStateBench) instead.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

@@ -5,38 +5,26 @@ import graft.fixtures.FilesGen
 import graft.store.Snapshots
 import org.apache.spark.sql.SparkSession
 
-/** Round-7 measurement: STEADY-STATE ingestion — K successive pinned
-  * ingests of a fixed-size delta into the same run. Single-ingest
-  * benches (TailBench) cannot see terms that grow with INGEST COUNT;
-  * this one isolates the known one: the append-set maintenance of the
-  * copy-on-write tail patches.
+/** STEADY-STATE ingestion — K successive pinned ingests of a
+  * fixed-size delta into the same run. Single-ingest benches
+  * (TailBench) cannot see terms that grow with INGEST COUNT; this one
+  * runs the production maintenance shape and reports them per ingest:
   *
-  *   - TIERED (default): prior append sets carried under tombstones,
-  *     binary-counter cascade → per-ingest append write ≈ O(delta),
-  *     occasionally O(2^j·delta) for a cascade step; live set count
-  *     O(log K).
-  *   - LEGACY (pre-round-7): every patch re-reads and rewrites ALL
-  *     accumulated appends → per-ingest append write grows ~linearly
-  *     with K. At daily ingests over a 10^12-file corpus this is a
-  *     hidden O(corpus) per-ingest term — the same failure class as
-  *     the global relink the O(delta) tail replaced.
-  *   - TIERED+FOLD: compactAppendFrac set — append mass folds into a
-  *     fresh full snapshot past the threshold, prior versions expire,
-  *     disk stays bounded.
+  *   - MOR: the merge-on-read tail (append-only snapshots + canon log)
+  *     with the fold trigger at foldFrac, expiry of every version a
+  *     fold unpinned, and lineage consolidation past 4 deltas. Per
+  *     ingest: append write volume, live append sets (the
+  *     binary-counter cascade keeps them O(log K)), canon-log rows,
+  *     disk.
+  *   - GLOBAL: the same deltas through the global tail
+  *     (deferMerges = false — global CC + full assign/nodes/edges
+  *     rewrite per ingest), the correctness twin.
   *
-  * All three chains start from byte-identical copies of one pinned
-  * base run and ingest identical deltas; final graphs are compared
-  * with exceptAll. Per-ingest order of TIERED/LEGACY alternates to
-  * expose (not bake in) warmup/phase bias.
-  *
-  * REGIME NOTE (first measurement): with a LARGE delta the merge set
-  * touches every cb bucket (coverage ≈ B(1−e^{−merges/B})) and the
-  * patch is a de-facto full rewrite — zero appends, the honest
-  * copy-on-write trade. The append machinery governs the FREQUENT
-  * SMALL ingest regime (micro-batches, stream_kg_ingest's shape):
-  * merges ≪ B, most delta rows append — and that is also the regime
-  * where ingest count K, and therefore legacy consolidation cost,
-  * grows fastest. Size m ≪ B·filesPerBucket/10 to measure it.
+  * Both chains start from byte-identical copies of one pinned base
+  * run and ingest identical deltas; their final graphs are compared
+  * with exceptAll through the resolving readers. Per-ingest order of
+  * the two chains alternates to expose (not bake in) warmup/phase
+  * bias. The merge-on-read read tax is priced at the end.
   *
   * Usage: runMain graft.tools.SteadyStateBench [n] [m] [k] [foldFrac]
   *                                             [filesPerBucket]
@@ -68,8 +56,10 @@ object SteadyStateBench {
     spark.sparkContext.setCheckpointDir(s"$root/_checkpoints")
     val richness = sys.env.getOrElse("SPARK_GRAFT_RICHNESS", "8").toInt
     val b = math.max(64L, n / filesPerBucket).toInt
-    def cfg(fold: Option[Double]) = Pipeline.Config(
-      canonBuckets = Some(b), compactAppendFrac = fold)
+    val cfgMor = Pipeline.Config(canonBuckets = Some(b),
+      compactAppendFrac = Some(foldFrac), maxLineageDeltas = Some(4))
+    val cfgGlobal = Pipeline.Config(canonBuckets = Some(b),
+      deferMerges = false)
     def rd(dir: String) = {
       import spark.implicits._
       spark.read.parquet(dir).as[graft.SourceFile]
@@ -89,22 +79,20 @@ object SteadyStateBench {
       d
     }
 
-    val runT = s"$root/runT"
-    val tBase = timed(Pipeline.run(spark, rd(baseDir), runT, "base",
-      cfg(None)))
-    val tPin = timed(Pipeline.pinEpoch(spark, runT, "pin", cfg(None)))
-    val runL = s"$root/runL"; copyDir(runT, runL)
-    val runC = s"$root/runC"; copyDir(runT, runC)
-    val runD = s"$root/runD"; copyDir(runT, runD)
+    val runM = s"$root/runM"
+    val tBase = timed(Pipeline.run(spark, rd(baseDir), runM, "base",
+      cfgMor))
+    val tPin = timed(Pipeline.pinEpoch(spark, runM, "pin", cfgMor))
+    val runG = s"$root/runG"; copyDir(runM, runG)
     println(f"[steady] base=$tBase%.1fs pin=$tPin%.1fs")
 
     def mb(x: Long): Double = x / 1048576.0
     def report(tag: String, i: Int, dir: String, wall: Double): Unit = {
-      // own append/patch write volume of THIS ingest's publishes, from
-      // the live manifests (fileBytes keys are snapshot-relative)
-      def own(prefix: String): Long = Tail.map { st =>
+      // own append write volume of THIS ingest's publishes, from the
+      // live manifests (fileBytes keys are snapshot-relative)
+      val appendWrite = Tail.map { st =>
         Snapshots.readManifest(dir, st).fileBytes
-          .map(_.collect { case (p, by) if p.startsWith(prefix) => by }.sum)
+          .map(_.collect { case (p, by) if p.startsWith("append") => by }.sum)
           .getOrElse(0L)
       }.sum
       val am = Snapshots.readManifest(dir, "assign")
@@ -118,64 +106,38 @@ object SteadyStateBench {
         Snapshots.appendStats(Snapshots.readManifest(dir, st)))
         .reduce((a, c) => (a._1 + c._1, a._2 + c._2))
       println(f"[steady] i=$i%2d $tag%-6s wall=$wall%6.1fs " +
-        f"tail=$tailWall%5.1fs appendWrite=${mb(own("append"))}%7.1fMB " +
-        f"patchWrite=${mb(own("patch/"))}%7.1fMB " +
-        f"netAppendRows=$netApp%9d sets=$sets%2d " +
+        f"tail=$tailWall%5.1fs appendWrite=${mb(appendWrite)}%7.1fMB " +
+        f"appendRows=$netApp%9d sets=$sets%2d " +
         f"absorbed=${am.metrics.getOrElse("absorbedSets", "-")}%s " +
         f"merges=${am.metrics.getOrElse("merges", "-")}%s " +
-        f"rewrittenDirs=${am.metrics.getOrElse("rewrittenDirs", "-")}%s " +
         f"compacted=${am.metrics.getOrElse("compacted", "-")}%s " +
         f"logRows=$logRows%s du=${mb(duDir(dir))}%7.1fMB")
     }
 
     (1 to k).foreach { i =>
       val delta = deltaDirs(i - 1)
-      def runTiered(): Unit = {
-        Snapshots.appendTiering = true
+      def runMor(): Unit = {
         val w = timed(Pipeline.runIncrementalPinned(
-          spark, rd(delta), runT, s"d$i", cfg(None)))
-        report("TIER", i, runT, w)
+          spark, rd(delta), runM, s"d$i", cfgMor))
+        // expire what the fold (if one fired) unpinned
+        val freed = Tail.map { st =>
+          val live = Snapshots.readManifest(runM, st).version.get
+          Snapshots.versions(runM, st).filter(_ != live).reverse.count { v =>
+            scala.util.Try(Snapshots.expire(runM, st, v)).isSuccess
+          }
+        }.sum
+        report("MOR", i, runM, w)
+        if (freed > 0) println(s"[steady] i=$i MOR expired $freed versions")
       }
-      def runLegacy(): Unit = {
-        Snapshots.appendTiering = false
-        try {
-          val w = timed(Pipeline.runIncrementalPinned(
-            spark, rd(delta), runL, s"d$i", cfg(None)))
-          report("LEGACY", i, runL, w)
-        } finally Snapshots.appendTiering = true
+      def runGlobal(): Unit = {
+        val w = timed(Pipeline.runIncrementalPinned(
+          spark, rd(delta), runG, s"d$i", cfgGlobal))
+        report("GLOBAL", i, runG, w)
       }
-      if (i % 2 == 1) { runTiered(); runLegacy() }
-      else { runLegacy(); runTiered() }
-      // tiered + fold-past-threshold + expire-what-the-fold-unpinned
-      val wC = timed(Pipeline.runIncrementalPinned(
-        spark, rd(delta), runC, s"d$i", cfg(Some(foldFrac))))
-      val freed = Tail.map { st =>
-        val live = Snapshots.readManifest(runC, st).version.get
-        Snapshots.versions(runC, st).filter(_ != live).reverse.count { v =>
-          scala.util.Try(Snapshots.expire(runC, st, v)).isSuccess
-        }
-      }.sum
-      report("FOLD", i, runC, wC)
-      if (freed > 0) println(s"[steady] i=$i FOLD expired $freed versions")
-      // merge-on-read: zero bucket rewrites per ingest; merges ride
-      // the canon log until the threshold fold. Lineage maintenance
-      // on: entities/link_edges/ep_* consolidate past 4 deltas
-      val wD = timed(Pipeline.runIncrementalPinned(
-        spark, rd(delta), runD, s"d$i",
-        cfg(Some(foldFrac)).copy(deferMerges = true,
-          maxLineageDeltas = Some(4))))
-      val freedD = Tail.map { st =>
-        val live = Snapshots.readManifest(runD, st).version.get
-        Snapshots.versions(runD, st).filter(_ != live).reverse.count { v =>
-          scala.util.Try(Snapshots.expire(runD, st, v)).isSuccess
-        }
-      }.sum
-      report("DEFER", i, runD, wD)
-      if (freedD > 0) println(s"[steady] i=$i DEFER expired $freedD versions")
+      if (i % 2 == 1) { runMor(); runGlobal() }
+      else { runGlobal(); runMor() }
     }
 
-    // all four chains must hold the same graph (resolving readers:
-    // pass-through unless a dirty canon log exists)
     val cols = Seq("canonicalId", "canonical", "kind", "memberCount")
     val ecols = Seq("subj", "pred", "canonicalId")
     def nodes(d: String) =
@@ -184,29 +146,24 @@ object SteadyStateBench {
       Pipeline.readEdges(spark, d).selectExpr(ecols: _*)
     // the merge-on-read READ TAX, priced: resolving read (broadcast
     // log join; nodes also re-aggregate) vs the raw stored snapshot
-    Seq("TIER" -> runT, "DEFER" -> runD).foreach { case (tag, d) =>
-      def t(body: => Long): (Long, Double) = {
-        val t0 = System.nanoTime(); val r = body
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val (rn, sn) = t(nodes(d).count())
-      val (re, se) = t(edges(d).count())
-      val (rr, sr) = t(Snapshots.read(spark, d, "nodes").count())
-      println(f"[steady] readtax $tag dirty=${Pipeline.canonLogDirty(d)} " +
-        f"nodesResolved=$rn in $sn%.2fs edgesResolved=$re in $se%.2fs " +
-        f"nodesRaw=$rr in $sr%.2fs")
+    def t(body: => Long): (Long, Double) = {
+      val t0 = System.nanoTime(); val r = body
+      (r, (System.nanoTime() - t0) / 1e9)
     }
-    Seq("LEGACY" -> runL, "FOLD" -> runC, "DEFER" -> runD)
-      .foreach { case (tag, d) =>
-      val dn = nodes(runT).exceptAll(nodes(d)).count() +
-        nodes(d).exceptAll(nodes(runT)).count()
-      val de = edges(runT).exceptAll(edges(d)).count() +
-        edges(d).exceptAll(edges(runT)).count()
-      println(s"[steady] exceptAll TIER vs $tag: nodes=$dn edges=$de " +
-        "(must be 0/0)")
-      require(dn == 0 && de == 0, s"$tag diverged from tiered")
-    }
-    // ~6.5 GB of run dirs at the bench shape — keep only on request
+    val (rn, sn) = t(nodes(runM).count())
+    val (re, se) = t(edges(runM).count())
+    val (rr, sr) = t(Snapshots.read(spark, runM, "nodes").count())
+    println(f"[steady] readtax MOR dirty=${Pipeline.canonLogDirty(runM)} " +
+      f"nodesResolved=$rn in $sn%.2fs edgesResolved=$re in $se%.2fs " +
+      f"nodesRaw=$rr in $sr%.2fs")
+    val dn = nodes(runG).exceptAll(nodes(runM)).count() +
+      nodes(runM).exceptAll(nodes(runG)).count()
+    val de = edges(runG).exceptAll(edges(runM)).count() +
+      edges(runM).exceptAll(edges(runG)).count()
+    println(s"[steady] exceptAll GLOBAL vs MOR: nodes=$dn edges=$de " +
+      "(must be 0/0)")
+    require(dn == 0 && de == 0, "merge-on-read chain diverged from global")
+    // several GB of run dirs at the bench shape — keep only on request
     if (sys.env.contains("SPARK_GRAFT_KEEP")) {
       println(s"[steady] done root=$root (kept: SPARK_GRAFT_KEEP)")
     } else {

@@ -5,17 +5,19 @@ import graft.fixtures.FilesGen
 import graft.store.Snapshots
 import org.apache.spark.sql.SparkSession
 
-/** Round-7 measurement: the CANONICALIZE TAIL of an epoch-pinned
-  * ingest — global CC + full assign/nodes/edges rewrite (the round-6
-  * shape) vs the O(delta) copy-on-write bucket patches
-  * (Pipeline.incrementalCanonicalize) — across growing BASE corpora at
-  * a FIXED delta. The claim under test: with the patched tail, total
-  * ingest wall stops tracking corpus size and tracks the delta.
+/** The CANONICALIZE TAIL of an epoch-pinned ingest: the global tail
+  * (Config.deferMerges = false — global CC + full assign/nodes/edges
+  * rewrite) vs the O(delta) merge-on-read tail (the default —
+  * append-only snapshots + canon log, Pipeline.mergeOnReadTail)
+  * — across growing BASE corpora at a FIXED delta. The claim under
+  * test: with the merge-on-read tail, total ingest wall stops tracking
+  * corpus size and tracks the delta.
   *
   * Both paths start from byte-identical copies of the same pinned
   * base run, ingest the same delta, and the resulting graphs are
-  * compared (counts at every size; full exceptAll on nodes+edges at
-  * the smallest size).
+  * compared through the resolving readers (Pipeline.readNodes /
+  * readEdges): counts at every size, full exceptAll on nodes+edges at
+  * the smallest size.
   *
   * canonBuckets is a LAYOUT parameter sized to the corpus (bucket
   * size ≈ constant), exactly like partition counts: the bench scales
@@ -55,7 +57,7 @@ object TailBench {
     bases.foreach { n =>
       val b = math.max(64L, n / filesPerBucket).toInt
       def cfg(inc: Boolean) = Pipeline.Config(
-        canonBuckets = Some(b), incrementalCanon = inc)
+        canonBuckets = Some(b), deferMerges = inc)
       val baseDir = s"$root/files_base_$n"
       FilesGen.dataset(spark, n, richness = richness)
         .write.mode("overwrite").parquet(baseDir)
@@ -99,8 +101,9 @@ object TailBench {
       def w(dir: String, st: String): Double =
         Snapshots.readManifest(dir, st).wallMs / 1e3
       val am = Snapshots.readManifest(run, "assign")
-      require(am.metrics.get("patched").contains("true"),
-        s"n=$n: incremental tail fell back to global — bench invalid")
+      require(am.metrics.get("defer").contains("true") &&
+        Pipeline.canonLogDirty(run),
+        s"n=$n: merge-on-read tail fell back to global — bench invalid")
       val tailInc = Seq("assign", "nodes", "edges").map(w(run, _)).sum
       val tailGlob = Seq("assign", "nodes", "edges").map(w(runG, _)).sum
       println(f"[tailbench] n=$n%7d m=$m B=$b " +
@@ -108,7 +111,7 @@ object TailBench {
         f"ingestINC=$tIncTail%6.1fs (tail=$tailInc%5.1fs) " +
         f"ingestGLOB=$tGlobTail%6.1fs (tail=$tailGlob%5.1fs) " +
         f"merges=${am.metrics("merges")} " +
-        f"rewrittenDirs=${am.metrics("rewrittenDirs")} " +
+        f"logRows=${Snapshots.readManifest(run, Pipeline.CanonLogStage).rows} " +
         f"drift=${Snapshots.readManifest(run, "ep_keys").metrics.getOrElse("censusDrift", "?")}")
       println(f"[tailbench]   tail stages INC : assign=${w(run, "assign")}%5.1fs " +
         f"nodes=${w(run, "nodes")}%5.1fs edges=${w(run, "edges")}%5.1fs " +
@@ -134,16 +137,16 @@ object TailBench {
 
       // graph equality between the two tails
       val cols = Seq("canonicalId", "canonical", "kind", "memberCount")
-      val nInc = Snapshots.read(spark, run, "nodes").selectExpr(cols: _*)
-      val nGlob = Snapshots.read(spark, runG, "nodes").selectExpr(cols: _*)
+      val nInc = Pipeline.readNodes(spark, run).selectExpr(cols: _*)
+      val nGlob = Pipeline.readNodes(spark, runG).selectExpr(cols: _*)
       val ecols = Seq("subj", "pred", "canonicalId")
-      val eInc = Snapshots.read(spark, run, "edges").selectExpr(ecols: _*)
-      val eGlob = Snapshots.read(spark, runG, "edges").selectExpr(ecols: _*)
+      val eInc = Pipeline.readEdges(spark, run).selectExpr(ecols: _*)
+      val eGlob = Pipeline.readEdges(spark, runG).selectExpr(ecols: _*)
       if (n == bases.min) {
         val d1 = nInc.exceptAll(nGlob).count() + nGlob.exceptAll(nInc).count()
         val d2 = eInc.exceptAll(eGlob).count() + eGlob.exceptAll(eInc).count()
         println(s"[tailbench]   exceptAll nodes=$d1 edges=$d2 (must be 0/0)")
-        require(d1 == 0 && d2 == 0, "incremental tail diverged from global")
+        require(d1 == 0 && d2 == 0, "merge-on-read tail diverged from global")
       } else {
         val c = (nInc.count(), nGlob.count(), eInc.count(), eGlob.count())
         println(s"[tailbench]   counts nodes=${c._1}/${c._2} edges=${c._3}/${c._4}")

@@ -717,7 +717,8 @@ class OpsSpec extends SparkSpec {
     // pushdown-proofing: filtering on keep (the operator's purpose)
     // must keep split(text) let-bound — predicate pushdown inlining a
     // shared __ws alias once per lambda reference is the O(words²)
-    // regression CurationProbe measures at 10×. With the let-binding
+    // regression measured at 10× (10.3 s naive vs 2.1 s at sf0.1,
+    // SURVEY.md). With the let-binding
     // shape, the optimized filter+project plan carries a bounded
     // handful of split calls, not one per element access.
     val filteredPlan = TextOps.repetitionScore(docs).filter(col("keep"))

@@ -83,55 +83,95 @@ class PipelineSpec extends SparkSpec {
     deleteRec(Path.of(dir))
   }
 
-  test("stagePatch: copy-on-write partial overwrite — carried files, appends, chaining, expire guard") {
-    val dir = tmpDir("patch")
+  test("stageAppend: append chaining, carried files, time travel, expire guard") {
+    val dir = tmpDir("append")
     def readSet = Snapshots.read(spark, dir, "t")
       .select("x", "b").as[(Long, Int)].collect().toSet
+    def appendRoots(m: Snapshots.Manifest): Set[String] =
+      m.baseFiles.get.keys.filter(_.contains("/append/"))
+        .map(_.split("/part").head).toSet
     Snapshots.stage(spark, dir, "t", "p1", resume = false,
       partitionBy = Seq("b")) {
       Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)).toDF("x", "b")
     }
-    // v2 rewrites b=0 (drops x=2, adds x=10) and APPENDS x=99 with
-    // b=2 to the unpartitioned append set — b=1 and b=2 dirs of the
-    // base are carried by reference
-    Snapshots.stagePatch(spark, dir, "t", "p2", Seq("b=0"), Seq("b")) {
-      Seq((1L, 0), (10L, 0)).toDF("x", "b")
-    } {
-      Seq((99L, 2)).toDF("x", "b")
+    val base = Snapshots.readManifest(dir, "t").fileRows
+      .map { case (k, r) => s"snap=1/$k" -> r }
+    // v2 appends two rows to its unpartitioned append set; every base
+    // file is carried by reference, none copied
+    Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b")) {
+      Seq((10L, 0), (99L, 2)).toDF("x", "b")
     }
-    assert(readSet == Set((1L, 0), (10L, 0), (3L, 1), (4L, 2), (99L, 2)))
+    val v1Set = Set((1L, 0), (2L, 0), (3L, 1), (4L, 2))
+    assert(readSet == v1Set ++ Set((10L, 0), (99L, 2)))
     val m2 = Snapshots.readManifest(dir, "t")
-    assert(m2.rows == 5 && m2.version.contains(2))
-    assert(m2.baseFiles.get.keys.forall(_.startsWith("snap=1/")))
-    assert(!m2.baseFiles.get.keys.exists(_.contains("/b=0/")))
-    // time travel: v1 still reads as the original full snapshot
-    assert(Snapshots.readVersion(spark, dir, "t", 1).count() == 4)
-    // chained patch: v3 rewrites b=2. The FULL new content of b=2 is
-    // (7,2) — the v2 append row (99,2) sat in the now-rewritten bucket
-    // and must NOT survive via append consolidation; the new append
-    // (50,1) replaces the prior append set alongside carried b=1
-    Snapshots.stagePatch(spark, dir, "t", "p3", Seq("b=2"), Seq("b")) {
-      Seq((7L, 2)).toDF("x", "b")
-    } {
+    assert(m2.rows == 6 && m2.version.contains(2))
+    assert(m2.baseFiles.get == base)
+    assert(m2.fileRows.keys.forall(_.startsWith("append/d/")))
+    // v3: a one-row delta is smaller than v2's two-row set, so the
+    // cascade CARRIES v2's set by reference
+    Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b")) {
       Seq((50L, 1)).toDF("x", "b")
     }
-    assert(readSet == Set((1L, 0), (10L, 0), (3L, 1), (50L, 1), (7L, 2)))
-    assert(Snapshots.readManifest(dir, "t").rows == 5)
-    // appends CONSOLIDATE: v3's manifest carries no snap=2 append file
-    assert(!Snapshots.readManifest(dir, "t").baseFiles.get.keys
-      .exists(p => p.startsWith("snap=2/append")))
-    // a patch on a patch where the prior append row SURVIVES (b=1 not
-    // rewritten): v4 rewrites b=0; (50,1) must ride into v4's append
-    Snapshots.stagePatch(spark, dir, "t", "p4", Seq("b=0"), Seq("b")) {
-      Seq((11L, 0)).toDF("x", "b")
-    } {
+    val m3 = Snapshots.readManifest(dir, "t")
+    assert(appendRoots(m3) == Set("snap=2/append/d"))
+    assert(m3.rows == 7 && readSet == v1Set ++ Set((10L, 0), (99L, 2), (50L, 1)))
+    // v4: a two-row delta absorbs both prior sets (1 ≤ 2, then
+    // 2 ≤ 3) into one merged set; only the base stays carried
+    Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b")) {
+      Seq((60L, 0), (61L, 2)).toDF("x", "b")
+    }
+    val m4 = Snapshots.readManifest(dir, "t")
+    assert(m4.baseFiles.get == base)
+    assert(m4.fileRows.keys.forall(_.startsWith("append/m/")))
+    assert(m4.metrics("absorbedSets") == "2" && m4.metrics("appendSets") == "1")
+    val v4Set = v1Set ++ Set((10L, 0), (99L, 2), (50L, 1), (60L, 0), (61L, 2))
+    assert(m4.rows == 9 && readSet == v4Set)
+    assert(Snapshots.appendStats(m4) == (5L, 1))
+    // an empty append changes nothing but the version
+    Snapshots.stageAppend(spark, dir, "t", "p5", Seq("b")) {
       spark.emptyDataset[(Long, Int)].toDF("x", "b")
     }
-    assert(readSet == Set((11L, 0), (3L, 1), (50L, 1), (7L, 2)))
-    // expire guard: earlier snapshots stay pinned while patches carry
-    // their files
+    assert(Snapshots.readManifest(dir, "t").rows == 9 && readSet == v4Set)
+    // time travel: every published version reads as it was
+    assert(Snapshots.readVersion(spark, dir, "t", 1).count() == 4)
+    assert(Snapshots.readVersion(spark, dir, "t", 2).count() == 6)
+    assert(Snapshots.readVersion(spark, dir, "t", 3).count() == 7)
+    // expire guard: a version stays pinned while a published append
+    // carries its files — v1 by every later version, v2 by v3
     intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
-    intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 3))
+    intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 2))
+    Snapshots.expire(dir, "t", 3)
+    Snapshots.expire(dir, "t", 2)
+    intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
+    intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 5))
+    assert(readSet == v4Set)
+    deleteRec(Path.of(dir))
+  }
+
+  test("a copy-on-write manifest (appendExcludes) is refused by read, stageAppend and compactTail") {
+    val dir = tmpDir("cowrefuse")
+    Seq("assign", "nodes", "edges").foreach { st =>
+      Snapshots.stage(spark, dir, st, "cr", resume = false,
+        partitionBy = Seq("cb")) {
+        Seq((1L, 0), (2L, 1)).toDF("canonicalId", "cb")
+      }
+    }
+    // hand-write the tombstone map a copy-on-write ingest left behind
+    val live = Path.of(Snapshots.stageDir(dir, "assign"), "_MANIFEST.json")
+    Files.writeString(live, Files.readString(live).replaceFirst("\\{",
+      "{\"appendExcludes\":{\"snap=1/append/d\":[\"cb=0\"]},"))
+    def refused(body: => Any): Unit = {
+      val ex = intercept[IllegalArgumentException](body)
+      assert(ex.getMessage.contains("copy-on-write") &&
+        ex.getMessage.contains("Rebuild the run"), ex.getMessage)
+    }
+    refused(Snapshots.read(spark, dir, "assign"))
+    refused(Snapshots.stageAppend(spark, dir, "assign", "cr2", Seq("cb")) {
+      Seq((3L, 0)).toDF("canonicalId", "cb")
+    })
+    refused(Pipeline.compactTail(spark, dir, "cr3", 0.0))
+    // the refused append published nothing
+    assert(!Files.exists(Path.of(Snapshots.snapshotDir(dir, "assign", 2))))
     deleteRec(Path.of(dir))
   }
 
@@ -307,6 +347,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("incremental canonicalize: O(delta) bucket patches equal the global tail across chained ingests") {
+    // the O(delta) tail is merge-on-read: append-only snapshots plus
+    // the canon log, resolved on read
     // purpose-built corpus with GUARANTEED cross-ingest merges: each
     // norm class "wordN" gets its plain form in the base, an UPPER
     // variant in delta 1 (even classes) and a trailing-dot variant in
@@ -314,13 +356,11 @@ class PipelineSpec extends SparkSpec {
     // already-stored component. Deltas also RE-MENTION stored forms
     // (b: the base's plain form; c: delta-1's upper variant, whose
     // component merged an ingest earlier), exercising the edges
-    // patch's old-form canonical resolution through prior patches.
+    // append's old-form canonical resolution through the canon log.
     // New classes appear in each delta too (pure appends).
     def f(name: String, forms: Seq[String]) = SourceFile("r", name, "c0",
       "md", forms.map(w => s"q: $w?").mkString("\n"))
     // 80 classes over 64 buckets: ~20 merged-away roots per delta
-    // touch a strict subset of buckets, so the patch manifests MUST
-    // carry untouched base files (asserted below)
     val classes = (0 until 80).map(i => s"word$i")
     val a = classes.zipWithIndex.map { case (w, i) => f(s"a$i.txt", Seq(w)) }
     val b = classes.zipWithIndex.collect {
@@ -346,17 +386,21 @@ class PipelineSpec extends SparkSpec {
     val r2 = Pipeline.runIncrementalPinned(spark, c.toDS(), inc, "icc-d2", cfg)
     assert(r1.linkEdges > 20 && r2.linkEdges > r1.linkEdges)
 
-    // the tail really PATCHED both times (no silent global fallback):
-    // live manifests carry files by reference and the patch marker
+    // the tail really DEFERRED both times (no silent global fallback):
+    // live manifests carry the base files by reference and the defer
+    // marker, and the dirty canon log is this ingest's commit record
     Seq("assign", "nodes", "edges").foreach { st =>
       val m = Snapshots.readManifest(inc, st)
-      assert(m.metrics.get("patched").contains("true"), s"$st not patched")
+      assert(m.metrics.get("defer").contains("true"), s"$st not deferred")
       assert(m.runId == "icc-d2" && m.baseFiles.exists(_.nonEmpty), st)
       assert(m.metrics("canonBuckets") == "64", st)
     }
+    assert(Pipeline.canonLogDirty(inc))
+    assert(Snapshots.readManifest(inc, Pipeline.CanonLogStage).runId ==
+      "icc-d2")
     // real merged-away roots in BOTH ingests (half the variant ids
     // hash below their class root) — otherwise this test proves
-    // nothing about bucket rewrites
+    // nothing about log resolution
     Seq(2, 3).foreach { v =>
       assert(Snapshots.readManifestVersion(inc, "assign", v)
         .metrics("merges").toLong > 0, s"assign v$v had no merges")
@@ -380,9 +424,9 @@ class PipelineSpec extends SparkSpec {
     assert(rRetry.copy(runId = "x") == r2.copy(runId = "x"))
 
     // crash-retry HALF-APPLIED: nodes+edges manifests lost after the
-    // assign patch published → the retry must heal through the global
-    // tail (the pair graph is only derivable pre-patch) and still
-    // equal the from-scratch graph
+    // assign append published → the retry must heal through the
+    // global tail (the pair graph is only derivable pre-ingest) and
+    // still equal the from-scratch graph
     val inc2 = tmpDir("icc2")
     Pipeline.run(spark, a.toDS(), inc2, "icc-base", cfg)
     Pipeline.pinEpoch(spark, inc2, "icc-pin", cfg)
@@ -393,19 +437,23 @@ class PipelineSpec extends SparkSpec {
       "icc-d1", cfg)
     val fullAb = tmpDir("icc-fullab")
     Pipeline.run(spark, (a ++ b).toDS(), fullAb, "icc-fab", cfg)
+    assert(!Pipeline.canonLogDirty(inc2), "the global tail clears the log")
     assert(nodeSet(inc2) == nodeSet(fullAb))
     assert(edgeSet(inc2) == edgeSet(fullAb))
     assert(rHeal.nodes == Snapshots.readManifest(fullAb, "nodes").rows)
 
-    // incrementalCanon=false forces the global tail (the A/B lever):
-    // same graph, full rewrite
+    // deferMerges=false applies merges through the global tail: same
+    // graph, full rewrite, no canon log
     val inc3 = tmpDir("icc3")
     Pipeline.run(spark, a.toDS(), inc3, "icc-base", cfg)
     Pipeline.pinEpoch(spark, inc3, "icc-pin", cfg)
     Pipeline.runIncrementalPinned(spark, b.toDS(), inc3, "icc-d1",
-      cfg.copy(incrementalCanon = false))
-    assert(!Snapshots.readManifest(inc3, "nodes").metrics.contains("patched"))
+      cfg.copy(deferMerges = false))
+    val m3 = Snapshots.readManifest(inc3, "nodes")
+    assert(!m3.metrics.contains("defer") && m3.baseFiles.forall(_.isEmpty))
+    assert(!Snapshots.isComplete(inc3, Pipeline.CanonLogStage))
     assert(nodeSet(inc3) == nodeSet(fullAb))
+    assert(edgeSet(inc3) == edgeSet(fullAb))
   }
 
   test("compactAppendFrac folds the tail tables after a pinned ingest; chain stays exact") {
@@ -419,7 +467,7 @@ class PipelineSpec extends SparkSpec {
     val c = classes.zipWithIndex.collect {
       case (w, i) if i % 2 == 1 => f(s"c$i.txt", Seq(w + "."))
     } :+ f("cnew.txt", Seq("cbrandnew2"))
-    // frac ~0: fold whenever a patched stage holds ANY append rows
+    // frac ~0: fold whenever a tail stage holds ANY append rows
     val cfg = Pipeline.Config(canonBuckets = Some(64),
       arrangePartitions = Some(4), compactAppendFrac = Some(1e-9))
     val inc = tmpDir("icfold")
@@ -434,7 +482,7 @@ class PipelineSpec extends SparkSpec {
       assert(Snapshots.appendStats(m) == (0L, 0), st)
       assert(m.baseFiles.forall(_.isEmpty), st)
     }
-    // a second pinned ingest PATCHES cleanly on top of the folded
+    // a second pinned ingest APPENDS cleanly on top of the folded
     // snapshots, then folds again
     val r2 = Pipeline.runIncrementalPinned(spark, c.toDS(), inc, "if-d2", cfg)
     assert(Snapshots.readManifest(inc, "assign").metrics
@@ -543,13 +591,16 @@ class PipelineSpec extends SparkSpec {
     val r2 = Pipeline.runIncrementalPinned(spark, c.toDS(), inc, "df-d2",
       cfgD)
 
-    // the ingests really DEFERRED: zero rewritten dirs, append-only
-    // patches, a dirty log with real merges
+    // the ingests really DEFERRED: append-only versions that carry
+    // every base file, a dirty log with real merges
+    val baseFiles = Seq("assign", "nodes", "edges").map(st =>
+      st -> Snapshots.readManifestVersion(inc, st, 1).fileRows.keys
+        .map(k => s"snap=1/$k").toSet).toMap
     Seq("assign", "nodes", "edges").foreach { st =>
       val m = Snapshots.readManifest(inc, st)
       assert(m.metrics.get("defer").contains("true"), s"$st not deferred")
-      assert(m.metrics("rewrittenDirs") == "0", st)
-      assert(m.metrics.get("patched").contains("true"), st)
+      assert(baseFiles(st).subsetOf(m.baseFiles.get.keySet), st)
+      assert(m.fileRows.keys.forall(_.startsWith("append/")), st)
     }
     assert(Pipeline.canonLogDirty(inc))
     val logRows = Snapshots.readManifest(inc, Pipeline.CanonLogStage).rows
@@ -589,7 +640,7 @@ class PipelineSpec extends SparkSpec {
     assert(nodeSet(inc) == nodeSet(full2))
     assert(r3.edges == Snapshots.readManifest(full2, "edges").rows)
 
-    // a COPY-ON-WRITE ingest refuses to run over a dirty log: it heals
+    // deferMerges=false over a dirty log: the ingest applies merges
     // through the global tail, which clears the log
     val inc2 = tmpDir("defer-cow")
     Pipeline.run(spark, a.toDS(), inc2, "df-base", cfgD)

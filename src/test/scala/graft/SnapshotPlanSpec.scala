@@ -79,7 +79,7 @@ class SnapshotPlanSpec extends SparkSpec {
   }
 
   test("probe-shaped filter !cast(ident as boolean) prunes to ident=false files") {
-    // the incrementalCanonicalize probe reads the stored assign table
+    // the mergeOnReadTail probe reads the stored assign table
     // filtered on its string ident partition via a boolean cast; this
     // pins that exact predicate shape to PARTITION pruning (not a
     // post-scan filter) under the manifest-planned index
@@ -106,23 +106,23 @@ class SnapshotPlanSpec extends SparkSpec {
     deleteRec(Path.of(dir))
   }
 
-  test("planned read == listed read across a copy-on-write patch chain incl. time travel") {
+  test("planned read == listed read across an append chain incl. time travel") {
     val dir = tmpDir("chain")
     Snapshots.stage(spark, dir, "t", "p1", resume = false,
       partitionBy = Seq("b")) {
       Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)).toDF("x", "b")
     }
-    Snapshots.stagePatch(spark, dir, "t", "p2", Seq("b=0"), Seq("b")) {
-      Seq((1L, 0), (10L, 0)).toDF("x", "b")
-    } {
-      Seq((99L, 2)).toDF("x", "b")
+    // v2's set is carried by v3 (a smaller delta), then absorbed by v4
+    Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b")) {
+      Seq((10L, 0), (99L, 2)).toDF("x", "b")
     }
-    Snapshots.stagePatch(spark, dir, "t", "p3", Seq("b=2"), Seq("b")) {
-      Seq((7L, 2)).toDF("x", "b")
-    } {
+    Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b")) {
       Seq((50L, 1)).toDF("x", "b")
     }
-    (1 to 3).foreach { v =>
+    Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b")) {
+      Seq((7L, 2), (8L, 0), (9L, 1)).toDF("x", "b")
+    }
+    (1 to 4).foreach { v =>
       val planned = withPlan(on = true)(
         Snapshots.readVersion(spark, dir, "t", v))
       val listed = withPlan(on = false)(
@@ -132,12 +132,13 @@ class SnapshotPlanSpec extends SparkSpec {
       assert(planned.select("x", "b").schema ==
         listed.select("x", "b").schema, s"version $v schema diverged")
     }
-    // current read: patched bucket + carried dirs + append set, planned
+    // current read: carried base dirs + merged append set, planned
     IOStat.reset()
     val cur = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
     assert(!IOStat.snapshot().contains("snap.assemble.listed"))
     assert(cur.select("x", "b").as[(Long, Int)].collect().toSet ==
-      Set((1L, 0), (10L, 0), (3L, 1), (50L, 1), (7L, 2)))
+      Set((1L, 0), (2L, 0), (3L, 1), (4L, 2), (10L, 0), (99L, 2),
+        (50L, 1), (7L, 2), (8L, 0), (9L, 1)))
     deleteRec(Path.of(dir))
   }
 
@@ -216,203 +217,168 @@ class SnapshotPlanSpec extends SparkSpec {
     deleteRec(Path.of(dir))
   }
 
-  /** Runs `body` with tiered appends forced on/off. */
-  private def withTiering[T](on: Boolean)(body: => T): T = {
-    val prev = Snapshots.appendTiering
-    Snapshots.appendTiering = on
-    try body finally Snapshots.appendTiering = prev
-  }
-
   private def readSet(dir: String): Set[(Long, Int)] =
     Snapshots.read(spark, dir, "t").select("x", "b")
       .as[(Long, Int)].collect().toSet
 
-  test("tiered appends: a large prior set is CARRIED under tombstones, rows stay exact") {
+  private def readSeq(dir: String): Seq[(Long, Int)] =
+    Snapshots.read(spark, dir, "t").select("x", "b")
+      .as[(Long, Int)].collect().toSeq.sorted
+
+  private def appendDf(rows: Seq[(Long, Int)]): DataFrame =
+    if (rows.isEmpty) spark.emptyDataset[(Long, Int)].toDF("x", "b")
+    else rows.toDF("x", "b")
+
+  test("tiered appends: a large prior set is CARRIED by reference, rows exact") {
     val dir = tmpDir("tier")
-    withTiering(on = true) {
-      Snapshots.stage(spark, dir, "t", "p1", resume = false,
-        partitionBy = Seq("b")) {
-        Seq((1L, 0), (2L, 1), (3L, 2)).toDF("x", "b")
-      }
-      // v2: rewrite b=0, append TEN rows spanning b=1 / b=2
-      Snapshots.stagePatch(spark, dir, "t", "p2", Seq("b=0"), Seq("b")) {
-        Seq((10L, 0)).toDF("x", "b")
-      } {
-        ((100L to 104L).map((_, 1)) ++ (200L to 204L).map((_, 2)))
-          .toDF("x", "b")
-      }
-      // v3: rewrite b=2 (full new content (30,2)), tiny append. The
-      // ten-row prior set must NOT be re-read/rewritten: it stays
-      // carried, its five b=2 rows tombstoned
-      Snapshots.stagePatch(spark, dir, "t", "p3", Seq("b=2"), Seq("b")) {
-        Seq((30L, 2)).toDF("x", "b")
-      } {
-        Seq((300L, 1)).toDF("x", "b")
-      }
-      val m3 = Snapshots.readManifest(dir, "t")
-      val appendCarried = m3.baseFiles.get.keys
-        .filter(_.contains("/append/")).toVector
-      assert(appendCarried.nonEmpty &&
-        appendCarried.forall(_.startsWith("snap=2/append/d")),
-        s"the v2 append set must be carried by reference: $appendCarried")
-      assert(m3.appendExcludes.get.values.flatten.toSet == Set("b=2"))
-      val expect3 = Set((10L, 0), (2L, 1), (30L, 2)) ++
-        (100L to 104L).map((_, 1)).toSet + ((300L, 1))
-      assert(readSet(dir) == expect3)
-      assert(m3.rows == expect3.size.toLong,
-        s"manifest rows must be exact under tombstones: ${m3.rows}")
-      // planned and listed paths agree THROUGH the tombstone filter
-      assert(rowsOf(withPlan(on = true)(
-          Snapshots.read(spark, dir, "t")).select("x", "b")) ==
-        rowsOf(withPlan(on = false)(
-          Snapshots.read(spark, dir, "t")).select("x", "b")))
-      // time travel: v2 still sees all ten append rows
-      assert(Snapshots.readVersion(spark, dir, "t", 2).count() == 13)
-      // v4: rewrite b=1 — the carried set's net visible rows drop to
-      // zero (both its value groups now tombstoned) and the cascade
-      // absorbs it; its files leave the manifest
-      Snapshots.stagePatch(spark, dir, "t", "p4", Seq("b=1"), Seq("b")) {
-        Seq((40L, 1)).toDF("x", "b")
-      } {
-        Seq((400L, 0)).toDF("x", "b")
-      }
-      val m4 = Snapshots.readManifest(dir, "t")
-      assert(!m4.baseFiles.get.keys.exists(_.startsWith("snap=2/append")))
-      val expect4 = Set((10L, 0), (400L, 0), (40L, 1), (30L, 2))
-      assert(readSet(dir) == expect4 && m4.rows == expect4.size.toLong)
+    Snapshots.stage(spark, dir, "t", "p1", resume = false,
+      partitionBy = Seq("b")) {
+      Seq((1L, 0), (2L, 1), (3L, 2)).toDF("x", "b")
     }
+    // v2: append TEN rows spanning b=1 / b=2
+    val ten = (100L to 104L).map((_, 1)) ++ (200L to 204L).map((_, 2))
+    Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b"))(appendDf(ten))
+    // v3: tiny append. The ten-row prior set must NOT be
+    // re-read/rewritten: it stays carried by reference
+    Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b")) {
+      Seq((300L, 1)).toDF("x", "b")
+    }
+    val m3 = Snapshots.readManifest(dir, "t")
+    val appendCarried = m3.baseFiles.get.keys
+      .filter(_.contains("/append/")).toVector
+    assert(appendCarried.nonEmpty &&
+      appendCarried.forall(_.startsWith("snap=2/append/d")),
+      s"the v2 append set must be carried by reference: $appendCarried")
+    val expect3 = Set((1L, 0), (2L, 1), (3L, 2)) ++ ten.toSet + ((300L, 1))
+    assert(readSet(dir) == expect3)
+    assert(m3.rows == expect3.size.toLong, s"manifest rows: ${m3.rows}")
+    assert(Snapshots.appendStats(m3) == (11L, 2))
+    // planned and listed paths agree over carried append sets
+    assert(rowsOf(withPlan(on = true)(
+        Snapshots.read(spark, dir, "t")).select("x", "b")) ==
+      rowsOf(withPlan(on = false)(
+        Snapshots.read(spark, dir, "t")).select("x", "b")))
+    // time travel: v2 still sees base + ten
+    assert(Snapshots.readVersion(spark, dir, "t", 2).count() == 13)
+    // v4: a twelve-row delta absorbs both prior sets (1 ≤ 12, then
+    // 10 ≤ 13); their files leave the manifest
+    val twelve = (400L until 412L).map((_, 0))
+    Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b"))(appendDf(twelve))
+    val m4 = Snapshots.readManifest(dir, "t")
+    assert(!m4.baseFiles.get.keys.exists(_.contains("/append/")))
+    assert(m4.metrics("absorbedSets") == "2")
+    val expect4 = expect3 ++ twelve.toSet
+    assert(readSet(dir) == expect4 && m4.rows == expect4.size.toLong)
     deleteRec(Path.of(dir))
   }
 
-  test("tiered == legacy consolidation over the same patch sequence (content and rows)") {
-    def run(tiering: Boolean): (Set[(Long, Int)], Long) = {
-      val dir = tmpDir(s"ab$tiering")
-      try withTiering(on = tiering) {
-        Snapshots.stage(spark, dir, "t", "p1", resume = false,
-          partitionBy = Seq("b")) {
-          (0L until 12L).map(i => (i, (i % 3).toInt)).toDF("x", "b")
-        }
-        Snapshots.stagePatch(spark, dir, "t", "p2", Seq("b=0"), Seq("b")) {
-          Seq((100L, 0)).toDF("x", "b")
-        } { ((200L to 206L).map((_, 1)) :+ (210L, 2L.toInt)).toDF("x", "b") }
-        Snapshots.stagePatch(spark, dir, "t", "p3", Seq("b=1"), Seq("b")) {
-          Seq((101L, 1)).toDF("x", "b")
-        } { Seq((301L, 2)).toDF("x", "b") }
-        Snapshots.stagePatch(spark, dir, "t", "p4", Seq("b=2"), Seq("b")) {
-          Seq((102L, 2)).toDF("x", "b")
-        } { spark.emptyDataset[(Long, Int)].toDF("x", "b") }
-        (readSet(dir), Snapshots.readManifest(dir, "t").rows)
-      } finally deleteRec(Path.of(dir))
+  test("tiered appends == the union of the appended inputs (content and rows)") {
+    val dir = tmpDir("union")
+    val base = (0L until 12L).map(i => (i, (i % 3).toInt))
+    val appends = Seq(
+      (200L to 206L).map((_, 1)) :+ ((210L, 2)),
+      Seq((301L, 2)),
+      Nil,
+      Seq((100L, 0), (101L, 1), (102L, 2)),
+      // duplicates of stored rows stay duplicates: appends never dedup
+      Seq((0L, 0), (301L, 2)))
+    Snapshots.stage(spark, dir, "t", "p1", resume = false,
+      partitionBy = Seq("b"))(appendDf(base))
+    appends.zipWithIndex.foreach { case (app, i) =>
+      Snapshots.stageAppend(spark, dir, "t", s"p${i + 2}", Seq("b"))(
+        appendDf(app))
     }
-    val (tiered, tieredRows) = run(tiering = true)
-    val (legacy, legacyRows) = run(tiering = false)
-    assert(tiered == legacy, "tiered appends changed the table content")
-    assert(tieredRows == legacyRows && tieredRows == tiered.size.toLong)
+    val expected = (base ++ appends.flatten).sorted
+    assert(readSeq(dir) == expected, "appends changed the table content")
+    assert(Snapshots.readManifest(dir, "t").rows == expected.size.toLong)
+    deleteRec(Path.of(dir))
   }
 
   test("binary-counter cascade keeps the live append-set count logarithmic") {
     val dir = tmpDir("cascade")
-    withTiering(on = true) {
-      Snapshots.stage(spark, dir, "t", "p1", resume = false,
-        partitionBy = Seq("b")) {
-        Seq((1L, 0), (2L, 1)).toDF("x", "b")
-      }
-      val k = 8
-      (1 to k).foreach { i =>
-        Snapshots.stagePatch(spark, dir, "t", s"p$i", Seq("b=0"), Seq("b")) {
-          Seq((1L, 0)).toDF("x", "b")
-        } { Seq((1000L + i, 1), (2000L + i, 1)).toDF("x", "b") }
-      }
-      val m = Snapshots.readManifest(dir, "t")
-      val sets = m.baseFiles.get.keys.filter(_.contains("/append/"))
-        .map(_.split("/part").head).toSet.size +
-        m.fileRows.keys.count(_.startsWith("append/")).min(1)
-      val bound = (math.log(k * 2.0) / math.log(2)).toInt + 1
-      assert(sets <= bound, s"live append sets $sets > log bound $bound")
-      assert(m.metrics("appendSets").toInt == sets)
-      // every appended row is still visible exactly once
-      assert(Snapshots.read(spark, dir, "t").count() == 2L + 2 * k)
-      assert(m.rows == 2L + 2 * k)
+    Snapshots.stage(spark, dir, "t", "p1", resume = false,
+      partitionBy = Seq("b")) {
+      Seq((1L, 0), (2L, 1)).toDF("x", "b")
     }
+    val k = 8
+    (1 to k).foreach { i =>
+      Snapshots.stageAppend(spark, dir, "t", s"p$i", Seq("b")) {
+        Seq((1000L + i, 1), (2000L + i, 1)).toDF("x", "b")
+      }
+    }
+    val m = Snapshots.readManifest(dir, "t")
+    val sets = m.baseFiles.get.keys.filter(_.contains("/append/"))
+      .map(_.split("/part").head).toSet.size +
+      m.fileRows.keys.count(_.startsWith("append/")).min(1)
+    val bound = (math.log(k * 2.0) / math.log(2)).toInt + 1
+    assert(sets <= bound, s"live append sets $sets > log bound $bound")
+    assert(m.metrics("appendSets").toInt == sets)
+    assert(Snapshots.appendStats(m) == (2L * k, sets))
+    // every appended row is still visible exactly once
+    assert(Snapshots.read(spark, dir, "t").count() == 2L + 2 * k)
+    assert(m.rows == 2L + 2 * k)
     deleteRec(Path.of(dir))
   }
 
-  test("tiered == legacy over SEEDED RANDOM patch sequences (content + exact rows)") {
-    // randomized twin of the hand-built chains above: random rewritten
-    // buckets and random appends per patch, fixed seed for driver
-    // determinism. Multiset equality via sorted sequences (a Set would
-    // mask dropped duplicates).
+  test("tiered appends == union of SEEDED RANDOM appends (content + exact rows)") {
+    // randomized twin of the hand-built chains above: random appends
+    // per step (sizes 0..15, so the cascade both carries and absorbs),
+    // fixed seed for driver determinism. Multiset equality via sorted
+    // sequences (a Set would mask dropped duplicates).
     val rnd = new scala.util.Random(20260818L)
+    val base = Seq((1L, 0), (2L, 1), (3L, 2), (4L, 3))
     (1 to 5).foreach { trial =>
-      val steps = (1 to (2 + rnd.nextInt(3))).map { _ =>
-        val rew = Seq.fill(1 + rnd.nextInt(2))(rnd.nextInt(4)).distinct
-        val app = Seq.fill(rnd.nextInt(6))(
-          (1000L + rnd.nextInt(9000), rnd.nextInt(4)))
-          .filterNot { case (_, b) => rew.contains(b) }
-        (rew, app)
-      }
-      def run(tiering: Boolean): (Seq[(Long, Int)], Long) = {
-        val dir = tmpDir(s"rand$trial$tiering")
-        try withTiering(on = tiering) {
-          Snapshots.stage(spark, dir, "t", "p0", resume = false,
-            partitionBy = Seq("b")) {
-            Seq((1L, 0), (2L, 1), (3L, 2), (4L, 3)).toDF("x", "b")
-          }
-          steps.zipWithIndex.foreach { case ((rew, app), i) =>
-            Snapshots.stagePatch(spark, dir, "t", s"p${i + 1}",
-              rew.map(b => s"b=$b"), Seq("b")) {
-              rew.map(b => (100L + b, b)).toDF("x", "b")
-            } {
-              if (app.isEmpty) spark.emptyDataset[(Long, Int)].toDF("x", "b")
-              else app.toDF("x", "b")
-            }
-          }
-          (Snapshots.read(spark, dir, "t").select("x", "b")
-            .as[(Long, Int)].collect().toSeq.sorted,
-            Snapshots.readManifest(dir, "t").rows)
-        } finally deleteRec(Path.of(dir))
-      }
-      val (tiered, tRows) = run(tiering = true)
-      val (legacy, lRows) = run(tiering = false)
-      assert(tiered == legacy, s"trial $trial diverged ($steps)")
-      assert(tRows == lRows && tRows == tiered.size.toLong,
-        s"trial $trial rows: $tRows vs $lRows vs ${tiered.size}")
+      val steps = Seq.fill(3 + rnd.nextInt(4))(
+        Seq.fill(rnd.nextInt(16))((1000L + rnd.nextInt(9000), rnd.nextInt(4))))
+      val dir = tmpDir(s"rand$trial")
+      try {
+        Snapshots.stage(spark, dir, "t", "p0", resume = false,
+          partitionBy = Seq("b"))(appendDf(base))
+        steps.zipWithIndex.foreach { case (app, i) =>
+          Snapshots.stageAppend(spark, dir, "t", s"p${i + 1}", Seq("b"))(
+            appendDf(app))
+        }
+        val expected = (base ++ steps.flatten).sorted
+        assert(readSeq(dir) == expected, s"trial $trial diverged ($steps)")
+        val m = Snapshots.readManifest(dir, "t")
+        assert(m.rows == expected.size.toLong, s"trial $trial rows: ${m.rows}")
+        assert(Snapshots.appendStats(m)._1 == steps.flatten.size.toLong)
+      } finally deleteRec(Path.of(dir))
     }
   }
 
   test("compact folds buckets, patches and tombstoned appends into a full snapshot; old versions expire") {
     val dir = tmpDir("compact")
-    withTiering(on = true) {
-      Snapshots.stage(spark, dir, "t", "p1", resume = false,
-        partitionBy = Seq("b")) {
-        Seq((1L, 0), (2L, 1), (3L, 2)).toDF("x", "b")
-      }
-      Snapshots.stagePatch(spark, dir, "t", "p2", Seq("b=0"), Seq("b")) {
-        Seq((10L, 0)).toDF("x", "b")
-      } { ((100L to 105L).map((_, 1)) :+ (200L, 2L.toInt)).toDF("x", "b") }
-      Snapshots.stagePatch(spark, dir, "t", "p3", Seq("b=2"), Seq("b")) {
-        Seq((30L, 2)).toDF("x", "b")
-      } { Seq((300L, 1)).toDF("x", "b") }
-      val before = readSet(dir)
-      val mPatched = Snapshots.readManifest(dir, "t")
-      assert(Snapshots.appendStats(mPatched)._1 > 0)
-      // pre-compact: carried files pin old versions against expiry
-      intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
-
-      Snapshots.compact(spark, dir, "t", "maint")()
-      val mC = Snapshots.readManifest(dir, "t")
-      assert(mC.metrics.get("compacted").contains("true"))
-      assert(mC.baseFiles.forall(_.isEmpty) &&
-        Snapshots.appendStats(mC) == (0L, 0))
-      assert(readSet(dir) == before, "compaction changed the content")
-      assert(mC.rows == before.size.toLong)
-      // partitioning survived the fold: files live under b=* dirs
-      assert(mC.fileRows.keys.forall(_.contains("b=")))
-      // every pre-compact version is now expirable (newest-first: the
-      // guard also protects files carried by EXPIRED-LATER manifests)
-      Seq(3, 2, 1).foreach(Snapshots.expire(dir, "t", _))
-      assert(readSet(dir) == before)
+    Snapshots.stage(spark, dir, "t", "p1", resume = false,
+      partitionBy = Seq("b")) {
+      Seq((1L, 0), (2L, 1), (3L, 2)).toDF("x", "b")
     }
+    // two live append sets: v3's one-row delta carries v2's seven
+    Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b")) {
+      ((100L to 105L).map((_, 1)) :+ ((200L, 2))).toDF("x", "b")
+    }
+    Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b")) {
+      Seq((300L, 1)).toDF("x", "b")
+    }
+    val before = readSet(dir)
+    val mAppended = Snapshots.readManifest(dir, "t")
+    assert(Snapshots.appendStats(mAppended) == (8L, 2))
+    // pre-compact: carried files pin old versions against expiry
+    intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
+
+    Snapshots.compact(spark, dir, "t", "maint")()
+    val mC = Snapshots.readManifest(dir, "t")
+    assert(mC.metrics.get("compacted").contains("true"))
+    assert(mC.baseFiles.forall(_.isEmpty) &&
+      Snapshots.appendStats(mC) == (0L, 0))
+    assert(readSet(dir) == before, "compaction changed the content")
+    assert(mC.rows == before.size.toLong)
+    // partitioning survived the fold: files live under b=* dirs
+    assert(mC.fileRows.keys.forall(_.contains("b=")))
+    // every pre-compact version is now expirable (newest-first: the
+    // guard also protects files carried by EXPIRED-LATER manifests)
+    Seq(3, 2, 1).foreach(Snapshots.expire(dir, "t", _))
+    assert(readSet(dir) == before)
     deleteRec(Path.of(dir))
   }
 }

@@ -279,11 +279,12 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    // batch 2 went through the merge-on-read tail: append-only patch,
-    // dirty log carrying its merges
+    // batch 2 went through the merge-on-read tail: append-only
+    // version carrying the base files, dirty log carrying its merges
     val em = Snapshots.readManifest(runDir, "edges")
     assert(em.metrics.get("defer").contains("true") &&
-      em.metrics("rewrittenDirs") == "0", em.metrics.toString)
+      em.fileRows.keys.forall(_.startsWith("append/")) &&
+      em.baseFiles.exists(_.nonEmpty), em.metrics.toString)
     assert(Pipeline.canonLogDirty(runDir))
 
     // resolved graph equals a from-scratch run under the same census
