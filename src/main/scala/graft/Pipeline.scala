@@ -26,7 +26,6 @@ object Pipeline {
   final case class Config(
       extraction: Extraction.Config = Extraction.Config(),
       link: Linking.Config = Linking.Config(),
-      hotThreshold: Long = 100000L,
       // CC edge-count threshold below which the driver union-find fast
       // path runs instead of the distributed star fixpoint (see
       // ConnectedComponents.LocalEdgeThreshold). 0 forces the
@@ -41,15 +40,14 @@ object Pipeline {
       // 100 TB — a 2k-file smoke corpus has no use for 32 near-empty
       // tasks × pred partition dirs.
       arrangePartitions: Option[Int] = None,
-      // CANONICAL-BUCKET layout (opt-in): when Some(B), the assign /
-      // nodes / edges snapshots gain a cb = pmod(canonicalId, B)
-      // partition column, and epoch-pinned ingests take the O(delta)
+      // CANONICAL BUCKETS (opt-in): when Some(B), the assign / nodes /
+      // edges snapshots gain a cb = pmod(canonicalId, B) int data
+      // column, and epoch-pinned ingests take the O(delta)
       // merge-on-read tail (see deferMerges) instead of recomputing
-      // the tables globally. B is baked into the snapshot layout
-      // (recorded in the manifests, checked by every pinned ingest);
-      // size it so one bucket ≈ a comfortable task input at the corpus
-      // scale (the same sizing contract as maxPartitionBytes). None
-      // (default) = today's layout, zero cost to non-incremental runs.
+      // the tables globally. B only sets cb's modulus: it creates no
+      // directories and sets no file count, so it needs no sizing. The
+      // manifests record it and every pinned ingest checks it. None
+      // (default) = no cb column, kind/pred-partitioned nodes/edges.
       canonBuckets: Option[Int] = None,
       // Refuse a pinned ingest whose census drift exceeds this bound
       // (fraction of the delta's distinct (pred, shingle) keys whose
@@ -78,8 +76,8 @@ object Pipeline {
       // compactTail as an explicit maintenance job instead, the
       // Iceberg operational shape.
       compactAppendFrac: Option[Double] = None,
-      // MERGE-ON-READ canonicalization for pinned ingests over a
-      // canonBuckets layout (default on). The ingest writes only
+      // MERGE-ON-READ canonicalization for pinned ingests over
+      // canonical buckets (default on). The ingest writes only
       // O(delta) appends plus a tiny compressed CANON LOG (old root →
       // new root, single-hop); readers resolve stale canonicals
       // through one broadcast join (Pipeline.readNodes / readEdges —
@@ -538,8 +536,9 @@ object Pipeline {
     val deltaLinkRows = deltaRowsOf(runDir, "link_edges", runId)
 
     // 5. canonicalize + materialize: the O(delta) merge-on-read tail
-    // when the layout and bounds allow (see mergeOnReadTail), else
-    // the global tail over the full (narrow) unions
+    // when the canonical buckets and bounds allow (see
+    // mergeOnReadTail), else the global tail over the full (narrow)
+    // unions
     val ccIters = graft.store.IOStat.timed("pin.canon")(
       mergeOnReadTail(spark, runDir, runId, cfg,
         deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows))
@@ -594,7 +593,7 @@ object Pipeline {
   /** Returns Some(ccIterations=0) when the merge-on-read tail ran,
     * None when the caller must fall back to the global tail:
     * deferMerges off, canonBuckets unset or mismatched with the stored
-    * layout, delta or canon log beyond the driver/broadcast bounds, or
+    * tables', delta or canon log beyond the driver/broadcast bounds, or
     * a crash-retry that finds this runId's tail PARTIALLY applied (the
     * pair graph can only be derived from the pre-ingest state, so a
     * half-applied ingest recovers through the global tail — correct,
@@ -615,8 +614,8 @@ object Pipeline {
       case _ => return None
     }
     // a tail stage whose live manifest is missing (crash window) can
-    // only be healed by the global tail; and the stored layout must
-    // carry the SAME bucketing (cb is baked into the partition dirs)
+    // only be healed by the global tail; and the stored tables must
+    // carry the SAME modulus (their cb values were computed with it)
     if (!Tail.forall(st => Snapshots.isComplete(runDir, st))) return None
     if (!Tail.forall(st => Snapshots.readManifest(runDir, st)
       .metrics.get("canonBuckets").contains(b.toString))) return None
@@ -755,25 +754,26 @@ object Pipeline {
       "ufSec" -> f"${tUf / 1e9}%.2f",
       "delta" -> "append")
 
-    // --- 4. the delta's rows at their final canonicals. Partition
-    // columns carry the READ-BACK types (ident: string, cb: int), as
+    // --- 4. the delta's rows at their final canonicals, columns in
+    // the stored snapshots' read-back order. assign's ident partition
+    // column carries its READ-BACK type (string), as
     // Snapshots.stageAppend requires.
     val deltaAssign = newEnts
       .join(broadcast(deltaCompDf), Seq("entityId"), "left")
       .select($"pred", $"obj", $"norm", $"entityId",
         coalesce($"comp", $"entityId").as("canonicalId"))
     val assignApp = deltaAssign
+      .withColumn("cb", cbOf($"canonicalId"))
       .withColumn("ident",
         ($"canonicalId" === $"entityId").cast("string"))
-      .withColumn("cb", cbOf($"canonicalId"))
-      .repartition(appendParts).sortWithinPartitions($"cb")
+      .repartition(appendParts)
     val nodesApp = deltaAssign.groupBy($"canonicalId")
       .agg(min(struct($"norm", $"obj")).as("m"),
         min($"pred").as("kind"), count(lit(1)).as("memberCount"))
       .select($"canonicalId", $"m.obj".as("canonical"),
         $"m.norm".as("canonicalNorm"), $"kind", $"memberCount")
       .withColumn("cb", cbOf($"canonicalId"))
-      .repartition(appendParts).sortWithinPartitions($"cb", $"kind")
+      .repartition(appendParts).sortWithinPartitions($"kind")
     val edgesApp = deltaTriples
       .withColumn("subj", concat($"repo", lit("/"), $"path"))
       .withColumn("entityId", Linking.idCol($"pred", $"obj"))
@@ -782,7 +782,7 @@ object Pipeline {
         coalesce($"fc", $"entityId").as("canonicalId"),
         $"conf", $"repo", $"path", $"commit")
       .withColumn("cb", cbOf($"canonicalId"))
-      .repartition(appendParts).sortWithinPartitions($"cb", $"pred")
+      .repartition(appendParts).sortWithinPartitions($"pred")
 
     // captured BEFORE the appends publish: the live nodes manifest is
     // about to gain this delta's constituent rows
@@ -801,9 +801,9 @@ object Pipeline {
       Snapshots.stageAppend(spark, runDir, st, runId, partBy,
         tailMetrics + ("defer" -> "true"))(app)
     parallelRun(Seq(
-      () => append("assign", Seq("ident", "cb"), assignApp),
-      () => append("nodes", Seq("cb"), nodesApp),
-      () => append("edges", Seq("cb"), edgesApp)))
+      () => append("assign", Seq("ident"), assignApp),
+      () => append("nodes", Nil, nodesApp),
+      () => append("edges", Nil, edgesApp)))
 
     // --- 6. the canon log, LAST (commit record). Compressed
     // single-hop: prior targets re-resolve through this ingest's
@@ -837,7 +837,9 @@ object Pipeline {
     * append rows reaching `frac` of the table, or the dirty canon log
     * reaches `frac` of assign, fold the tables into fresh full
     * snapshots with the log applied (re-clustered the way the full-run
-    * publishes cluster them) and clear the log. Idempotent per runId
+    * publishes cluster them; each fold keeps its stage's stored
+    * partitioning, so a run dir published with the former ident×cb /
+    * cb directories keeps them) and clear the log. Idempotent per runId
     * (a crash between folds re-folds all three on retry; a re-run
     * after all folds is a no-op). Returns the stages folded.
     */
@@ -880,13 +882,11 @@ object Pipeline {
         }
       }
     val shapes: Map[String, DataFrame => DataFrame] = Map(
-      "assign" -> (d => resolveIf("assign", d)
-        .repartition(col("ident"), col("cb"))
-        .sortWithinPartitions(col("cb"))),
-      "nodes" -> (d => resolveIf("nodes", d).repartition(col("cb"))
-        .sortWithinPartitions(col("cb"), col("kind"))),
-      "edges" -> (d => resolveIf("edges", d).repartition(col("cb"))
-        .sortWithinPartitions(col("cb"), col("pred"))))
+      "assign" -> (d => resolveIf("assign", d)),
+      "nodes" -> (d => resolveIf("nodes", d)
+        .sortWithinPartitions(col("kind"))),
+      "edges" -> (d => resolveIf("edges", d)
+        .sortWithinPartitions(col("pred"))))
     // the folds publish DISJOINT stages from already-published inputs
     // — run them concurrently, same shape and crash contract as the
     // tail-append parallel publish in mergeOnReadTail (a crashed
@@ -894,7 +894,7 @@ object Pipeline {
     def fold(st: String): Unit = {
       val m = Snapshots.readManifest(runDir, st)
       val (appendRows, sets) = Snapshots.appendStats(m)
-      // carry the layout stamp: the next ingest's O(delta)
+      // carry the canonBuckets stamp: the next ingest's O(delta)
       // precondition reads canonBuckets off the live manifest
       val keep = m.metrics.view
         .filterKeys(Set("canonBuckets", "epoch")).toMap
@@ -1122,7 +1122,7 @@ object Pipeline {
     // measurement: scaling sampled counts by 1/p leaves near-cap keys
     // misclassified with high probability (Binomial variance around
     // the cap) and drops rare keys from the denominator entirely —
-    // DriftBench read 0.12 at p=0.1 where the exact metric reads
+    // BENCH.md §13.2 read 0.12 at p=0.1 where the exact metric reads
     // 0.013 — and `.sample` reads every stored row anyway, so it
     // saved no IO. Key-sampling shrinks the probe side and the
     // aggregate by p with no bias, and is deterministic (replayed
@@ -1247,47 +1247,41 @@ object Pipeline {
     // Stage 3 — connected components → canonical id per entity.
     // Singleton entities (no link edge) canonicalize to themselves.
     var ccIters = 0
-    // opt-in canonical-bucket layout (see Config.canonBuckets). Dirs
-    // are cb-only (plus ident on assign, which the edges stage prunes
-    // and counts from the manifest): nesting pred/kind under B buckets
-    // would multiply the dir count by their cardinality for no
-    // maintenance benefit. Instead pred/kind CLUSTER inside each
-    // bucket file via sortWithinPartitions — the Iceberg
-    // bucket-transform + sort-order shape — so low-cardinality
-    // predicates still skip via row-group stats. A repartition on the
-    // dir columns keeps the file count ≈ #dirs instead of tasks×dirs.
+    // canonical buckets (see Config.canonBuckets) add cb as the last
+    // data column and no directories: no reader filters on cb, so a
+    // cb dir tree would only multiply the dirs and files of every
+    // publish and fold. Their nodes/edges are unpartitioned, and kind
+    // / pred CLUSTER inside each file via sortWithinPartitions, so
+    // low-cardinality predicates still skip via row-group stats. File
+    // counts follow each stage's own shuffle.
     val cbMetrics = cfg.canonBuckets
       .map(b => Map("canonBuckets" -> b.toString)).getOrElse(Map.empty)
     def withCb(df: DataFrame): DataFrame = cfg.canonBuckets
       .map(b => df.withColumn("cb",
         pmod($"canonicalId", lit(b.toLong)).cast("int"))).getOrElse(df)
-    def arranged(df: DataFrame, parts: Seq[String],
-                 cluster: Seq[String]): DataFrame =
+    // nodes/edges: partitioned by kind/pred, or with canonical buckets
+    // unpartitioned and clustered by it
+    def partCols(key: String): Seq[String] =
+      if (cfg.canonBuckets.isDefined) Nil else Seq(key)
+    def arranged(df: DataFrame, key: String): DataFrame =
       if (cfg.canonBuckets.isDefined)
-        df.repartition(parts.map(col): _*)
-          .sortWithinPartitions((parts ++ cluster).map(col): _*)
+        withCb(df).sortWithinPartitions(col(key))
       else df
-    def partCols(base: Seq[String], keepBase: Boolean): Seq[String] =
-      if (cfg.canonBuckets.isEmpty) base
-      else if (keepBase) base :+ "cb"
-      else Seq("cb")
     // partitioned by `ident` (canonical == self) so the edges stage can
     // read the small non-identity DELTA slice partition-pruned, and
     // count it from the manifest's partition-dir lineage with no job
-    val assignParts = partCols(Seq("ident"), keepBase = true)
     val assign = Snapshots.stage(spark, runDir, "assign", runId, resume,
-      partitionBy = assignParts,
+      partitionBy = Seq("ident"),
       metrics = Map("ccIterations" -> ccIters.toString) ++ cbMetrics) {
       // exact edge count for free from the link_edges lineage
       // manifests: CC's path decision then costs no count job and no
       // raw-edge cache (see ConnectedComponents.run's edgeCountHint)
-      val (a, iters) = assignCanonical(ents, links, cfg.hotThreshold,
-        cfg.ccLocalThreshold,
+      val (a, iters) = assignCanonical(ents, links,
+        ccLocalThreshold = cfg.ccLocalThreshold,
         edgeCountHint = Some(lineageVersions(runDir, "link_edges").map(v =>
           Snapshots.readManifestVersion(runDir, "link_edges", v).rows).sum))
       ccIters = iters
-      arranged(withCb(a.withColumn("ident", $"canonicalId" === $"entityId")),
-        assignParts, Nil)
+      withCb(a).withColumn("ident", $"canonicalId" === $"entityId")
     }
     // cross-version resume guard: the edges stage needs the assign
     // snapshot's ident column/partitioning (the delta-map rewrite). A
@@ -1302,11 +1296,10 @@ object Pipeline {
     // Stage 4a — nodes (shared nodeTable logic; the snapshot keeps the
     // canonicalNorm argmin column so comp merges recombine, see
     // nodeTableFull).
-    val nodesParts = partCols(Seq("kind"), keepBase = false)
     def nodesStage(): Unit = {
       Snapshots.stage(spark, runDir, "nodes", runId, resume,
-        partitionBy = nodesParts, metrics = cbMetrics) {
-        arranged(withCb(nodeTableFull(assign)), nodesParts, Seq("kind"))
+        partitionBy = partCols("kind"), metrics = cbMetrics) {
+        arranged(nodeTableFull(assign), "kind")
       }
       (): Unit
     }
@@ -1323,10 +1316,9 @@ object Pipeline {
     // degrades to a left shuffle join against the delta — still
     // strictly smaller than the full 1:1 map the previous design
     // joined (AQE covers hub-entity skew there).
-    val edgesParts = partCols(Seq("pred"), keepBase = false)
     def edgesStage(): Unit = {
       Snapshots.stage(spark, runDir, "edges", runId, resume,
-      partitionBy = edgesParts, metrics = cbMetrics) {
+      partitionBy = partCols("pred"), metrics = cbMetrics) {
       val withId = triples.withColumn("entityId", Linking.idCol($"pred", $"obj"))
       val deltaRows = Snapshots.readManifest(runDir, "assign").fileRows
         .collect { case (f, n) if f.contains("ident=false/") => n }.sum
@@ -1336,9 +1328,9 @@ object Pipeline {
         if (deltaRows <= SkewJoin.BroadcastableRightRows)
           withId.join(broadcast(delta), Seq("entityId"), "left")
         else withId.join(delta, Seq("entityId"), "left")
-      arranged(withCb(joined.select($"subj", $"pred",
+      arranged(joined.select($"subj", $"pred",
         coalesce($"canonicalId", $"entityId").as("canonicalId"), $"conf",
-        $"repo", $"path", $"commit")), edgesParts, Seq("pred"))
+        $"repo", $"path", $"commit"), "pred")
       }
       (): Unit
     }

@@ -908,8 +908,8 @@ object SparkEntry {
       asksNodes(s, runDir)
     }),
     // the EPOCH-PINNED ingest with the O(delta) merge-on-read
-    // canonicalize tail, under the hash gate: base run (bucketed
-    // layout) → pinEpoch → pinned ingest whose assign/nodes/edges take
+    // canonicalize tail, under the hash gate: base run (canonical
+    // buckets) → pinEpoch → pinned ingest whose assign/nodes/edges take
     // APPEND-ONLY snapshots and whose merges land in the canon log
     // (Pipeline.mergeOnReadTail: driver union-find over the
     // delta's component-pair graph). Nothing folds afterwards, so the
@@ -925,16 +925,8 @@ object SparkEntry {
       import sp.implicits._
       val runDir = freshScratch("kgpin")
       val filesDf = asksCorpus(s, dir)
-      // canonBuckets sized to THIS corpus (a few thousand forms):
-      // B is a layout knob — "one bucket ≈ a comfortable task input"
-      // (Config.canonBuckets) — and B=64 at gate scale meant ~128
-      // near-empty ident×cb partition dirs per publish, whose dynamic-
-      // partition commit + footer reads dominated the stage walls
-      // (assign 1.7s of a 4.8s base run; OPTIMIZATION_r08.md §10).
-      // B=16 keeps the O(delta) tail identical (results are
-      // layout-independent) at a quarter the dir count.
       val cfg = graft.Pipeline.Config(resume = false,
-        arrangePartitions = Some(4), canonBuckets = Some(16))
+        arrangePartitions = Some(4), canonBuckets = Some(64))
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,
           filesDf.filter(col("doc_id") % 2 === 0).drop("doc_id")
@@ -961,10 +953,8 @@ object SparkEntry {
       import sp.implicits._
       val runDir = freshScratch("kgdef")
       val filesDf = asksCorpus(s, dir)
-      // B=16 for the same corpus-sizing reason as kg_nodes_pinned
-      // (quarter the partition dirs per publish AND per fold)
       val cfg = graft.Pipeline.Config(resume = false,
-        arrangePartitions = Some(4), canonBuckets = Some(16),
+        arrangePartitions = Some(4), canonBuckets = Some(64),
         compactAppendFrac = Some(1e-9))
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,

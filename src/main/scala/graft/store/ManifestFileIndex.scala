@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus before this index existed; see BENCH.md §13.6).
   *
   * Partition values are parsed from the manifest's RELATIVE paths
-  * (`cb=7/part-...parquet`) against the schema the PUBLISHER recorded
+  * (`ident=false/part-...parquet`) against the schema the PUBLISHER recorded
   * — no inference at read time. Partition pruning mirrors Spark's own
   * `PartitioningAwareFileIndex.prunePartitions` binding (public
   * Apache source, spark/sql/core .../PartitioningAwareFileIndex.scala):

@@ -416,8 +416,9 @@ object Snapshots {
     * compaction trigger ([[compact]]).
     *
     * NOTE for callers: partition columns read back with
-    * partition-inference types (ident: string, cb: int) — the append
-    * frame must carry `partitionBy` with exactly those types.
+    * partition-inference types (a boolean dir value such as assign's
+    * ident reads back as a string) — the append frame must carry
+    * `partitionBy` with exactly those types.
     *
     * Same publish protocol as [[stage]] (data → versioned manifest →
     * live pointer last), so a crashed append is invisible and the

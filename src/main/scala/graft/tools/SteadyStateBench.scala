@@ -27,8 +27,7 @@ import org.apache.spark.sql.SparkSession
   * bias. The merge-on-read read tax is priced at the end.
   *
   * Usage: runMain graft.tools.SteadyStateBench [n] [m] [k] [foldFrac]
-  *                                             [filesPerBucket]
-  *   defaults: 200000 50000 8 0.1 500
+  *   defaults: 200000 50000 8 0.1
   */
 object SteadyStateBench {
   private val Tail = Seq("assign", "nodes", "edges")
@@ -38,7 +37,6 @@ object SteadyStateBench {
     val m = args.lift(1).map(_.toLong).getOrElse(50000L)
     val k = args.lift(2).map(_.toInt).getOrElse(8)
     val foldFrac = args.lift(3).map(_.toDouble).getOrElse(0.1)
-    val filesPerBucket = args.lift(4).map(_.toLong).getOrElse(500L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -55,10 +53,9 @@ object SteadyStateBench {
       .toString
     spark.sparkContext.setCheckpointDir(s"$root/_checkpoints")
     val richness = sys.env.getOrElse("SPARK_GRAFT_RICHNESS", "8").toInt
-    val b = math.max(64L, n / filesPerBucket).toInt
-    val cfgMor = Pipeline.Config(canonBuckets = Some(b),
+    val cfgMor = Pipeline.Config(canonBuckets = Some(64),
       compactAppendFrac = Some(foldFrac), maxLineageDeltas = Some(4))
-    val cfgGlobal = Pipeline.Config(canonBuckets = Some(b),
+    val cfgGlobal = Pipeline.Config(canonBuckets = Some(64),
       deferMerges = false)
     def rd(dir: String) = {
       import spark.implicits._
@@ -68,7 +65,7 @@ object SteadyStateBench {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
 
-    println(s"[steady] n=$n m=$m k=$k B=$b foldFrac=$foldFrac cpus=$cpus")
+    println(s"[steady] n=$n m=$m k=$k foldFrac=$foldFrac cpus=$cpus")
     val baseDir = s"$root/files_base"
     FilesGen.dataset(spark, n, richness = richness)
       .write.mode("overwrite").parquet(baseDir)

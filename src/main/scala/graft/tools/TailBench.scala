@@ -19,20 +19,14 @@ import org.apache.spark.sql.SparkSession
   * readEdges): counts at every size, full exceptAll on nodes+edges at
   * the smallest size.
   *
-  * canonBuckets is a LAYOUT parameter sized to the corpus (bucket
-  * size ≈ constant), exactly like partition counts: the bench scales
-  * B with n so per-bucket IO is flat — at 10^12 files you would pick
-  * B once for the table the same way.
-  *
-  * Usage: runMain graft.tools.TailBench [basesCsv] [m] [filesPerBucket]
-  *   defaults: 100000,200000,400000  1000  500
+  * Usage: runMain graft.tools.TailBench [basesCsv] [m]
+  *   defaults: 100000,200000,400000  1000
   */
 object TailBench {
   def main(args: Array[String]): Unit = {
     val bases = args.headOption.getOrElse("100000,200000,400000")
       .split(',').map(_.trim.toLong).toSeq
     val m = args.lift(1).map(_.toLong).getOrElse(1000L)
-    val filesPerBucket = args.lift(2).map(_.toLong).getOrElse(500L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -55,9 +49,8 @@ object TailBench {
     }
 
     bases.foreach { n =>
-      val b = math.max(64L, n / filesPerBucket).toInt
       def cfg(inc: Boolean) = Pipeline.Config(
-        canonBuckets = Some(b), deferMerges = inc)
+        canonBuckets = Some(64), deferMerges = inc)
       val baseDir = s"$root/files_base_$n"
       FilesGen.dataset(spark, n, richness = richness)
         .write.mode("overwrite").parquet(baseDir)
@@ -106,7 +99,7 @@ object TailBench {
         s"n=$n: merge-on-read tail fell back to global — bench invalid")
       val tailInc = Seq("assign", "nodes", "edges").map(w(run, _)).sum
       val tailGlob = Seq("assign", "nodes", "edges").map(w(runG, _)).sum
-      println(f"[tailbench] n=$n%7d m=$m B=$b " +
+      println(f"[tailbench] n=$n%7d m=$m " +
         f"base=$tBase%6.1fs pin=$tPin%5.1fs | " +
         f"ingestINC=$tIncTail%6.1fs (tail=$tailInc%5.1fs) " +
         f"ingestGLOB=$tGlobTail%6.1fs (tail=$tailGlob%5.1fs) " +

@@ -3,6 +3,8 @@ package graft
 import graft.fixtures.FilesGen
 import graft.store.Snapshots
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
@@ -187,6 +189,29 @@ class PipelineSpec extends SparkSpec {
     Pipeline.readNodes(spark, runDir)
       .select("canonicalId", "canonical", "kind", "memberCount")
       .as[(Long, String, String, Long)].collect().toSet
+
+  // read schemas of bucketed nodes/edges, as the former cb-partitioned
+  // layout returned them: cb is an int in last position
+  private val bucketedNodesSchema = StructType(Seq(
+    StructField("canonicalId", LongType),
+    StructField("canonical", StringType),
+    StructField("canonicalNorm", StringType),
+    StructField("kind", StringType),
+    StructField("memberCount", LongType),
+    StructField("cb", IntegerType)))
+  private val bucketedEdgesSchema = StructType(Seq(
+    StructField("subj", StringType),
+    StructField("pred", StringType),
+    StructField("canonicalId", LongType),
+    StructField("conf", DoubleType),
+    StructField("repo", StringType),
+    StructField("path", StringType),
+    StructField("commit", StringType),
+    StructField("cb", IntegerType)))
+
+  /** x and y hold the same rows (multiset equality). */
+  private def assertSameRows(x: DataFrame, y: DataFrame, what: String): Unit =
+    assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, what)
 
   test("end-to-end pipeline: counts coherent, manifests complete") {
     val dir = tmpDir("fresh")
@@ -472,8 +497,34 @@ class PipelineSpec extends SparkSpec {
       arrangePartitions = Some(4), compactAppendFrac = Some(1e-9))
     val inc = tmpDir("icfold")
     Pipeline.run(spark, a.toDS(), inc, "if-base", cfg)
+    // canonical buckets are a plain last column, not a directory tree:
+    // every published tail version (base, deferred append, fold) names
+    // no cb= path, assign keeps only its ident partition, and the read
+    // schemas are exactly those of the former cb-partitioned layout
+    def assertPlainCb(): Unit = {
+      val parts = Map("assign" -> Seq("ident"), "nodes" -> Nil,
+        "edges" -> Nil)
+      parts.foreach { case (st, cols) =>
+        Snapshots.versions(inc, st).foreach { v =>
+          val m = Snapshots.readManifestVersion(inc, st, v)
+          val paths = m.fileRows.keys ++ m.baseFiles.getOrElse(Map.empty).keys
+          assert(!paths.exists(_.contains("cb=")), s"$st v$v: $paths")
+          assert(Snapshots.partitionColsOf(m) == cols, s"$st v$v")
+        }
+      }
+      assert(Pipeline.readNodes(spark, inc).schema == bucketedNodesSchema)
+      assert(Pipeline.readEdges(spark, inc).schema == bucketedEdgesSchema)
+    }
+    assertPlainCb()
     Pipeline.pinEpoch(spark, inc, "if-pin", cfg)
     Pipeline.runIncrementalPinned(spark, b.toDS(), inc, "if-d1", cfg)
+    // the ingest deferred (an append version by if-d1 carries the
+    // marker) before the trigger folded it
+    assert(Snapshots.versions(inc, "nodes").exists { v =>
+      val m = Snapshots.readManifestVersion(inc, "nodes", v)
+      m.runId == "if-d1" && m.metrics.get("defer").contains("true")
+    })
+    assertPlainCb()
     // delta 1 appended new entities → the trigger folded; append mass
     // and set count are zero and the fold is stamped
     Seq("assign", "nodes", "edges").foreach { st =>
@@ -493,6 +544,69 @@ class PipelineSpec extends SparkSpec {
     assert(nodeSet(inc) == nodeSet(full))
     assert(edgeSet(inc) == edgeSet(full))
     assert(r2.nodes == rFull.nodes && r2.edges == rFull.edges)
+  }
+
+  test("a run dir in the former ident×cb / cb directory layout still ingests, resolves and folds exactly") {
+    def f(name: String, forms: Seq[String]) = SourceFile("r", name, "c0",
+      "md", forms.map(w => s"q: $w?").mkString("\n"))
+    val classes = (0 until 40).map(i => s"oword$i")
+    val a = classes.zipWithIndex.map { case (w, i) => f(s"a$i.txt", Seq(w)) }
+    val b = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 0 => f(s"b$i.txt", Seq(w.toUpperCase))
+    } :+ f("bnew.txt", Seq("obrandnew1"))
+    val cfg = Pipeline.Config(canonBuckets = Some(64),
+      arrangePartitions = Some(4))
+    val old = tmpDir("oldlayout")
+    Pipeline.run(spark, a.toDS(), old, "ol-base", cfg)
+    // re-publish the tail tables in the former directory layout, with
+    // the canonBuckets stamp the O(delta) tail checks
+    val legacy = Map("assign" -> Seq("ident", "cb"), "nodes" -> Seq("cb"),
+      "edges" -> Seq("cb"))
+    legacy.foreach { case (st, cols) =>
+      val m = Snapshots.readManifest(old, st)
+      Snapshots.stage(spark, old, st, "ol-legacy", resume = false,
+        partitionBy = cols, metrics = m.metrics)(Snapshots.read(spark, old, st))
+      val lm = Snapshots.readManifest(old, st)
+      assert(Snapshots.partitionColsOf(lm) == cols, st)
+      assert(lm.fileRows.keys.forall(_.contains("cb=")), st)
+    }
+
+    Pipeline.pinEpoch(spark, old, "ol-pin", cfg)
+    Pipeline.runIncrementalPinned(spark, b.toDS(), old, "ol-d1", cfg)
+    // the ingest took the O(delta) tail, with real merges in the log
+    Seq("assign", "nodes", "edges").foreach { st =>
+      val m = Snapshots.readManifest(old, st)
+      assert(m.runId == "ol-d1" && m.metrics.get("defer").contains("true"), st)
+    }
+    assert(Pipeline.canonLogDirty(old))
+    assert(Snapshots.readManifest(old, "assign").metrics("merges").toLong > 0)
+
+    val full = tmpDir("oldlayout-full")
+    Pipeline.run(spark, (a ++ b).toDS(), full, "ol-full", cfg)
+    val nodeCols = bucketedNodesSchema.fieldNames.toSeq
+    val edgeCols = bucketedEdgesSchema.fieldNames.toSeq
+    def assertGraphEqual(when: String): Unit = {
+      assertSameRows(Pipeline.readNodes(spark, old).selectExpr(nodeCols: _*),
+        Pipeline.readNodes(spark, full).selectExpr(nodeCols: _*),
+        s"nodes $when")
+      assertSameRows(Pipeline.readEdges(spark, old).selectExpr(edgeCols: _*),
+        Pipeline.readEdges(spark, full).selectExpr(edgeCols: _*),
+        s"edges $when")
+    }
+    assertGraphEqual("after the ingest (resolving read)")
+
+    val folded = Pipeline.compactTail(spark, old, "ol-maint", 1e-9)
+    assert(folded.toSet == Set("assign", "nodes", "edges"))
+    assert(!Pipeline.canonLogDirty(old))
+    assertGraphEqual("after the fold")
+    val assignCols = Seq("pred", "obj", "norm", "entityId", "canonicalId",
+      "ident", "cb")
+    assertSameRows(
+      Snapshots.read(spark, old, "assign").selectExpr(assignCols: _*),
+      Snapshots.read(spark, full, "assign").selectExpr(assignCols: _*),
+      "assign after the fold")
+    deleteRec(Path.of(old))
+    deleteRec(Path.of(full))
   }
 
   test("lineage consolidation bounds the per-ingest union width; chain stays exact") {

@@ -4,7 +4,6 @@
 set -u
 BASES=${BASES:-"100000,200000,400000"}
 M=${M:-500}
-FPB=${FPB:-100}
 CLS=/tmp/tailclasses
 rm -rf "$CLS"
 cp -r /root/repo/target/scala-2.13/classes "$CLS"
@@ -25,4 +24,4 @@ SCALA_JARS=$(ls /root/.sbt/boot/scala-2.13.17/lib/*.jar 2>/dev/null | tr '\n' ':
 exec java $ADD_OPENS -Xmx${XMX:-24g} ${EXTRA_FLAGS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLS:${SCALA_JARS}/opt/spark/jars/*" \
-  graft.tools.TailBench "$BASES" "$M" "$FPB"
+  graft.tools.TailBench "$BASES" "$M"
