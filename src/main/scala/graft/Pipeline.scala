@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   [extract]  mapPartitions rule extractors → triples ∪ quarantine
   *   [link]     entities → exact-norm + MinHash-LSH edges
   *   [canon]    connected components → canonical entity ids
-  *   [materialize] node + edge tables, partitioned by kind / pred
+  *   [materialize] node + edge tables, clustered by kind / pred
   *
   * Every stage boundary is a durable snapshot (Snapshots.stage) with a
   * manifest published last — `run` with resume=true skips any stage
@@ -38,16 +38,15 @@ object Pipeline {
       // file count). Defaults to the cluster's defaultParallelism;
       // size it to the corpus the way you'd size maxPartitionBytes at
       // 100 TB — a 2k-file smoke corpus has no use for 32 near-empty
-      // tasks × pred partition dirs.
+      // tasks × q partition dirs.
       arrangePartitions: Option[Int] = None,
       // CANONICAL BUCKETS (opt-in): when Some(B), the assign / nodes /
       // edges snapshots gain a cb = pmod(canonicalId, B) int data
-      // column, and epoch-pinned ingests take the O(delta)
-      // merge-on-read tail (see deferMerges) instead of recomputing
-      // the tables globally. B only sets cb's modulus: it creates no
-      // directories and sets no file count, so it needs no sizing. The
-      // manifests record it and every pinned ingest checks it. None
-      // (default) = no cb column, kind/pred-partitioned nodes/edges.
+      // column in last position; that is all B does. It sets no
+      // layout, directory or file count, so it needs no sizing. The
+      // manifests record it, and the O(delta) tail (see deferMerges)
+      // runs only over tables stamped with the same B (an absent
+      // stamp matches None). None (default) = no cb column.
       canonBuckets: Option[Int] = None,
       // Refuse a pinned ingest whose census drift exceeds this bound
       // (fraction of the delta's distinct (pred, shingle) keys whose
@@ -76,8 +75,8 @@ object Pipeline {
       // compactTail as an explicit maintenance job instead, the
       // Iceberg operational shape.
       compactAppendFrac: Option[Double] = None,
-      // MERGE-ON-READ canonicalization for pinned ingests over
-      // canonical buckets (default on). The ingest writes only
+      // MERGE-ON-READ canonicalization for pinned ingests (default
+      // on), whatever canonBuckets is. The ingest writes only
       // O(delta) appends plus a tiny compressed CANON LOG (old root →
       // new root, single-hop); readers resolve stale canonicals
       // through one broadcast join (Pipeline.readNodes / readEdges —
@@ -178,8 +177,15 @@ object Pipeline {
         min(struct(col("norm"), col("obj"))).as("m"),
         min(col("pred")).as("kind"),
         count(lit(1)).as("memberCount"))
-      .select(col("canonicalId"), col("m.obj").as("canonical"),
-        col("m.norm").as("canonicalNorm"), col("kind"), col("memberCount"))
+      .withColumn("canonical", col("m.obj"))
+      .withColumn("canonicalNorm", col("m.norm"))
+      .select(NodeCols.map(col): _*)
+
+  /** Published column order of `nodes` / `edges` ([[withCb]]'s cb last). */
+  private val NodeCols =
+    Seq("canonicalId", "canonical", "canonicalNorm", "kind", "memberCount")
+  private val EdgeCols =
+    Seq("subj", "pred", "canonicalId", "conf", "repo", "path", "commit")
 
   def run(spark: SparkSession, files: Dataset[SourceFile], runDir: String,
           runId: String, cfg: Config = Config()): Result = {
@@ -217,8 +223,8 @@ object Pipeline {
     //    quarantine-vs-not, and a boolean dynamic-partition sort is
     //    far cheaper than a 10-value one (19s vs 25s single-thread at
     //    200k files, and half the bytes — fewer files keep dictionary
-    //    pages effective). Per-pred partitioning remains where it is
-    //    user-facing semantics: the published nodes/edges tables.
+    //    pages effective). The published nodes/edges tables cluster
+    //    by kind / pred inside their files instead (see canonicalize).
     val raw0 = Snapshots.stage(spark, runDir, "extract", runId, resume,
       partitionBy = Seq("q")) {
       val arranged = files.repartitionByRange(
@@ -536,22 +542,22 @@ object Pipeline {
     val deltaLinkRows = deltaRowsOf(runDir, "link_edges", runId)
 
     // 5. canonicalize + materialize: the O(delta) merge-on-read tail
-    // when the canonical buckets and bounds allow (see
-    // mergeOnReadTail), else the global tail over the full (narrow)
-    // unions
+    // when its preconditions and bounds hold (see mergeOnReadTail),
+    // else the global tail over the full (narrow) unions. pin.canon
+    // times whichever ran.
     val ccIters = graft.store.IOStat.timed("pin.canon")(
       mergeOnReadTail(spark, runDir, runId, cfg,
-        deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows))
-      .getOrElse {
-        val allTriples = Snapshots.versions(runDir, "extract")
-          .map(v => Snapshots.readVersion(spark, runDir, "extract", v))
-          .reduce(_ unionByName _)
-          .withColumn("subj", concat($"repo", lit("/"), $"path"))
-          .filter(!$"q".cast("boolean")).drop("q")
-        canonicalize(spark, runDir, runId, cfg, allTriples,
-          lineageUnion(spark, runDir, "entities"),
-          lineageUnion(spark, runDir, "link_edges"), resume = false)
-      }
+        deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows)
+        .getOrElse {
+          val allTriples = Snapshots.versions(runDir, "extract")
+            .map(v => Snapshots.readVersion(spark, runDir, "extract", v))
+            .reduce(_ unionByName _)
+            .withColumn("subj", concat($"repo", lit("/"), $"path"))
+            .filter(!$"q".cast("boolean")).drop("q")
+          canonicalize(spark, runDir, runId, cfg, allTriples,
+            lineageUnion(spark, runDir, "entities"),
+            lineageUnion(spark, runDir, "link_edges"), resume = false)
+        })
     resultFrom(runDir, runId, ccIters)
   }
 
@@ -592,8 +598,9 @@ object Pipeline {
 
   /** Returns Some(ccIterations=0) when the merge-on-read tail ran,
     * None when the caller must fall back to the global tail:
-    * deferMerges off, canonBuckets unset or mismatched with the stored
-    * tables', delta or canon log beyond the driver/broadcast bounds, or
+    * deferMerges off, a canonBuckets stamp on the stored tables that
+    * differs from the config's (their cb values were computed with it),
+    * delta or canon log beyond the driver/broadcast bounds, or
     * a crash-retry that finds this runId's tail PARTIALLY applied (the
     * pair graph can only be derived from the pre-ingest state, so a
     * half-applied ingest recovers through the global tail — correct,
@@ -609,16 +616,13 @@ object Pipeline {
                               deltaExtractRows: Long): Option[Int] = {
     import spark.implicits._
     val Tail = Seq("assign", "nodes", "edges")
-    val b = cfg.canonBuckets match {
-      case Some(v) if cfg.deferMerges => v
-      case _ => return None
-    }
+    if (!cfg.deferMerges) return None
     // a tail stage whose live manifest is missing (crash window) can
     // only be healed by the global tail; and the stored tables must
-    // carry the SAME modulus (their cb values were computed with it)
+    // carry the config's cb modulus, or none when it has none
     if (!Tail.forall(st => Snapshots.isComplete(runDir, st))) return None
-    if (!Tail.forall(st => Snapshots.readManifest(runDir, st)
-      .metrics.get("canonBuckets").contains(b.toString))) return None
+    if (!Tail.forall(st => bucketsOf(runDir, st) == cfg.canonBuckets))
+      return None
     // bounds: the probe set, delta maps, pair graph and canon log all
     // ride the driver/broadcast — the same capacity contracts as the
     // rest of the pinned path (BroadcastableRightRows) and the CC fast
@@ -682,15 +686,8 @@ object Pipeline {
       .foreach { case (e, c) => oldCanon(e) = c })
 
     // --- 2. driver union-find over the component-pair graph (min-id
-    // roots — identical semantics to both ConnectedComponents paths)
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    // roots — the ConnectedComponents union-find)
+    val uf = new ConnectedComponents.UnionFind
     val oldRoots = scala.collection.mutable.LongMap.empty[Unit]
     val touched = scala.collection.mutable.LongMap.empty[Unit]
     // old endpoints (not in newIds) resolve through the probed
@@ -705,49 +702,40 @@ object Pipeline {
       else {
         val c = resolve(oldCanon.getOrElse(e, e)); oldRoots(c) = (); c
       }
-    timing(tUf += _)(deltaLinks.select($"src", $"dst").as[(Long, Long)]
-      .mapPartitions { it =>
-        val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach { case (a, x) => buf += a; buf += x }
-        Iterator.single(buf.result())
-      }.collect().foreach { arr =>
+    timing(tUf += _)(ConnectedComponents.collectPairs(
+      deltaLinks.select($"src", $"dst")).foreach { arr =>
         var i = 0
         while (i < arr.length) {
-          val ra = find(rep(arr(i))); val rb = find(rep(arr(i + 1)))
-          if (ra != rb) {
-            parent(math.max(ra, rb)) = math.min(ra, rb)
-            touched(ra) = (); touched(rb) = ()
-          }
+          val ra = uf.find(rep(arr(i))); val rb = uf.find(rep(arr(i + 1)))
+          if (uf.union(ra, rb)) { touched(ra) = (); touched(rb) = () }
           i += 2
         }
       })
     // old roots that actually merged away (vs. delta edges that landed
     // inside one existing component — no-ops)
     val mergedOldRoots = touched.keysIterator
-      .filter(r => oldRoots.contains(r) && find(r) != r).toArray
+      .filter(r => oldRoots.contains(r) && uf.find(r) != r).toArray
     val deltaMoved = touched.keysIterator
       .filterNot(oldRoots.contains).toArray // delta ids in real merges
 
     // --- 3. driver-bounded maps shipped back as broadcast frames
     val deltaCompDf = deltaMoved.toSeq
-      .map(d => (d, find(d))).filter { case (d, f) => f != d }
+      .map(d => (d, uf.find(d))).filter { case (d, f) => f != d }
       .toDF("entityId", "comp")
     // final canonical of every distinct delta-triple form (old forms:
     // stored canonical, then through the log and this ingest's
     // union-find; new forms: their union-find root or themselves)
     val finalCanonDf = tripleIds.toSeq.map { id =>
-      (id, find(resolve(oldCanon.getOrElse(id, id))))
+      (id, uf.find(resolve(oldCanon.getOrElse(id, id))))
     }.toDF("entityId", "fc")
 
-    val cbOf = (c: org.apache.spark.sql.Column) =>
-      pmod(c, lit(b.toLong)).cast("int")
     // delta appends sized by rows (~4M narrow rows per file):
     // repartition(1) would funnel a large delta into one giant
     // single-task file at real ingest sizes
     val appendParts = math.min(64L,
       math.max(1L, deltaExtractRows / 4000000L)).toInt
-    val tailMetrics = Map(
-      "canonBuckets" -> b.toString,
+    val tailMetrics = cfg.canonBuckets.map("canonBuckets" -> _.toString)
+      .toMap ++ Map(
       "ccIterations" -> "0",
       "merges" -> mergedOldRoots.length.toString,
       "probeSec" -> f"${tProbe / 1e9}%.2f",
@@ -755,33 +743,25 @@ object Pipeline {
       "delta" -> "append")
 
     // --- 4. the delta's rows at their final canonicals, columns in
-    // the stored snapshots' read-back order. assign's ident partition
+    // the full run's read-back order. assign's ident partition
     // column carries its READ-BACK type (string), as
     // Snapshots.stageAppend requires.
     val deltaAssign = newEnts
       .join(broadcast(deltaCompDf), Seq("entityId"), "left")
       .select($"pred", $"obj", $"norm", $"entityId",
         coalesce($"comp", $"entityId").as("canonicalId"))
-    val assignApp = deltaAssign
-      .withColumn("cb", cbOf($"canonicalId"))
+    val assignApp = withCb(deltaAssign, cfg.canonBuckets)
       .withColumn("ident",
         ($"canonicalId" === $"entityId").cast("string"))
       .repartition(appendParts)
-    val nodesApp = deltaAssign.groupBy($"canonicalId")
-      .agg(min(struct($"norm", $"obj")).as("m"),
-        min($"pred").as("kind"), count(lit(1)).as("memberCount"))
-      .select($"canonicalId", $"m.obj".as("canonical"),
-        $"m.norm".as("canonicalNorm"), $"kind", $"memberCount")
-      .withColumn("cb", cbOf($"canonicalId"))
+    val nodesApp = withCb(nodeTableFull(deltaAssign), cfg.canonBuckets)
       .repartition(appendParts).sortWithinPartitions($"kind")
-    val edgesApp = deltaTriples
+    val edgesApp = withCb(deltaTriples
       .withColumn("subj", concat($"repo", lit("/"), $"path"))
       .withColumn("entityId", Linking.idCol($"pred", $"obj"))
       .join(broadcast(finalCanonDf), Seq("entityId"), "left")
-      .select($"subj", $"pred",
-        coalesce($"fc", $"entityId").as("canonicalId"),
-        $"conf", $"repo", $"path", $"commit")
-      .withColumn("cb", cbOf($"canonicalId"))
+      .withColumn("canonicalId", coalesce($"fc", $"entityId"))
+      .select(EdgeCols.map(col): _*), cfg.canonBuckets)
       .repartition(appendParts).sortWithinPartitions($"pred")
 
     // captured BEFORE the appends publish: the live nodes manifest is
@@ -808,8 +788,8 @@ object Pipeline {
     // --- 6. the canon log, LAST (commit record). Compressed
     // single-hop: prior targets re-resolve through this ingest's
     // union-find, so a reader never follows a chain
-    val fullLog = prevLog.map { case (k, v) => (k, find(v)) } ++
-      mergedOldRoots.map(r => (r, find(r)))
+    val fullLog = prevLog.map { case (k, v) => (k, uf.find(v)) } ++
+      mergedOldRoots.map(r => (r, uf.find(r)))
     // logical node count by driver arithmetic (stored node ROWS
     // over-count merged components until the next fold): previous
     // logical count, plus delta components that created a NEW root,
@@ -817,7 +797,7 @@ object Pipeline {
     val newDeltaRoots = {
       val seen = scala.collection.mutable.LongMap.empty[Unit]
       newIds.keysIterator.foreach { e =>
-        val r = find(e); if (newIds.contains(r)) seen(r) = ()
+        val r = uf.find(e); if (newIds.contains(r)) seen(r) = ()
       }
       seen.size
     }
@@ -836,10 +816,12 @@ object Pipeline {
     * Config.compactAppendFrac): when any of assign/nodes/edges has
     * append rows reaching `frac` of the table, or the dirty canon log
     * reaches `frac` of assign, fold the tables into fresh full
-    * snapshots with the log applied (re-clustered the way the full-run
-    * publishes cluster them; each fold keeps its stage's stored
-    * partitioning, so a run dir published with the former ident×cb /
-    * cb directories keeps them) and clear the log. Idempotent per runId
+    * snapshots with the log applied and clear the log. A fold
+    * republishes in the current layout of a full run (assign by
+    * `ident`, nodes/edges unpartitioned and clustered by kind/pred, in
+    * the full run's column order), so a run dir published in a former
+    * layout (ident×cb / cb or kind / pred directories) converges on
+    * its next fold. Idempotent per runId
     * (a crash between folds re-folds all three on retry; a re-run
     * after all folds is a no-op). Returns the stages folded.
     */
@@ -881,11 +863,15 @@ object Pipeline {
           case _ => resolveCanon(spark, runDir, d, b)
         }
       }
+    // the full run's column order (cb, if any, last): a former kind= /
+    // pred= layout read its partition column last
+    def ordered(d: DataFrame, lead: Seq[String]): DataFrame =
+      d.select((lead ++ d.columns.filterNot(lead.contains)).map(col): _*)
     val shapes: Map[String, DataFrame => DataFrame] = Map(
       "assign" -> (d => resolveIf("assign", d)),
-      "nodes" -> (d => resolveIf("nodes", d)
+      "nodes" -> (d => ordered(resolveIf("nodes", d), NodeCols)
         .sortWithinPartitions(col("kind"))),
-      "edges" -> (d => resolveIf("edges", d)
+      "edges" -> (d => ordered(resolveIf("edges", d), EdgeCols)
         .sortWithinPartitions(col("pred"))))
     // the folds publish DISJOINT stages from already-published inputs
     // — run them concurrently, same shape and crash contract as the
@@ -899,21 +885,13 @@ object Pipeline {
       val keep = m.metrics.view
         .filterKeys(Set("canonBuckets", "epoch")).toMap
       Snapshots.compact(spark, runDir, st, runId,
+        if (st == "assign") Seq("ident") else Nil,
         keep ++ Map("appendRowsFolded" -> appendRows.toString,
           "appendSetsFolded" -> sets.toString))(shapes(st))
       (): Unit
     }
     parallelRun(stages.map(st => () => fold(st)))
-    if (dirty) {
-      import spark.implicits._
-      val logical = Snapshots.readManifest(runDir, CanonLogStage)
-        .metrics("logicalNodes")
-      Snapshots.stage(spark, runDir, CanonLogStage, runId,
-        resume = false,
-        metrics = Map("dirty" -> "false", "logicalNodes" -> logical)) {
-        Seq.empty[(Long, Long)].toDF("oldRoot", "newRoot")
-      }
-    }
+    clearCanonLog(spark, runDir, runId)
     stages
   }
 
@@ -926,8 +904,8 @@ object Pipeline {
     * and the folded-in versions expire.
     *
     * Crash-retry safety: a lineage delta is foldable ONLY when its
-    * ingest COMMITTED — its runId has a tail record (an edges version
-    * or a canon-log version). Folding an uncommitted slice — the
+    * ingest COMMITTED (see [[committedRuns]]). Folding an uncommitted
+    * slice — the
     * in-flight ingest's, or a FOREIGN ingest that crashed mid-append
     * and will retry — would break both oldUnion's excludeRunId and
     * appendOnce's idempotence key for that retry (its forms would
@@ -950,13 +928,7 @@ object Pipeline {
     // marker), so lineageVersions would anchor at the newest slice
     // and the cleanup pass would expire the rest of the corpus
     val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
-    val committed: Set[String] =
-      (Snapshots.versions(runDir, "edges").map(v =>
-        Snapshots.readManifestVersion(runDir, "edges", v).runId) ++
-        (if (Snapshots.isComplete(runDir, CanonLogStage))
-          Snapshots.versions(runDir, CanonLogStage).map(v =>
-            Snapshots.readManifestVersion(runDir, CanonLogStage, v).runId)
-        else Nil)).toSet
+    val committed = committedRuns(runDir)
     stages.filter(Snapshots.isComplete(runDir, _)).flatMap { st =>
       // cleanup pass (also the crash-retry of this function): expire
       // versions a previous consolidation superseded
@@ -993,6 +965,35 @@ object Pipeline {
   // global tail clear it.
   private[graft] val CanonLogStage = "canon_log"
 
+  /** The ingest commit record: runIds with a published canon-log
+    * version (the merge-on-read tail's last publish) or an edges
+    * version WITHOUT the defer marker (the global tail's). A deferred
+    * edges append alone is the crash window before the log.
+    */
+  private[graft] def committedRuns(runDir: String): Set[String] = {
+    def runs(stage: String, counts: Snapshots.Manifest => Boolean) =
+      Snapshots.versions(runDir, stage)
+        .map(Snapshots.readManifestVersion(runDir, stage, _))
+        .collect { case m if counts(m) => m.runId }
+    (runs(CanonLogStage, _ => true) ++ runs("edges",
+      !_.metrics.get("defer").contains("true"))).toSet
+  }
+
+  /** Publishes a clean, empty canon log once its remaps are applied
+    * physically (a fold or the global tail), or readers would keep
+    * re-resolving and the next deferred ingest compose stale remaps.
+    */
+  private def clearCanonLog(spark: SparkSession, runDir: String,
+                            runId: String): Unit =
+    if (canonLogDirty(runDir)) {
+      import spark.implicits._
+      Snapshots.stage(spark, runDir, CanonLogStage, runId,
+        resume = false, metrics = Map("dirty" -> "false")) {
+        Seq.empty[(Long, Long)].toDF("oldRoot", "newRoot")
+      }
+      (): Unit
+    }
+
   private[graft] def canonLogDirty(runDir: String): Boolean =
     Snapshots.isComplete(runDir, CanonLogStage) &&
       Snapshots.readManifest(runDir, CanonLogStage)
@@ -1016,21 +1017,31 @@ object Pipeline {
   }
 
   /** Resolve a frame's canonicalId through the dirty log (broadcast
-    * join — the log is merges-since-fold small) and recompute cb.
+    * join — the log is merges-since-fold small), recomputing cb when
+    * the table carries canonical buckets `b`.
     */
   private def resolveCanon(spark: SparkSession, runDir: String,
-                           df: DataFrame, b: Long): DataFrame = {
+                           df: DataFrame, b: Option[Int]): DataFrame = {
     val cols = df.columns
-    df.join(broadcast(canonLogDf(spark, runDir)), Seq("canonicalId"),
+    withCb(df.join(broadcast(canonLogDf(spark, runDir)), Seq("canonicalId"),
         "left")
       .withColumn("canonicalId",
-        coalesce(col("newRoot"), col("canonicalId")))
-      .withColumn("cb", pmod(col("canonicalId"), lit(b)).cast("int"))
+        coalesce(col("newRoot"), col("canonicalId"))), b)
       .select(cols.map(col): _*)
   }
 
-  private def bucketsOf(runDir: String, stage: String): Long =
-    Snapshots.readManifest(runDir, stage).metrics("canonBuckets").toLong
+  /** The canonical buckets of a stage's live snapshot (None = no cb). */
+  private def bucketsOf(runDir: String, stage: String): Option[Int] =
+    Snapshots.readManifest(runDir, stage).metrics.get("canonBuckets")
+      .map(_.toInt)
+
+  /** Appends cb = pmod(canonicalId, B) as the last column when the
+    * table has canonical buckets: the only layout step B decides.
+    */
+  private def withCb(df: DataFrame, b: Option[Int]): DataFrame =
+    b.fold(df)(v => df.withColumn("cb",
+      pmod(col("canonicalId"), lit(v.toLong)).cast("int")))
+
 
   /** CURRENT canonical nodes. With no dirty canon log this is the
     * stored snapshot verbatim; under deferred merges it resolves
@@ -1048,24 +1059,24 @@ object Pipeline {
     else resolveNodesFrame(spark, runDir, raw, bucketsOf(runDir, "nodes"))
   }
 
-  /** The nodes-resolving combine (deferred merges are always bucketed,
-    * so `b` is known): resolve roots through the log, then aggregate
-    * rows sharing a resolved root.
+  /** The nodes-resolving combine: resolve roots through the log, then
+    * aggregate rows sharing a resolved root (cb recomputed when the
+    * table carries canonical buckets `b`).
     */
   private def resolveNodesFrame(spark: SparkSession, runDir: String,
-                                raw: DataFrame, b: Long): DataFrame = {
+                                raw: DataFrame, b: Option[Int]): DataFrame = {
     import spark.implicits._
-    raw
+    withCb(raw
       .join(broadcast(canonLogDf(spark, runDir)), Seq("canonicalId"),
         "left")
       .withColumn("rc", coalesce($"newRoot", $"canonicalId"))
-      .groupBy($"rc")
+      .groupBy($"rc".as("canonicalId"))
       .agg(min(struct($"canonicalNorm".as("norm"),
         $"canonical".as("obj"))).as("m"),
         min($"kind").as("kind"), sum($"memberCount").as("memberCount"))
-      .select($"rc".as("canonicalId"), $"m.obj".as("canonical"),
-        $"m.norm".as("canonicalNorm"), $"kind", $"memberCount")
-      .withColumn("cb", pmod($"canonicalId", lit(b)).cast("int"))
+      .withColumn("canonical", $"m.obj")
+      .withColumn("canonicalNorm", $"m.norm")
+      .select(NodeCols.map(col): _*), b)
   }
 
   /** CURRENT canonical edges: stored snapshot, with stale
@@ -1247,26 +1258,12 @@ object Pipeline {
     // Stage 3 — connected components → canonical id per entity.
     // Singleton entities (no link edge) canonicalize to themselves.
     var ccIters = 0
-    // canonical buckets (see Config.canonBuckets) add cb as the last
-    // data column and no directories: no reader filters on cb, so a
-    // cb dir tree would only multiply the dirs and files of every
-    // publish and fold. Their nodes/edges are unpartitioned, and kind
-    // / pred CLUSTER inside each file via sortWithinPartitions, so
-    // low-cardinality predicates still skip via row-group stats. File
-    // counts follow each stage's own shuffle.
-    val cbMetrics = cfg.canonBuckets
-      .map(b => Map("canonBuckets" -> b.toString)).getOrElse(Map.empty)
-    def withCb(df: DataFrame): DataFrame = cfg.canonBuckets
-      .map(b => df.withColumn("cb",
-        pmod($"canonicalId", lit(b.toLong)).cast("int"))).getOrElse(df)
-    // nodes/edges: partitioned by kind/pred, or with canonical buckets
-    // unpartitioned and clustered by it
-    def partCols(key: String): Seq[String] =
-      if (cfg.canonBuckets.isDefined) Nil else Seq(key)
-    def arranged(df: DataFrame, key: String): DataFrame =
-      if (cfg.canonBuckets.isDefined)
-        withCb(df).sortWithinPartitions(col(key))
-      else df
+    // one layout whatever canonBuckets is: nodes/edges unpartitioned,
+    // kind / pred CLUSTERED inside each file via sortWithinPartitions
+    // (low-cardinality predicates still skip via row-group stats; file
+    // counts follow each stage's own shuffle). Canonical buckets only
+    // add cb as the last column (withCb); no reader filters on cb.
+    val cbMetrics = cfg.canonBuckets.map("canonBuckets" -> _.toString).toMap
     // partitioned by `ident` (canonical == self) so the edges stage can
     // read the small non-identity DELTA slice partition-pruned, and
     // count it from the manifest's partition-dir lineage with no job
@@ -1281,7 +1278,8 @@ object Pipeline {
         edgeCountHint = Some(lineageVersions(runDir, "link_edges").map(v =>
           Snapshots.readManifestVersion(runDir, "link_edges", v).rows).sum))
       ccIters = iters
-      withCb(a).withColumn("ident", $"canonicalId" === $"entityId")
+      withCb(a, cfg.canonBuckets)
+        .withColumn("ident", $"canonicalId" === $"entityId")
     }
     // cross-version resume guard: the edges stage needs the assign
     // snapshot's ident column/partitioning (the delta-map rewrite). A
@@ -1298,8 +1296,9 @@ object Pipeline {
     // nodeTableFull).
     def nodesStage(): Unit = {
       Snapshots.stage(spark, runDir, "nodes", runId, resume,
-        partitionBy = partCols("kind"), metrics = cbMetrics) {
-        arranged(nodeTableFull(assign), "kind")
+        metrics = cbMetrics) {
+        withCb(nodeTableFull(assign), cfg.canonBuckets)
+          .sortWithinPartitions($"kind")
       }
       (): Unit
     }
@@ -1318,7 +1317,7 @@ object Pipeline {
     // joined (AQE covers hub-entity skew there).
     def edgesStage(): Unit = {
       Snapshots.stage(spark, runDir, "edges", runId, resume,
-      partitionBy = partCols("pred"), metrics = cbMetrics) {
+        metrics = cbMetrics) {
       val withId = triples.withColumn("entityId", Linking.idCol($"pred", $"obj"))
       val deltaRows = Snapshots.readManifest(runDir, "assign").fileRows
         .collect { case (f, n) if f.contains("ident=false/") => n }.sum
@@ -1328,9 +1327,10 @@ object Pipeline {
         if (deltaRows <= SkewJoin.BroadcastableRightRows)
           withId.join(broadcast(delta), Seq("entityId"), "left")
         else withId.join(delta, Seq("entityId"), "left")
-      arranged(joined.select($"subj", $"pred",
-        coalesce($"canonicalId", $"entityId").as("canonicalId"), $"conf",
-        $"repo", $"path", $"commit"), "pred")
+      withCb(joined
+        .withColumn("canonicalId", coalesce($"canonicalId", $"entityId"))
+        .select(EdgeCols.map(col): _*), cfg.canonBuckets)
+        .sortWithinPartitions($"pred")
       }
       (): Unit
     }
@@ -1343,15 +1343,8 @@ object Pipeline {
     parallelRun(Seq(() => nodesStage(), () => edgesStage()))
 
     // the global tail recomputed everything from source, so any
-    // deferred-merge canon log is now fully applied — clear it, or
-    // readers would re-resolve (harmlessly but wrongly-taxed) and the
-    // next deferred ingest would compose stale remaps
-    if (canonLogDirty(runDir)) {
-      Snapshots.stage(spark, runDir, CanonLogStage, runId,
-        resume = false, metrics = Map("dirty" -> "false")) {
-        Seq.empty[(Long, Long)].toDF("oldRoot", "newRoot")
-      }
-    }
+    // deferred-merge canon log is now fully applied
+    clearCanonLog(spark, runDir, runId)
     ccIters
   }
 

@@ -86,20 +86,19 @@ object SparkEntry {
     * is 15–35% slower than anywhere in the 2–16 band on the sf0.1
     * streams; the band itself is flat). At production volume the
     * bytes term dominates and the count converges to the session
-    * default. Override: SPARK_GRAFT_STREAM_SHUFFLE.
+    * default.
     */
-  private def streamShuffleParts(s: SparkSession, stagedDir: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.toInt).getOrElse {
-      val bytes =
-        try {
-          val st = java.nio.file.Files.list(java.nio.file.Paths.get(stagedDir))
-          try st.mapToLong(p => java.nio.file.Files.size(p)).sum()
-          finally st.close()
-        } catch { case _: Throwable => Long.MaxValue }
-      val byVolume = (bytes / (1L << 20)) + 1L
-      math.min(s.sessionState.conf.numShufflePartitions.toLong,
-        math.max(1L, byVolume)).toInt
-    }
+  private def streamShuffleParts(s: SparkSession, stagedDir: String): Int = {
+    val bytes =
+      try {
+        val st = java.nio.file.Files.list(java.nio.file.Paths.get(stagedDir))
+        try st.mapToLong(p => java.nio.file.Files.size(p)).sum()
+        finally st.close()
+      } catch { case _: Throwable => Long.MaxValue }
+    val byVolume = (bytes / (1L << 20)) + 1L
+    math.min(s.sessionState.conf.numShufflePartitions.toLong,
+      math.max(1L, byVolume)).toInt
+  }
 
   /** Run `f` with spark.sql.shuffle.partitions set to `n`, restoring
     * the previous value — a query must not mutate session state for
@@ -908,8 +907,8 @@ object SparkEntry {
       asksNodes(s, runDir)
     }),
     // the EPOCH-PINNED ingest with the O(delta) merge-on-read
-    // canonicalize tail, under the hash gate: base run (canonical
-    // buckets) → pinEpoch → pinned ingest whose assign/nodes/edges take
+    // canonicalize tail, under the hash gate: default-Config base run
+    // → pinEpoch → pinned ingest whose assign/nodes/edges take
     // APPEND-ONLY snapshots and whose merges land in the canon log
     // (Pipeline.mergeOnReadTail: driver union-find over the
     // delta's component-pair graph). Nothing folds afterwards, so the
@@ -926,7 +925,7 @@ object SparkEntry {
       val runDir = freshScratch("kgpin")
       val filesDf = asksCorpus(s, dir)
       val cfg = graft.Pipeline.Config(resume = false,
-        arrangePartitions = Some(4), canonBuckets = Some(64))
+        arrangePartitions = Some(4))
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,
           filesDf.filter(col("doc_id") % 2 === 0).drop("doc_id")
@@ -954,8 +953,7 @@ object SparkEntry {
       val runDir = freshScratch("kgdef")
       val filesDf = asksCorpus(s, dir)
       val cfg = graft.Pipeline.Config(resume = false,
-        arrangePartitions = Some(4), canonBuckets = Some(64),
-        compactAppendFrac = Some(1e-9))
+        arrangePartitions = Some(4), compactAppendFrac = Some(1e-9))
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,
           filesDf.filter(col("doc_id") % 2 === 0).drop("doc_id")

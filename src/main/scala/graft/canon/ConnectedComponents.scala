@@ -126,15 +126,42 @@ object ConnectedComponents {
   private def runLocal(e: DataFrame): Result = {
     val spark = e.sparkSession
     import spark.implicits._
-    // collect as one packed Array[Long] per partition (src,dst
-    // interleaved) — no boxed Tuple2/Row per edge on the driver
-    val packed: Array[Array[Long]] = e.as[(Long, Long)]
+    val packed = collectPairs(e)
+    val uf = new UnionFind
+    val nodes = scala.collection.mutable.LongMap.empty[Unit]
+    packed.foreach { arr =>
+      var i = 0
+      while (i < arr.length) {
+        uf.union(arr(i), arr(i + 1))
+        nodes(arr(i)) = (); nodes(arr(i + 1)) = ()
+        i += 2
+      }
+    }
+    // non-identity delta only (roots resolve by coalesce downstream):
+    // halves-or-better the driver→cluster upload of the fast path
+    val assigns = nodes.keysIterator
+      .map(v => (v, uf.find(v))).filter { case (v, r) => v != r }.toSeq
+    Result(assigns.toDF("id", "comp"), 0)
+  }
+
+  /** A (src, dst) long frame on the driver as one packed Array[Long]
+    * per partition — no boxed Tuple2/Row per edge. Callers bound it.
+    */
+  private[graft] def collectPairs(e: DataFrame): Array[Array[Long]] = {
+    import e.sparkSession.implicits._
+    e.as[(Long, Long)]
       .mapPartitions { it =>
         val buf = scala.collection.mutable.ArrayBuilder.make[Long]
         it.foreach { case (a, b) => buf += a; buf += b }
         Iterator.single(buf.result())
       }.collect()
-    val parent = scala.collection.mutable.LongMap.empty[Long]
+  }
+
+  /** Driver union-find with min-id roots (the semantics of both CC
+    * paths), shared with the O(delta) canonicalize tail.
+    */
+  private[graft] final class UnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
@@ -142,24 +169,12 @@ object ConnectedComponents {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    packed.foreach { arr =>
-      var i = 0
-      while (i < arr.length) {
-        val ra = find(arr(i)); val rb = find(arr(i + 1))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        i += 2
-      }
+    /** false when `a` and `b` already were one component. */
+    def union(a: Long, b: Long): Boolean = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      ra != rb
     }
-    val nodes = scala.collection.mutable.LongMap.empty[Unit]
-    packed.foreach { arr =>
-      var i = 0
-      while (i < arr.length) { nodes(arr(i)) = (); i += 1 }
-    }
-    // non-identity delta only (roots resolve by coalesce downstream):
-    // halves-or-better the driver→cluster upload of the fast path
-    val assigns = nodes.keysIterator
-      .map(v => (v, find(v))).filter { case (v, r) => v != r }.toSeq
-    Result(assigns.toDF("id", "comp"), 0)
   }
 
   /** Cheap order-insensitive fixpoint signature of an edge set. */

@@ -141,8 +141,8 @@ object Linking {
   /** Same-entity edges (src, dst) over entityIds.
     *
     * `fuzzyNonEmpty`: whether any FuzzyPreds entity exists. Callers
-    * that already know (e.g. Pipeline, from the extract manifest's
-    * pred= partition lineage) pass Some(_) and skip the probe job the
+    * that already know (e.g. Pipeline, from a limit-1 probe of the
+    * entities snapshot) pass Some(_) and skip the probe job the
     * emptiness guard otherwise costs (MinHashLSH.fit reads a first row
     * to size the input and throws on an empty dataset).
     */

@@ -547,18 +547,19 @@ object Snapshots {
     * Iceberg rewrite_data_files analog). Append mass and set count
     * reset to zero, carry chains break, and every older
     * version becomes expirable. `shape` lets the caller re-cluster
-    * (sortWithinPartitions etc.) on the way through; partitioning is
-    * taken from the live manifest. Costs O(table) — run it when
-    * appendStats crosses a threshold (Pipeline.Config
-    * .compactAppendFrac), not per ingest.
+    * (sortWithinPartitions etc.) on the way through; `partitionBy`
+    * sets the folded version's partitioning. Costs O(table) — run it
+    * when appendStats crosses a threshold
+    * (Pipeline.Config.compactAppendFrac), not per ingest.
     */
   def compact(spark: SparkSession, runDir: String, stageName: String,
-              runId: String, metrics: Map[String, String] = Map.empty)
+              runId: String, partitionBy: Seq[String],
+              metrics: Map[String, String] = Map.empty)
              (shape: DataFrame => DataFrame = identity): DataFrame = {
     val m = readManifest(runDir, stageName)
     val df = shape(assemble(spark, runDir, stageName, m))
     stage(spark, runDir, stageName, runId, resume = false,
-      partitionBy = partitionColsOf(m),
+      partitionBy = partitionBy,
       metrics = metrics + ("compacted" -> "true"))(df)
   }
 

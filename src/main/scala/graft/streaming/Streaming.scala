@@ -130,23 +130,14 @@ object Streaming {
     // that never linked its triples. runIncremental is idempotent on
     // the extract side (it skips a delta version this runId already
     // published), so the replay redoes only the downstream stages.
-    // Under deferred merges the ingest's COMMIT RECORD is the canon
-    // log, published after the three appends: an edges manifest with
-    // this runId and the defer marker but no matching log version is
-    // a crash window, and the replay must re-apply (it heals through
-    // the global tail — mergeOnReadTail sees the partial
-    // application). Without this, a skipped replay would make the
-    // partial state permanent.
-    def deferredPartial =
-      Snapshots.readManifest(runDir, "edges")
-        .metrics.get("defer").contains("true") &&
-      !(Snapshots.isComplete(runDir, graft.Pipeline.CanonLogStage) &&
-        Snapshots.readManifest(runDir, graft.Pipeline.CanonLogStage)
-          .runId == runId)
+    // Under deferred merges an edges append without its canon log
+    // (the commit record, Pipeline.committedRuns) is a crash window:
+    // the replay must re-apply, healing through the global tail, or
+    // the partial state would become permanent.
     val applied = prior &&
       Snapshots.isComplete(runDir, "edges") &&
       Snapshots.readManifest(runDir, "edges").runId == runId &&
-      !deferredPartial
+      graft.Pipeline.committedRuns(runDir).contains(runId)
     if (applied) false
     else {
       val spark = batch.sparkSession

@@ -324,8 +324,31 @@ class PipelineSpec extends SparkSpec {
     Pipeline.pinEpoch(spark, inc, "ep-pin", cfg(None))
     val hot = Snapshots.read(spark, inc, "ep_census")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // one layout for every Config: a default-Config (no cb) run
+    // publishes unpartitioned nodes/edges whose read schema is the
+    // bucketed one minus cb
+    val plainNodesSchema =
+      StructType(bucketedNodesSchema.filterNot(_.name == "cb"))
+    val plainEdgesSchema =
+      StructType(bucketedEdgesSchema.filterNot(_.name == "cb"))
+    def assertPlainLayout(when: String): Unit = {
+      Seq("nodes", "edges").foreach(st => assert(Snapshots.partitionColsOf(
+        Snapshots.readManifest(inc, st)).isEmpty, s"$st $when"))
+      assert(Pipeline.readNodes(spark, inc).schema == plainNodesSchema, when)
+      assert(Pipeline.readEdges(spark, inc).schema == plainEdgesSchema, when)
+    }
+    assertPlainLayout("after the base run")
     val rPinned = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
+    // the default-Config ingest took the O(delta) merge-on-read tail:
+    // defer-marked appends and a dirty canon log as its commit record
+    Seq("assign", "nodes", "edges").foreach { st =>
+      val m = Snapshots.readManifest(inc, st)
+      assert(m.runId == "ep-delta" && m.metrics.get("defer").contains("true"),
+        s"$st not deferred")
+    }
+    assert(Pipeline.canonLogDirty(inc))
+    assertPlainLayout("after the deferred ingest (resolving read)")
 
     // from-scratch comparator: full pipeline on A ∪ B under the SAME
     // frozen census (pinned right after the base run = the base run's
@@ -554,59 +577,79 @@ class PipelineSpec extends SparkSpec {
     val b = classes.zipWithIndex.collect {
       case (w, i) if i % 2 == 0 => f(s"b$i.txt", Seq(w.toUpperCase))
     } :+ f("bnew.txt", Seq("obrandnew1"))
-    val cfg = Pipeline.Config(canonBuckets = Some(64),
-      arrangePartitions = Some(4))
-    val old = tmpDir("oldlayout")
-    Pipeline.run(spark, a.toDS(), old, "ol-base", cfg)
-    // re-publish the tail tables in the former directory layout, with
-    // the canonBuckets stamp the O(delta) tail checks
-    val legacy = Map("assign" -> Seq("ident", "cb"), "nodes" -> Seq("cb"),
-      "edges" -> Seq("cb"))
-    legacy.foreach { case (st, cols) =>
-      val m = Snapshots.readManifest(old, st)
-      Snapshots.stage(spark, old, st, "ol-legacy", resume = false,
-        partitionBy = cols, metrics = m.metrics)(Snapshots.read(spark, old, st))
-      val lm = Snapshots.readManifest(old, st)
-      assert(Snapshots.partitionColsOf(lm) == cols, st)
-      assert(lm.fileRows.keys.forall(_.contains("cb=")), st)
-    }
+    // two former layouts: bucketed tables under ident×cb / cb dirs, and
+    // a default-Config (no cb) run's nodes / edges under kind= / pred=
+    // dirs (assign's ident partition is unchanged there)
+    val inputs = Seq(
+      ("cb", Some(64), Map("assign" -> Seq("ident", "cb"),
+        "nodes" -> Seq("cb"), "edges" -> Seq("cb"))),
+      ("kindpred", None, Map("nodes" -> Seq("kind"),
+        "edges" -> Seq("pred"))))
+    inputs.foreach { case (name, buckets, legacy) =>
+      val cfg = Pipeline.Config(canonBuckets = buckets,
+        arrangePartitions = Some(4))
+      val old = tmpDir(s"oldlayout-$name")
+      Pipeline.run(spark, a.toDS(), old, "ol-base", cfg)
+      // re-publish the tail tables in the former directory layout, with
+      // the canonBuckets stamp (if any) the O(delta) tail checks
+      legacy.foreach { case (st, cols) =>
+        val m = Snapshots.readManifest(old, st)
+        Snapshots.stage(spark, old, st, "ol-legacy", resume = false,
+          partitionBy = cols, metrics = m.metrics)(Snapshots.read(spark, old, st))
+        val lm = Snapshots.readManifest(old, st)
+        assert(Snapshots.partitionColsOf(lm) == cols, s"$name $st")
+        assert(lm.fileRows.keys.forall(_.contains(s"${cols.last}=")),
+          s"$name $st")
+      }
 
-    Pipeline.pinEpoch(spark, old, "ol-pin", cfg)
-    Pipeline.runIncrementalPinned(spark, b.toDS(), old, "ol-d1", cfg)
-    // the ingest took the O(delta) tail, with real merges in the log
-    Seq("assign", "nodes", "edges").foreach { st =>
-      val m = Snapshots.readManifest(old, st)
-      assert(m.runId == "ol-d1" && m.metrics.get("defer").contains("true"), st)
-    }
-    assert(Pipeline.canonLogDirty(old))
-    assert(Snapshots.readManifest(old, "assign").metrics("merges").toLong > 0)
+      Pipeline.pinEpoch(spark, old, "ol-pin", cfg)
+      Pipeline.runIncrementalPinned(spark, b.toDS(), old, "ol-d1", cfg)
+      // the ingest took the O(delta) tail, with real merges in the log
+      Seq("assign", "nodes", "edges").foreach { st =>
+        val m = Snapshots.readManifest(old, st)
+        assert(m.runId == "ol-d1" && m.metrics.get("defer").contains("true"),
+          s"$name $st")
+      }
+      assert(Pipeline.canonLogDirty(old), name)
+      assert(Snapshots.readManifest(old, "assign").metrics("merges").toLong > 0,
+        name)
 
-    val full = tmpDir("oldlayout-full")
-    Pipeline.run(spark, (a ++ b).toDS(), full, "ol-full", cfg)
-    val nodeCols = bucketedNodesSchema.fieldNames.toSeq
-    val edgeCols = bucketedEdgesSchema.fieldNames.toSeq
-    def assertGraphEqual(when: String): Unit = {
-      assertSameRows(Pipeline.readNodes(spark, old).selectExpr(nodeCols: _*),
-        Pipeline.readNodes(spark, full).selectExpr(nodeCols: _*),
-        s"nodes $when")
-      assertSameRows(Pipeline.readEdges(spark, old).selectExpr(edgeCols: _*),
-        Pipeline.readEdges(spark, full).selectExpr(edgeCols: _*),
-        s"edges $when")
-    }
-    assertGraphEqual("after the ingest (resolving read)")
+      val full = tmpDir(s"oldlayout-full-$name")
+      Pipeline.run(spark, (a ++ b).toDS(), full, "ol-full", cfg)
+      val cb = buckets.map(_ => "cb").toSeq
+      val nodeCols = bucketedNodesSchema.fieldNames.toSeq.filterNot(_ == "cb") ++ cb
+      val edgeCols = bucketedEdgesSchema.fieldNames.toSeq.filterNot(_ == "cb") ++ cb
+      def assertGraphEqual(when: String): Unit = {
+        assertSameRows(Pipeline.readNodes(spark, old).selectExpr(nodeCols: _*),
+          Pipeline.readNodes(spark, full).selectExpr(nodeCols: _*),
+          s"$name nodes $when")
+        assertSameRows(Pipeline.readEdges(spark, old).selectExpr(edgeCols: _*),
+          Pipeline.readEdges(spark, full).selectExpr(edgeCols: _*),
+          s"$name edges $when")
+      }
+      assertGraphEqual("after the ingest (resolving read)")
 
-    val folded = Pipeline.compactTail(spark, old, "ol-maint", 1e-9)
-    assert(folded.toSet == Set("assign", "nodes", "edges"))
-    assert(!Pipeline.canonLogDirty(old))
-    assertGraphEqual("after the fold")
-    val assignCols = Seq("pred", "obj", "norm", "entityId", "canonicalId",
-      "ident", "cb")
-    assertSameRows(
-      Snapshots.read(spark, old, "assign").selectExpr(assignCols: _*),
-      Snapshots.read(spark, full, "assign").selectExpr(assignCols: _*),
-      "assign after the fold")
-    deleteRec(Path.of(old))
-    deleteRec(Path.of(full))
+      val folded = Pipeline.compactTail(spark, old, "ol-maint", 1e-9)
+      assert(folded.toSet == Set("assign", "nodes", "edges"), name)
+      assert(!Pipeline.canonLogDirty(old), name)
+      assertGraphEqual("after the fold")
+      // the fold converged on the current layout and read schema
+      Map("assign" -> Seq("ident"), "nodes" -> Nil, "edges" -> Nil)
+        .foreach { case (st, cols) =>
+          assert(Snapshots.partitionColsOf(Snapshots.readManifest(old, st)) ==
+            cols, s"$name $st after the fold")
+          assert(Snapshots.read(spark, old, st).schema ==
+            Snapshots.read(spark, full, st).schema, s"$name $st schema")
+        }
+      val assignCols = Seq("pred", "obj", "norm", "entityId", "canonicalId",
+        "ident") ++ cb
+      assertSameRows(
+        Snapshots.read(spark, old, "assign").selectExpr(assignCols: _*),
+        Snapshots.read(spark, full, "assign").selectExpr(assignCols: _*),
+        s"$name assign after the fold")
+      deleteRec(Path.of(old))
+      deleteRec(Path.of(full))
+    }
   }
 
   test("lineage consolidation bounds the per-ingest union width; chain stays exact") {
@@ -677,6 +720,41 @@ class PipelineSpec extends SparkSpec {
       "an uncommitted foreign slice must block entities consolidation")
     assert(Snapshots.versions(inc, "entities") == entBefore,
       "the crashed slice must survive untouched")
+  }
+
+  test("compactLineage folds no delta of a merge-on-read ingest whose canon log never published") {
+    def f(name: String, forms: Seq[String]) = SourceFile("r", name, "c0",
+      "md", forms.map(w => s"q: $w?").mkString("\n"))
+    val classes = (0 until 20).map(i => s"kword$i")
+    val a = classes.zipWithIndex.map { case (w, i) => f(s"a$i.txt", Seq(w)) }
+    val x = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 0 => f(s"x$i.txt", Seq(w.toUpperCase))
+    } :+ f("xnew.txt", Seq("kbrandnew"))
+    val cfg = Pipeline.Config(canonBuckets = Some(64),
+      arrangePartitions = Some(4))
+    val dir = tmpDir("commitrec")
+    Pipeline.run(spark, a.toDS(), dir, "cr-base", cfg)
+    Pipeline.pinEpoch(spark, dir, "cr-pin", cfg)
+    Pipeline.runIncrementalPinned(spark, x.toDS(), dir, "cr-x", cfg)
+    assert(Snapshots.readManifest(dir, "edges").metrics
+      .get("defer").contains("true"))
+    // crash window: the three appends published, the canon log (the
+    // ingest's commit record) did not
+    Files.delete(Path.of(Snapshots.stageDir(dir, Pipeline.CanonLogStage),
+      "_MANIFEST.json"))
+    assert(!Pipeline.committedRuns(dir).contains("cr-x"))
+    val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
+    def deltasOfX(st: String): Seq[Int] = Snapshots.versions(dir, st)
+      .filter(v => Snapshots.readManifestVersion(dir, st, v).runId == "cr-x")
+    val before = stages.map(st => st -> Snapshots.versions(dir, st)).toMap
+    assert(stages.forall(st => deltasOfX(st).nonEmpty), before)
+    val folded = Pipeline.compactLineage(spark, dir, "y", 1)
+    assert(folded.isEmpty, s"folded uncommitted deltas of cr-x: $folded")
+    stages.foreach { st =>
+      assert(Snapshots.versions(dir, st) == before(st), st)
+      assert(deltasOfX(st).nonEmpty, st)
+    }
+    deleteRec(Path.of(dir))
   }
 
   test("deferred merges: append-only ingests + canon log equal CoW and from-scratch; fold applies the log") {

@@ -366,14 +366,14 @@ class SnapshotPlanSpec extends SparkSpec {
     // pre-compact: carried files pin old versions against expiry
     intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
 
-    Snapshots.compact(spark, dir, "t", "maint")()
+    Snapshots.compact(spark, dir, "t", "maint", Seq("b"))()
     val mC = Snapshots.readManifest(dir, "t")
     assert(mC.metrics.get("compacted").contains("true"))
     assert(mC.baseFiles.forall(_.isEmpty) &&
       Snapshots.appendStats(mC) == (0L, 0))
     assert(readSet(dir) == before, "compaction changed the content")
     assert(mC.rows == before.size.toLong)
-    // partitioning survived the fold: files live under b=* dirs
+    // the fold kept the layout it was asked for: files live under b=* dirs
     assert(mC.fileRows.keys.forall(_.contains("b=")))
     // every pre-compact version is now expirable (newest-first: the
     // guard also protects files carried by EXPIRED-LATER manifests)
