@@ -91,8 +91,7 @@ object Bench {
       val warmDir = s"$baseDir/warmup"
       spark.sparkContext.setCheckpointDir(s"$warmDir/_checkpoints")
       Pipeline.run(spark, fixtures.FilesGen.dataset(spark, 2000L, richness = richness),
-        warmDir, "warmup", Pipeline.Config(resume = false,
-          arrangePartitions = Some(4)))
+        warmDir, "warmup", Pipeline.Config(resume = false))
       spark.catalog.clearCache()
       System.gc()
     }

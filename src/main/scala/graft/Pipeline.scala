@@ -34,12 +34,6 @@ object Pipeline {
       // ride the driver.
       ccLocalThreshold: Long = canon.ConnectedComponents.LocalEdgeThreshold,
       resume: Boolean = true,
-      // extraction partition count (= extract-stage task and output-
-      // file count). Defaults to the cluster's defaultParallelism;
-      // size it to the corpus the way you'd size maxPartitionBytes at
-      // 100 TB — a 2k-file smoke corpus has no use for 32 near-empty
-      // tasks × q partition dirs.
-      arrangePartitions: Option[Int] = None,
       // CANONICAL BUCKETS (opt-in): when Some(B), the assign / nodes /
       // edges snapshots gain a cb = pmod(canonicalId, B) int data
       // column in last position; that is all B does. It sets no
@@ -54,14 +48,6 @@ object Pipeline {
       // a fresh census at the current corpus size). None = record the
       // drift in the manifest but never refuse.
       maxCensusDrift: Option[Double] = None,
-      // Fraction of the delta's (pred, shingle) KEYS the drift
-      // measurement prices (deterministic hash sample of the key
-      // space; dfs for the sampled keys stay exact). 1.0 = every
-      // delta key. The metric guides a re-pin decision — an unbiased
-      // mean over a uniform key sample is enough, and exact dfs keep
-      // near-cap keys classified correctly (row-sampling does not;
-      // see censusDrift).
-      driftSample: Double = 1.0,
       // Fold trigger for the merge-on-read tail: after a pinned
       // ingest, if the append rows of any of assign/nodes/edges (or
       // the canon log's rows, against assign) reach this fraction of
@@ -142,11 +128,10 @@ object Pipeline {
     * canonicalize to themselves. Returns (assignments, cc iterations).
     */
   def assignCanonical(ents: DataFrame, links: DataFrame,
-                      hotThreshold: Long = 100000L,
                       ccLocalThreshold: Long =
                         ConnectedComponents.LocalEdgeThreshold,
                       edgeCountHint: Option[Long] = None): (DataFrame, Int) = {
-    val cc = ConnectedComponents.run(links, hotThreshold,
+    val cc = ConnectedComponents.run(links,
       localThreshold = ccLocalThreshold, edgeCountHint = edgeCountHint)
     val assign = cc.assignments.withColumnRenamed("id", "entityId")
     val out = ents.join(assign, Seq("entityId"), "left")
@@ -189,7 +174,6 @@ object Pipeline {
 
   def run(spark: SparkSession, files: Dataset[SourceFile], runDir: String,
           runId: String, cfg: Config = Config()): Result = {
-    import spark.implicits._
     val resume = cfg.resume
 
     // a run dir that has received incremental ingests holds MULTIPLE
@@ -211,42 +195,61 @@ object Pipeline {
       Seq("ep_census", "ep_keys", "ep_shingles")
         .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
-    // Stage 1 — extraction. repartitionByRange(repo, path) gives
-    // deterministic per-partition lineage and co-locates each repo's
-    // files (north star verbatim).
-    // Extract-stage layout choices are write-cost choices at 10^12
-    // files (all measured in single-thread write A/Bs at 200k files):
-    //  - subj ("repo/path") is derivable — dropped on write,
-    //    re-derived on read (~15% fewer bytes, ~20% less write wall);
-    //  - partitioned by the quarantine FLAG, not by pred: the only
-    //    partition predicate the pipeline ever applies is
-    //    quarantine-vs-not, and a boolean dynamic-partition sort is
-    //    far cheaper than a 10-value one (19s vs 25s single-thread at
-    //    200k files, and half the bytes — fewer files keep dictionary
-    //    pages effective). The published nodes/edges tables cluster
-    //    by kind / pred inside their files instead (see canonicalize).
-    val raw0 = Snapshots.stage(spark, runDir, "extract", runId, resume,
-      partitionBy = Seq("q")) {
-      val arranged = files.repartitionByRange(
-        cfg.arrangePartitions.getOrElse(
-          files.sparkSession.sparkContext.defaultParallelism),
-        $"repo", $"path")
-      Extraction.extract(arranged, cfg.extraction).toDF()
-        .withColumn("q", $"pred" === lit(Extraction.QuarantinePred))
-        .drop("subj")
-    }
-    val raw = raw0.withColumn("subj", concat($"repo", lit("/"), $"path"))
-
-    // q partition pruning: these scans never touch quarantine rows.
-    // The partition column is WRITTEN as boolean but read back as
-    // STRING (partition inference never infers booleans) — cast
-    // explicitly rather than leaning on implicit string→boolean
-    // coercion surviving ANSI rule changes.
-    val triples = raw.filter(!$"q".cast("boolean")).drop("q")
-
+    val triples = triplesOf(
+      publishExtract(spark, files, runDir, runId, cfg, resume))
     val ccIters = downstream(spark, runDir, runId, cfg, triples, resume)
     resultFrom(runDir, runId, ccIters)
   }
+
+  /** Stage 1 — extraction, published as an `extract` snapshot version.
+    * repartitionByRange(repo, path) over the session's parallelism
+    * gives deterministic per-partition lineage and co-locates each
+    * repo's files (north star verbatim); the partition count is the
+    * session's, not a knob.
+    * Extract-stage layout choices are write-cost choices at 10^12
+    * files (all measured in single-thread write A/Bs at 200k files):
+    *  - subj ("repo/path") is derivable — dropped on write,
+    *    re-derived on read by [[triplesOf]] (~15% fewer bytes, ~20%
+    *    less write wall);
+    *  - partitioned by the quarantine FLAG, not by pred: the only
+    *    partition predicate the pipeline ever applies is
+    *    quarantine-vs-not, and a boolean dynamic-partition sort is
+    *    far cheaper than a 10-value one (19s vs 25s single-thread at
+    *    200k files, and half the bytes — fewer files keep dictionary
+    *    pages effective). The published nodes/edges tables cluster
+    *    by kind / pred inside their files instead (see canonicalize).
+    */
+  private def publishExtract(spark: SparkSession,
+                             files: Dataset[SourceFile], runDir: String,
+                             runId: String, cfg: Config,
+                             resume: Boolean): DataFrame =
+    Snapshots.stage(spark, runDir, "extract", runId, resume,
+      partitionBy = Seq("q")) {
+      val arranged = files.repartitionByRange(
+        spark.sparkContext.defaultParallelism, col("repo"), col("path"))
+      Extraction.extract(arranged, cfg.extraction).toDF()
+        .withColumn("q", col("pred") === lit(Extraction.QuarantinePred))
+        .drop("subj")
+    }
+
+  /** The triples of extract rows: quarantine rows dropped, subj
+    * re-derived. q partition pruning: these scans never touch
+    * quarantine rows. The partition column is WRITTEN as boolean but
+    * read back as STRING (partition inference never infers booleans) —
+    * cast explicitly rather than leaning on implicit string→boolean
+    * coercion surviving ANSI rule changes.
+    */
+  private def triplesOf(raw: DataFrame): DataFrame =
+    raw.filter(!col("q").cast("boolean")).drop("q")
+      .withColumn("subj", concat(col("repo"), lit("/"), col("path")))
+
+  /** The full triple set: the union of every ingest's extract version
+    * (each a disjoint corpus slice).
+    */
+  private def allTriples(spark: SparkSession, runDir: String): DataFrame =
+    triplesOf(Snapshots.versions(runDir, "extract")
+      .map(v => Snapshots.readVersion(spark, runDir, "extract", v))
+      .reduce(_ unionByName _))
 
   /** Incremental ingest: extract ONLY `newFiles` (the content scan —
     * the cost that dominates at 10^12 files — never re-reads old
@@ -276,7 +279,6 @@ object Pipeline {
   def runIncremental(spark: SparkSession, newFiles: Dataset[SourceFile],
                      runDir: String, runId: String,
                      cfg: Config = Config()): Result = {
-    import spark.implicits._
     require(Snapshots.isComplete(runDir, "extract"),
       s"no completed prior run in $runDir — use Pipeline.run for the first ingest")
 
@@ -289,15 +291,8 @@ object Pipeline {
     Seq("ep_census", "ep_keys", "ep_shingles")
       .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
-    // full triple set = union of every ingest's extract snapshot
-    val allRaw = Snapshots.versions(runDir, "extract")
-      .map(v => Snapshots.readVersion(spark, runDir, "extract", v))
-      .reduce(_ unionByName _)
-      .withColumn("subj", concat($"repo", lit("/"), $"path"))
-    val triples = allRaw.filter(!$"q".cast("boolean")).drop("q")
-
-    val ccIters = downstream(spark, runDir, runId, cfg, triples,
-      resume = false)
+    val ccIters = downstream(spark, runDir, runId, cfg,
+      allTriples(spark, runDir), resume = false)
     resultFrom(runDir, runId, ccIters)
   }
 
@@ -306,29 +301,17 @@ object Pipeline {
     * downstream stages must not append the same delta twice (the
     * version union would double-count its triples). Idempotence key =
     * the caller's runId, same contract as Streaming.ingestBatch.
+    * Returns this runId's extract rows.
     */
   private def extractDeltaOnce(spark: SparkSession,
                                newFiles: Dataset[SourceFile],
                                runDir: String, runId: String,
-                               cfg: Config): Unit = {
-    import spark.implicits._
-    val alreadyExtracted = Snapshots.versions(runDir, "extract")
-      .exists(v => Snapshots.readManifestVersion(runDir, "extract", v)
-        .runId == runId)
-    if (!alreadyExtracted) {
-      Snapshots.stage(spark, runDir, "extract", runId, resume = false,
-        partitionBy = Seq("q")) {
-        val arranged = newFiles.repartitionByRange(
-          cfg.arrangePartitions.getOrElse(
-            newFiles.sparkSession.sparkContext.defaultParallelism),
-          $"repo", $"path")
-        Extraction.extract(arranged, cfg.extraction).toDF()
-          .withColumn("q", $"pred" === lit(Extraction.QuarantinePred))
-          .drop("subj")
-      }
-      (): Unit
+                               cfg: Config): DataFrame =
+    versionsBy(runDir, "extract", runId).headOption match {
+      case Some(v) => Snapshots.readVersion(spark, runDir, "extract", v)
+      case None =>
+        publishExtract(spark, newFiles, runDir, runId, cfg, resume = false)
     }
-  }
 
   // ------------------------------------------------------------------
   // EPOCH-PINNED incremental linking. runIncremental's global relink
@@ -386,8 +369,7 @@ object Pipeline {
     // an epoch pinned right after a global run freezes EXACTLY the
     // census that run linked under (pinned-vs-base coherence; an
     // upper bound only raises the cap, same contract as linkEdges)
-    val nEnts = lineageVersions(runDir, "entities").map(v =>
-      Snapshots.readManifestVersion(runDir, "entities", v).rows).sum
+    val nEnts = lineageRows(runDir, "entities")
     val cap = cfg.link.stopShingleCap(nEnts)
     val shingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
       resume = false, metrics = Map("delta" -> "false")) {
@@ -446,13 +428,8 @@ object Pipeline {
     cfg.maxLineageDeltas.foreach(compactLineage(spark, runDir, runId, _))
 
     // 1. delta-only extract (idempotent per runId)
-    graft.store.IOStat.timed("pin.extract")(
-      extractDeltaOnce(spark, newFiles, runDir, runId, cfg))
-    val myV = Snapshots.versions(runDir, "extract").find(v =>
-      Snapshots.readManifestVersion(runDir, "extract", v).runId == runId).get
-    val deltaTriples = Snapshots
-      .readVersion(spark, runDir, "extract", myV)
-      .filter(!$"q".cast("boolean")).drop("q")
+    val deltaTriples = triplesOf(graft.store.IOStat.timed("pin.extract")(
+      extractDeltaOnce(spark, newFiles, runDir, runId, cfg)))
 
     // "the world before this ingest": lineage versions excluding any
     // slice a crashed attempt of THIS runId already appended
@@ -465,8 +442,7 @@ object Pipeline {
     // set). Broadcast hints only while the delta is small (bounded by
     // the delta extract's manifest rows); an epoch-sized delta
     // degrades to AQE-planned joins instead of blowing the driver.
-    val deltaExtractRows =
-      Snapshots.readManifestVersion(runDir, "extract", myV).rows
+    val deltaExtractRows = deltaRowsOf(runDir, "extract", runId)
     def hinted(df: DataFrame): DataFrame =
       if (deltaExtractRows <= SkewJoin.BroadcastableRightRows) broadcast(df)
       else df
@@ -495,11 +471,10 @@ object Pipeline {
     // global relink would use right now). A drifted-to-hot shingle
     // still blocks for the delta (extra candidates — cost, not
     // recall); a drifted-to-stop one means the pin keeps surfacing
-    // candidates a fresh run would drop. Exact per-shingle dfs come
-    // from one broadcast-filtered scan of the stored shingle lineage
-    // (delta-bounded aggregate, map-side combined); Config.driftSample
-    // trades that scan for a sampled estimate at extreme scale. The
-    // metric lands in this ingest's ep_keys manifest; Config.
+    // candidates a fresh run would drop. Every delta key is priced with
+    // its exact df, from one broadcast-filtered scan of the stored
+    // shingle lineage (delta-bounded aggregate, map-side combined).
+    // The metric lands in this ingest's ep_keys manifest; Config.
     // maxCensusDrift turns it into a refusal (recover by running the
     // SAME runId through runIncremental — the global relink, which
     // bumps the epoch — then pinEpoch).
@@ -548,16 +523,9 @@ object Pipeline {
     val ccIters = graft.store.IOStat.timed("pin.canon")(
       mergeOnReadTail(spark, runDir, runId, cfg,
         deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows)
-        .getOrElse {
-          val allTriples = Snapshots.versions(runDir, "extract")
-            .map(v => Snapshots.readVersion(spark, runDir, "extract", v))
-            .reduce(_ unionByName _)
-            .withColumn("subj", concat($"repo", lit("/"), $"path"))
-            .filter(!$"q".cast("boolean")).drop("q")
-          canonicalize(spark, runDir, runId, cfg, allTriples,
-            lineageUnion(spark, runDir, "entities"),
-            lineageUnion(spark, runDir, "link_edges"), resume = false)
-        })
+        .getOrElse(canonicalize(spark, runDir, runId, cfg,
+          allTriples(spark, runDir), lineageUnion(spark, runDir, "entities"),
+          lineageUnion(spark, runDir, "link_edges"), resume = false)))
     resultFrom(runDir, runId, ccIters)
   }
 
@@ -757,7 +725,6 @@ object Pipeline {
     val nodesApp = withCb(nodeTableFull(deltaAssign), cfg.canonBuckets)
       .repartition(appendParts).sortWithinPartitions($"kind")
     val edgesApp = withCb(deltaTriples
-      .withColumn("subj", concat($"repo", lit("/"), $"path"))
       .withColumn("entityId", Linking.idCol($"pred", $"obj"))
       .join(broadcast(finalCanonDf), Seq("entityId"), "left")
       .withColumn("canonicalId", coalesce($"fc", $"entityId"))
@@ -1096,10 +1063,14 @@ object Pipeline {
     */
   private def deltaRowsOf(runDir: String, stage: String,
                           runId: String): Long =
-    Snapshots.versions(runDir, stage).flatMap { v =>
-      val m = Snapshots.readManifestVersion(runDir, stage, v)
-      if (m.runId == runId) Some(m.rows) else None
-    }.sum
+    versionsBy(runDir, stage, runId)
+      .map(Snapshots.readManifestVersion(runDir, stage, _).rows).sum
+
+  /** The versions of `stage` published under `runId`. */
+  private def versionsBy(runDir: String, stage: String,
+                         runId: String): Seq[Int] =
+    Snapshots.versions(runDir, stage).filter(v =>
+      Snapshots.readManifestVersion(runDir, stage, v).runId == runId)
 
   /** Append a DELTA snapshot version, idempotent per runId: a
     * crash-retry that already published this ingest's slice reads it
@@ -1109,8 +1080,7 @@ object Pipeline {
                          stage: String, runId: String,
                          extraMetrics: Map[String, String] = Map.empty)
                         (compute: => DataFrame): DataFrame = {
-    Snapshots.versions(runDir, stage).find(v =>
-      Snapshots.readManifestVersion(runDir, stage, v).runId == runId) match {
+    versionsBy(runDir, stage, runId).headOption match {
       case Some(v) => Snapshots.readVersion(spark, runDir, stage, v)
       case None => Snapshots.stage(spark, runDir, stage, runId,
         resume = false,
@@ -1126,32 +1096,13 @@ object Pipeline {
                           hot: Seq[(String, Long)], deltaShingled: DataFrame,
                           deltaExtractRows: Long): Double = {
     import spark.implicits._
-    // driftSample samples the delta's KEY SPACE (deterministic hash
-    // bucket on (pred, sh)), never the stored rows: per-key dfs stay
-    // EXACT, so the sampled drift is an unbiased mean over a uniform
-    // key sample. Row-sampling was tried first and REJECTED on
-    // measurement: scaling sampled counts by 1/p leaves near-cap keys
-    // misclassified with high probability (Binomial variance around
-    // the cap) and drops rare keys from the denominator entirely —
-    // BENCH.md §13.2 read 0.12 at p=0.1 where the exact metric reads
-    // 0.013 — and `.sample` reads every stored row anyway, so it
-    // saved no IO. Key-sampling shrinks the probe side and the
-    // aggregate by p with no bias, and is deterministic (replayed
-    // ingests record the same drift).
-    val deltaShAll = deltaShingled
+    val deltaSh = deltaShingled
       .select($"pred", explode($"shingles").as("sh")).distinct()
-    val deltaSh =
-      if (cfg.driftSample >= 1.0) deltaShAll
-      else deltaShAll.filter(
-        pmod(xxhash64($"pred", $"sh"), lit(1000000L)) <
-          lit(math.round(cfg.driftSample * 1000000L)))
     val hinted =
       if (deltaExtractRows <= SkewJoin.BroadcastableRightRows)
         broadcast(deltaSh)
       else deltaSh
-    val nEnts = lineageVersions(runDir, "entities").map(v =>
-      Snapshots.readManifestVersion(runDir, "entities", v).rows).sum
-    val freshCap = cfg.link.stopShingleCap(nEnts)
+    val freshCap = cfg.link.stopShingleCap(lineageRows(runDir, "entities"))
     val stored = lineageUnion(spark, runDir, "ep_shingles")
     val dfs = stored.select($"pred", explode($"shingles").as("sh"))
       .join(hinted, Seq("pred", "sh"))
@@ -1188,6 +1139,11 @@ object Pipeline {
             "would silently drop the pre-delta corpus"))
     vs.filter(_ >= lastFull)
   }
+
+  /** Rows of a stage's current lineage, summed from its manifests. */
+  private def lineageRows(runDir: String, stage: String): Long =
+    lineageVersions(runDir, stage)
+      .map(Snapshots.readManifestVersion(runDir, stage, _).rows).sum
 
   private def lineageUnion(spark: SparkSession, runDir: String,
                            stage: String,
@@ -1275,8 +1231,7 @@ object Pipeline {
       // raw-edge cache (see ConnectedComponents.run's edgeCountHint)
       val (a, iters) = assignCanonical(ents, links,
         ccLocalThreshold = cfg.ccLocalThreshold,
-        edgeCountHint = Some(lineageVersions(runDir, "link_edges").map(v =>
-          Snapshots.readManifestVersion(runDir, "link_edges", v).rows).sum))
+        edgeCountHint = Some(lineageRows(runDir, "link_edges")))
       ccIters = iters
       withCb(a, cfg.canonBuckets)
         .withColumn("ident", $"canonicalId" === $"entityId")
@@ -1366,14 +1321,12 @@ object Pipeline {
     val quarantined = extractManifests.flatMap(_.fileRows.collect {
       case (f, n) if f.startsWith("q=true/") => n
     }).sum
-    def lineageRows(stage: String): Long = lineageVersions(runDir, stage)
-      .map(v => Snapshots.readManifestVersion(runDir, stage, v).rows).sum
     Result(
       runId = runId,
       triples = rawRows - quarantined,
       quarantined = quarantined,
-      entities = lineageRows("entities"),
-      linkEdges = lineageRows("link_edges"),
+      entities = lineageRows(runDir, "entities"),
+      linkEdges = lineageRows(runDir, "link_edges"),
       // under deferred merges the stored node ROWS over-count merged
       // components; the canon log's manifest carries the exact
       // logical count by driver arithmetic

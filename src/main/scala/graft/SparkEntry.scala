@@ -737,7 +737,7 @@ object SparkEntry {
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,
           asksCorpus(s, dir).drop("doc_id").as[SourceFile], runDir, "kgq",
-          graft.Pipeline.Config(resume = false, arrangePartitions = Some(4)))
+          graft.Pipeline.Config(resume = false))
       }
       asksNodes(s, runDir)
     }),
@@ -766,7 +766,7 @@ object SparkEntry {
       val input = MemoryStream[SourceFile](s)
       withCheckpointDir(s, s"$runDir/_ck") {
         val q = graft.streaming.Streaming.kgIngestStream(input.toDS(), runDir,
-          graft.Pipeline.Config(resume = false, arrangePartitions = Some(4)))
+          graft.Pipeline.Config(resume = false))
         try {
           input.addData(batch(0): _*)
           q.processAllAvailable()
@@ -894,8 +894,7 @@ object SparkEntry {
       import sp.implicits._
       val runDir = freshScratch("kginc")
       val filesDf = asksCorpus(s, dir)
-      val cfg = graft.Pipeline.Config(resume = false,
-        arrangePartitions = Some(4))
+      val cfg = graft.Pipeline.Config(resume = false)
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.streaming.Streaming.ingestBatch(
           filesDf.filter(col("doc_id") % 2 === 0).drop("doc_id")
@@ -924,8 +923,7 @@ object SparkEntry {
       import sp.implicits._
       val runDir = freshScratch("kgpin")
       val filesDf = asksCorpus(s, dir)
-      val cfg = graft.Pipeline.Config(resume = false,
-        arrangePartitions = Some(4))
+      val cfg = graft.Pipeline.Config(resume = false)
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,
           filesDf.filter(col("doc_id") % 2 === 0).drop("doc_id")
@@ -953,7 +951,7 @@ object SparkEntry {
       val runDir = freshScratch("kgdef")
       val filesDf = asksCorpus(s, dir)
       val cfg = graft.Pipeline.Config(resume = false,
-        arrangePartitions = Some(4), compactAppendFrac = Some(1e-9))
+        compactAppendFrac = Some(1e-9))
       withCheckpointDir(s, s"$runDir/_ck") {
         graft.Pipeline.run(s,
           filesDf.filter(col("doc_id") % 2 === 0).drop("doc_id")

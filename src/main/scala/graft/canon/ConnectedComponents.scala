@@ -15,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
   * neighbor-min join goes through SkewJoin.joinUniqueRight (hot keys
   * broadcast, cold keys shuffle) and the groupBy-mins are map-side
   * combined. Lineage is cut by persisting each round and
-  * checkpointing every `checkpointEvery` rounds — an iterative plan
+  * checkpointing every [[CheckpointEvery]] rounds — an iterative plan
   * would otherwise grow exponentially in the optimizer.
   */
 object ConnectedComponents {
@@ -34,6 +34,15 @@ object ConnectedComponents {
     * component).
     */
   val LocalEdgeThreshold = 2000000L
+
+  /** Neighbor-min join keys above this count take SkewJoin's broadcast
+    * hot slice.
+    */
+  private val HotThreshold = 100000L
+  /** Round bound of the star fixpoint (O(log n) rounds in practice). */
+  private val MaxIter = 50
+  /** Rounds between lineage-cutting checkpoints. */
+  private val CheckpointEvery = 3
 
   /** edges: (src: Long, dst: Long). Returns (id, comp) for every node
     * whose canonical id DIFFERS from itself — comp = min node id of
@@ -60,8 +69,7 @@ object ConnectedComponents {
     * decision is conservative either way: a duplicate-heavy edge set
     * falls to the distributed path, never the reverse.
     */
-  def run(edges0: DataFrame, hotThreshold: Long = 100000L,
-          maxIter: Int = 50, checkpointEvery: Int = 3,
+  def run(edges0: DataFrame,
           localThreshold: Long = LocalEdgeThreshold,
           edgeCountHint: Option[Long] = None): Result = {
     val spark = edges0.sparkSession
@@ -92,15 +100,15 @@ object ConnectedComponents {
     var converged = false
     val retained = scala.collection.mutable.Buffer[DataFrame](e)
 
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       iter += 1
       // the symmetric view is at most 2x the edge set — a safe upper
       // bound for the skew-detection skip decision
-      val ls = largeStar(e, hotThreshold, Some(2L * edgeCount))
+      val ls = largeStar(e, Some(2L * edgeCount))
       // largeStar emits at most one row per symmetric edge, so the
       // same bound holds for smallStar's input
-      var next = smallStar(ls, hotThreshold, Some(2L * edgeCount))
-      if (iter % checkpointEvery == 0) next = next.checkpoint()
+      var next = smallStar(ls, Some(2L * edgeCount))
+      if (iter % CheckpointEvery == 0) next = next.checkpoint()
       else next = next.persist(StorageLevel.MEMORY_AND_DISK)
       val sig = signature(next)
       converged = sig == prevSig
@@ -111,7 +119,7 @@ object ConnectedComponents {
       // free all but the current iteration's cache
       if (retained.size > 2) retained.remove(0).unpersist(false)
     }
-    require(converged, s"connected components did not converge in $maxIter rounds")
+    require(converged, s"connected components did not converge in $MaxIter rounds")
 
     // at the fixpoint every edge is (child -> component root), and
     // only non-roots appear as src — exactly the non-identity delta
@@ -191,14 +199,14 @@ object ConnectedComponents {
   /** large-star: every node connects its strictly-larger neighbors to
     * the minimum of its neighborhood (including itself).
     */
-  private[canon] def largeStar(e: DataFrame, hotThreshold: Long,
+  private[canon] def largeStar(e: DataFrame,
                                countHint: Option[Long] = None): DataFrame = {
     val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
     val mins = sym.groupBy("src")
       .agg(min("dst").as("m"))
       .select(col("src"), least(col("m"), col("src")).as("m"))
     SkewJoin.joinUniqueRight(sym.filter(col("dst") > col("src")), mins,
-        "src", hotThreshold, countHint)
+        "src", HotThreshold, countHint)
       .select(col("dst").as("src"), col("m").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
@@ -207,7 +215,7 @@ object ConnectedComponents {
   /** small-star: orient edges big→small; every node connects its
     * smaller-or-equal neighbors (and itself) to the neighborhood min.
     */
-  private[canon] def smallStar(e: DataFrame, hotThreshold: Long,
+  private[canon] def smallStar(e: DataFrame,
                                countHint: Option[Long] = None): DataFrame = {
     val oriented = e.select(
       greatest(col("src"), col("dst")).as("src"),
@@ -215,7 +223,7 @@ object ConnectedComponents {
     ).filter(col("src") =!= col("dst")).distinct()
     val mins = oriented.groupBy("src").agg(min("dst").as("m"))
     val relinked = SkewJoin.joinUniqueRight(oriented, mins, "src",
-      hotThreshold, countHint)
+      HotThreshold, countHint)
     relinked.select(col("dst").as("v"), col("m"))
       .unionByName(mins.select(col("src").as("v"), col("m")))
       .filter(col("v") =!= col("m"))

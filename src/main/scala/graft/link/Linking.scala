@@ -118,8 +118,28 @@ object Linking {
   def normCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(regexp_replace(lower(trim(c)), "\\s+", " "), "\\.+$", "")
 
-  /** Stable 64-bit entity id of a surface form. Collision probability
-    * is checked (count distinct vs count) by the pipeline's metrics.
+  /** Stable 64-bit entity id of a surface form.
+    *
+    * COMBINED 64-BIT COLLISION BUDGET. Four xxhash64 keys stand in for
+    * strings, and no run checks any of them for collisions:
+    *  - idCol, over n distinct (pred, obj) forms: a collision makes two
+    *    forms one entity;
+    *  - the exact-norm block key xxhash64(pred, norm) of
+    *    [[exactNormEdges]], over b ≤ n distinct blocks: a collision
+    *    merges two norm blocks into false link edges that nothing
+    *    re-scores;
+    *  - the shingle hashes of [[withShingles]], over d distinct
+    *    shingles per pred: a collision shifts a Jaccard score;
+    *  - the band keys of [[bandedKeys]]: a collision only ADDS
+    *    candidate pairs, which are scored exactly, so it costs time and
+    *    never changes the output.
+    * The three that can change the output have birthday odds of about
+    * (n² + b² + d²) / 2⁶⁵, dominated by n: ~2e-7 at the 2M entities
+    * of the 200k-file bench corpus, but a few percent at 10⁹ forms.
+    * There the cheap hardening is to re-check norm equality on the
+    * (small) blocks with more than one member. The DuckDB twins
+    * recompute string identities, norm classes and Jaccard, and pin
+    * no collision on the gate corpora.
     */
   def idCol(pred: org.apache.spark.sql.Column,
             obj: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -175,10 +195,8 @@ object Linking {
     * pair: both the aggregation and the join exchange every entity
     * row, and an 8-byte key replaces pred+norm strings (~40–80 B) in
     * the widest all-entities shuffles of the link stage. A 64-bit
-    * collision would merge two unrelated norm blocks — the same
-    * accepted collision regime as [[idCol]] (which already identifies
-    * forms by a 64-bit hash); the DuckDB twins recompute STRING norm
-    * classes and pin no-collision on the gate corpora.
+    * collision would merge two unrelated norm blocks; see the
+    * combined collision budget at [[idCol]].
     */
   private[link] def exactNormEdges(ents: DataFrame, cfg: Config): DataFrame = {
     val keyed = ents.select(
@@ -202,7 +220,7 @@ object Linking {
     * band signatures collide exactly as before; two buckets of
     * DIFFERENT preds merge only on a 64-bit collision, which can only
     * ADD candidate pairs (scored exactly downstream over the shingle
-    * sets), the same accepted collision regime as [[idCol]].
+    * sets); see the combined collision budget at [[idCol]].
     */
   private def bandedKeys(shingled: DataFrame, cfg: Config,
                          n: Long): DataFrame = {
@@ -305,8 +323,8 @@ object Linking {
     * stage. Jaccard over the hashed sets equals Jaccard over the
     * string sets unless two distinct shingles of one pred universe
     * collide in 64 bits — birthday odds ≈ d²/2⁶⁵ ≈ 7e-11 at d=50k
-    * distinct shingles, and deterministic per corpus (the DuckDB
-    * correctness twins recompute STRING Jaccard and stay green).
+    * distinct shingles, and deterministic per corpus (see the
+    * combined collision budget at [[idCol]]).
     * NB: rpad TRUNCATES strings longer than the target length — pad
     * only the genuinely short ones; array_distinct runs on the strings
     * (hashing preserves distinctness short of a collision).
@@ -421,7 +439,7 @@ object Linking {
     // added nothing but a string column riding the candidate exchange
     // — the widest shuffle of the link stage. Dropping it narrows the
     // candidate rows to (src, dst) 16 bytes and makes both join keys
-    // single longs (same accepted 64-bit-collision regime as idCol).
+    // single longs (idCol's combined 64-bit collision budget).
     val sets = shingled.select(col("entityId"), col("shingles"))
     // zero-allocation merge count over the sorted hash arrays (the
     // withShingles sortedness contract) — array_intersect would build

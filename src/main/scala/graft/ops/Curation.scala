@@ -85,6 +85,13 @@ object Curation {
   /** Stage 3 — decontamination: anti-join against the ids flagged by
     * [[Dedup.contaminated]] (the flagged set is small, so AQE
     * broadcasts the anti-join; the corpus is never shuffled on text).
+    *
+    * INVARIANT: [[funnel]] flags the UN-cleaned corpus and ANDs the
+    * flag with the clean flag, which equals this stage only while the
+    * flag is per-doc against broadcast bench n-grams (OpsSpec pins the
+    * equality). Swap in a corpus-dependent operator here (say, a
+    * census or caps derived from the corpus) and funnel must change in
+    * lockstep.
     */
   private[ops] def deconStage(clean: DataFrame, bench: DataFrame,
                               contamN: Int, contamMinOverlap: Long,

@@ -563,19 +563,13 @@ object Snapshots {
       metrics = metrics + ("compacted" -> "true"))(df)
   }
 
-  /** Footer-derived per-file row counts for every *.parquet under
-    * `dir`, keyed by dir-relative path.
+  /** Footer-derived (row count, byte size) per *.parquet under `dir`,
+    * keyed by dir-relative path — everything scan planning needs.
     *
     * Footers are opened on a bounded driver-side pool: a partitionBy
     * layout produces (tasks × partition values) small files, and the
     * ~10 ms per-open FS overhead is pure latency — serial reads cost
     * seconds per stage and dominated small pipeline runs.
-    */
-  def footerCounts(dir: String): Map[String, Long] =
-    footerStats(dir).map { case (k, (rows, _)) => k -> rows }
-
-  /** Footer-derived (row count, byte size) per *.parquet under `dir`,
-    * keyed by dir-relative path — everything scan planning needs.
     */
   def footerStats(dir: String): Map[String, (Long, Long)] =
     IOStat.timed("snap.footers") {

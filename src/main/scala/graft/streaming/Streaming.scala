@@ -93,27 +93,16 @@ object Streaming {
       }
   }
 
-  /** Drive a parquet directory through a streaming query into a memory
-    * sink and return the materialized result (test/bench harness).
-    */
-  /** Streaming exact dedup — the ingestion-time twin of batch
-    * `Dedup.exactDedup`: drop every re-delivery of a key already seen
-    * within the watermark horizon. `dropDuplicatesWithinWatermark`
-    * keeps per-key state only until the watermark passes it, so state
-    * size tracks the horizon's traffic, not the stream's lifetime —
-    * the bounded-state contract a 100 TB ingest needs (an unbounded
-    * `dropDuplicates` would grow state forever). Keys re-delivered
-    * AFTER the horizon re-emit; pick the watermark to cover the
-    * at-least-once redelivery window of the source.
-    */
   /** One micro-batch of streaming KG maintenance: first batch runs
     * the full pipeline, later batches ingest incrementally
     * ([[graft.Pipeline.runIncremental]] — delta-only extraction,
-    * global relink, versioned snapshots). IDEMPOTENT per batch id:
-    * foreachBatch replays a batch after a crash, and re-ingesting it
-    * would append duplicate extract versions — the guard skips any
-    * batch whose runId already owns an extract snapshot version, so
-    * replay ≡ no-op (the streaming twin of the batch resume
+    * global relink, versioned snapshots — or, with `epochPinned`,
+    * [[graft.Pipeline.runIncrementalPinned]] — delta-only linking
+    * under a census pinned after the first batch). IDEMPOTENT per
+    * batch id: foreachBatch replays a batch after a crash, and
+    * re-ingesting it would append duplicate extract versions — the
+    * guard skips any batch whose runId already committed the graph,
+    * so replay ≡ no-op (the streaming twin of the batch resume
     * contract). Returns true when the batch was applied.
     */
   def ingestBatch(batch: Dataset[graft.SourceFile], batchId: Long,
@@ -184,6 +173,16 @@ object Streaming {
       }
       .start()
 
+  /** Streaming exact dedup — the ingestion-time twin of batch
+    * `Dedup.exactDedup`: drop every re-delivery of a key already seen
+    * within the watermark horizon. `dropDuplicatesWithinWatermark`
+    * keeps per-key state only until the watermark passes it, so state
+    * size tracks the horizon's traffic, not the stream's lifetime —
+    * the bounded-state contract a 100 TB ingest needs (an unbounded
+    * `dropDuplicates` would grow state forever). Keys re-delivered
+    * AFTER the horizon re-emit; pick the watermark to cover the
+    * at-least-once redelivery window of the source.
+    */
   def dedupStream(events: DataFrame, keys: Seq[String],
                   watermark: String = "1 hour"): DataFrame =
     events
@@ -191,6 +190,9 @@ object Streaming {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(keys)
 
+  /** Drive a parquet directory through a streaming query into a memory
+    * sink and return the materialized result (test/bench harness).
+    */
   def runToMemory(spark: SparkSession, streaming: DataFrame,
                   name: String, mode: OutputMode): DataFrame = {
     val q = streaming.writeStream

@@ -13,29 +13,15 @@ OUT=${OUT:-/tmp/cc_bench_results.txt}
 CLS=/tmp/benchclasses
 CORPUS=${CORPUS:-/dev/shm/gr/cc_corpus}
 
-rm -rf "$CLS"
-cp -r /root/repo/target/scala-2.13/classes "$CLS"
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-
-SCALA_JARS=$(ls /root/.sbt/boot/scala-2.13.17/lib/*.jar 2>/dev/null | tr '\n' ':')
-[ -z "$SCALA_JARS" ] && SCALA_JARS=$(find /root/.cache/coursier -name 'scala-library-2.13*.jar' 2>/dev/null | head -1):
+. "$(dirname "$0")/jvm_env.sh"
 
 run_one() {  # $1 = threshold env value, $2 = run dir
   rm -rf "$2"
   SPARK_GRAFT_FILES_DIR=$CORPUS SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_CC_LOCAL_THRESHOLD=$1 \
-    java $ADD_OPENS -Xmx48g \
+    java $ADD_OPENS -Xmx$XMX \
       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -cp "$CLS:${SCALA_JARS}/opt/spark/jars/*" \
+      -cp "$JAVA_CP" \
       graft.tools.PipelineRun "$N" "$2" 2>/dev/null | grep -a '\[pipeline\]'
 }
 

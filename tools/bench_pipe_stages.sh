@@ -8,26 +8,15 @@ REPS=${REPS:-3}
 CORPUS=${CORPUS:-/dev/shm/gr/corpus200}
 OUT=${OUT:-/tmp/pipe_stages.txt}
 CLS=/tmp/benchclasses
-rm -rf "$CLS"
-cp -r /root/repo/target/scala-2.13/classes "$CLS"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-SCALA_JARS=$(ls /root/.sbt/boot/scala-2.13.17/lib/*.jar 2>/dev/null | tr '\n' ':')
-echo "=== pipe_stages $(date -u +%FT%TZ) n=$N cpus=$CPUS reps=$REPS cls=$(git -C /root/repo rev-parse --short HEAD) ===" >> "$OUT"
+. "$(dirname "$0")/jvm_env.sh"
+echo "=== pipe_stages $(date -u +%FT%TZ) n=$N cpus=$CPUS reps=$REPS cls=$(git -C "$REPO" rev-parse --short HEAD) ===" >> "$OUT"
 for rep in $(seq 1 "$REPS"); do
   rd=/dev/shm/gr/ps_c${CPUS}_r${rep}
   rm -rf "$rd"
   line=$(SPARK_GRAFT_FILES_DIR=$CORPUS SPARK_GRAFT_CPUS=$CPUS ${EXTRA_ENV:+env $EXTRA_ENV} \
-    java $ADD_OPENS -Xmx${XMX:-24g} \
+    java $ADD_OPENS -Xmx$XMX \
       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -cp "$CLS:${SCALA_JARS}/opt/spark/jars/*" \
+      -cp "$JAVA_CP" \
       graft.tools.PipelineRun "$N" "$rd" 2>/dev/null | grep -a '\[pipeline\]')
   stages=$(python3 - "$rd" <<'PY'
 import json, sys, glob

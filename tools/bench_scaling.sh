@@ -3,7 +3,7 @@
 # the same materialized corpus, interleaved reps to de-bias host noise.
 # Results (one [pipeline] line each) append to $OUT.
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 N=${N:-200000}
 OUT=${OUT:-/tmp/scaling_results.txt}
 CORPUS=/dev/shm/gr/corpus

@@ -9,21 +9,7 @@ OUT=${OUT:-/tmp/scaling2_results.txt}
 CLS=/tmp/benchclasses
 CORPUS=${CORPUS:-/dev/shm/gr/corpus}
 
-rm -rf "$CLS"
-cp -r /root/repo/target/scala-2.13/classes "$CLS"
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
-ADD_OPENS="$ADD_OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-
-SCALA_JARS=$(ls /root/.sbt/boot/scala-2.13.17/lib/*.jar 2>/dev/null | tr '\n' ':')
-[ -z "$SCALA_JARS" ] && SCALA_JARS=$(find /root/.cache/coursier -name 'scala-library-2.13*.jar' 2>/dev/null | head -1):
+. "$(dirname "$0")/jvm_env.sh"
 
 echo "=== scaling2 $(date -u +%FT%TZ) n=$N reps=$REPS ===" >> "$OUT"
 for rep in $(seq 1 "$REPS"); do
@@ -31,9 +17,9 @@ for rep in $(seq 1 "$REPS"); do
     rd=/dev/shm/gr/j_c${c}_r${rep}
     rm -rf "$rd"
     line=$(SPARK_GRAFT_FILES_DIR=$CORPUS SPARK_GRAFT_CPUS=$c \
-      java $ADD_OPENS -Xmx24g \
+      java $ADD_OPENS -Xmx$XMX \
         -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-        -cp "$CLS:${SCALA_JARS}/opt/spark/jars/*" \
+        -cp "$JAVA_CP" \
         graft.tools.PipelineRun "$N" "$rd" 2>/dev/null | grep -a '\[pipeline\]')
     echo "cpus=$c rep=$rep $line" >> "$OUT"
     rm -rf "$rd"
