@@ -784,11 +784,9 @@ object Pipeline {
     * append rows reaching `frac` of the table, or the dirty canon log
     * reaches `frac` of assign, fold the tables into fresh full
     * snapshots with the log applied and clear the log. A fold
-    * republishes in the current layout of a full run (assign by
-    * `ident`, nodes/edges unpartitioned and clustered by kind/pred, in
-    * the full run's column order), so a run dir published in a former
-    * layout (ident×cb / cb or kind / pred directories) converges on
-    * its next fold. Idempotent per runId
+    * republishes in the layout of a full run (assign by `ident`,
+    * nodes/edges unpartitioned and clustered by kind/pred). Idempotent
+    * per runId
     * (a crash between folds re-folds all three on retry; a re-run
     * after all folds is a no-op). Returns the stages folded.
     */
@@ -830,16 +828,10 @@ object Pipeline {
           case _ => resolveCanon(spark, runDir, d, b)
         }
       }
-    // the full run's column order (cb, if any, last): a former kind= /
-    // pred= layout read its partition column last
-    def ordered(d: DataFrame, lead: Seq[String]): DataFrame =
-      d.select((lead ++ d.columns.filterNot(lead.contains)).map(col): _*)
     val shapes: Map[String, DataFrame => DataFrame] = Map(
       "assign" -> (d => resolveIf("assign", d)),
-      "nodes" -> (d => ordered(resolveIf("nodes", d), NodeCols)
-        .sortWithinPartitions(col("kind"))),
-      "edges" -> (d => ordered(resolveIf("edges", d), EdgeCols)
-        .sortWithinPartitions(col("pred"))))
+      "nodes" -> (d => resolveIf("nodes", d).sortWithinPartitions(col("kind"))),
+      "edges" -> (d => resolveIf("edges", d).sortWithinPartitions(col("pred"))))
     // the folds publish DISJOINT stages from already-published inputs
     // — run them concurrently, same shape and crash contract as the
     // tail-append parallel publish in mergeOnReadTail (a crashed
@@ -908,15 +900,9 @@ object Pipeline {
       }
       if (uncommitted || lv.length - 1 < maxDeltas) None
       else {
-        // layout from the lineage's ANCHOR full version (deltas
-        // publish unpartitioned; the consolidated full should keep
-        // the base's partitioning)
-        val partCols = Snapshots.partitionColsOf(
-          Snapshots.readManifestVersion(runDir, st, lv.head))
         val df = lineageUnion(spark, runDir, st)
         Snapshots.stage(spark, runDir, st, s"$runId-maint",
-          resume = false, partitionBy = partCols,
-          metrics = Map("compacted" -> "true",
+          resume = false, metrics = Map("compacted" -> "true",
             "lineageFolded" -> lv.length.toString))(df)
         lv.reverse.foreach(v => Snapshots.expire(runDir, st, v))
         Some(st)
@@ -1236,15 +1222,6 @@ object Pipeline {
       withCb(a, cfg.canonBuckets)
         .withColumn("ident", $"canonicalId" === $"entityId")
     }
-    // cross-version resume guard: the edges stage needs the assign
-    // snapshot's ident column/partitioning (the delta-map rewrite). A
-    // runDir whose assign snapshot predates that schema would otherwise
-    // fail with an opaque unresolved-column error — or worse, silently
-    // sum deltaRows to 0 from manifests lacking ident=false/ paths.
-    require(assign.columns.contains("ident"),
-      s"assign snapshot in $runDir predates the ident-partitioned " +
-        "schema; cross-version resume is unsupported — re-run with " +
-        "resume=false or a fresh runDir")
 
     // Stage 4a — nodes (shared nodeTable logic; the snapshot keeps the
     // canonicalNorm argmin column so comp merges recombine, see

@@ -9,30 +9,33 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A [[FileIndex]] planned entirely from a snapshot manifest — ZERO
-  * filesystem listing. `spark.read.parquet(dir)` pays a recursive
-  * directory walk (plus a distributed listing job past the
-  * parallel-discovery threshold) every time a stored table is opened;
-  * at B≈thousands of partition dirs that walk grows with the CORPUS
-  * even when the query reads a delta-sized slice, and on object
-  * stores each listed dir is an RPC. The manifest already records
-  * every file with its row count and byte size, so scan planning can
-  * come straight from it — the Iceberg manifest-read shape
-  * (TailBench measured the listing at 25 s/ingest at a 400k-file
-  * corpus before this index existed; see BENCH.md §13.6).
+  * filesystem listing. Every snapshot read goes through it.
+  * `spark.read.parquet(dir)` would pay a recursive directory walk (plus
+  * a distributed listing job past the parallel-discovery threshold)
+  * every time a stored table is opened; at thousands of files that
+  * walk grows with the CORPUS even when the query reads a delta-sized
+  * slice, and on object stores each listed dir is an RPC. The manifest
+  * already records every file with its row count and byte size, so
+  * scan planning comes straight from it — the Iceberg manifest-read
+  * shape (TailBench measured the listing at 25 s/ingest at a 400k-file
+  * corpus against 0.1–0.3 s planned; see BENCH.md §13.6).
   *
   * Partition values are parsed from the manifest's RELATIVE paths
-  * (`ident=false/part-...parquet`) against the schema the PUBLISHER recorded
-  * — no inference at read time. Partition pruning mirrors Spark's own
-  * `PartitioningAwareFileIndex.prunePartitions` binding (public
-  * Apache source, spark/sql/core .../PartitioningAwareFileIndex.scala):
-  * attribute references bind by name to the partition schema and the
-  * predicate evaluates per directory.
+  * (`ident=false/part-...parquet`) against the schema the PUBLISHER
+  * recorded (int, long or string; the publisher refuses values it
+  * cannot type) — no inference at read time. Partition pruning mirrors
+  * Spark's own `PartitioningAwareFileIndex.prunePartitions` binding
+  * (public Apache source, spark/sql/core
+  * .../PartitioningAwareFileIndex.scala): attribute references bind by
+  * name to the partition schema and the predicate evaluates per
+  * directory. An index over no files (a publish that wrote none) scans
+  * nothing.
   *
   * File modification times are reported as 0 (the manifest does not
   * record them): `_metadata.file_modification_time` is not meaningful
   * on snapshot reads.
   *
-  * @param files (root-relative path, rows ignored, bytes) per file
+  * @param files (root-relative path, bytes) per file
   */
 final class ManifestFileIndex(
     spark: SparkSession,

@@ -8,7 +8,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * /opt/spark/jars, so snapshots/manifests/atomic publish are
   * hand-rolled but minimal).
   *
-  * Layout: <runDir>/stage=<name>/  parquet files + _MANIFEST.json
+  * Layout: <runDir>/stage=<name>/snap=<v>/  parquet files, plus
+  * _MANIFEST.v<v>.json per version and the live pointer _MANIFEST.json.
+  * Every manifest is stamped with [[FormatVersion]], and every read is
+  * planned from the manifest alone.
   *
   * Publish protocol: data first, manifest LAST via write-to-temp +
   * atomic rename. A stage directory without _MANIFEST.json is
@@ -26,33 +29,47 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 object Snapshots {
 
   final case class Manifest(
+      // on-disk snapshot format (see [[FormatVersion]]); a manifest
+      // with any other stamp, or none, is refused on read
+      formatVersion: Int,
       runId: String,
       stage: String,
       rows: Long,
       fileRows: Map[String, Long],
       wallMs: Long,
       metrics: Map[String, String],
-      // snapshot version (Iceberg-style time travel); None on
-      // manifests written before versioning existed (data then lives
-      // directly under the stage dir)
-      version: Option[Int] = None,
+      // snapshot version (Iceberg-style time travel): this version's own
+      // files live under snap=<version>/
+      version: Int,
       // APPEND snapshots (stageAppend): files CARRIED from earlier
       // snapshots, keyed by stage-relative path (snap=<w>/...). The
       // effective table = these + this version's own fileRows; `rows`
-      // counts both. None/empty on full snapshots.
+      // counts both. None on full snapshots.
       baseFiles: Option[Map[String, Long]] = None,
-      // ----- scan-planning info (manifest-planned reads, round 7) ----
-      // byte sizes keyed like fileRows / baseFiles; StructType.json of
-      // the main (partitioned) data files, of the unpartitioned append
-      // files, and of the dir-encoded partition columns. All optional:
-      // a manifest missing any piece a read needs falls back to the
-      // directory-listing path (older manifests keep working).
-      fileBytes: Option[Map[String, Long]] = None,
+      // ----- scan planning: every read is planned from these ---------
+      // byte sizes keyed like fileRows (always set; an Option so that
+      // existing readers of the field keep compiling) and like
+      // baseFiles (set with it)
+      fileBytes: Option[Map[String, Long]],
       baseFileBytes: Option[Map[String, Long]] = None,
-      dataSchema: Option[String] = None,
-      appendSchema: Option[String] = None,
-      partSchema: Option[String] = None
+      // StructType.json of the partitioned data files (partition columns
+      // excluded), of the partition columns (empty when unpartitioned),
+      // and, on append snapshots, of this version's unpartitioned
+      // append files
+      dataSchema: String,
+      partSchema: String,
+      appendSchema: Option[String] = None
   )
+
+  /** The on-disk snapshot format this code writes and reads, stamped
+    * into every manifest. One stamp covers every stage: bump it
+    * whenever any stage's on-disk meaning changes (a layout, a key
+    * scheme, a column's meaning, a manifest field). Readers refuse
+    * every other stamp, so a run dir is never misread by code of
+    * another format. Format 1 is the first stamped one; run dirs
+    * written before it (no stamp) are refused too.
+    */
+  val FormatVersion = 1
 
   private val ManifestName = "_MANIFEST.json"
 
@@ -70,12 +87,6 @@ object Snapshots {
   /** Data directory of a specific snapshot version. */
   def snapshotDir(runDir: String, stage: String, version: Int): String =
     s"${stageDir(runDir, stage)}/snap=$version"
-
-  private def dataDir(runDir: String, stage: String, m: Manifest): String =
-    m.version match {
-      case Some(v) => snapshotDir(runDir, stage, v)
-      case None    => stageDir(runDir, stage) // pre-versioning layout
-    }
 
   def isComplete(runDir: String, stage: String): Boolean =
     Files.exists(Paths.get(stageDir(runDir, stage), ManifestName))
@@ -97,34 +108,39 @@ object Snapshots {
     assemble(spark, runDir, stage, m)
   }
 
-  /** The snapshot a manifest describes. A FULL snapshot is one parquet
-    * dir; an APPEND snapshot (baseFiles non-empty) assembles its own
-    * files plus the carried files of earlier snapshots — grouped per source
-    * snapshot so partition columns parse against each snapshot's own
-    * basePath (the Iceberg manifest-list read shape).
-    *
-    * When the manifest carries scan-planning info (file bytes +
-    * schemas — everything published since they were added), the read
-    * is MANIFEST-PLANNED: a [[ManifestFileIndex]] per read root, zero
-    * filesystem listing (see that class for why). Otherwise it falls
-    * back to `spark.read.parquet` directory listing.
+  /** The snapshot a manifest describes, planned from the manifest
+    * alone: one [[ManifestFileIndex]] per read root, zero filesystem
+    * listing (see that class for why). A FULL snapshot is one root; an
+    * APPEND snapshot (baseFiles non-empty) adds the carried files of
+    * earlier snapshots — one root per source snapshot and append set,
+    * each typed by the schemas its own publisher recorded (the Iceberg
+    * manifest-list read shape). A publish that wrote no file (a
+    * partitioned write of no rows) reads as an empty frame of its
+    * recorded schema.
     */
   private def assemble(spark: SparkSession, runDir: String, stage: String,
                        m: Manifest): DataFrame = IOStat.timed("snap.assemble") {
-    plannedRead(spark, runDir, stage, m).getOrElse {
-      IOStat.timed("snap.assemble.listed") {
-        val carried = m.baseFiles.getOrElse(Map.empty)
-        if (carried.isEmpty) spark.read.parquet(dataDir(runDir, stage, m))
-        else assembleCarried(spark, runDir, stage, m, carried)
-      }
-    }
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.StructType
+    val sd = stageDir(runDir, stage)
+    val byRoot = effectiveBytes(m).toSeq.groupBy { case (p, _) => rootOf(p) }
+    val roots =
+      if (byRoot.isEmpty) Seq(s"snap=${m.version}" -> Nil)
+      else byRoot.toSeq.sortBy(_._1)
+    roots.map { case (r, fs) =>
+      val w = r.split('/').head.stripPrefix("snap=").toInt
+      val rm = if (w == m.version) m else readManifestVersion(runDir, stage, w)
+      val (dSchema, pSchema) =
+        if (isAppend(r)) (parseStruct(rm.appendSchema.get), StructType(Nil))
+        else (parseStruct(rm.dataSchema), parseStruct(rm.partSchema))
+      val rel = fs.map { case (p, b) => (p.stripPrefix(r + "/"), b) }
+      val idx = new ManifestFileIndex(spark, new HPath(s"$sd/$r"), rel, pSchema)
+      spark.baseRelationToDataFrame(HadoopFsRelation(idx, pSchema, dSchema,
+        None, new ParquetFileFormat, Map.empty[String, String])(spark))
+    }.reduce(_ unionByName _)
   }
-
-  /** Kill switch for manifest-planned reads (tests A/B the two paths;
-    * production default is on).
-    */
-  private[graft] var manifestPlan: Boolean =
-    sys.props.get("graft.snapshots.manifestPlan").forall(_.toBoolean)
 
   /** Read root of a stage-relative file path: snap=<w> plus any
     * non-partition subdirs (append/d, append/m). Partition columns parse
@@ -142,81 +158,17 @@ object Snapshots {
     org.apache.spark.sql.types.DataType.fromJson(json)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  private def plannedRead(spark: SparkSession, runDir: String, stage: String,
-                          m: Manifest): Option[DataFrame] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.StructType
-    if (!manifestPlan) return None
-    val v = m.version.getOrElse(return None)
-    val ownBytes = m.fileBytes.getOrElse(return None)
-    val own = ownBytes.map { case (k, b) => s"snap=$v/$k" -> b }
-    val carried = m.baseFiles.getOrElse(Map.empty)
-    val carriedBytes: Map[String, Long] =
-      if (carried.isEmpty) Map.empty
-      else {
-        val cb = m.baseFileBytes.getOrElse(return None)
-        if (!carried.keys.forall(cb.contains)) return None
-        cb.filter { case (k, _) => carried.contains(k) }
-      }
-    val all = own ++ carriedBytes
-    if (all.isEmpty) return None
-    val sd = stageDir(runDir, stage)
-    val parts = all.toSeq.groupBy { case (p, _) => rootOf(p) }
-      .toSeq.sortBy(_._1)
-      .map { case (r, fs) =>
-        val w = r.split('/').head.stripPrefix("snap=").toIntOption
-          .getOrElse(return None)
-        val rm = if (w == v) m else readManifestVersion(runDir, stage, w)
-        val (dataJson, pSchema) =
-          if (isAppend(r)) (rm.appendSchema, StructType(Nil))
-          else (rm.dataSchema,
-            parseStruct(rm.partSchema.getOrElse(return None)))
-        val dSchema = parseStruct(dataJson.getOrElse(return None))
-        val rel = fs.map { case (p, b) => (p.stripPrefix(r + "/"), b) }
-        val idx = new ManifestFileIndex(spark, new HPath(s"$sd/$r"), rel,
-          pSchema)
-        spark.baseRelationToDataFrame(HadoopFsRelation(idx, pSchema,
-          dSchema, None, new ParquetFileFormat,
-          Map.empty[String, String])(spark))
-      }
-    Some(parts.reduce(_ unionByName _))
-  }
-
-  private def assembleCarried(spark: SparkSession, runDir: String,
-                              stage: String, m: Manifest,
-                              carried: Map[String, Long]): DataFrame = {
-    val sd = stageDir(runDir, stage)
-    val own = m.fileRows.keys.map(k => s"snap=${m.version.get}/$k")
-    (own ++ carried.keys).toVector
-      .groupBy(rootOf)
-      .toSeq.sortBy(_._1)
-      .map { case (r, paths) =>
-        spark.read.option("basePath", s"$sd/$r")
-          .parquet(paths.map(p => s"$sd/$p"): _*)
-      }
-      .reduce(_ unionByName _)
-  }
-
   /** Every file (stage-relative) a manifest's snapshot is made of. */
-  private def effectiveFiles(m: Manifest): Map[String, Long] = {
-    val ownPrefix = m.version.map(v => s"snap=$v/").getOrElse("")
-    m.fileRows.map { case (k, n) => s"$ownPrefix$k" -> n } ++
+  private def effectiveFiles(m: Manifest): Map[String, Long] =
+    m.fileRows.map { case (k, n) => s"snap=${m.version}/$k" -> n } ++
       m.baseFiles.getOrElse(Map.empty)
-  }
 
-  /** Byte sizes of a manifest's effective files (stage-relative), when
-    * the manifest tracks them for both own and carried sets.
+  /** Byte sizes of a manifest's effective files, keyed like
+    * [[effectiveFiles]].
     */
-  private def effectiveBytesOpt(m: Manifest): Option[Map[String, Long]] = {
-    val ownPrefix = m.version.map(v => s"snap=$v/").getOrElse("")
-    m.fileBytes.flatMap { fb =>
-      val own = fb.map { case (k, b) => s"$ownPrefix$k" -> b }
-      if (m.baseFiles.exists(_.nonEmpty)) m.baseFileBytes.map(own ++ _)
-      else Some(own)
-    }
-  }
+  private def effectiveBytes(m: Manifest): Map[String, Long] =
+    m.fileBytes.get.map { case (k, b) => s"snap=${m.version}/$k" -> b } ++
+      m.baseFileBytes.getOrElse(Map.empty)
 
   /** All PUBLISHED versions of a stage, ascending. Published = the
     * live pointer (_MANIFEST.json, always written LAST) has reached
@@ -234,8 +186,7 @@ object Snapshots {
 
   /** Version the live pointer references (0 = none published). */
   private def liveVersion(runDir: String, stage: String): Int =
-    if (isComplete(runDir, stage))
-      readManifest(runDir, stage).version.getOrElse(0)
+    if (isComplete(runDir, stage)) readManifest(runDir, stage).version
     else 0
 
   /** Every versioned manifest ON DISK, published or orphaned. */
@@ -254,8 +205,7 @@ object Snapshots {
     * expire_snapshots analog). Refuses to expire the current version.
     */
   def expire(runDir: String, stage: String, version: Int): Unit = {
-    val current = readManifest(runDir, stage).version
-    require(!current.contains(version),
+    require(readManifest(runDir, stage).version != version,
       s"cannot expire the current snapshot v$version of $stage")
     // append snapshots CARRY files of earlier snapshots: deleting a
     // snapshot some published append still references would corrupt
@@ -299,23 +249,23 @@ object Snapshots {
       Paths.get(stageDir(runDir, stage), versionedManifestName(version)))
   }
 
-  /** Parses a manifest, refusing one written by the removed
-    * copy-on-write tail: its `appendExcludes` tombstones hid rows of
-    * carried append sets that a bucket rewrite had superseded, and a
-    * reader that ignores them would resurface those stale rows.
+  /** Parses a manifest, refusing any whose [[FormatVersion]] stamp is
+    * absent, older or newer: such a run dir was written by code with
+    * another on-disk meaning, and no reader here may guess at it.
     */
   private def parseManifest(p: Path): Manifest = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     implicit val fmts: Formats = DefaultFormats
     val json = JsonMethods.parse(Files.readString(p))
-    require(json \ "appendExcludes" match {
-      case JNothing | JNull => true
-      case _                => false
-    }, s"$p was written by a copy-on-write ingest: its appendExcludes " +
-      "tombstones are no longer supported, and reading past them would " +
-      "resurface superseded rows. Rebuild the run: Pipeline.run into a " +
-      "fresh runDir, then pinEpoch before further pinned ingests.")
+    val found = json \ "formatVersion" match {
+      case JInt(v) => v.toString
+      case _       => "none (written before format stamps)"
+    }
+    require(found == FormatVersion.toString,
+      s"$p has snapshot format $found, but this reader needs format " +
+        s"$FormatVersion. Rebuild into a fresh runDir (for a KG run: " +
+        "Pipeline.run, then pinEpoch before further pinned ingests).")
     json.extract[Manifest]
   }
 
@@ -364,14 +314,14 @@ object Snapshots {
     val perFile = footerStats(dir)
     val rows = perFile.values.map(_._1).sum
 
-    val m = Manifest(runId, stageName, rows,
+    val m = Manifest(FormatVersion, runId, stageName, rows,
       perFile.map { case (k, (r, _)) => k -> r }, wallMs, metrics,
-      version = Some(version),
+      version = version,
       fileBytes = Some(perFile.map { case (k, (_, b)) => k -> b }),
-      dataSchema = derivedSchema(df, partitionBy)
-        .orElse(perFile.keys.headOption.map(f =>
-          fileSchema(spark, s"$dir/$f"))).map(_.json),
-      partSchema = inferPartSchema(partitionBy, perFile.keys).map(_.json))
+      dataSchema =
+        readBackSchema(spark, df, partitionBy, dir, perFile.keys).json,
+      partSchema =
+        partSchemaOf(stageName, df, partitionBy, perFile.keys).json)
     val sd = stageDir(runDir, stageName)
     writeManifest(sd, versionedManifestName(version), m)
     writeManifest(sd, ManifestName, m)
@@ -429,8 +379,6 @@ object Snapshots {
                   metrics: => Map[String, String] = Map.empty)
                  (append: => DataFrame): Unit = {
     val base = readManifest(runDir, stageName)
-    require(base.version.isDefined,
-      s"stage $stageName predates snapshot versioning — cannot append")
     val version = prepareNextVersion(runDir, stageName)
     val dir = snapshotDir(runDir, stageName, version)
     val sd = stageDir(runDir, stageName)
@@ -483,13 +431,7 @@ object Snapshots {
     val tF0 = System.nanoTime()
     val perFile = footerStats(dir)
     val footerSec = (System.nanoTime() - tF0) / 1e9
-    // carried-file bytes for planned reads: the base's effective bytes
-    // restricted to what this append still carries (None when the base
-    // predates byte tracking — the snapshot then reads via listing)
-    val carriedBytes = effectiveBytesOpt(base)
-      .map(_.filter { case (k, _) => carried.contains(k) })
-      .filter(cb => carried.keys.forall(cb.contains))
-    val m = Manifest(runId, stageName,
+    val m = Manifest(FormatVersion, runId, stageName,
       rows = perFile.values.map(_._1).sum + carried.values.sum,
       fileRows = perFile.map { case (k, (r, _)) => k -> r }, wallMs = wallMs,
       metrics = metrics ++ Map(
@@ -498,22 +440,22 @@ object Snapshots {
         "appendSets" ->
           (keptRoots.size + (if (perFile.nonEmpty) 1 else 0)).toString,
         "absorbedSets" -> absorbed.size.toString),
-      version = Some(version),
+      version = version,
       baseFiles = Some(carried),
       fileBytes = Some(perFile.map { case (k, (_, b)) => k -> b }),
-      baseFileBytes = carriedBytes,
+      baseFileBytes = Some(effectiveBytes(base).filter { case (k, _) =>
+        carried.contains(k) }),
       // the partitioned data files are all carried: their schemas are
       // the base's
       dataSchema = base.dataSchema,
-      appendSchema = derivedSchema(adf, Nil)
-        .orElse(perFile.keys.toSeq.sorted.headOption.map(f =>
-          fileSchema(spark, s"$dir/$f"))).map(_.json),
-      partSchema = base.partSchema)
+      partSchema = base.partSchema,
+      appendSchema =
+        Some(readBackSchema(spark, adf, Nil, dir, perFile.keys).json))
     writeManifest(sd, versionedManifestName(version), m)
     writeManifest(sd, ManifestName, m)
-    // NOTE: deliberately returns Unit — an eager `assemble` here costs
-    // a full listing of every carried file, and no caller consumes it
-    // (append consumers re-open the stage via `read` when they need it)
+    // NOTE: deliberately returns Unit — no caller consumes an eager
+    // re-read (append consumers re-open the stage via `read` when they
+    // need it)
   }
 
   /** Target rows per file when a cascade merge rewrites append sets
@@ -529,10 +471,10 @@ object Snapshots {
     p.split('/').contains("append")
 
   /** Partition columns a snapshot was published with (empty when
-    * unpartitioned or unrecorded).
+    * unpartitioned).
     */
   def partitionColsOf(m: Manifest): Seq[String] =
-    m.partSchema.map(j => parseStruct(j).fieldNames.toSeq).getOrElse(Nil)
+    parseStruct(m.partSchema).fieldNames.toSeq
 
   /** Append rows and live append-set count of a snapshot (the
     * compaction trigger's inputs).
@@ -604,29 +546,25 @@ object Snapshots {
       } finally pool.shutdown()
     }
 
-  /** Read-back schema of one written parquet file — captured at
-    * publish time through the session's own inference (exact
-    * type-mapping semantics), so planned reads reproduce
-    * `spark.read.parquet` bit for bit.
+  /** Read-back schema of the data columns of `df` as written to `dir`.
+    * Derived from the FRAME, skipping the per-publish driver footer
+    * read of a written file (~70 ms locally; an object-store GET
+    * round-trip at real scale — pure serial driver latency on every
+    * publish). Sound because Spark embeds the Catalyst schema in the
+    * footer it writes and read-back is exactly that schema with
+    * `asNullable` applied at the relation level (SnapshotPlanSpec pins
+    * the equivalence against inference) — so for types whose parquet
+    * round-trip is the identity, the written frame already KNOWS its
+    * read-back schema. Types with lossy round-trips (char/varchar
+    * annotations, UDTs, null type, timestamp_ntz under legacy confs)
+    * take that footer read — the session's own inference on one
+    * written file — instead; with no file written there is no row to
+    * misread, and the frame's schema stands.
     */
-  private def fileSchema(spark: SparkSession, absFile: String) =
-    IOStat.timed("snap.schemaCap")(spark.read.parquet(absFile).schema)
-
-  /** Read-back schema derived from the FRAME we just wrote, skipping
-    * the per-publish driver footer read [[fileSchema]] costs (~70 ms
-    * locally; an object-store GET round-trip at real scale — pure
-    * serial driver latency on every publish). Sound because Spark
-    * embeds the Catalyst schema in the footer it writes and read-back
-    * is exactly that schema with `asNullable` applied at the relation
-    * level (SnapshotPlanSpec pins the equivalence against inference) —
-    * so for types whose parquet round-trip is the identity, the
-    * written frame already KNOWS its read-back schema. Types with
-    * lossy round-trips (char/varchar annotations, UDTs, null type,
-    * timestamp_ntz under legacy confs) return None → the caller falls
-    * back to [[fileSchema]].
-    */
-  private def derivedSchema(df: DataFrame, partitionBy: Seq[String]
-                           ): Option[org.apache.spark.sql.types.StructType] = {
+  private def readBackSchema(spark: SparkSession, df: DataFrame,
+                             partitionBy: Seq[String], dir: String,
+                             files: Iterable[String]
+                            ): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     def exact(dt: DataType): Boolean = dt match {
       case StringType | LongType | IntegerType | ShortType | ByteType |
@@ -650,48 +588,57 @@ object Snapshots {
       case other => other
     }
     val data = df.schema.fields.filterNot(f => partitionBy.contains(f.name))
-    if (data.forall(f => exact(f.dataType)))
-      Some(StructType(data.map(f =>
-        StructField(f.name, nullify(f.dataType), nullable = true,
-          f.metadata))))
-    else None
+    if (data.forall(f => exact(f.dataType)) || files.isEmpty)
+      StructType(data.map(f =>
+        StructField(f.name, nullify(f.dataType), nullable = true, f.metadata)))
+    else IOStat.timed("snap.schemaCap")(
+      spark.read.parquet(s"$dir/${files.min}").schema)
   }
 
-  /** Partition schema a planned read can trust WITHOUT re-running
-    * Spark's partition inference at read time: per column, all dir
-    * values must be unambiguously integral (→ int/long, matching what
-    * inference would produce) or unambiguously non-numeric strings
-    * (letter-first — can never be mistaken for a number, date, or
-    * timestamp). Anything else (date-like, decimal-like, escaped or
-    * null partitions) returns None and the stage reads through the
-    * listing path with real inference.
+  /** Partition schema of a publish, typed from its dir values the way
+    * Spark's partition inference would type them, so that reads never
+    * re-run inference: per column, all values integral (→ int, or long
+    * past the int range) or all letter-first strings (never mistaken
+    * for a number, date or timestamp). Any other value (date-like,
+    * decimal-like, escaped or null) is refused before the manifest is
+    * written. A publish with no file (no rows) types each partition
+    * column as written, booleans as string: their dirs read back as
+    * strings.
     */
-  private def inferPartSchema(partitionBy: Seq[String],
-                              relPaths: Iterable[String]
-                             ): Option[org.apache.spark.sql.types.StructType] = {
+  private def partSchemaOf(stageName: String, df: DataFrame,
+                           partitionBy: Seq[String],
+                           relPaths: Iterable[String]
+                          ): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    if (partitionBy.isEmpty) return Some(StructType(Nil))
     val IntRe = "-?\\d{1,18}".r
     val StrRe = "[A-Za-z_][A-Za-z0-9_.\\-]*".r
-    val fields = partitionBy.map { c =>
+    def string(v: String) =
+      StrRe.matches(v) && v != "__HIVE_DEFAULT_PARTITION__"
+    StructType(partitionBy.map { c =>
       val prefix = c + "="
       val values = relPaths.map { p =>
-        p.split('/').init.find(_.startsWith(prefix))
-          .getOrElse(return None).substring(prefix.length)
+        p.split('/').init.find(_.startsWith(prefix)).getOrElse(
+          throw new IllegalStateException(s"$p lacks partition dir $prefix"))
+          .substring(prefix.length)
       }.toSet
-      if (values.isEmpty || values.contains("__HIVE_DEFAULT_PARTITION__"))
-        return None
       val dt =
-        if (values.forall(IntRe.matches)) {
-          val longs = values.map(_.toLong)
-          if (longs.forall(v => v >= Int.MinValue && v <= Int.MaxValue))
-            IntegerType
+        if (values.isEmpty) df.schema(c).dataType match {
+          case BooleanType => StringType
+          case t           => t
+        } else if (values.forall(IntRe.matches)) {
+          if (values.forall(v => v.toLong.isValidInt)) IntegerType
           else LongType
-        } else if (values.forall(StrRe.matches)) StringType
-        else return None
+        } else if (values.forall(string)) StringType
+        else {
+          val bad = values.toSeq.sorted.find(!string(_)).get
+          throw new IllegalArgumentException(s"cannot publish stage " +
+            s"$stageName: partition column '$c' has value '$bad'; values " +
+            "must be all integers or all letter-first strings (dates, " +
+            "decimals, escaped and null values cannot be typed without " +
+            "inference)")
+        }
       StructField(c, dt)
-    }
-    Some(StructType(fields))
+    })
   }
 
   private implicit class IterAdapter[T](it: java.util.Iterator[T]) {

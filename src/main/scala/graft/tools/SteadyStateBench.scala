@@ -118,7 +118,7 @@ object SteadyStateBench {
           spark, rd(delta), runM, s"d$i", cfgMor))
         // expire what the fold (if one fired) unpinned
         val freed = Tail.map { st =>
-          val live = Snapshots.readManifest(runM, st).version.get
+          val live = Snapshots.readManifest(runM, st).version
           Snapshots.versions(runM, st).filter(_ != live).reverse.count { v =>
             scala.util.Try(Snapshots.expire(runM, st, v)).isSuccess
           }

@@ -3,7 +3,6 @@ package graft
 import graft.fixtures.FilesGen
 import graft.store.Snapshots
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -34,7 +33,7 @@ class PipelineSpec extends SparkSpec {
       .as[Long].collect().sorted.toSeq == Seq(10L, 20L))
     assert(Snapshots.readVersion(spark, dir, "demo", 1)
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    assert(Snapshots.readManifest(dir, "demo").version.contains(2))
+    assert(Snapshots.readManifest(dir, "demo").version == 2)
     assert(Snapshots.readManifestVersion(dir, "demo", 1).rows == 3)
     // the current snapshot refuses to expire; old ones go away fully
     intercept[IllegalArgumentException](Snapshots.expire(dir, "demo", 2))
@@ -106,7 +105,7 @@ class PipelineSpec extends SparkSpec {
     val v1Set = Set((1L, 0), (2L, 0), (3L, 1), (4L, 2))
     assert(readSet == v1Set ++ Set((10L, 0), (99L, 2)))
     val m2 = Snapshots.readManifest(dir, "t")
-    assert(m2.rows == 6 && m2.version.contains(2))
+    assert(m2.rows == 6 && m2.version == 2)
     assert(m2.baseFiles.get == base)
     assert(m2.fileRows.keys.forall(_.startsWith("append/d/")))
     // v3: a one-row delta is smaller than v2's two-row set, so the
@@ -151,30 +150,56 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a copy-on-write manifest (appendExcludes) is refused by read, stageAppend and compactTail") {
-    val dir = tmpDir("cowrefuse")
-    Seq("assign", "nodes", "edges").foreach { st =>
-      Snapshots.stage(spark, dir, st, "cr", resume = false,
-        partitionBy = Seq("cb")) {
-        Seq((1L, 0), (2L, 1)).toDF("canonicalId", "cb")
+    // three manifests of another snapshot format: a real copy-on-write
+    // manifest (written before format stamps, with appendExcludes
+    // tombstones), one with only its stamp removed, and one stamped
+    // with the next format
+    val stamp = "\"formatVersion\"\\s*:\\s*\\d+"
+    def unstamped(json: String): String = json.replaceFirst(stamp + ",", "")
+    val inputs = Seq[(String, String => String, String)](
+      ("cow", j => unstamped(j).replaceFirst("\\{",
+        "{\"appendExcludes\":{\"snap=1/append/d\":[\"cb=0\"]},"), "none"),
+      ("unstamped", unstamped, "none"),
+      ("next", _.replaceFirst(stamp,
+        s"\"formatVersion\" : ${Snapshots.FormatVersion + 1}"),
+        (Snapshots.FormatVersion + 1).toString))
+    inputs.foreach { case (name, tamper, found) =>
+      val dir = tmpDir(s"refuse-$name")
+      (Pipeline.Stages ++ Seq("ep_census", "ep_shingles", "ep_keys"))
+        .foreach { st =>
+          Snapshots.stage(spark, dir, st, "cr", resume = false,
+            partitionBy = Seq("cb")) {
+            Seq((1L, 0), (2L, 1)).toDF("canonicalId", "cb")
+          }
+        }
+      def tree(): Map[String, Seq[Byte]] = Files.walk(Path.of(dir))
+        .iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+      tree().keys.filter(_.contains("_MANIFEST")).foreach { f =>
+        val p = Path.of(f)
+        Files.writeString(p, tamper(Files.readString(p)))
       }
+      val before = tree()
+      def refused(body: => Any): Unit = {
+        val ex = intercept[IllegalArgumentException](body)
+        assert(ex.getMessage.contains("_MANIFEST") &&
+          ex.getMessage.contains(s"snapshot format $found") &&
+          ex.getMessage.contains(
+            s"needs format ${Snapshots.FormatVersion}") &&
+          ex.getMessage.contains("Rebuild into a fresh runDir"),
+          s"$name: ${ex.getMessage}")
+      }
+      refused(Snapshots.read(spark, dir, "assign"))
+      refused(Snapshots.readVersion(spark, dir, "assign", 1))
+      refused(Snapshots.stageAppend(spark, dir, "assign", "cr2", Seq("cb")) {
+        Seq((3L, 0)).toDF("canonicalId", "cb")
+      })
+      refused(Pipeline.compactTail(spark, dir, "cr3", 0.0))
+      refused(Pipeline.runIncrementalPinned(spark, files, dir, "cr4"))
+      // the refused calls published nothing: every file is as it was
+      assert(tree() == before, name)
+      deleteRec(Path.of(dir))
     }
-    // hand-write the tombstone map a copy-on-write ingest left behind
-    val live = Path.of(Snapshots.stageDir(dir, "assign"), "_MANIFEST.json")
-    Files.writeString(live, Files.readString(live).replaceFirst("\\{",
-      "{\"appendExcludes\":{\"snap=1/append/d\":[\"cb=0\"]},"))
-    def refused(body: => Any): Unit = {
-      val ex = intercept[IllegalArgumentException](body)
-      assert(ex.getMessage.contains("copy-on-write") &&
-        ex.getMessage.contains("Rebuild the run"), ex.getMessage)
-    }
-    refused(Snapshots.read(spark, dir, "assign"))
-    refused(Snapshots.stageAppend(spark, dir, "assign", "cr2", Seq("cb")) {
-      Seq((3L, 0)).toDF("canonicalId", "cb")
-    })
-    refused(Pipeline.compactTail(spark, dir, "cr3", 0.0))
-    // the refused append published nothing
-    assert(!Files.exists(Path.of(Snapshots.snapshotDir(dir, "assign", 2))))
-    deleteRec(Path.of(dir))
   }
 
   // resolving readers: identical to raw Snapshots.read while no dirty
@@ -190,8 +215,7 @@ class PipelineSpec extends SparkSpec {
       .select("canonicalId", "canonical", "kind", "memberCount")
       .as[(Long, String, String, Long)].collect().toSet
 
-  // read schemas of bucketed nodes/edges, as the former cb-partitioned
-  // layout returned them: cb is an int in last position
+  // read schemas of bucketed nodes/edges: cb is an int in last position
   private val bucketedNodesSchema = StructType(Seq(
     StructField("canonicalId", LongType),
     StructField("canonical", StringType),
@@ -208,10 +232,6 @@ class PipelineSpec extends SparkSpec {
     StructField("path", StringType),
     StructField("commit", StringType),
     StructField("cb", IntegerType)))
-
-  /** x and y hold the same rows (multiset equality). */
-  private def assertSameRows(x: DataFrame, y: DataFrame, what: String): Unit =
-    assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, what)
 
   test("end-to-end pipeline: counts coherent, manifests complete") {
     val dir = tmpDir("fresh")
@@ -256,7 +276,12 @@ class PipelineSpec extends SparkSpec {
     val rFull = Pipeline.run(spark, all.toDS(), full, "run-full")
 
     val inc = tmpDir("inc")
-    Pipeline.run(spark, a.toDS(), inc, "run-base")
+    val rBase = Pipeline.run(spark, a.toDS(), inc, "run-base")
+    // an empty ingest publishes an empty extract version (no file) and
+    // changes no count
+    val rEmpty = Pipeline.runIncremental(spark, spark.emptyDataset[SourceFile],
+      inc, "run-empty")
+    assert(rEmpty.copy(runId = "x") == rBase.copy(runId = "x"))
     val rInc = Pipeline.runIncremental(spark, b.toDS(), inc, "run-delta")
 
     // identical graph: nodes, edges, and every count
@@ -264,18 +289,20 @@ class PipelineSpec extends SparkSpec {
     assert(edgeSet(inc) == edgeSet(full))
     assert(rInc.copy(runId = "x") == rFull.copy(runId = "x"))
 
-    // the content scan was honestly incremental: extract has two
-    // versions, the second holding ONLY the delta's triples
-    assert(Snapshots.versions(inc, "extract") == Seq(1, 2))
+    // the content scan was honestly incremental: extract has three
+    // versions, the empty ingest's and then one holding ONLY the
+    // delta's triples
+    assert(Snapshots.versions(inc, "extract") == Seq(1, 2, 3))
     val v1 = Snapshots.readManifestVersion(inc, "extract", 1).rows
-    val v2 = Snapshots.readManifestVersion(inc, "extract", 2).rows
-    assert(v1 + v2 == rFull.triples + rFull.quarantined)
-    assert(v2 < v1, s"delta version should be the smaller ingest: $v1/$v2")
+    assert(Snapshots.readManifestVersion(inc, "extract", 2).rows == 0L)
+    val v3 = Snapshots.readManifestVersion(inc, "extract", 3).rows
+    assert(v1 + v3 == rFull.triples + rFull.quarantined)
+    assert(v3 < v1, s"delta version should be the smaller ingest: $v1/$v3")
     // prior graph state stays time-travelable: the v1 nodes snapshot
     // is the base run's graph, not the merged one
     val nodesV1 = Snapshots.readVersion(spark, inc, "nodes", 1).count()
-    val nodesV2 = Snapshots.readVersion(spark, inc, "nodes", 2).count()
-    assert(nodesV2 == rFull.nodes && nodesV1 < nodesV2)
+    val nodesV3 = Snapshots.readVersion(spark, inc, "nodes", 3).count()
+    assert(nodesV3 == rFull.nodes && nodesV1 < nodesV3)
 
     // a first-ingest call on an empty dir is refused
     val ex = intercept[IllegalArgumentException] {
@@ -290,7 +317,7 @@ class PipelineSpec extends SparkSpec {
     // still equals the from-scratch run
     Files.delete(Path.of(Snapshots.stageDir(inc, "edges"), "_MANIFEST.json"))
     val rRetry = Pipeline.runIncremental(spark, b.toDS(), inc, "run-delta")
-    assert(Snapshots.versions(inc, "extract") == Seq(1, 2),
+    assert(Snapshots.versions(inc, "extract") == Seq(1, 2, 3),
       "retry must not append a duplicate delta extract version")
     assert(rRetry.copy(runId = "x") == rFull.copy(runId = "x"))
     assert(edgeSet(inc) == edgeSet(full))
@@ -320,7 +347,7 @@ class PipelineSpec extends SparkSpec {
         pinnedHot = hot))
 
     val inc = tmpDir("ep-inc")
-    Pipeline.run(spark, a.toDS(), inc, "ep-base", cfg(None))
+    val rBase = Pipeline.run(spark, a.toDS(), inc, "ep-base", cfg(None))
     Pipeline.pinEpoch(spark, inc, "ep-pin", cfg(None))
     val hot = Snapshots.read(spark, inc, "ep_census")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -338,6 +365,12 @@ class PipelineSpec extends SparkSpec {
       assert(Pipeline.readEdges(spark, inc).schema == plainEdgesSchema, when)
     }
     assertPlainLayout("after the base run")
+    // an empty pinned ingest appends an empty slice to every delta
+    // stage (its extract writes no file) and changes no count
+    val rEmpty = Pipeline.runIncrementalPinned(spark,
+      spark.emptyDataset[SourceFile], inc, "ep-empty", cfg(None))
+    assert(Snapshots.readManifestVersion(inc, "extract", 2).rows == 0L)
+    assert(rEmpty.nodes == rBase.nodes && rEmpty.edges == rBase.edges)
     val rPinned = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
     // the default-Config ingest took the O(delta) merge-on-read tail:
@@ -362,14 +395,14 @@ class PipelineSpec extends SparkSpec {
     assert(rPinned.triples == rFull.triples &&
       rPinned.entities == rFull.entities)
 
-    // the ingest appended DELTA slices (no global relink): entities,
-    // shingles, keys, and link_edges all carry a second (delta)
-    // version; the extract stayed delta-only
+    // the ingests appended DELTA slices (no global relink): entities,
+    // shingles, keys, and link_edges all carry the empty ingest's and
+    // the delta's versions; the extract stayed delta-only
     Seq("extract", "entities", "ep_shingles", "ep_keys", "link_edges")
       .foreach { st =>
-        assert(Snapshots.versions(inc, st) == Seq(1, 2), st)
+        assert(Snapshots.versions(inc, st) == Seq(1, 2, 3), st)
       }
-    assert(Snapshots.readManifestVersion(inc, "link_edges", 2)
+    assert(Snapshots.readManifestVersion(inc, "link_edges", 3)
       .metrics.get("delta").contains("true"))
 
     // crash-retry idempotence mid-chain: kill after the delta link
@@ -379,7 +412,7 @@ class PipelineSpec extends SparkSpec {
     val rRetry = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
     Seq("entities", "ep_shingles", "ep_keys", "link_edges").foreach { st =>
-      assert(Snapshots.versions(inc, st) == Seq(1, 2), s"$st dup delta")
+      assert(Snapshots.versions(inc, st) == Seq(1, 2, 3), s"$st dup delta")
     }
     assert(rRetry.copy(runId = "x") == rPinned.copy(runId = "x"))
     assert(nodeSet(inc) == nodeSet(full))
@@ -566,88 +599,6 @@ class PipelineSpec extends SparkSpec {
     assert(nodeSet(inc) == nodeSet(full))
     assert(edgeSet(inc) == edgeSet(full))
     assert(r2.nodes == rFull.nodes && r2.edges == rFull.edges)
-  }
-
-  test("a run dir in the former ident×cb / cb directory layout still ingests, resolves and folds exactly") {
-    def f(name: String, forms: Seq[String]) = SourceFile("r", name, "c0",
-      "md", forms.map(w => s"q: $w?").mkString("\n"))
-    val classes = (0 until 40).map(i => s"oword$i")
-    val a = classes.zipWithIndex.map { case (w, i) => f(s"a$i.txt", Seq(w)) }
-    val b = classes.zipWithIndex.collect {
-      case (w, i) if i % 2 == 0 => f(s"b$i.txt", Seq(w.toUpperCase))
-    } :+ f("bnew.txt", Seq("obrandnew1"))
-    // two former layouts: bucketed tables under ident×cb / cb dirs, and
-    // a default-Config (no cb) run's nodes / edges under kind= / pred=
-    // dirs (assign's ident partition is unchanged there)
-    val inputs = Seq(
-      ("cb", Some(64), Map("assign" -> Seq("ident", "cb"),
-        "nodes" -> Seq("cb"), "edges" -> Seq("cb"))),
-      ("kindpred", None, Map("nodes" -> Seq("kind"),
-        "edges" -> Seq("pred"))))
-    inputs.foreach { case (name, buckets, legacy) =>
-      val cfg = Pipeline.Config(canonBuckets = buckets)
-      val old = tmpDir(s"oldlayout-$name")
-      Pipeline.run(spark, a.toDS(), old, "ol-base", cfg)
-      // re-publish the tail tables in the former directory layout, with
-      // the canonBuckets stamp (if any) the O(delta) tail checks
-      legacy.foreach { case (st, cols) =>
-        val m = Snapshots.readManifest(old, st)
-        Snapshots.stage(spark, old, st, "ol-legacy", resume = false,
-          partitionBy = cols, metrics = m.metrics)(Snapshots.read(spark, old, st))
-        val lm = Snapshots.readManifest(old, st)
-        assert(Snapshots.partitionColsOf(lm) == cols, s"$name $st")
-        assert(lm.fileRows.keys.forall(_.contains(s"${cols.last}=")),
-          s"$name $st")
-      }
-
-      Pipeline.pinEpoch(spark, old, "ol-pin", cfg)
-      Pipeline.runIncrementalPinned(spark, b.toDS(), old, "ol-d1", cfg)
-      // the ingest took the O(delta) tail, with real merges in the log
-      Seq("assign", "nodes", "edges").foreach { st =>
-        val m = Snapshots.readManifest(old, st)
-        assert(m.runId == "ol-d1" && m.metrics.get("defer").contains("true"),
-          s"$name $st")
-      }
-      assert(Pipeline.canonLogDirty(old), name)
-      assert(Snapshots.readManifest(old, "assign").metrics("merges").toLong > 0,
-        name)
-
-      val full = tmpDir(s"oldlayout-full-$name")
-      Pipeline.run(spark, (a ++ b).toDS(), full, "ol-full", cfg)
-      val cb = buckets.map(_ => "cb").toSeq
-      val nodeCols = bucketedNodesSchema.fieldNames.toSeq.filterNot(_ == "cb") ++ cb
-      val edgeCols = bucketedEdgesSchema.fieldNames.toSeq.filterNot(_ == "cb") ++ cb
-      def assertGraphEqual(when: String): Unit = {
-        assertSameRows(Pipeline.readNodes(spark, old).selectExpr(nodeCols: _*),
-          Pipeline.readNodes(spark, full).selectExpr(nodeCols: _*),
-          s"$name nodes $when")
-        assertSameRows(Pipeline.readEdges(spark, old).selectExpr(edgeCols: _*),
-          Pipeline.readEdges(spark, full).selectExpr(edgeCols: _*),
-          s"$name edges $when")
-      }
-      assertGraphEqual("after the ingest (resolving read)")
-
-      val folded = Pipeline.compactTail(spark, old, "ol-maint", 1e-9)
-      assert(folded.toSet == Set("assign", "nodes", "edges"), name)
-      assert(!Pipeline.canonLogDirty(old), name)
-      assertGraphEqual("after the fold")
-      // the fold converged on the current layout and read schema
-      Map("assign" -> Seq("ident"), "nodes" -> Nil, "edges" -> Nil)
-        .foreach { case (st, cols) =>
-          assert(Snapshots.partitionColsOf(Snapshots.readManifest(old, st)) ==
-            cols, s"$name $st after the fold")
-          assert(Snapshots.read(spark, old, st).schema ==
-            Snapshots.read(spark, full, st).schema, s"$name $st schema")
-        }
-      val assignCols = Seq("pred", "obj", "norm", "entityId", "canonicalId",
-        "ident") ++ cb
-      assertSameRows(
-        Snapshots.read(spark, old, "assign").selectExpr(assignCols: _*),
-        Snapshots.read(spark, full, "assign").selectExpr(assignCols: _*),
-        s"$name assign after the fold")
-      deleteRec(Path.of(old))
-      deleteRec(Path.of(full))
-    }
   }
 
   test("lineage consolidation bounds the per-ingest union width; chain stays exact") {

@@ -1,16 +1,16 @@
 package graft
 
-import graft.store.{IOStat, Snapshots}
+import graft.store.Snapshots
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import scala.jdk.CollectionConverters._
 
-/** Manifest-planned snapshot reads (round 7): `Snapshots.read` plans
-  * scans from the manifest's file list + recorded schemas — zero
-  * directory listing — and must be indistinguishable from the
-  * listing path (`spark.read.parquet`) in schema, values, partition
-  * column typing, and partition pruning.
+/** Manifest-planned snapshot reads: `Snapshots.read` plans scans from
+  * the manifest's file list + recorded schemas — zero directory
+  * listing — and must be indistinguishable from Spark's own reader
+  * (`spark.read.parquet` on the snapshot dir) in schema, values,
+  * partition column typing, and partition pruning.
   */
 class SnapshotPlanSpec extends SparkSpec {
   import spark.implicits._
@@ -22,12 +22,9 @@ class SnapshotPlanSpec extends SparkSpec {
     Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
   }
 
-  /** Runs `body` with manifest planning forced on/off. */
-  private def withPlan[T](on: Boolean)(body: => T): T = {
-    val prev = Snapshots.manifestPlan
-    Snapshots.manifestPlan = on
-    try body finally Snapshots.manifestPlan = prev
-  }
+  /** Spark's own (listing, inferring) read of snapshot v1 of stage t. */
+  private def listed(dir: String): DataFrame =
+    spark.read.parquet(Snapshots.snapshotDir(dir, "t", 1))
 
   private def rowsOf(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
@@ -39,14 +36,10 @@ class SnapshotPlanSpec extends SparkSpec {
       Seq((1L, 0, "x"), (2L, 0, "y"), (3L, 1, "z"), (4L, 2, "w"))
         .toDF("x", "b", "s")
     }
-    IOStat.reset()
-    val planned = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
-    // the planned path never fell back to the listing assembler
-    assert(!IOStat.snapshot().contains("snap.assemble.listed"))
-    val listed = withPlan(on = false)(Snapshots.read(spark, dir, "t"))
-    assert(planned.schema == listed.schema) // incl. b inferred as int
+    val planned = Snapshots.read(spark, dir, "t")
+    assert(planned.schema == listed(dir).schema) // incl. b inferred as int
     assert(planned.schema("b").dataType.typeName == "integer")
-    assert(rowsOf(planned) == rowsOf(listed))
+    assert(rowsOf(planned) == rowsOf(listed(dir)))
     // the scan really is manifest-planned
     val scans = planned.queryExecution.executedPlan.collect {
       case f: FileSourceScanExec => f
@@ -62,8 +55,7 @@ class SnapshotPlanSpec extends SparkSpec {
       partitionBy = Seq("b")) {
       (0L until 30L).map(i => (i, (i % 3).toInt)).toDF("x", "b")
     }
-    val df = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
-      .filter($"b" === 1)
+    val df = Snapshots.read(spark, dir, "t").filter($"b" === 1)
     assert(df.as[(Long, Int)].collect().toSet ==
       (0L until 30L).filter(_ % 3 == 1).map(i => (i, 1)).toSet)
     val scan = df.queryExecution.executedPlan.collect {
@@ -89,7 +81,7 @@ class SnapshotPlanSpec extends SparkSpec {
       (0L until 40L).map(i => (i, (i % 4 != 0).toString, (i % 5).toInt))
         .toDF("x", "ident", "cb")
     }
-    val df = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
+    val df = Snapshots.read(spark, dir, "t")
       .filter(!$"ident".cast("boolean"))
     assert(df.select($"x").as[Long].collect().toSet ==
       (0L until 40L).filter(_ % 4 == 0).toSet)
@@ -122,23 +114,24 @@ class SnapshotPlanSpec extends SparkSpec {
     Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b")) {
       Seq((7L, 2), (8L, 0), (9L, 1)).toDF("x", "b")
     }
+    // v1 against Spark's reader; every version against the multiset
+    // of its inputs, typed like v1
+    val v1 = Snapshots.readVersion(spark, dir, "t", 1)
+    assert(v1.schema == listed(dir).schema)
+    assert(rowsOf(v1) == rowsOf(listed(dir)))
+    val inputs = Seq(
+      Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)), Seq((10L, 0), (99L, 2)),
+      Seq((50L, 1)), Seq((7L, 2), (8L, 0), (9L, 1)))
     (1 to 4).foreach { v =>
-      val planned = withPlan(on = true)(
-        Snapshots.readVersion(spark, dir, "t", v))
-      val listed = withPlan(on = false)(
-        Snapshots.readVersion(spark, dir, "t", v))
-      assert(rowsOf(planned.select("x", "b")) == rowsOf(listed.select("x", "b")),
-        s"version $v diverged")
-      assert(planned.select("x", "b").schema ==
-        listed.select("x", "b").schema, s"version $v schema diverged")
+      val planned = Snapshots.readVersion(spark, dir, "t", v).select("x", "b")
+      assert(planned.as[(Long, Int)].collect().toSeq.sorted ==
+        inputs.take(v).flatten.sorted, s"version $v diverged")
+      assert(planned.schema == listed(dir).select("x", "b").schema,
+        s"version $v schema diverged")
     }
-    // current read: carried base dirs + merged append set, planned
-    IOStat.reset()
-    val cur = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
-    assert(!IOStat.snapshot().contains("snap.assemble.listed"))
-    assert(cur.select("x", "b").as[(Long, Int)].collect().toSet ==
-      Set((1L, 0), (2L, 0), (3L, 1), (4L, 2), (10L, 0), (99L, 2),
-        (50L, 1), (7L, 2), (8L, 0), (9L, 1)))
+    // current read: carried base dirs + merged append set
+    assert(Snapshots.read(spark, dir, "t").select("x", "b").as[(Long, Int)]
+      .collect().toSeq.sorted == inputs.flatten.sorted)
     deleteRec(Path.of(dir))
   }
 
@@ -148,12 +141,23 @@ class SnapshotPlanSpec extends SparkSpec {
       partitionBy = Seq("q")) {
       Seq((1L, "true"), (2L, "false"), (3L, "false")).toDF("x", "q")
     }
-    val planned = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
-    val listed = withPlan(on = false)(Snapshots.read(spark, dir, "t"))
+    val planned = Snapshots.read(spark, dir, "t")
     assert(planned.schema("q").dataType.typeName == "string")
-    assert(planned.schema == listed.schema)
-    assert(rowsOf(planned) == rowsOf(listed))
+    assert(planned.schema == listed(dir).schema)
+    assert(rowsOf(planned) == rowsOf(listed(dir)))
     assert(planned.filter(!$"q".cast("boolean")).count() == 2)
+    // an empty partitioned publish (the extract of an empty ingest)
+    // writes no file: it reads back empty, its boolean partition
+    // column typed string like the dirs of a non-empty publish
+    Snapshots.stage(spark, dir, "t", "p2", resume = false,
+      partitionBy = Seq("q")) {
+      spark.emptyDataset[(Long, Boolean)].toDF("x", "q")
+    }
+    assert(Snapshots.readManifest(dir, "t").fileRows.isEmpty)
+    val empty = Snapshots.read(spark, dir, "t")
+    assert(empty.isEmpty && empty.schema == planned.schema)
+    assert(rowsOf(Snapshots.readVersion(spark, dir, "t", 1)
+      .unionByName(empty)) == rowsOf(planned))
     deleteRec(Path.of(dir))
   }
 
@@ -169,15 +173,14 @@ class SnapshotPlanSpec extends SparkSpec {
     }
     val m = Snapshots.readManifest(dir, "t")
     val recorded = org.apache.spark.sql.types.DataType
-      .fromJson(m.dataSchema.get)
+      .fromJson(m.dataSchema)
     val file = m.fileRows.keys.head
     val inferred = spark.read
       .parquet(s"${Snapshots.stageDir(dir, "t")}/snap=1/$file").schema
     assert(recorded == inferred)
-    val planned = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
-    val listed = withPlan(on = false)(Snapshots.read(spark, dir, "t"))
-    assert(planned.schema == listed.schema)
-    assert(rowsOf(planned) == rowsOf(listed))
+    val planned = Snapshots.read(spark, dir, "t")
+    assert(planned.schema == listed(dir).schema)
+    assert(rowsOf(planned) == rowsOf(listed(dir)))
     deleteRec(Path.of(dir))
   }
 
@@ -191,29 +194,35 @@ class SnapshotPlanSpec extends SparkSpec {
     }
     val m = Snapshots.readManifest(dir, "t")
     val recorded = org.apache.spark.sql.types.DataType
-      .fromJson(m.dataSchema.get)
+      .fromJson(m.dataSchema)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     assert(recorded("ts").dataType.typeName == "timestamp_ntz")
-    val planned = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
-    val listed = withPlan(on = false)(Snapshots.read(spark, dir, "t"))
-    assert(planned.schema == listed.schema)
-    assert(rowsOf(planned) == rowsOf(listed))
+    val planned = Snapshots.read(spark, dir, "t")
+    assert(planned.schema == listed(dir).schema)
+    assert(rowsOf(planned) == rowsOf(listed(dir)))
     deleteRec(Path.of(dir))
   }
 
-  test("ambiguous partition values refuse a recorded schema and fall back to listing") {
+  test("ambiguous partition values are refused unpublished; typable values publish") {
     val dir = tmpDir("amb")
     // date-like partition values: Spark inference would type them as
-    // DATE; the publisher must NOT record a partition schema for them
+    // DATE, which a planned read cannot reproduce without inference
+    val ex = intercept[IllegalArgumentException] {
+      Snapshots.stage(spark, dir, "t", "p1", resume = false,
+        partitionBy = Seq("d")) {
+        Seq((1L, "2024-01-02"), (2L, "2024-01-03")).toDF("x", "d")
+      }
+    }
+    assert(ex.getMessage.contains("'d'") &&
+      ex.getMessage.contains("'2024-01-02'"), ex.getMessage)
+    assert(!Snapshots.isComplete(dir, "t"))
+    assert(Snapshots.versions(dir, "t").isEmpty)
     Snapshots.stage(spark, dir, "t", "p1", resume = false,
       partitionBy = Seq("d")) {
-      Seq((1L, "2024-01-02"), (2L, "2024-01-03")).toDF("x", "d")
+      Seq((1L, "d20240102"), (2L, "d20240103")).toDF("x", "d")
     }
-    assert(Snapshots.readManifest(dir, "t").partSchema.isEmpty)
-    IOStat.reset()
-    val df = withPlan(on = true)(Snapshots.read(spark, dir, "t"))
-    assert(IOStat.snapshot().contains("snap.assemble.listed"))
-    assert(df.count() == 2)
+    assert(Snapshots.versions(dir, "t") == Seq(1))
+    assert(rowsOf(Snapshots.read(spark, dir, "t")) == rowsOf(listed(dir)))
     deleteRec(Path.of(dir))
   }
 
@@ -253,11 +262,6 @@ class SnapshotPlanSpec extends SparkSpec {
     assert(readSet(dir) == expect3)
     assert(m3.rows == expect3.size.toLong, s"manifest rows: ${m3.rows}")
     assert(Snapshots.appendStats(m3) == (11L, 2))
-    // planned and listed paths agree over carried append sets
-    assert(rowsOf(withPlan(on = true)(
-        Snapshots.read(spark, dir, "t")).select("x", "b")) ==
-      rowsOf(withPlan(on = false)(
-        Snapshots.read(spark, dir, "t")).select("x", "b")))
     // time travel: v2 still sees base + ten
     assert(Snapshots.readVersion(spark, dir, "t", 2).count() == 13)
     // v4: a twelve-row delta absorbs both prior sets (1 ≤ 12, then

@@ -6,9 +6,7 @@ BASES=${BASES:-"100000,200000,400000"}
 M=${M:-500}
 CLS=/tmp/tailclasses
 . "$(dirname "$0")/jvm_env.sh"
-# EXTRA_FLAGS: additional -D system properties (e.g. the
-# manifest-planned-read kill switch -Dgraft.snapshots.manifestPlan=false
-# for the listing-path A/B).
+# EXTRA_FLAGS: additional JVM flags (e.g. -D system properties).
 exec java $ADD_OPENS -Xmx$XMX ${EXTRA_FLAGS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$JAVA_CP" \
