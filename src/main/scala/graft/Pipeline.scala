@@ -6,6 +6,7 @@ import graft.link.{Linking, SkewJoin}
 import graft.store.Snapshots
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The 4-stage KG-construction pipeline (north rule):
   *
@@ -28,7 +29,9 @@ object Pipeline {
       link: Linking.Config = Linking.Config(),
       // CC edge-count threshold below which the driver union-find fast
       // path runs instead of the distributed star fixpoint (see
-      // ConnectedComponents.LocalEdgeThreshold). 0 forces the
+      // ConnectedComponents.LocalEdgeThreshold), for the full run's
+      // link graph and for a pinned ingest's component-pair graph
+      // alike: the tail's only size decision. 0 forces the
       // distributed path — the bench uses that to exercise/measure the
       // 100 TB-only path on corpora whose edge sets would otherwise
       // ride the driver.
@@ -38,9 +41,9 @@ object Pipeline {
       // edges snapshots gain a cb = pmod(canonicalId, B) int data
       // column in last position; that is all B does. It sets no
       // layout, directory or file count, so it needs no sizing. The
-      // manifests record it, and the O(delta) tail (see deferMerges)
-      // runs only over tables stamped with the same B (an absent
-      // stamp matches None). None (default) = no cb column.
+      // manifests record it; a pinned ingest's tail and a fold write cb
+      // with the stored tables' own stamp, whatever the config says.
+      // None (default) = no cb column.
       canonBuckets: Option[Int] = None,
       // Refuse a pinned ingest whose census drift exceeds this bound
       // (fraction of the delta's distinct (pred, shingle) keys whose
@@ -61,8 +64,7 @@ object Pipeline {
       // compactTail as an explicit maintenance job instead, the
       // Iceberg operational shape.
       compactAppendFrac: Option[Double] = None,
-      // MERGE-ON-READ canonicalization for pinned ingests (default
-      // on), whatever canonBuckets is. The ingest writes only
+      // Every pinned ingest canonicalizes MERGE-ON-READ: it writes only
       // O(delta) appends plus a tiny compressed CANON LOG (old root →
       // new root, single-hop); readers resolve stale canonicals
       // through one broadcast join (Pipeline.readNodes / readEdges —
@@ -70,10 +72,11 @@ object Pipeline {
       // associatively), and compactTail folds the log physically past
       // compactAppendFrac. The LSM/Iceberg merge-on-read trade:
       // O(delta) writes, a bounded read tax until the next fold.
-      // false = apply merges through the global tail (global CC + full
-      // assign/nodes/edges rewrite), which also clears a dirty log.
-      // The global tail stays the automatic fallback whenever the
-      // O(delta) preconditions fail.
+      // false = fold right after the ingest (compactTail at frac 0),
+      // the graph a full rewrite gives, with a clean log. The field is
+      // kept only because perfbench's KgLifecycle.config names it; the
+      // next benchmark revision deletes it (compactAppendFrac =
+      // Some(0) says the same).
       deferMerges: Boolean = true,
       // Consolidate a lineage stage (entities / link_edges /
       // ep_shingles / ep_keys) into a fresh full version whenever its
@@ -186,13 +189,13 @@ object Pipeline {
       s"$runDir has incremental extract versions — resume a crashed " +
         "ingest with runIncremental (same runId), or start a fresh runDir")
 
-    // a recompute (resume=false) invalidates any pinned epoch the same
-    // way a global relink does — the epoch state describes the
-    // PREVIOUS run's entity set; drop it so a later pinned ingest
-    // fails fast until pinEpoch re-freezes. A pure resume leaves the
-    // (still-valid) epoch alone.
+    // a recompute (resume=false) starts from an empty lineage: the
+    // prior run's stages go (else its extract version would sum with
+    // the new one), and so does any pinned epoch and canon log — they
+    // describe the PREVIOUS run's graph, so a later pinned ingest fails
+    // fast until pinEpoch re-freezes. A pure resume leaves them alone.
     if (!resume)
-      Seq("ep_census", "ep_keys", "ep_shingles")
+      (Stages ++ Seq(CanonLogStage, "ep_census", "ep_keys", "ep_shingles"))
         .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
     val triples = triplesOf(
@@ -440,20 +443,18 @@ object Pipeline {
     // in the stored entity table (which is only scanned: the delta's
     // ids broadcast into the probe, the survivors anti-join a tiny
     // set). Broadcast hints only while the delta is small (bounded by
-    // the delta extract's manifest rows); an epoch-sized delta
-    // degrades to AQE-planned joins instead of blowing the driver.
+    // the delta extract's manifest rows).
     val deltaExtractRows = deltaRowsOf(runDir, "extract", runId)
-    def hinted(df: DataFrame): DataFrame =
-      if (deltaExtractRows <= SkewJoin.BroadcastableRightRows) broadcast(df)
-      else df
     val entsOld = oldUnion("entities")
     val newEnts = graft.store.IOStat.timed("pin.entities")(
       appendOnce(spark, runDir, "entities", runId) {
       val deltaForms = Linking.entitiesOf(deltaTriples)
       val existing = entsOld
-        .join(hinted(deltaForms.select("entityId")), Seq("entityId"))
+        .join(SkewJoin.hinted(deltaForms.select("entityId"), deltaExtractRows),
+          Seq("entityId"))
         .select("entityId").distinct()
-      deltaForms.join(hinted(existing), Seq("entityId"), "left_anti")
+      deltaForms.join(SkewJoin.hinted(existing, deltaExtractRows),
+        Seq("entityId"), "left_anti")
     })
 
     // 3. delta shingles + band keys under the PINNED census
@@ -517,35 +518,29 @@ object Pipeline {
     val deltaLinkRows = deltaRowsOf(runDir, "link_edges", runId)
 
     // 5. canonicalize + materialize: the O(delta) merge-on-read tail
-    // when its preconditions and bounds hold (see mergeOnReadTail),
-    // else the global tail over the full (narrow) unions. pin.canon
-    // times whichever ran.
     val ccIters = graft.store.IOStat.timed("pin.canon")(
       mergeOnReadTail(spark, runDir, runId, cfg,
-        deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows)
-        .getOrElse(canonicalize(spark, runDir, runId, cfg,
-          allTriples(spark, runDir), lineageUnion(spark, runDir, "entities"),
-          lineageUnion(spark, runDir, "link_edges"), resume = false)))
+        deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows))
     resultFrom(runDir, runId, ccIters)
   }
 
   // ------------------------------------------------------------------
-  // O(delta) canonicalize tail: MERGE-ON-READ. The pinned path above
-  // made extraction and linking delta-proportional, but a global CC +
-  // full rewrite of assign/nodes/edges per ingest reads AND writes the
-  // whole corpus — at daily ingests over 10^12 files that tail IS the
-  // cost. The observation that makes it incremental: delta link edges
-  // can only
+  // O(delta) canonicalize tail: MERGE-ON-READ, the only canonicalize
+  // path of a pinned ingest. The pinned path above made extraction and
+  // linking delta-proportional, but a global CC + full rewrite of
+  // assign/nodes/edges per ingest reads AND writes the whole corpus —
+  // at daily ingests over 10^12 files that tail IS the cost. The
+  // observation that makes it incremental: delta link edges can only
   //   (a) land inside one existing component — a no-op, or
   //   (b) MERGE components — and the set of touched components is
   //       bounded by the delta edge count.
   // So: resolve the delta edges' endpoints to their current canonical
-  // ids (ONE broadcast-filtered narrow scan of the stored assign
-  // table — the same probe-scan shape as the stored-key scans above —
-  // then through the dirty canon log), union-find the resulting
-  // component-pair graph ON THE DRIVER (bounded by the delta, same
-  // driver-capacity contract as ConnectedComponents' local fast
-  // path), and publish:
+  // ids (a join against the assign table pruned to its ident=false
+  // slice — the same probe-scan shape as the stored-key scans above —
+  // then against the dirty canon log), run ConnectedComponents over
+  // the resulting component-pair graph (its edge count picks the
+  // local union-find or the distributed star fixpoint, the tail's
+  // only size decision), and publish:
   //   assign/nodes/edges — APPEND-ONLY snapshots (Snapshots
   //            .stageAppend): the delta entities' rows with their
   //            final canonical, the delta members' node aggregates,
@@ -558,22 +553,18 @@ object Pipeline {
   // Readers resolve stale canonicals through the log (readNodes /
   // readEdges); compactTail applies it physically past the fold
   // threshold. Per-ingest IO = a non-identity probe + delta-sized
-  // writes, whatever the merge count. Equality with the global tail
-  // and a from-scratch run is spec-gated (PipelineSpec), and the path
-  // is oracle-gated end to end (kg_nodes_pinned: a resolving read
-  // through a dirty log; kg_nodes_deferred: after the fold).
+  // writes, whatever the merge count. Equality with a from-scratch run
+  // is spec-gated (PipelineSpec, on both CC paths), and the path is
+  // oracle-gated end to end (kg_nodes_pinned: a resolving read through
+  // a dirty log; kg_nodes_deferred: after the fold).
   // ------------------------------------------------------------------
 
-  /** Returns Some(ccIterations=0) when the merge-on-read tail ran,
-    * None when the caller must fall back to the global tail:
-    * deferMerges off, a canonBuckets stamp on the stored tables that
-    * differs from the config's (their cb values were computed with it),
-    * delta or canon log beyond the driver/broadcast bounds, or
-    * a crash-retry that finds this runId's tail PARTIALLY applied (the
-    * pair graph can only be derived from the pre-ingest state, so a
-    * half-applied ingest recovers through the global tail — correct,
-    * just not O(delta)). A FULLY applied retry is a no-op (idempotent
-    * per runId, like every appended stage).
+  /** Returns the CC iterations of the component-pair graph (0 on the
+    * local path, and for a retry of a fully applied ingest, which is
+    * a no-op: idempotent per runId, like every appended stage). A retry
+    * that finds this runId's tail PARTIALLY applied rolls each tail
+    * stage back to its pre-ingest version ([[Snapshots.rollback]]) and
+    * re-runs: the pair graph is derived from the pre-ingest state.
     */
   private def mergeOnReadTail(spark: SparkSession, runDir: String,
                               runId: String, cfg: Config,
@@ -581,154 +572,107 @@ object Pipeline {
                               newEnts: DataFrame,
                               deltaLinks: DataFrame,
                               deltaLinkRows: Long,
-                              deltaExtractRows: Long): Option[Int] = {
+                              deltaExtractRows: Long): Int = {
     import spark.implicits._
     val Tail = Seq("assign", "nodes", "edges")
-    if (!cfg.deferMerges) return None
-    // a tail stage whose live manifest is missing (crash window) can
-    // only be healed by the global tail; and the stored tables must
-    // carry the config's cb modulus, or none when it has none
-    if (!Tail.forall(st => Snapshots.isComplete(runDir, st))) return None
-    if (!Tail.forall(st => bucketsOf(runDir, st) == cfg.canonBuckets))
-      return None
-    // bounds: the probe set, delta maps, pair graph and canon log all
-    // ride the driver/broadcast — the same capacity contracts as the
-    // rest of the pinned path (BroadcastableRightRows) and the CC fast
-    // path (ccLocalThreshold)
-    if (deltaExtractRows > SkewJoin.BroadcastableRightRows ||
-      deltaLinkRows > cfg.ccLocalThreshold) return None
+    // crash-retry: the canon log is published LAST and is the ingest's
+    // commit record
+    if ((Tail :+ CanonLogStage).forall(st => Snapshots.isComplete(runDir, st)
+        && Snapshots.readManifest(runDir, st).runId == runId)) return 0
+    (Tail :+ CanonLogStage).foreach(Snapshots.rollback(runDir, _, runId))
+    require(Tail.forall(Snapshots.isComplete(runDir, _)),
+      s"no completed base graph in $runDir — resume its Pipeline.run first")
     val hadDirtyLog = canonLogDirty(runDir)
-    val prevLog = canonLogMap(spark, runDir)
-    if (prevLog.size > cfg.ccLocalThreshold) return None
-    // crash-retry idempotence: the canon log is published LAST and
-    // acts as the ingest's commit record — a crash anywhere before it
-    // leaves a PARTIAL application, healed by the global tail
-    val done = Tail.map(st =>
-      Snapshots.readManifest(runDir, st).runId == runId) :+
-      (Snapshots.isComplete(runDir, CanonLogStage) &&
-        Snapshots.readManifest(runDir, CanonLogStage).runId == runId)
-    if (done.forall(identity)) return Some(0)
-    if (done.exists(identity)) return None
 
-    // --- 1. ONE narrow probe of the stored assign table, pruned to
-    // the ident=false partitions: current canonical of every delta
-    // edge endpoint and every old form the delta triples re-mention.
-    // Identity rows (canonicalId == entityId — the overwhelming
-    // majority of the corpus) carry nothing the probe can't infer:
-    // every consumer defaults a missing id to canonical = itself, so
-    // scanning them only ever confirmed that default. The one thing
-    // the full scan additionally established — does this endpoint
-    // EXIST in the stored corpus, i.e. is it an OLD root whose stored
-    // rows a merge leaves stale, or a delta id? — is answered exactly
-    // by newEnts: extraction anti-joined duplicates away, so delta ids
-    // are disjoint from stored ids, and "old" = "not in newEnts".
-    // Probe IO is therefore O(non-identity rows), i.e. proportional to
-    // merge density, not corpus size.
-    var tProbe = 0L; var tUf = 0L
-    def timing[T](acc: Long => Unit)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      acc(System.nanoTime() - t0); r
-    }
-    val assignOld = Snapshots.read(spark, runDir, "assign")
-    // triple ids and edge-endpoint ids in ONE collect (tagged union +
-    // groupBy instead of two distinct+collect jobs — the probe is
-    // per-ingest fixed cost)
-    val tagged = timing(tProbe += _)(deltaTriples
-      .select(Linking.idCol($"pred", $"obj").as("id"), lit(true).as("t"))
-      .unionByName(deltaLinks.select($"src".as("id"), lit(false).as("t")))
-      .unionByName(deltaLinks.select($"dst".as("id"), lit(false).as("t")))
-      .groupBy($"id").agg(max($"t").as("t"))
-      .as[(Long, Boolean)].collect())
-    val tripleIds = tagged.collect { case (id, true) => id }
-    val needed = tagged.map(_._1)
-    // delta entity ids (bounded by the deltaExtractRows guard above)
-    val newIds = scala.collection.mutable.LongMap.empty[Unit]
-    timing(tProbe += _)(newEnts.select($"entityId").distinct()
-      .as[Long].collect().foreach(newIds(_) = ()))
-    val oldCanon = scala.collection.mutable.LongMap.empty[Long]
-    timing(tProbe += _)(assignOld
+    // --- 1. the current root of every stored id the delta touches
+    // (`roots`, non-identity ids only): its stored canonical from the
+    // assign table pruned to the ident=false partitions, then through
+    // the dirty canon log (prior merges were recorded, not rewritten;
+    // a merged-away root keeps its identity row, so the log's keys
+    // join in too). Identity rows (canonicalId == entityId — the
+    // overwhelming majority of the corpus) carry nothing the probe
+    // can't infer: a missing id is its own root. Delta ids are
+    // disjoint from stored ids and from the log's keys, so they
+    // resolve to themselves. Probe IO is therefore O(non-identity
+    // rows), i.e. proportional to merge density, not corpus size. The
+    // map is delta-sized and serves both the pair graph and the edges
+    // append, so it is cached for the tail's duration.
+    val touchedRows = deltaExtractRows + 2 * deltaLinkRows
+    val touched = SkewJoin.hinted(deltaTriples
+      .select(Linking.idCol($"pred", $"obj").as("entityId"))
+      .unionByName(deltaLinks.select($"src".as("entityId")))
+      .unionByName(deltaLinks.select($"dst".as("entityId"))), touchedRows)
+    val stored = Snapshots.read(spark, runDir, "assign")
       .filter(!$"ident".cast("boolean")) // partition-pruned slice
       .select($"entityId", $"canonicalId")
-      .join(broadcast(needed.toSeq.toDF("entityId")), Seq("entityId"))
-      .as[(Long, Long)].collect()
-      .foreach { case (e, c) => oldCanon(e) = c })
+    val log =
+      if (!hadDirtyLog) None
+      else Some(Snapshots.read(spark, runDir, CanonLogStage)
+        .select("oldRoot", "newRoot"))
+    val roots = log.fold(stored.join(touched, Seq("entityId"), "left_semi")) {
+      l => stored
+        .unionByName(l.select($"oldRoot".as("entityId"),
+          $"oldRoot".as("canonicalId")))
+        .join(touched, Seq("entityId"), "left_semi")
+        .join(SkewJoin.hinted(l.toDF("canonicalId", "newRoot"),
+          Snapshots.readManifest(runDir, CanonLogStage).rows),
+          Seq("canonicalId"), "left")
+        .select($"entityId",
+          coalesce($"newRoot", $"canonicalId").as("canonicalId"))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    // `df` plus column `out`: the current root of its id column `id`
+    def rooted(df: DataFrame, id: String, out: String): DataFrame =
+      df.join(SkewJoin.hinted(roots.toDF(id, "r0"), touchedRows), Seq(id),
+        "left").withColumn(out, coalesce($"r0", col(id))).drop("r0")
 
-    // --- 2. driver union-find over the component-pair graph (min-id
-    // roots — the ConnectedComponents union-find)
-    val uf = new ConnectedComponents.UnionFind
-    val oldRoots = scala.collection.mutable.LongMap.empty[Unit]
-    val touched = scala.collection.mutable.LongMap.empty[Unit]
-    // old endpoints (not in newIds) resolve through the probed
-    // non-identity map, defaulting to canonical = self — identity
-    // rows were pruned from the probe precisely because this default
-    // reconstructs them — and then through the dirty canon log (prior
-    // merges were recorded, not rewritten: the stored value may be a
-    // merged-away root). Their canonical is an OLD root either way.
-    def resolve(c: Long): Long = prevLog.getOrElse(c, c)
-    def rep(e: Long): Long =
-      if (newIds.contains(e)) e
-      else {
-        val c = resolve(oldCanon.getOrElse(e, e)); oldRoots(c) = (); c
-      }
-    timing(tUf += _)(ConnectedComponents.collectPairs(
-      deltaLinks.select($"src", $"dst")).foreach { arr =>
-        var i = 0
-        while (i < arr.length) {
-          val ra = uf.find(rep(arr(i))); val rb = uf.find(rep(arr(i + 1)))
-          if (uf.union(ra, rb)) { touched(ra) = (); touched(rb) = () }
-          i += 2
-        }
-      })
-    // old roots that actually merged away (vs. delta edges that landed
-    // inside one existing component — no-ops)
-    val mergedOldRoots = touched.keysIterator
-      .filter(r => oldRoots.contains(r) && uf.find(r) != r).toArray
-    val deltaMoved = touched.keysIterator
-      .filterNot(oldRoots.contains).toArray // delta ids in real merges
+    // --- 2. connected components of the component-pair graph. Its
+    // min-id roots are the global ones: an old root is the minimum of
+    // its component, so the minimum over representatives is the
+    // minimum over all members. The CC result = (id, comp) for every
+    // representative whose root moved: an old root merged away (not a
+    // delta id), or a delta id joined to a component rooted elsewhere.
+    val pairs = rooted(rooted(deltaLinks.select("src", "dst"), "src", "a"),
+      "dst", "b").select($"a".as("src"), $"b".as("dst"))
+    val cc = ConnectedComponents.run(pairs, cfg.ccLocalThreshold,
+      edgeCountHint = Some(deltaLinkRows))
+    def movedTo(id: String) = SkewJoin.hinted(
+      cc.assignments.toDF(id, "comp"), 2 * deltaLinkRows)
+    // the CC result tagged: isNew null = an old root merged away
+    val moved = cc.assignments.join(SkewJoin.hinted(
+        newEnts.select($"entityId".as("id"), lit(true).as("isNew")),
+        deltaExtractRows), Seq("id"), "left")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val counts = moved.agg(count(when($"isNew".isNull, 1)).as("merges"),
+      count($"isNew").as("movedNew")).head()
+    val merges = counts.getLong(0)
+    // delta ids that stayed roots (a new logical node each)
+    val newRoots = deltaRowsOf(runDir, "entities", runId) - counts.getLong(1)
 
-    // --- 3. driver-bounded maps shipped back as broadcast frames
-    val deltaCompDf = deltaMoved.toSeq
-      .map(d => (d, uf.find(d))).filter { case (d, f) => f != d }
-      .toDF("entityId", "comp")
-    // final canonical of every distinct delta-triple form (old forms:
-    // stored canonical, then through the log and this ingest's
-    // union-find; new forms: their union-find root or themselves)
-    val finalCanonDf = tripleIds.toSeq.map { id =>
-      (id, uf.find(resolve(oldCanon.getOrElse(id, id))))
-    }.toDF("entityId", "fc")
-
-    // delta appends sized by rows (~4M narrow rows per file):
-    // repartition(1) would funnel a large delta into one giant
-    // single-task file at real ingest sizes
-    val appendParts = math.min(64L,
-      math.max(1L, deltaExtractRows / 4000000L)).toInt
-    val tailMetrics = cfg.canonBuckets.map("canonBuckets" -> _.toString)
-      .toMap ++ Map(
-      "ccIterations" -> "0",
-      "merges" -> mergedOldRoots.length.toString,
-      "probeSec" -> f"${tProbe / 1e9}%.2f",
-      "ufSec" -> f"${tUf / 1e9}%.2f",
+    val appendParts = Snapshots.appendFiles(deltaExtractRows)
+    val tailMetrics = Map(
+      "ccIterations" -> cc.iterations.toString,
+      "merges" -> merges.toString,
       "delta" -> "append")
 
-    // --- 4. the delta's rows at their final canonicals, columns in
-    // the full run's read-back order. assign's ident partition
-    // column carries its READ-BACK type (string), as
-    // Snapshots.stageAppend requires.
-    val deltaAssign = newEnts
-      .join(broadcast(deltaCompDf), Seq("entityId"), "left")
+    // --- 3. the delta's rows at their final canonicals, columns in
+    // the full run's read-back order; cb (if any) with the stored
+    // tables' own stamp. assign's ident partition column carries its
+    // READ-BACK type (string), as Snapshots.stageAppend requires.
+    val deltaAssign = newEnts.join(movedTo("entityId"), Seq("entityId"), "left")
       .select($"pred", $"obj", $"norm", $"entityId",
         coalesce($"comp", $"entityId").as("canonicalId"))
-    val assignApp = withCb(deltaAssign, cfg.canonBuckets)
+    val assignApp = withCb(deltaAssign, bucketsOf(runDir, "assign"))
       .withColumn("ident",
         ($"canonicalId" === $"entityId").cast("string"))
       .repartition(appendParts)
-    val nodesApp = withCb(nodeTableFull(deltaAssign), cfg.canonBuckets)
+    val nodesApp = withCb(nodeTableFull(deltaAssign),
+        bucketsOf(runDir, "nodes"))
       .repartition(appendParts).sortWithinPartitions($"kind")
-    val edgesApp = withCb(deltaTriples
-      .withColumn("entityId", Linking.idCol($"pred", $"obj"))
-      .join(broadcast(finalCanonDf), Seq("entityId"), "left")
-      .withColumn("canonicalId", coalesce($"fc", $"entityId"))
-      .select(EdgeCols.map(col): _*), cfg.canonBuckets)
+    val edgesApp = withCb(rooted(deltaTriples.withColumn("entityId",
+        Linking.idCol($"pred", $"obj")), "entityId", "r")
+      .join(movedTo("r"), Seq("r"), "left")
+      .withColumn("canonicalId", coalesce($"comp", $"r"))
+      .select(EdgeCols.map(col): _*), bucketsOf(runDir, "edges"))
       .repartition(appendParts).sortWithinPartitions($"pred")
 
     // captured BEFORE the appends publish: the live nodes manifest is
@@ -739,44 +683,42 @@ object Pipeline {
           .metrics("logicalNodes").toLong
       else Snapshots.readManifest(runDir, "nodes").rows
 
-    // --- 5. publish the three appends CONCURRENTLY: each touches ONLY
+    // --- 4. publish the three appends CONCURRENTLY: each touches ONLY
     // its own stage, so the three narrow publish jobs overlap instead
     // of serializing three rounds of write + commit + footer latency.
-    // ANY partially-published subset is caught by the done-check above
-    // on retry and heals through the global tail.
+    // ANY partially-published subset rolls back on retry.
     def append(st: String, partBy: Seq[String], app: DataFrame): Unit =
-      Snapshots.stageAppend(spark, runDir, st, runId, partBy,
-        tailMetrics + ("defer" -> "true"))(app)
+      Snapshots.stageAppend(spark, runDir, st, runId, partBy, tailMetrics ++
+        bucketsOf(runDir, st).map("canonBuckets" -> _.toString) +
+        ("defer" -> "true"))(app)
     parallelRun(Seq(
       () => append("assign", Seq("ident"), assignApp),
       () => append("nodes", Nil, nodesApp),
       () => append("edges", Nil, edgesApp)))
 
-    // --- 6. the canon log, LAST (commit record). Compressed
+    // --- 5. the canon log, LAST (commit record). Compressed
     // single-hop: prior targets re-resolve through this ingest's
-    // union-find, so a reader never follows a chain
-    val fullLog = prevLog.map { case (k, v) => (k, uf.find(v)) } ++
-      mergedOldRoots.map(r => (r, uf.find(r)))
-    // logical node count by driver arithmetic (stored node ROWS
-    // over-count merged components until the next fold): previous
-    // logical count, plus delta components that created a NEW root,
-    // minus old roots merged away
-    val newDeltaRoots = {
-      val seen = scala.collection.mutable.LongMap.empty[Unit]
-      newIds.keysIterator.foreach { e =>
-        val r = uf.find(e); if (newIds.contains(r)) seen(r) = ()
-      }
-      seen.size
-    }
-    val logical = prevLogical + newDeltaRoots - mergedOldRoots.length
+    // components, so a reader never follows a chain. The logical node
+    // count (stored node ROWS over-count merged components until the
+    // next fold): previous logical count, plus delta ids that stayed
+    // roots, minus old roots merged away.
+    val mergedAway = moved.filter($"isNew".isNull)
+      .select($"id".as("oldRoot"), $"comp".as("newRoot"))
+    val fullLog = log.fold(mergedAway)(l => l
+      .join(movedTo("newRoot"), Seq("newRoot"), "left")
+      .select($"oldRoot", coalesce($"comp", $"newRoot").as("newRoot"))
+      .unionByName(mergedAway))
     Snapshots.stage(spark, runDir, CanonLogStage, runId,
       resume = false,
       metrics = tailMetrics ++ Map("dirty" -> "true",
-        "logicalNodes" -> logical.toString)) {
-      fullLog.toSeq.toDF("oldRoot", "newRoot").coalesce(1)
+        "logicalNodes" -> (prevLogical + newRoots - merges).toString)) {
+      fullLog.coalesce(1)
     }
-    cfg.compactAppendFrac.foreach(compactTail(spark, runDir, runId, _))
-    Some(0)
+    roots.unpersist(false); moved.unpersist(false)
+    // deferMerges = false folds at once: the graph a full rewrite gives
+    val foldFrac = if (cfg.deferMerges) cfg.compactAppendFrac else Some(0.0)
+    foldFrac.foreach(compactTail(spark, runDir, runId, _))
+    cc.iterations
   }
 
   /** Fold maintenance for the merge-on-read tail tables (see
@@ -915,13 +857,13 @@ object Pipeline {
   // absorbed → its current root, SINGLE-HOP (each ingest rewrites the
   // whole log, which is bounded by merges-since-last-fold, so readers
   // never chain). `dirty` marks unresolved state; folds and the
-  // global tail clear it.
+  // global recomputes (run / runIncremental) clear it.
   private[graft] val CanonLogStage = "canon_log"
 
   /** The ingest commit record: runIds with a published canon-log
     * version (the merge-on-read tail's last publish) or an edges
-    * version WITHOUT the defer marker (the global tail's). A deferred
-    * edges append alone is the crash window before the log.
+    * version WITHOUT the defer marker (a global recompute's). A
+    * deferred edges append alone is the crash window before the log.
     */
   private[graft] def committedRuns(runDir: String): Set[String] = {
     def runs(stage: String, counts: Snapshots.Manifest => Boolean) =
@@ -933,7 +875,7 @@ object Pipeline {
   }
 
   /** Publishes a clean, empty canon log once its remaps are applied
-    * physically (a fold or the global tail), or readers would keep
+    * physically (a fold or a global recompute), or readers would keep
     * re-resolving and the next deferred ingest compose stale remaps.
     */
   private def clearCanonLog(spark: SparkSession, runDir: String,
@@ -951,17 +893,6 @@ object Pipeline {
     Snapshots.isComplete(runDir, CanonLogStage) &&
       Snapshots.readManifest(runDir, CanonLogStage)
         .metrics.get("dirty").contains("true")
-
-  /** Driver-resident log map (bounded by the fold trigger; callers
-    * guard size before entering the deferred path).
-    */
-  private def canonLogMap(spark: SparkSession,
-                          runDir: String): Map[Long, Long] = {
-    import spark.implicits._
-    if (!canonLogDirty(runDir)) Map.empty
-    else Snapshots.read(spark, runDir, CanonLogStage)
-      .select("oldRoot", "newRoot").as[(Long, Long)].collect().toMap
-  }
 
   private def canonLogDf(spark: SparkSession, runDir: String) = {
     import spark.implicits._
@@ -1084,14 +1015,10 @@ object Pipeline {
     import spark.implicits._
     val deltaSh = deltaShingled
       .select($"pred", explode($"shingles").as("sh")).distinct()
-    val hinted =
-      if (deltaExtractRows <= SkewJoin.BroadcastableRightRows)
-        broadcast(deltaSh)
-      else deltaSh
     val freshCap = cfg.link.stopShingleCap(lineageRows(runDir, "entities"))
     val stored = lineageUnion(spark, runDir, "ep_shingles")
     val dfs = stored.select($"pred", explode($"shingles").as("sh"))
-      .join(hinted, Seq("pred", "sh"))
+      .join(SkewJoin.hinted(deltaSh, deltaExtractRows), Seq("pred", "sh"))
       .groupBy($"pred", $"sh")
       .agg(count(lit(1)).cast("double").as("df"))
     val pinnedDf = hot.toDF("pred", "sh").withColumn("hp", lit(true))
@@ -1186,11 +1113,9 @@ object Pipeline {
     canonicalize(spark, runDir, runId, cfg, triples, ents, links, resume)
   }
 
-  /** Stages 3–4 (canonicalize → materialize) — shared by the global
-    * paths ([[run]]/[[runIncremental]] via [[downstream]]) and the
-    * epoch-pinned path ([[runIncrementalPinned]], which supplies
-    * union-of-versions entity/edge tables instead of freshly relinked
-    * ones).
+  /** Stages 3–4 (canonicalize → materialize) of the global paths
+    * ([[run]]/[[runIncremental]] via [[downstream]]): global CC and a
+    * full rewrite of assign/nodes/edges.
     */
   private def canonicalize(spark: SparkSession, runDir: String,
                            runId: String, cfg: Config,
@@ -1255,11 +1180,8 @@ object Pipeline {
         .collect { case (f, n) if f.contains("ident=false/") => n }.sum
       val delta = assign.filter(!$"ident".cast("boolean"))
         .select($"entityId", $"canonicalId")
-      val joined =
-        if (deltaRows <= SkewJoin.BroadcastableRightRows)
-          withId.join(broadcast(delta), Seq("entityId"), "left")
-        else withId.join(delta, Seq("entityId"), "left")
-      withCb(joined
+      withCb(withId.join(SkewJoin.hinted(delta, deltaRows), Seq("entityId"),
+          "left")
         .withColumn("canonicalId", coalesce($"canonicalId", $"entityId"))
         .select(EdgeCols.map(col): _*), cfg.canonBuckets)
         .sortWithinPartitions($"pred")
@@ -1274,8 +1196,8 @@ object Pipeline {
     // each stage's own manifest, so any crashed subset heals)
     parallelRun(Seq(() => nodesStage(), () => edgesStage()))
 
-    // the global tail recomputed everything from source, so any
-    // deferred-merge canon log is now fully applied
+    // everything was recomputed from source, so any deferred-merge
+    // canon log is now fully applied
     clearCanonLog(spark, runDir, runId)
     ccIters
   }

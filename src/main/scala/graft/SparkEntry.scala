@@ -909,15 +909,16 @@ object SparkEntry {
     // canonicalize tail, under the hash gate: default-Config base run
     // → pinEpoch → pinned ingest whose assign/nodes/edges take
     // APPEND-ONLY snapshots and whose merges land in the canon log
-    // (Pipeline.mergeOnReadTail: driver union-find over the
-    // delta's component-pair graph). Nothing folds afterwards, so the
-    // hash is taken through a RESOLVING read (Pipeline.readNodes
-    // joins the dirty log and re-aggregates) — the read path
-    // kg_nodes_deferred never hashes, because it folds first. The
-    // require below pins that path: a silent global fallback would
-    // still hash-match, and that is exactly what must not pass
-    // unnoticed. 'asks' is not a fuzzy pred, so the pinned census is
-    // empty and the norm-class twin is exact.
+    // (Pipeline.mergeOnReadTail: connected components of the delta's
+    // component-pair graph — the local union-find at this size).
+    // Nothing folds afterwards, so the hash is taken through a
+    // RESOLVING read (Pipeline.readNodes joins the dirty log and
+    // re-aggregates) — the read path kg_nodes_deferred never hashes,
+    // because it folds first. The require below pins that path: a
+    // folded or fully rewritten graph would still hash-match, and
+    // that is exactly what must not pass unnoticed. 'asks' is not a
+    // fuzzy pred, so the pinned census is empty and the norm-class
+    // twin is exact.
     "kg_nodes_pinned" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       import sp.implicits._

@@ -155,7 +155,7 @@ object ConnectedComponents {
   /** A (src, dst) long frame on the driver as one packed Array[Long]
     * per partition — no boxed Tuple2/Row per edge. Callers bound it.
     */
-  private[graft] def collectPairs(e: DataFrame): Array[Array[Long]] = {
+  private def collectPairs(e: DataFrame): Array[Array[Long]] = {
     import e.sparkSession.implicits._
     e.as[(Long, Long)]
       .mapPartitions { it =>
@@ -166,9 +166,9 @@ object ConnectedComponents {
   }
 
   /** Driver union-find with min-id roots (the semantics of both CC
-    * paths), shared with the O(delta) canonicalize tail.
+    * paths).
     */
-  private[graft] final class UnionFind {
+  private final class UnionFind {
     private val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x

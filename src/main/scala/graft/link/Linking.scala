@@ -569,9 +569,7 @@ object Linking {
   private[graft] def deltaFuzzyEdges(keysDelta: DataFrame, keysAll: DataFrame,
                                      shingledAll: DataFrame, cfg: Config,
                                      deltaKeyRows: Long): DataFrame = {
-    val d =
-      if (deltaKeyRows <= SkewJoin.BroadcastableRightRows) broadcast(keysDelta)
-      else keysDelta
+    val d = SkewJoin.hinted(keysDelta, deltaKeyRows)
     // (src, dst) only — pred AND band are folded into the single
     // band-key hash by bandedKeys, so the join keys on one long and
     // the dedup exchange is pred-free
@@ -607,15 +605,13 @@ object Linking {
                                      entsDelta: DataFrame,
                                      deltaRows: Long): DataFrame = {
     // broadcast the delta-derived frames only while they are small
-    // (the common ingest shape); an epoch-sized delta degrades to
-    // AQE-planned joins instead of blowing the driver
-    def hinted(df: DataFrame): DataFrame =
-      if (deltaRows <= SkewJoin.BroadcastableRightRows) broadcast(df) else df
+    // (the common ingest shape)
     val dnorms = entsDelta.select("pred", "norm").distinct()
-    val oldMins = entsOld.join(hinted(dnorms), Seq("pred", "norm"))
+    val oldMins = entsOld.join(SkewJoin.hinted(dnorms, deltaRows),
+      Seq("pred", "norm"))
       .groupBy("pred", "norm").agg(min("entityId").as("oldMin"))
-    val withOld = entsDelta.join(hinted(oldMins), Seq("pred", "norm"),
-      "left")
+    val withOld = entsDelta.join(SkewJoin.hinted(oldMins, deltaRows),
+      Seq("pred", "norm"), "left")
     val toOld = withOld.filter(col("oldMin").isNotNull)
       .select(least(col("entityId"), col("oldMin")).as("src"),
         greatest(col("entityId"), col("oldMin")).as("dst"))

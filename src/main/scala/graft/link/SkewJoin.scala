@@ -42,6 +42,14 @@ object SkewJoin {
     */
   val BroadcastableRightRows = 2000000L
 
+  /** `df` with a broadcast hint while `rows`, its known or upper-bound
+    * row count, is within [[BroadcastableRightRows]]; beyond it the
+    * join is left to AQE's runtime sizes instead of an unbounded
+    * broadcast.
+    */
+  def hinted(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= BroadcastableRightRows) broadcast(df) else df
+
   /** left ⋈ right on `key`; `right` MUST be unique per key AND narrow
     * (a few small columns — an id→id mapping, not a wide dimension
     * table): the `rightCountHint` fast path broadcasts on ROW count

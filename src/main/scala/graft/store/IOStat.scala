@@ -10,11 +10,11 @@ import java.util.concurrent.atomic.LongAdder
   * time a stored table is opened — at B≈thousands of partition dirs
   * that overhead grows with the CORPUS even when the data read is
   * delta-sized, which is exactly the regime the O(delta) tail exists
-  * for. TailBench prints this breakdown per ingest so the growing
-  * off-stage term is attributable instead of "unaccounted".
+  * for. The benchmark's trace reads this breakdown per operation so
+  * the growing off-stage term is attributable instead of "unaccounted".
   *
   * Counters are process-global and thread-safe; `snapshot()` returns
-  * (calls, seconds) per name, `reset()` zeroes them.
+  * (calls, seconds) per name.
   */
 object IOStat {
   private val nanos = new ConcurrentHashMap[String, LongAdder]()
@@ -38,11 +38,4 @@ object IOStat {
     }
     m
   }
-
-  def reset(): Unit = { nanos.clear(); calls.clear() }
-
-  def report(): String =
-    snapshot().toSeq.sortBy(-_._2._2)
-      .map { case (k, (n, s)) => f"$k=$s%.1fs/$n" }
-      .mkString(" ")
 }

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * slice, and on object stores each listed dir is an RPC. The manifest
   * already records every file with its row count and byte size, so
   * scan planning comes straight from it — the Iceberg manifest-read
-  * shape (TailBench measured the listing at 25 s/ingest at a 400k-file
-  * corpus against 0.1–0.3 s planned; see BENCH.md §13.6).
+  * shape (the listing measured 25 s/ingest at a 400k-file corpus
+  * against 0.1–0.3 s planned; see BENCH.md §13.6).
   *
   * Partition values are parsed from the manifest's RELATIVE paths
   * (`ident=false/part-...parquet`) against the schema the PUBLISHER

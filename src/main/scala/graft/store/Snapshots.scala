@@ -222,6 +222,28 @@ object Snapshots {
       Paths.get(stageDir(runDir, stage), versionedManifestName(version)))
   }
 
+  /** ROLLBACK (the Iceberg rollback_to_snapshot shape): when the live
+    * snapshot of `stage` was written by `runId`, or there is none,
+    * re-point the live pointer to the newest version on disk written by
+    * another runId, or remove the pointer when no such version exists.
+    * The versions above the new pointer become orphans, invisible to
+    * every reader, and the next publish deletes them
+    * ([[prepareNextVersion]]). A live snapshot of another runId is left
+    * as it is.
+    */
+  def rollback(runDir: String, stage: String, runId: String): Unit = {
+    val live = liveVersion(runDir, stage)
+    if (live > 0 && readManifest(runDir, stage).runId != runId) return
+    val sd = stageDir(runDir, stage)
+    manifestVersions(runDir, stage).filter(v => live == 0 || v < live)
+      .reverseIterator
+      .map(v => parseManifest(Paths.get(sd, versionedManifestName(v))))
+      .find(_.runId != runId) match {
+      case Some(m) => writeManifest(sd, ManifestName, m)
+      case None    => Files.deleteIfExists(Paths.get(sd, ManifestName))
+    }
+  }
+
   /** Recursive delete (no-op when absent). */
   private[graft] def deleteDir(path: String): Unit = {
     val dir = Paths.get(path)
@@ -411,9 +433,7 @@ object Snapshots {
       val merged = (deltaBack ++ absorbed.map(fs =>
         spark.read.parquet(fs.map(f => s"$sd/$f"): _*)))
         .reduce(_ unionByName _)
-      val nFiles = math.min(64L,
-        math.max(1L, carry / MergedAppendRowsPerFile)).toInt
-      val shaped0 = merged.repartition(nFiles)
+      val shaped0 = merged.repartition(appendFiles(carry))
       val shaped = if (partitionBy.nonEmpty)
         shaped0.sortWithinPartitions(partitionBy.map(col): _*)
       else shaped0
@@ -458,11 +478,13 @@ object Snapshots {
     // need it)
   }
 
-  /** Target rows per file when a cascade merge rewrites append sets
-    * (append rows are narrow — assign/nodes/edges schemas — so 4M
-    * rows ≈ a comfortable 100–300 MB task input).
+  /** Files for `rows` append rows: ~4M rows per file, between 1 and
+    * 64. Append rows are narrow (assign/nodes/edges schemas), so 4M
+    * rows ≈ a comfortable 100–300 MB task input; one file would funnel
+    * a large delta into one giant single-task write.
     */
-  private val MergedAppendRowsPerFile = 4L * 1000 * 1000
+  private[graft] def appendFiles(rows: Long): Int =
+    math.min(64L, math.max(1L, rows / 4000000L)).toInt
 
   /** A stage-relative file path or read root inside an append set
     * (unpartitioned files; the partition columns ride as data columns).

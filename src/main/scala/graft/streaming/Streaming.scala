@@ -93,17 +93,20 @@ object Streaming {
       }
   }
 
-  /** One micro-batch of streaming KG maintenance: first batch runs
+  /** One micro-batch of streaming KG maintenance: the base batch runs
     * the full pipeline, later batches ingest incrementally
     * ([[graft.Pipeline.runIncremental]] — delta-only extraction,
     * global relink, versioned snapshots — or, with `epochPinned`,
     * [[graft.Pipeline.runIncrementalPinned]] — delta-only linking
-    * under a census pinned after the first batch). IDEMPOTENT per
-    * batch id: foreachBatch replays a batch after a crash, and
-    * re-ingesting it would append duplicate extract versions — the
-    * guard skips any batch whose runId already committed the graph,
-    * so replay ≡ no-op (the streaming twin of the batch resume
-    * contract). Returns true when the batch was applied.
+    * under a census pinned after the base batch). The base batch is
+    * the one while the extract holds no version of another batch: a
+    * base batch that crashed part-way resumes its
+    * [[graft.Pipeline.run]] (stages it already published are read
+    * back), then pins. IDEMPOTENT per batch id: foreachBatch replays a
+    * batch after a crash, and re-ingesting it would append duplicate
+    * extract versions — the guard skips any batch whose runId already
+    * committed the graph, so replay ≡ no-op (the streaming twin of the
+    * batch resume contract). Returns true when the batch was applied.
     */
   def ingestBatch(batch: Dataset[graft.SourceFile], batchId: Long,
                   runDir: String,
@@ -112,26 +115,26 @@ object Streaming {
   : Boolean = {
     import graft.store.Snapshots
     val runId = s"batch-$batchId"
-    val prior = Snapshots.isComplete(runDir, "extract")
     // "applied" means applied THROUGH THE LAST STAGE: a crash between
     // the extract publish and the edges publish must leave the batch
     // re-appliable, or the replayed batch would no-op against a graph
-    // that never linked its triples. runIncremental is idempotent on
-    // the extract side (it skips a delta version this runId already
-    // published), so the replay redoes only the downstream stages.
-    // Under deferred merges an edges append without its canon log
-    // (the commit record, Pipeline.committedRuns) is a crash window:
-    // the replay must re-apply, healing through the global tail, or
-    // the partial state would become permanent.
-    val applied = prior &&
-      Snapshots.isComplete(runDir, "edges") &&
+    // that never linked its triples. Every path is idempotent on the
+    // extract side (it reuses a version this runId already published),
+    // so the replay redoes only the downstream stages. Under deferred
+    // merges an edges append without its canon log (the commit record,
+    // Pipeline.committedRuns) is a crash window: the replay must
+    // re-apply, rolling the partial tail back, or the partial state
+    // would become permanent.
+    val applied = Snapshots.isComplete(runDir, "edges") &&
       Snapshots.readManifest(runDir, "edges").runId == runId &&
       graft.Pipeline.committedRuns(runDir).contains(runId)
     if (applied) false
     else {
       val spark = batch.sparkSession
+      val base = Snapshots.versions(runDir, "extract").forall(v =>
+        Snapshots.readManifestVersion(runDir, "extract", v).runId == runId)
       // epoch mode: the continuous-maintenance cost profile — linking
-      // is delta-vs-all under a census frozen at the first batch
+      // is delta-vs-all under a census frozen at the base batch
       // (Pipeline.runIncrementalPinned; BENCH.md §10). The pin itself
       // is crash-healed: a batch that died between the base run and
       // the pin (or mid-pin) re-pins from the current global state on
@@ -140,16 +143,15 @@ object Streaming {
         if (!Seq("ep_census", "ep_shingles", "ep_keys")
             .forall(Snapshots.isComplete(runDir, _)))
           graft.Pipeline.pinEpoch(spark, runDir, s"$runId-pin", cfg)
-      if (prior) {
-        if (epochPinned) {
-          ensurePinned()
-          graft.Pipeline.runIncrementalPinned(spark, batch, runDir, runId, cfg)
-        } else
-          graft.Pipeline.runIncremental(spark, batch, runDir, runId, cfg)
-      } else {
-        graft.Pipeline.run(spark, batch, runDir, runId, cfg)
+      if (base) {
+        graft.Pipeline.run(spark, batch, runDir, runId,
+          cfg.copy(resume = true))
         if (epochPinned) ensurePinned()
-      }
+      } else if (epochPinned) {
+        ensurePinned()
+        graft.Pipeline.runIncrementalPinned(spark, batch, runDir, runId, cfg)
+      } else
+        graft.Pipeline.runIncremental(spark, batch, runDir, runId, cfg)
       true
     }
   }

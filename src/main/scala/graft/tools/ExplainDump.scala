@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * function is invoked; the captured plan is the returned frame's —
   * the maintained-graph read — which is what the query returns to the
   * driver. Per-stage pipeline work is measured by the dedicated
-  * stage tools (TailBench, SteadyStateBench) instead.
+  * stage tool (SteadyStateBench) instead.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

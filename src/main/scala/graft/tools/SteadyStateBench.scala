@@ -6,25 +6,20 @@ import graft.store.Snapshots
 import org.apache.spark.sql.SparkSession
 
 /** STEADY-STATE ingestion — K successive pinned ingests of a
-  * fixed-size delta into the same run. Single-ingest benches
-  * (TailBench) cannot see terms that grow with INGEST COUNT; this one
-  * runs the production maintenance shape and reports them per ingest:
+  * fixed-size delta into the same run. A single-ingest bench cannot
+  * see terms that grow with INGEST COUNT; this one runs the production
+  * maintenance shape and reports them per ingest: the merge-on-read
+  * tail (append-only snapshots + canon log) with the fold trigger at
+  * foldFrac, expiry of every version a fold unpinned, and lineage
+  * consolidation past 4 deltas. Per ingest: append write volume, live
+  * append sets (the binary-counter cascade keeps them O(log K)),
+  * canon-log rows, disk.
   *
-  *   - MOR: the merge-on-read tail (append-only snapshots + canon log)
-  *     with the fold trigger at foldFrac, expiry of every version a
-  *     fold unpinned, and lineage consolidation past 4 deltas. Per
-  *     ingest: append write volume, live append sets (the
-  *     binary-counter cascade keeps them O(log K)), canon-log rows,
-  *     disk.
-  *   - GLOBAL: the same deltas through the global tail
-  *     (deferMerges = false — global CC + full assign/nodes/edges
-  *     rewrite per ingest), the correctness twin.
-  *
-  * Both chains start from byte-identical copies of one pinned base
-  * run and ingest identical deltas; their final graphs are compared
-  * with exceptAll through the resolving readers. Per-ingest order of
-  * the two chains alternates to expose (not bake in) warmup/phase
-  * bias. The merge-on-read read tax is priced at the end.
+  * The correctness twin is a from-scratch run over the base and every
+  * delta under the chain's pinned census (as the PipelineSpec pinned
+  * specs compare); the two final graphs are compared with exceptAll
+  * through the resolving readers. The merge-on-read read tax is priced
+  * at the end.
   *
   * Usage: runMain graft.tools.SteadyStateBench [n] [m] [k] [foldFrac]
   *   defaults: 200000 50000 8 0.1
@@ -53,10 +48,12 @@ object SteadyStateBench {
       .toString
     spark.sparkContext.setCheckpointDir(s"$root/_checkpoints")
     val richness = sys.env.getOrElse("SPARK_GRAFT_RICHNESS", "8").toInt
-    val cfgMor = Pipeline.Config(canonBuckets = Some(64),
+    // the banded fuzzy path everywhere: equality with the from-scratch
+    // twin holds path-for-path (the exact small-set path surfaces a
+    // candidate superset)
+    val link = graft.link.Linking.Config(exactSmallThreshold = 0L)
+    val cfgMor = Pipeline.Config(link = link, canonBuckets = Some(64),
       compactAppendFrac = Some(foldFrac), maxLineageDeltas = Some(4))
-    val cfgGlobal = Pipeline.Config(canonBuckets = Some(64),
-      deferMerges = false)
     def rd(dir: String) = {
       import spark.implicits._
       spark.read.parquet(dir).as[graft.SourceFile]
@@ -80,7 +77,6 @@ object SteadyStateBench {
     val tBase = timed(Pipeline.run(spark, rd(baseDir), runM, "base",
       cfgMor))
     val tPin = timed(Pipeline.pinEpoch(spark, runM, "pin", cfgMor))
-    val runG = s"$root/runG"; copyDir(runM, runG)
     println(f"[steady] base=$tBase%.1fs pin=$tPin%.1fs")
 
     def mb(x: Long): Double = x / 1048576.0
@@ -112,27 +108,17 @@ object SteadyStateBench {
     }
 
     (1 to k).foreach { i =>
-      val delta = deltaDirs(i - 1)
-      def runMor(): Unit = {
-        val w = timed(Pipeline.runIncrementalPinned(
-          spark, rd(delta), runM, s"d$i", cfgMor))
-        // expire what the fold (if one fired) unpinned
-        val freed = Tail.map { st =>
-          val live = Snapshots.readManifest(runM, st).version
-          Snapshots.versions(runM, st).filter(_ != live).reverse.count { v =>
-            scala.util.Try(Snapshots.expire(runM, st, v)).isSuccess
-          }
-        }.sum
-        report("MOR", i, runM, w)
-        if (freed > 0) println(s"[steady] i=$i MOR expired $freed versions")
-      }
-      def runGlobal(): Unit = {
-        val w = timed(Pipeline.runIncrementalPinned(
-          spark, rd(delta), runG, s"d$i", cfgGlobal))
-        report("GLOBAL", i, runG, w)
-      }
-      if (i % 2 == 1) { runMor(); runGlobal() }
-      else { runGlobal(); runMor() }
+      val w = timed(Pipeline.runIncrementalPinned(
+        spark, rd(deltaDirs(i - 1)), runM, s"d$i", cfgMor))
+      // expire what the fold (if one fired) unpinned
+      val freed = Tail.map { st =>
+        val live = Snapshots.readManifest(runM, st).version
+        Snapshots.versions(runM, st).filter(_ != live).reverse.count { v =>
+          scala.util.Try(Snapshots.expire(runM, st, v)).isSuccess
+        }
+      }.sum
+      report("MOR", i, runM, w)
+      if (freed > 0) println(s"[steady] i=$i MOR expired $freed versions")
     }
 
     val cols = Seq("canonicalId", "canonical", "kind", "memberCount")
@@ -153,13 +139,22 @@ object SteadyStateBench {
     println(f"[steady] readtax MOR dirty=${Pipeline.canonLogDirty(runM)} " +
       f"nodesResolved=$rn in $sn%.2fs edgesResolved=$re in $se%.2fs " +
       f"nodesRaw=$rr in $sr%.2fs")
-    val dn = nodes(runG).exceptAll(nodes(runM)).count() +
-      nodes(runM).exceptAll(nodes(runG)).count()
-    val de = edges(runG).exceptAll(edges(runM)).count() +
-      edges(runM).exceptAll(edges(runG)).count()
-    println(s"[steady] exceptAll GLOBAL vs MOR: nodes=$dn edges=$de " +
-      "(must be 0/0)")
-    require(dn == 0 && de == 0, "merge-on-read chain diverged from global")
+    // from-scratch twin over base ∪ deltas under the pinned census
+    val hot = Snapshots.read(spark, runM, "ep_census")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val runF = s"$root/runF"
+    val tFull = timed(Pipeline.run(spark,
+      (baseDir +: deltaDirs).map(rd).reduce(_ union _), runF, "full",
+      cfgMor.copy(link = link.copy(pinnedHot = Some(hot)),
+        compactAppendFrac = None, maxLineageDeltas = None)))
+    val dn = nodes(runF).exceptAll(nodes(runM)).count() +
+      nodes(runM).exceptAll(nodes(runF)).count()
+    val de = edges(runF).exceptAll(edges(runM)).count() +
+      edges(runM).exceptAll(edges(runF)).count()
+    println(f"[steady] exceptAll FROM-SCRATCH ($tFull%.1fs) vs MOR: " +
+      s"nodes=$dn edges=$de (must be 0/0)")
+    require(dn == 0 && de == 0,
+      "merge-on-read chain diverged from the from-scratch run")
     // several GB of run dirs at the bench shape — keep only on request
     if (sys.env.contains("SPARK_GRAFT_KEEP")) {
       println(s"[steady] done root=$root (kept: SPARK_GRAFT_KEEP)")
@@ -185,20 +180,5 @@ object SteadyStateBench {
       }
       s
     } finally w.close()
-  }
-
-  private def copyDir(from: String, to: String): Unit = {
-    val src = java.nio.file.Path.of(from)
-    val walk = java.nio.file.Files.walk(src)
-    try {
-      val it = walk.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val dst = java.nio.file.Path.of(to).resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(dst)
-        else java.nio.file.Files.copy(p, dst)
-      }
-    } finally walk.close()
   }
 }

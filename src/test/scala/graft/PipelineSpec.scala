@@ -247,6 +247,22 @@ class PipelineSpec extends SparkSpec {
     }
     // lineage: manifest row counts match the data
     assert(Snapshots.readManifest(dir, "edges").rows == res.edges)
+
+    // a recompute (resume = false) on the same dir starts from an empty
+    // lineage: an equal Result over one extract version, and a later
+    // incremental ingest equals the from-scratch run
+    val again = Pipeline.run(spark, files, dir, "run-2",
+      Pipeline.Config(resume = false))
+    assert(again.copy(runId = "x") == res.copy(runId = "x"))
+    assert(Snapshots.versions(dir, "extract") == Seq(1))
+    val more = FilesGen.local(n + 10)
+    val rInc = Pipeline.runIncremental(spark, more.drop(n).toDS(), dir,
+      "run-3")
+    val full = tmpDir("fresh-full")
+    val rFull = Pipeline.run(spark, more.toDS(), full, "run-full")
+    assert(rInc.copy(runId = "x") == rFull.copy(runId = "x"))
+    assert(nodeSet(dir) == nodeSet(full))
+    assert(edgeSet(dir) == edgeSet(full))
   }
 
   test("resume after kill between stages reproduces the fresh run") {
@@ -406,8 +422,9 @@ class PipelineSpec extends SparkSpec {
       .metrics.get("delta").contains("true"))
 
     // crash-retry idempotence mid-chain: kill after the delta link
-    // published but before edges completed; the retry must not append
-    // duplicate delta slices anywhere
+    // published but before edges completed; the retry rolls the tail
+    // back to its pre-ingest versions, re-runs the O(delta) tail, and
+    // must not append duplicate delta slices anywhere
     Files.delete(Path.of(Snapshots.stageDir(inc, "edges"), "_MANIFEST.json"))
     val rRetry = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
@@ -504,9 +521,10 @@ class PipelineSpec extends SparkSpec {
     assert(rRetry.copy(runId = "x") == r2.copy(runId = "x"))
 
     // crash-retry HALF-APPLIED: nodes+edges manifests lost after the
-    // assign append published → the retry must heal through the
-    // global tail (the pair graph is only derivable pre-ingest) and
-    // still equal the from-scratch graph
+    // assign append published → the retry rolls every tail stage back
+    // to its pre-ingest version (the pair graph is only derivable
+    // pre-ingest), heals through the O(delta) tail, and still equals
+    // the from-scratch graph
     val inc2 = tmpDir("icc2")
     Pipeline.run(spark, a.toDS(), inc2, "icc-base", cfg)
     Pipeline.pinEpoch(spark, inc2, "icc-pin", cfg)
@@ -517,21 +535,37 @@ class PipelineSpec extends SparkSpec {
       "icc-d1", cfg)
     val fullAb = tmpDir("icc-fullab")
     Pipeline.run(spark, (a ++ b).toDS(), fullAb, "icc-fab", cfg)
-    assert(!Pipeline.canonLogDirty(inc2), "the global tail clears the log")
+    // healed O(delta): every icc-d1 tail version is a defer-marked
+    // append (no full tail version), and the log is dirty
+    Seq("assign", "nodes", "edges").foreach { st =>
+      val ms = Snapshots.versions(inc2, st)
+        .map(Snapshots.readManifestVersion(inc2, st, _))
+        .filter(_.runId == "icc-d1")
+      assert(ms.nonEmpty && ms.forall(m => m.baseFiles.exists(_.nonEmpty) &&
+        m.metrics.get("defer").contains("true")), st)
+      assert(Snapshots.readManifest(inc2, st).runId == "icc-d1", st)
+    }
+    assert(Pipeline.canonLogDirty(inc2), "the O(delta) retry leaves a dirty log")
     assert(nodeSet(inc2) == nodeSet(fullAb))
     assert(edgeSet(inc2) == edgeSet(fullAb))
     assert(rHeal.nodes == Snapshots.readManifest(fullAb, "nodes").rows)
 
-    // deferMerges=false applies merges through the global tail: same
-    // graph, full rewrite, no canon log
+    // deferMerges=false runs the same O(delta) tail, then folds at
+    // once: same graph, full folded tables, a clean log
     val inc3 = tmpDir("icc3")
     Pipeline.run(spark, a.toDS(), inc3, "icc-base", cfg)
     Pipeline.pinEpoch(spark, inc3, "icc-pin", cfg)
     Pipeline.runIncrementalPinned(spark, b.toDS(), inc3, "icc-d1",
       cfg.copy(deferMerges = false))
+    assert(Snapshots.versions(inc3, "nodes").exists { v =>
+      val m = Snapshots.readManifestVersion(inc3, "nodes", v)
+      m.runId == "icc-d1" && m.metrics.get("defer").contains("true")
+    }, "the tail appended before the fold")
     val m3 = Snapshots.readManifest(inc3, "nodes")
     assert(!m3.metrics.contains("defer") && m3.baseFiles.forall(_.isEmpty))
-    assert(!Snapshots.isComplete(inc3, Pipeline.CanonLogStage))
+    assert(m3.metrics.get("compacted").contains("true"))
+    assert(Snapshots.isComplete(inc3, Pipeline.CanonLogStage) &&
+      !Pipeline.canonLogDirty(inc3), "the fold leaves a clean log")
     assert(nodeSet(inc3) == nodeSet(fullAb))
     assert(edgeSet(inc3) == edgeSet(fullAb))
   }
@@ -722,42 +756,70 @@ class PipelineSpec extends SparkSpec {
     } :+ f("cnew.txt", Seq("dbrandnew2"))
     val cfgD = Pipeline.Config(canonBuckets = Some(64),
       deferMerges = true)
-
-    val inc = tmpDir("defer")
-    Pipeline.run(spark, a.toDS(), inc, "df-base", cfgD)
-    Pipeline.pinEpoch(spark, inc, "df-pin", cfgD)
-    val r1 = Pipeline.runIncrementalPinned(spark, b.toDS(), inc, "df-d1",
-      cfgD)
-    val r2 = Pipeline.runIncrementalPinned(spark, c.toDS(), inc, "df-d2",
-      cfgD)
-
-    // the ingests really DEFERRED: append-only versions that carry
-    // every base file, a dirty log with real merges
-    val baseFiles = Seq("assign", "nodes", "edges").map(st =>
-      st -> Snapshots.readManifestVersion(inc, st, 1).fileRows.keys
-        .map(k => s"snap=1/$k").toSet).toMap
-    Seq("assign", "nodes", "edges").foreach { st =>
-      val m = Snapshots.readManifest(inc, st)
-      assert(m.metrics.get("defer").contains("true"), s"$st not deferred")
-      assert(baseFiles(st).subsetOf(m.baseFiles.get.keySet), st)
-      assert(m.fileRows.keys.forall(_.startsWith("append/")), st)
-    }
-    assert(Pipeline.canonLogDirty(inc))
-    val logRows = Snapshots.readManifest(inc, Pipeline.CanonLogStage).rows
-    assert(logRows > 10, s"expected real merges in the log, got $logRows")
-    assert(r1.nodes == 61 && r2.nodes == 62,
-      s"logical-node arithmetic drifted: ${r1.nodes}/${r2.nodes}")
-
-    // resolved graph equals the from-scratch run; stored node ROWS
-    // over-count merged components (that is what deferral defers),
-    // while Result.nodes carries the exact logical count
     val full = tmpDir("defer-full")
     val rFull = Pipeline.run(spark, (a ++ b ++ c).toDS(), full, "df-full",
       cfgD)
-    assert(nodeSet(inc) == nodeSet(full))
-    assert(edgeSet(inc) == edgeSet(full))
-    assert(r2.nodes == rFull.nodes && r2.edges == rFull.edges)
-    assert(r1.nodes > 0 && r1.nodes <= r2.nodes)
+
+    // the chain on both CC paths of the tail: the local union-find
+    // (default threshold) and the distributed star fixpoint (0)
+    def chain(cfg: Pipeline.Config): (String, Pipeline.Result,
+        Pipeline.Result) = {
+      val inc = tmpDir(s"defer-cc${cfg.ccLocalThreshold}")
+      Pipeline.run(spark, a.toDS(), inc, "df-base", cfg)
+      Pipeline.pinEpoch(spark, inc, "df-pin", cfg)
+      val r1 = Pipeline.runIncrementalPinned(spark, b.toDS(), inc, "df-d1",
+        cfg)
+      val r2 = Pipeline.runIncrementalPinned(spark, c.toDS(), inc, "df-d2",
+        cfg)
+      val tag = s"ccLocalThreshold=${cfg.ccLocalThreshold}"
+
+      // the ingests really DEFERRED: append-only versions that carry
+      // every base file (no full tail version after the base run), a
+      // dirty log with real merges
+      val baseFiles = Seq("assign", "nodes", "edges").map(st =>
+        st -> Snapshots.readManifestVersion(inc, st, 1).fileRows.keys
+          .map(k => s"snap=1/$k").toSet).toMap
+      Seq("assign", "nodes", "edges").foreach { st =>
+        val m = Snapshots.readManifest(inc, st)
+        assert(m.metrics.get("defer").contains("true"), s"$st not deferred")
+        assert(baseFiles(st).subsetOf(m.baseFiles.get.keySet), st)
+        assert(m.fileRows.keys.forall(_.startsWith("append/")), st)
+        assert(Snapshots.versions(inc, st).tail.forall(v => Snapshots
+          .readManifestVersion(inc, st, v).baseFiles.exists(_.nonEmpty)),
+          s"$st: a full tail version ($tag)")
+      }
+      assert(Pipeline.canonLogDirty(inc))
+      val logRows = Snapshots.readManifest(inc, Pipeline.CanonLogStage).rows
+      assert(logRows > 10, s"expected real merges in the log, got $logRows")
+      assert(r1.nodes == 61 && r2.nodes == 62,
+        s"logical-node arithmetic drifted: ${r1.nodes}/${r2.nodes} ($tag)")
+      // merges in BOTH ingests, each counted in its tail's manifests
+      Seq(2, 3).foreach { v =>
+        assert(Snapshots.readManifestVersion(inc, "assign", v)
+          .metrics("merges").toLong > 0, s"assign v$v had no merges ($tag)")
+      }
+
+      // resolved graph equals the from-scratch run, row for row; stored
+      // node ROWS over-count merged components (that is what deferral
+      // defers), while Result.nodes carries the exact logical count
+      val cols = Seq("canonicalId", "canonical", "kind", "memberCount")
+      val ecols = Seq("subj", "pred", "canonicalId", "conf", "repo", "path",
+        "commit")
+      def same(x: org.apache.spark.sql.DataFrame, y: org.apache.spark.sql.DataFrame): Boolean =
+        x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+      assert(same(Pipeline.readNodes(spark, inc).selectExpr(cols: _*),
+        Pipeline.readNodes(spark, full).selectExpr(cols: _*)), tag)
+      assert(same(Pipeline.readEdges(spark, inc).selectExpr(ecols: _*),
+        Pipeline.readEdges(spark, full).selectExpr(ecols: _*)), tag)
+      assert(r2.nodes == rFull.nodes && r2.edges == rFull.edges, tag)
+      assert(r1.nodes > 0 && r1.nodes <= r2.nodes)
+      (inc, r1, r2)
+    }
+    // the distributed path really ran in both ingests' tails
+    val (_, x1, x2) = chain(cfgD.copy(ccLocalThreshold = 0L))
+    assert(x1.ccIterations > 0 && x2.ccIterations > 0,
+      s"distributed CC iterations: ${x1.ccIterations}/${x2.ccIterations}")
+    val (inc, _, r2) = chain(cfgD)
     val physicalRows = Snapshots.read(spark, inc, "nodes").count()
     assert(physicalRows > r2.nodes,
       s"deferral should leave constituent rows: $physicalRows vs ${r2.nodes}")
@@ -780,8 +842,8 @@ class PipelineSpec extends SparkSpec {
     assert(nodeSet(inc) == nodeSet(full2))
     assert(r3.edges == Snapshots.readManifest(full2, "edges").rows)
 
-    // deferMerges=false over a dirty log: the ingest applies merges
-    // through the global tail, which clears the log
+    // deferMerges=false over a dirty log: the O(delta) tail composes
+    // the log, and the fold right after it applies and clears it
     val inc2 = tmpDir("defer-cow")
     Pipeline.run(spark, a.toDS(), inc2, "df-base", cfgD)
     Pipeline.pinEpoch(spark, inc2, "df-pin", cfgD)
@@ -789,11 +851,55 @@ class PipelineSpec extends SparkSpec {
     assert(Pipeline.canonLogDirty(inc2))
     Pipeline.runIncrementalPinned(spark, c.toDS(), inc2, "df-d2",
       cfgD.copy(deferMerges = false))
-    assert(!Pipeline.canonLogDirty(inc2),
-      "the global tail must clear the stale log")
-    assert(!Snapshots.readManifest(inc2, "nodes").metrics.contains("defer"))
+    assert(!Pipeline.canonLogDirty(inc2), "the fold must clear the log")
+    val m2 = Snapshots.readManifest(inc2, "nodes")
+    assert(!m2.metrics.contains("defer") &&
+      m2.metrics.get("compacted").contains("true"))
     assert(nodeSet(inc2) == nodeSet(full))
     assert(edgeSet(inc2) == edgeSet(full))
+  }
+
+  test("a delta linked to a root an earlier ingest merged away resolves it through the canon log") {
+    // base: one host per class; delta 1: its upper-case twin (same
+    // norm) — where the twin's id is smaller, the base host's root
+    // merges away into it (a log key whose assign row is an identity
+    // row); delta 2: the www. variant, linked fuzzily to BOTH stored
+    // forms, so one pair-graph endpoint is that merged-away root
+    def f(name: String, host: String) = SourceFile("r", name, "c0", "md",
+      s"see https://$host/x")
+    val hosts = (0 until 24).map(i => s"svc$i-gateway.region$i.example.net")
+    val a = hosts.zipWithIndex.map { case (h, i) => f(s"a$i.md", h) }
+    val b = hosts.zipWithIndex.map { case (h, i) => f(s"b$i.md", h.toUpperCase) }
+    val c = hosts.zipWithIndex.map { case (h, i) => f(s"c$i.md", s"www.$h") }
+    val cfg = Pipeline.Config(link =
+      graft.link.Linking.Config(exactSmallThreshold = 0L))
+    val inc = tmpDir("logkey")
+    Pipeline.run(spark, a.toDS(), inc, "lk-base", cfg)
+    Pipeline.pinEpoch(spark, inc, "lk-pin", cfg)
+    Pipeline.runIncrementalPinned(spark, b.toDS(), inc, "lk-d1", cfg)
+    val logKeys = Snapshots.read(spark, inc, Pipeline.CanonLogStage)
+      .select("oldRoot").as[Long].collect().toSet
+    Pipeline.runIncrementalPinned(spark, c.toDS(), inc, "lk-d2", cfg)
+    val d2 = Snapshots.versions(inc, "link_edges").filter(v =>
+      Snapshots.readManifestVersion(inc, "link_edges", v).runId == "lk-d2")
+    val ends = d2.flatMap(v => Snapshots.readVersion(spark, inc,
+      "link_edges", v).select("src", "dst").as[(Long, Long)].collect()
+      .flatMap { case (s, d) => Seq(s, d) }).toSet
+    assert(ends.intersect(logKeys).nonEmpty,
+      s"no delta-2 link edge reaches a merged-away root: $logKeys")
+    // the log stays single-hop with one row per merged-away root
+    val log = Snapshots.read(spark, inc, Pipeline.CanonLogStage)
+      .select("oldRoot", "newRoot").as[(Long, Long)].collect().toSeq
+    assert(log.map(_._1).distinct.length == log.length, log)
+    assert(log.map(_._2).toSet.intersect(log.map(_._1).toSet).isEmpty, log)
+
+    val hot = Snapshots.read(spark, inc, "ep_census")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val full = tmpDir("logkey-full")
+    Pipeline.run(spark, (a ++ b ++ c).toDS(), full, "lk-full",
+      cfg.copy(link = cfg.link.copy(pinnedHot = Some(hot))))
+    assert(nodeSet(inc) == nodeSet(full))
+    assert(edgeSet(inc) == edgeSet(full))
   }
 
   test("census drift: measured per pinned ingest, refuses a stale epoch, re-pin recovers") {

@@ -245,6 +245,9 @@ class StreamingSpec extends SparkSpec {
     def nodes(d: String) = Pipeline.readNodes(spark, d)
       .select($"canonicalId", $"canonical", $"kind", $"memberCount")
       .as[(Long, String, String, Long)].collect().toSet
+    def edges(d: String) = Pipeline.readEdges(spark, d)
+      .select($"subj", $"pred", $"canonicalId")
+      .as[(String, String, Long)].collect().toSet
     assert(nodes(runDir) == nodes(full))
 
     // crash between base run and pin: drop the epoch state, replay an
@@ -259,6 +262,31 @@ class StreamingSpec extends SparkSpec {
     Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
       assert(Snapshots.isComplete(runDir, st), s"$st not re-pinned"))
     assert(Snapshots.versions(runDir, "extract") == Seq(1, 2))
+
+    // the BASE batch crashed before a stage published (its extract is
+    // the only version): the replay resumes the base run, then pins,
+    // and the graph equals a fresh run of the same batch
+    val base = graft.fixtures.FilesGen.local(150)
+    val fresh = java.nio.file.Files
+      .createTempDirectory("graft-stream-ep-fresh").toString
+    Pipeline.run(spark, base.toDS(), fresh, "fresh", cfg)
+    Seq("entities", "assign").foreach { crashAt =>
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft-stream-ep-$crashAt").toString
+      assert(Streaming.ingestBatch(base.toDS(), batchId = 0L, dir, cfg,
+        epochPinned = true))
+      val lost = Pipeline.Stages.dropWhile(_ != crashAt) ++
+        Seq("ep_census", "ep_shingles", "ep_keys")
+      lost.foreach(st => Snapshots.deleteDir(Snapshots.stageDir(dir, st)))
+      assert(Streaming.ingestBatch(base.toDS(), batchId = 0L, dir, cfg,
+        epochPinned = true), s"crash before $crashAt must re-apply")
+      assert(Snapshots.versions(dir, "extract") == Seq(1), crashAt)
+      Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
+        assert(Snapshots.isComplete(dir, st), s"$st not pinned ($crashAt)"))
+      assert(nodes(dir) == nodes(fresh), crashAt)
+      assert(edges(dir) == edges(fresh), crashAt)
+      Snapshots.deleteDir(dir)
+    }
   }
 
   test("streaming KG ingest with DEFERRED merges: append-only batches; log is the replay commit record") {
@@ -306,7 +334,8 @@ class StreamingSpec extends SparkSpec {
 
     // CRASH WINDOW: appends published, canon log (the commit record)
     // lost. The replayed batch must NOT be treated as applied — it
-    // re-applies and heals through the global tail
+    // re-applies: its partial tail rolls back to the pre-batch
+    // versions and the O(delta) tail re-runs
     java.nio.file.Files.delete(java.nio.file.Path.of(
       Snapshots.stageDir(runDir, Pipeline.CanonLogStage),
       "_MANIFEST.json"))
