@@ -184,10 +184,12 @@ object Pipeline {
     // reads only the latest (delta-only!) snapshot and would silently
     // rebuild the downstream graph from the last delta alone. Recovery
     // of a crashed ingest goes through runIncremental (idempotent per
-    // runId), never through run().
-    require(Snapshots.versions(runDir, "extract").length <= 1,
-      s"$runDir has incremental extract versions — resume a crashed " +
-        "ingest with runIncremental (same runId), or start a fresh runDir")
+    // runId), never through run(). A recompute deletes every version
+    // below, so only a resume is refused.
+    if (resume)
+      require(Snapshots.versions(runDir, "extract").length <= 1,
+        s"$runDir has incremental extract versions — resume a crashed " +
+          "ingest with runIncremental (same runId), or start a fresh runDir")
 
     // a recompute (resume=false) starts from an empty lineage: the
     // prior run's stages go (else its extract version would sum with
@@ -376,7 +378,7 @@ object Pipeline {
     val cap = cfg.link.stopShingleCap(nEnts)
     val shingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
       resume = false, metrics = Map("delta" -> "false")) {
-      Linking.shingleTable(fuzzy, cfg.link)
+      Linking.shingleTable(fuzzy)
     }
     val hot = Linking.hotShingles(shingled, cap)
     // ep_census and ep_keys both derive from (shingled, hot) and
@@ -431,8 +433,8 @@ object Pipeline {
     cfg.maxLineageDeltas.foreach(compactLineage(spark, runDir, runId, _))
 
     // 1. delta-only extract (idempotent per runId)
-    val deltaTriples = triplesOf(graft.store.IOStat.timed("pin.extract")(
-      extractDeltaOnce(spark, newFiles, runDir, runId, cfg)))
+    val deltaTriples = triplesOf(
+      extractDeltaOnce(spark, newFiles, runDir, runId, cfg))
 
     // "the world before this ingest": lineage versions excluding any
     // slice a crashed attempt of THIS runId already appended
@@ -446,8 +448,7 @@ object Pipeline {
     // the delta extract's manifest rows).
     val deltaExtractRows = deltaRowsOf(runDir, "extract", runId)
     val entsOld = oldUnion("entities")
-    val newEnts = graft.store.IOStat.timed("pin.entities")(
-      appendOnce(spark, runDir, "entities", runId) {
+    val newEnts = appendOnce(spark, runDir, "entities", runId) {
       val deltaForms = Linking.entitiesOf(deltaTriples)
       val existing = entsOld
         .join(SkewJoin.hinted(deltaForms.select("entityId"), deltaExtractRows),
@@ -455,15 +456,14 @@ object Pipeline {
         .select("entityId").distinct()
       deltaForms.join(SkewJoin.hinted(existing, deltaExtractRows),
         Seq("entityId"), "left_anti")
-    })
+    }
 
     // 3. delta shingles + band keys under the PINNED census
     val hot = pinnedHot(spark, runDir)
-    val deltaShingled = graft.store.IOStat.timed("pin.shingles")(
-      appendOnce(spark, runDir, "ep_shingles", runId) {
-        Linking.shingleTable(
-          newEnts.filter(col("pred").isin(Linking.FuzzyPreds: _*)), cfg.link)
-      })
+    val deltaShingled = appendOnce(spark, runDir, "ep_shingles", runId) {
+      Linking.shingleTable(
+        newEnts.filter(col("pred").isin(Linking.FuzzyPreds: _*)))
+    }
 
     // 3b. CENSUS DRIFT — what the frozen epoch is silently costing:
     // of the delta's distinct (pred, shingle) keys, the fraction whose
@@ -497,30 +497,26 @@ object Pipeline {
           "(global relink, bumps the epoch) then pinEpoch")
     }
 
-    val deltaKeys = graft.store.IOStat.timed("pin.keys")(
-      appendOnce(spark, runDir, "ep_keys", runId,
-        Map("censusDrift" -> f"$drift%.6f",
-          "driftSec" -> f"$driftSec%.2f")) {
-        Linking.bandedKeyTable(deltaShingled, cfg.link, hot)
-      })
+    val deltaKeys = appendOnce(spark, runDir, "ep_keys", runId,
+      Map("censusDrift" -> f"$drift%.6f", "driftSec" -> f"$driftSec%.2f")) {
+      Linking.bandedKeyTable(deltaShingled, cfg.link, hot)
+    }
     val deltaKeyRows = deltaRowsOf(runDir, "ep_keys", runId)
 
     // 4. new edges = delta-vs-all (exact-norm + banded fuzzy), each
     // pair carrying >=1 delta endpoint — disjoint from stored edges
-    val deltaLinks = graft.store.IOStat.timed("pin.links")(
-      appendOnce(spark, runDir, "link_edges", runId) {
-        val keysAll = lineageUnion(spark, runDir, "ep_keys")
-        val shingledAll = lineageUnion(spark, runDir, "ep_shingles")
-        Linking.deltaExactEdges(entsOld, newEnts, deltaExtractRows)
-          .unionByName(Linking.deltaFuzzyEdges(deltaKeys, keysAll,
-            shingledAll, cfg.link, deltaKeyRows))
-      })
+    val deltaLinks = appendOnce(spark, runDir, "link_edges", runId) {
+      val keysAll = lineageUnion(spark, runDir, "ep_keys")
+      val shingledAll = lineageUnion(spark, runDir, "ep_shingles")
+      Linking.deltaExactEdges(entsOld, newEnts, deltaExtractRows)
+        .unionByName(Linking.deltaFuzzyEdges(deltaKeys, keysAll,
+          shingledAll, cfg.link, deltaKeyRows))
+    }
     val deltaLinkRows = deltaRowsOf(runDir, "link_edges", runId)
 
     // 5. canonicalize + materialize: the O(delta) merge-on-read tail
-    val ccIters = graft.store.IOStat.timed("pin.canon")(
-      mergeOnReadTail(spark, runDir, runId, cfg,
-        deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows))
+    val ccIters = mergeOnReadTail(spark, runDir, runId, cfg,
+      deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows)
     resultFrom(runDir, runId, ccIters)
   }
 
@@ -648,7 +644,6 @@ object Pipeline {
     // delta ids that stayed roots (a new logical node each)
     val newRoots = deltaRowsOf(runDir, "entities", runId) - counts.getLong(1)
 
-    val appendParts = Snapshots.appendFiles(deltaExtractRows)
     val tailMetrics = Map(
       "ccIterations" -> cc.iterations.toString,
       "merges" -> merges.toString,
@@ -664,16 +659,13 @@ object Pipeline {
     val assignApp = withCb(deltaAssign, bucketsOf(runDir, "assign"))
       .withColumn("ident",
         ($"canonicalId" === $"entityId").cast("string"))
-      .repartition(appendParts)
     val nodesApp = withCb(nodeTableFull(deltaAssign),
         bucketsOf(runDir, "nodes"))
-      .repartition(appendParts).sortWithinPartitions($"kind")
     val edgesApp = withCb(rooted(deltaTriples.withColumn("entityId",
         Linking.idCol($"pred", $"obj")), "entityId", "r")
       .join(movedTo("r"), Seq("r"), "left")
       .withColumn("canonicalId", coalesce($"comp", $"r"))
       .select(EdgeCols.map(col): _*), bucketsOf(runDir, "edges"))
-      .repartition(appendParts).sortWithinPartitions($"pred")
 
     // captured BEFORE the appends publish: the live nodes manifest is
     // about to gain this delta's constituent rows
@@ -686,15 +678,17 @@ object Pipeline {
     // --- 4. publish the three appends CONCURRENTLY: each touches ONLY
     // its own stage, so the three narrow publish jobs overlap instead
     // of serializing three rounds of write + commit + footer latency.
-    // ANY partially-published subset rolls back on retry.
-    def append(st: String, partBy: Seq[String], app: DataFrame): Unit =
-      Snapshots.stageAppend(spark, runDir, st, runId, partBy, tailMetrics ++
+    // ANY partially-published subset rolls back on retry. Each append
+    // is clustered like its stage's full snapshots: assign by its
+    // ident partitions, nodes by kind, edges by pred.
+    def append(st: String, clusterBy: Seq[String], app: DataFrame): Unit =
+      Snapshots.stageAppend(spark, runDir, st, runId, clusterBy, tailMetrics ++
         bucketsOf(runDir, st).map("canonBuckets" -> _.toString) +
         ("defer" -> "true"))(app)
     parallelRun(Seq(
       () => append("assign", Seq("ident"), assignApp),
-      () => append("nodes", Nil, nodesApp),
-      () => append("edges", Nil, edgesApp)))
+      () => append("nodes", Seq("kind"), nodesApp),
+      () => append("edges", Seq("pred"), edgesApp)))
 
     // --- 5. the canon log, LAST (commit record). Compressed
     // single-hop: prior targets re-resolve through this ingest's
@@ -734,7 +728,6 @@ object Pipeline {
     */
   def compactTail(spark: SparkSession, runDir: String, runId: String,
                   frac: Double): Seq[String] = {
-    import org.apache.spark.sql.DataFrame
     val stages = Seq("assign", "nodes", "edges")
     if (!stages.forall(Snapshots.isComplete(runDir, _))) return Nil
     val dirty = canonLogDirty(runDir)
@@ -1164,11 +1157,10 @@ object Pipeline {
     // canonical DELTA map. Only entities whose canonical id DIFFERS
     // from their own id need rewriting — a small fraction at any scale
     // (12.5% of 2.0M at the 200k-file bench; most entities are
-    // unlinked singletons), and most of those never shrink the
-    // fraction below what broadcast can hold until the corpus is huge.
-    // Left-join the pruned ident=false slice and coalesce: when the
-    // delta fits the broadcast cap this stage shuffles NOTHING of the
-    // triple side (skew-immune by construction); beyond the cap it
+    // unlinked singletons). Left-join the pruned ident=false slice and
+    // coalesce: when the delta fits the session's broadcast threshold
+    // ([[SkewJoin.hinted]]) this stage shuffles NOTHING of the triple
+    // side (skew-immune by construction); beyond it the join
     // degrades to a left shuffle join against the delta — still
     // strictly smaller than the full 1:1 map the previous design
     // joined (AQE covers hub-entity skew there).
@@ -1208,9 +1200,9 @@ object Pipeline {
     * snapshot versions (a full run has one; each incremental ingest
     * appends one); entities/link_edges sum their current LINEAGE
     * (one full version after a global relink; full + disjoint delta
-    * appends under a pinned epoch); assign/nodes/edges are always
-    * globally recomputed, so their latest manifest IS the global
-    * count.
+    * appends under a pinned epoch); the live nodes/edges manifests
+    * count their merge-on-read appends too, so edges is the live
+    * manifest's rows and nodes is read from a dirty canon log (below).
     */
   private def resultFrom(runDir: String, runId: String,
                          ccIters: Int): Result = {

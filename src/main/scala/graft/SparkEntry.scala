@@ -938,7 +938,7 @@ object SparkEntry {
         .metrics.get("defer").contains("true") &&
         graft.Pipeline.canonLogDirty(runDir),
         "kg_nodes_pinned must read through the merge-on-read tail's " +
-          "dirty canon log, not the global fallback")
+          "appends and dirty canon log, not a folded graph")
       asksNodes(s, runDir)
     }),
     // ---- MERGE-ON-READ lifecycle under the hash gate: the pinned

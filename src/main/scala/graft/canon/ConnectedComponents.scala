@@ -54,8 +54,8 @@ object ConnectedComponents {
     * edge-touched node (≈2× fewer here, unboundedly fewer on graphs
     * of many small components), and downstream joins build against
     * the smaller side.
-    */
-  /** `edgeCountHint`: an exact-or-upper bound on the RAW edge count,
+    *
+    * `edgeCountHint`: an exact-or-upper bound on the RAW edge count,
     * when the caller already knows it (the Pipeline reads it off the
     * link_edges snapshot manifests for free). With a hint the path
     * decision costs NO job at all: a small graph goes straight to the

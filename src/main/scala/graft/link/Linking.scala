@@ -14,13 +14,13 @@ import org.apache.spark.sql.functions._
   *     directly — a groupBy on the blocking key (pred, norm).
   *  2. MinHash-LSH candidates: 3-gram character shingles of the
   *     normalized form, stop shingles (df above a scale-free cap)
-  *     removed, → hand-rolled min-xxhash64 band keys (rowsPerBand
+  *     removed, → hand-rolled min-xxhash64 band keys ([[RowsPerBand]]
   *     AND-amplified per band, OR across bands; pred folded into the
   *     key hash) bucketed on the single 8-byte band key, then each
   *     candidate pair SCORED with the exact set Jaccard over the
   *     true shingle sets inside a shuffle join (the sort-merge-join
   *     scoring phase of the north rule). Pairs with Jaccard ≥
-  *     threshold become edges (within-pred by construction of the
+  *     [[Threshold]] become edges (within-pred by construction of the
   *     bucket key).
   *
   * Absent from the reference (it has no linking at all — SURVEY.md §2
@@ -38,25 +38,36 @@ object Linking {
   val FuzzyPreds: Seq[String] =
     Seq("mentions_domain", "references", "tagged", "imports")
 
+  // The scoring and banding parameters are constants, not Config
+  // fields: a pinned epoch stores band keys and shingle sets computed
+  // under them (Pipeline.pinEpoch), and a later ingest's delta keys
+  // only join those if it computes them under the same values. The
+  // DuckDB twins of the KG queries hard-code the same 3-grams and 0.5.
+
+  /** Min Jaccard similarity on [[ShingleSize]]-gram shingles. */
+  val Threshold = 0.5
+  /** Banding: `Bands` OR-amplified bands of `RowsPerBand`
+    * AND-amplified minhashes. r>1 is what keeps candidate volume
+    * near-linear on real corpora: entities sharing COMMON substrings
+    * (every .org host shares the tld shingles) have pairwise J ≈
+    * 0.1, and with r=1 each such pair collides per band with p=J —
+    * a disguised all-pairs join (the same failure mode the round-2
+    * RP-LSH had in cosine space). Measured on the 200k-file bench
+    * fixture (466k fuzzy forms): r=3/b=16 still surfaced 35M noise
+    * candidates from J≈0.08 shingle-sharing pairs; r=4 drops that
+    * two orders (J⁴ ≈ 3.5e-5 per band) while true pairs (J ≥ 0.75)
+    * collide at ≈ 0.37 per band, so 20 bands give per-pair recall
+    * ≈ 1 - 1e-4. Borderline pairs follow the usual S-curve
+    * (j=0.6 → ~94% recall); the exact-Jaccard re-score means
+    * precision is always 1.0.
+    */
+  val Bands = 20
+  val RowsPerBand = 4
+  val ShingleSize = 3
+  /** Seed of the minhash family behind the band keys. */
+  val Seed = 42L
+
   final case class Config(
-      threshold: Double = 0.5, // min Jaccard similarity on 3-gram shingles
-      // banding: `bands` OR-amplified bands of `rowsPerBand`
-      // AND-amplified minhashes. r>1 is what keeps candidate volume
-      // near-linear on real corpora: entities sharing COMMON substrings
-      // (every .org host shares the tld shingles) have pairwise J ≈
-      // 0.1, and with r=1 each such pair collides per band with p=J —
-      // a disguised all-pairs join (the same failure mode the round-2
-      // RP-LSH had in cosine space). Measured on the 200k-file bench
-      // fixture (466k fuzzy forms): r=3/b=16 still surfaced 35M noise
-      // candidates from J≈0.08 shingle-sharing pairs; r=4 drops that
-      // two orders (J⁴ ≈ 3.5e-5 per band) while true pairs (J ≥ 0.75)
-      // collide at ≈ 0.37 per band, so 20 bands give per-pair recall
-      // ≈ 1 - 1e-4. Borderline pairs follow the usual S-curve
-      // (j=0.6 → ~94% recall); the exact-Jaccard re-score means
-      // precision is always 1.0.
-      bands: Int = 20,
-      rowsPerBand: Int = 4,
-      shingleSize: Int = 3,
       // stop-shingle cap for candidate BLOCKING (scoring always uses
       // the full shingle sets): shingles present in more than
       // max(maxShingleDf, maxShingleDfFrac * |entities|) forms carry no
@@ -67,7 +78,6 @@ object Linking {
       // candidates.
       maxShingleDf: Long = 1000L,
       maxShingleDfFrac: Double = 0.02,
-      seed: Long = 42L,
       // fuzzy sets at or below this size take the exact shingle-block
       // join (all pairs sharing a non-stop shingle, exact-Jaccard
       // scored) — a strict superset of the banded candidate set with
@@ -77,7 +87,7 @@ object Linking {
       exactSmallThreshold: Long = 20000L,
       // band buckets larger than this expand as a STAR around the
       // bucket's min id instead of the full clique: s members of one
-      // band key are s forms agreeing on rowsPerBand minhashes — a
+      // band key are s forms agreeing on RowsPerBand minhashes — a
       // near-duplicate cluster whose C(s,2) clique pairs are ~all
       // redundant for connectivity (CC unions them anyway). The star
       // keeps a pathological bucket (mass-duplicated entity at web
@@ -224,7 +234,7 @@ object Linking {
     */
   private def bandedKeys(shingled: DataFrame, cfg: Config,
                          n: Long): DataFrame = {
-    val nHashes = cfg.bands * cfg.rowsPerBand
+    val nHashes = Bands * RowsPerBand
     // all signatures in ONE codegen'd pass per row (MinHashSigs) —
     // the explode → groupBy → n×min(xxhash64) alternative shuffles
     // |shingles| rows per form and re-hashes every shingle n times.
@@ -232,19 +242,19 @@ object Linking {
     // mirroring the exact path's empty explode.
     val keys = withBlockShingles(shingled, cfg, n)
       .select(col("pred"), col("entityId"),
-        graft.functions.MinHashSigs(col("bsh"), nHashes, cfg.seed).as("sigs"))
+        graft.functions.MinHashSigs(col("bsh"), nHashes, Seed).as("sigs"))
       .filter(col("sigs").isNotNull)
     // band key = ONE xxhash64 over (band index, pred, the band's
-    // rowsPerBand signatures) — the whole bucket identity in a single
+    // RowsPerBand signatures) — the whole bucket identity in a single
     // 8-byte column, so the census sort/exchange and the bucket
     // groupBy key on one long (vs the round-7 pred string + band int
     // + 4-long struct). A 64-bit collision merges two unrelated
     // buckets — it can only ADD candidates (scored exactly
     // downstream), never drop one, so the recall analysis in
     // [[lshEdges]] is a lower bound either way.
-    val bandKeys = (0 until cfg.bands).map { b =>
-      xxhash64(lit(b) +: col("pred") +: (0 until cfg.rowsPerBand).map(r =>
-        col("sigs").getItem(b * cfg.rowsPerBand + r)): _*)
+    val bandKeys = (0 until Bands).map { b =>
+      xxhash64(lit(b) +: col("pred") +: (0 until RowsPerBand).map(r =>
+        col("sigs").getItem(b * RowsPerBand + r)): _*)
     }
     keys.select(col("entityId"),
         explode(array(bandKeys: _*)).as("key"))
@@ -354,8 +364,7 @@ object Linking {
     * without pinning block-manager memory the way persist() would.
     */
   private def sharedShingles(ents: DataFrame, cfg: Config): DataFrame = {
-    val sh = withShingles(ents, cfg.shingleSize)
-      .select(col("pred"), col("entityId"), col("shingles"))
+    val sh = shingleTable(ents)
     cfg.scratchDir match {
       case Some(dir) =>
         // unique subdir per link run: the write is EAGER but the
@@ -464,7 +473,7 @@ object Linking {
       .join(hinted(sets.as("sa")), pairs("src") === col("sa.entityId"))
       .join(hinted(sets.as("sb")), pairs("dst") === col("sb.entityId"))
       .select(col("src"), col("dst"), (inter / uni).as("j"))
-      .filter(col("j") >= cfg.threshold)
+      .filter(col("j") >= Threshold)
       .select(col("src"), col("dst"))
   }
 
@@ -492,8 +501,8 @@ object Linking {
     scorePairs(cand, shingled, cfg)
   }
 
-  /** Scale fuzzy path: banded MinHash candidates — `bands` compound
-    * keys of `rowsPerBand` min-xxhash64 signatures over the stop-
+  /** Scale fuzzy path: banded MinHash candidates — [[Bands]] compound
+    * keys of [[RowsPerBand]] min-xxhash64 signatures over the stop-
     * filtered shingle sets (AND within a band, OR across bands; same
     * scheme as MLlib's MinHashLSH but with r>1, no fit step, and no TF
     * feature hashing), then [[scorePairs]] on the full sets. A pair
@@ -532,8 +541,8 @@ object Linking {
     * epoch's stored shingle artifact (what [[sharedShingles]] computes
     * per run, as a value the pipeline can snapshot and append to).
     */
-  private[graft] def shingleTable(ents: DataFrame, cfg: Config): DataFrame =
-    withShingles(ents, cfg.shingleSize)
+  private[graft] def shingleTable(ents: DataFrame): DataFrame =
+    withShingles(ents, ShingleSize)
       .select(col("pred"), col("entityId"), col("shingles"))
 
   /** Banded key table under an EXPLICIT (pinned) stop census — the

@@ -31,43 +31,30 @@ object SkewJoin {
     */
   val MinRowsForDetection = 1000000L
 
-  /** A unique-per-key right side at or below this row count is
-    * broadcast outright — a broadcast hash join is skew-IMMUNE (no
-    * shuffle of the left at all), so both the detection pass and the
-    * hot/cold split are pure waste when the dimension side is small.
-    * Sized for the NARROW right sides this module contracts for (an
-    * id→id mapping is ~16 bytes/row → ~32 MB at the cap — well inside
-    * executor broadcast budgets); wide dimension tables must not come
-    * through the hint fast path (see [[joinUniqueRight]]).
+  /** `df` with a broadcast hint while its size estimate is within the
+    * session's `spark.sql.autoBroadcastJoinThreshold` — the threshold
+    * the planner applies to every join it sizes itself, so a negative
+    * one never broadcasts. The estimate is `rows`, a known or
+    * upper-bound row count (from a stage manifest), times the row size
+    * Catalyst's size-only estimator uses for `df`'s own schema: 8 bytes
+    * plus each column's default size. Beyond the threshold the join is
+    * left to AQE's runtime sizes instead of an unbounded broadcast.
     */
-  val BroadcastableRightRows = 2000000L
+  def hinted(df: DataFrame, rows: Long): DataFrame = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && rows * (8L + df.schema.defaultSize) <= threshold)
+      broadcast(df)
+    else df
+  }
 
-  /** `df` with a broadcast hint while `rows`, its known or upper-bound
-    * row count, is within [[BroadcastableRightRows]]; beyond it the
-    * join is left to AQE's runtime sizes instead of an unbounded
-    * broadcast.
-    */
-  def hinted(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= BroadcastableRightRows) broadcast(df) else df
-
-  /** left ⋈ right on `key`; `right` MUST be unique per key AND narrow
-    * (a few small columns — an id→id mapping, not a wide dimension
-    * table): the `rightCountHint` fast path broadcasts on ROW count
-    * alone, so a 500k-row right side is assumed to be ≲ tens of MB.
-    * Callers with wide right sides should pass rightCountHint = None
-    * and let AQE decide from actual byte statistics.
+  /** left ⋈ right on `key`; `right` MUST be unique per key.
     * `leftCountHint`: pass a known (or upper-bound) left row count to
     * skip the detection aggregation for small inputs — iterative
     * callers (CC) know it from their fixpoint bookkeeping.
-    * `rightCountHint`: pass a known right row count (e.g. from a stage
-    * manifest) to take the broadcast fast path without any probe job.
     */
   def joinUniqueRight(left: DataFrame, right: DataFrame, key: String,
                       hotThreshold: Long = 100000L,
-                      leftCountHint: Option[Long] = None,
-                      rightCountHint: Option[Long] = None): DataFrame = {
-    if (rightCountHint.exists(_ <= BroadcastableRightRows))
-      return left.join(broadcast(right), Seq(key))
+                      leftCountHint: Option[Long] = None): DataFrame = {
     if (leftCountHint.exists(_ < MinRowsForDetection))
       return left.join(right, Seq(key))
     val hotKeys = left.groupBy(key).count()

@@ -387,17 +387,22 @@ object Snapshots {
     * under steady ingestion. Append mass itself is bounded by the
     * compaction trigger ([[compact]]).
     *
+    * The delta and every cascade merge are written [[clustered]] by
+    * `clusterBy` (a partitioned stage's partition columns, or the
+    * columns its full snapshots are sorted by), so AQE sizes their
+    * files from the shuffle bytes it measures.
+    *
     * NOTE for callers: partition columns read back with
     * partition-inference types (a boolean dir value such as assign's
     * ident reads back as a string) — the append frame must carry
-    * `partitionBy` with exactly those types.
+    * them with exactly those types.
     *
     * Same publish protocol as [[stage]] (data → versioned manifest →
     * live pointer last), so a crashed append is invisible and the
     * retry republishes under the same version number.
     */
   def stageAppend(spark: SparkSession, runDir: String, stageName: String,
-                  runId: String, partitionBy: Seq[String],
+                  runId: String, clusterBy: Seq[String],
                   metrics: => Map[String, String] = Map.empty)
                  (append: => DataFrame): Unit = {
     val base = readManifest(runDir, stageName)
@@ -413,7 +418,7 @@ object Snapshots {
 
     val t0 = System.nanoTime()
     val adf = append
-    adf.write.mode(SaveMode.Overwrite)
+    clustered(adf, clusterBy).write.mode(SaveMode.Overwrite)
       .option("compression", StageCompression)
       .parquet(s"$dir/append/d")
     val deltaStats = footerStats(s"$dir/append/d")
@@ -433,11 +438,7 @@ object Snapshots {
       val merged = (deltaBack ++ absorbed.map(fs =>
         spark.read.parquet(fs.map(f => s"$sd/$f"): _*)))
         .reduce(_ unionByName _)
-      val shaped0 = merged.repartition(appendFiles(carry))
-      val shaped = if (partitionBy.nonEmpty)
-        shaped0.sortWithinPartitions(partitionBy.map(col): _*)
-      else shaped0
-      shaped.write.mode(SaveMode.Overwrite)
+      clustered(merged, clusterBy).write.mode(SaveMode.Overwrite)
         .option("compression", StageCompression)
         .parquet(s"$dir/append/m")
       deleteDir(s"$dir/append/d")
@@ -478,13 +479,17 @@ object Snapshots {
     // need it)
   }
 
-  /** Files for `rows` append rows: ~4M rows per file, between 1 and
-    * 64. Append rows are narrow (assign/nodes/edges schemas), so 4M
-    * rows ≈ a comfortable 100–300 MB task input; one file would funnel
-    * a large delta into one giant single-task write.
+  /** `df` REBALANCEd by `by` — AQE coalesces or splits the partitions
+    * to `spark.sql.adaptive.advisoryPartitionSizeInBytes` of measured
+    * shuffle bytes — and sorted by `by` within each. Rebalancing by
+    * columns keeps each key's rows in their input order (a round-robin
+    * rebalance would locally sort whole rows first), which is what
+    * keeps an append as compressible as its input.
     */
-  private[graft] def appendFiles(rows: Long): Int =
-    math.min(64L, math.max(1L, rows / 4000000L)).toInt
+  private def clustered(df: DataFrame, by: Seq[String]): DataFrame = {
+    val cols = by.map(col)
+    df.hint("rebalance", cols: _*).sortWithinPartitions(cols: _*)
+  }
 
   /** A stage-relative file path or read root inside an append set
     * (unpartitioned files; the partition columns ride as data columns).

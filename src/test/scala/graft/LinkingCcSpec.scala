@@ -117,7 +117,7 @@ class LinkingCcSpec extends SparkSpec {
     val ents = Linking.entitiesOf(
       variants.toDF("obj").withColumn("pred", lit("tagged")))
     val cfgCap = Linking.Config(maxBandBucket = 10)
-    val shingled = Linking.withShingles(ents, cfgCap.shingleSize)
+    val shingled = Linking.withShingles(ents, Linking.ShingleSize)
     val capped = Linking.lshCandidates(shingled, cfgCap, variants.size.toLong)
       .collect()
     val full = Linking.lshCandidates(shingled,
@@ -141,7 +141,7 @@ class LinkingCcSpec extends SparkSpec {
     // and a cap no bucket reaches changes nothing
     val fixtureFuzzy = LinkingCcSpec.this.ents.filter(
       org.apache.spark.sql.functions.col("pred").isin(Linking.FuzzyPreds: _*))
-    val sh2 = Linking.withShingles(fixtureFuzzy, cfgCap.shingleSize)
+    val sh2 = Linking.withShingles(fixtureFuzzy, Linking.ShingleSize)
     val nf = fixtureFuzzy.count()
     def candSet(cap: Int) =
       Linking.lshCandidates(sh2, Linking.Config(maxBandBucket = cap), nf)

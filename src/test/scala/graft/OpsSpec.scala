@@ -651,10 +651,7 @@ class OpsSpec extends SparkSpec {
     // disable coalescing so the parallelism assertion sees the
     // partitioning SHAPE (at real scale size-based coalescing is
     // exactly right)
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try {
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val df = spark.range(0, 10000).select($"id", lit("g").as("grp"),
         ($"id" % 7 + 1).as("n_tokens"))
       val out = Sampling.packSequences(df, $"grp", $"id", $"n_tokens", 100L)
@@ -669,7 +666,7 @@ class OpsSpec extends SparkSpec {
       val bad = out.filter($"start_tok" =!=
         expr("28 * (id div 7) + ((id % 7) * (id % 7 + 1)) div 2")).count()
       assert(bad == 0L)
-    } finally spark.conf.set(key, prev)
+    }
     // zero-token rows occupy no positions; last_bin clamps to first_bin
     val z = Sampling.packSequences(
         Seq((1L, "g", 5L), (2L, "g", 0L), (3L, "g", 7L)).toDF("id", "grp", "n"),

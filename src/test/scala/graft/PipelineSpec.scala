@@ -263,6 +263,14 @@ class PipelineSpec extends SparkSpec {
     assert(rInc.copy(runId = "x") == rFull.copy(runId = "x"))
     assert(nodeSet(dir) == nodeSet(full))
     assert(edgeSet(dir) == edgeSet(full))
+    // a recompute over a dir that has taken an ingest deletes its
+    // versions too: the same graph as from scratch, one extract version
+    val redo = Pipeline.run(spark, more.toDS(), dir, "run-4",
+      Pipeline.Config(resume = false))
+    assert(redo.copy(runId = "x") == rFull.copy(runId = "x"))
+    assert(Snapshots.versions(dir, "extract") == Seq(1))
+    assert(nodeSet(dir) == nodeSet(full))
+    assert(edgeSet(dir) == edgeSet(full))
   }
 
   test("resume after kill between stages reproduces the fresh run") {
@@ -390,11 +398,13 @@ class PipelineSpec extends SparkSpec {
     val rPinned = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
     // the default-Config ingest took the O(delta) merge-on-read tail:
-    // defer-marked appends and a dirty canon log as its commit record
+    // defer-marked appends and a dirty canon log as its commit record.
+    // AQE sizes each small rebalanced append as one file
     Seq("assign", "nodes", "edges").foreach { st =>
       val m = Snapshots.readManifest(inc, st)
       assert(m.runId == "ep-delta" && m.metrics.get("defer").contains("true"),
         s"$st not deferred")
+      assert(m.metrics.get("newFiles").contains("1"), s"$st: ${m.metrics}")
     }
     assert(Pipeline.canonLogDirty(inc))
     assertPlainLayout("after the deferred ingest (resolving read)")

@@ -45,6 +45,25 @@ class SkewJoinSpec extends SparkSpec {
     assert(got == resultSet(left.join(right, Seq("k"))))
   }
 
+  test("hinted broadcasts iff rows × Catalyst's row size is within the broadcast threshold") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    def broadcasts(rows: Long): Boolean =
+      SkewJoin.hinted(right, rows).queryExecution.analyzed.find {
+        case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+        case _ => false
+      }.isDefined
+    val rowSize = 8L + 8L + 20L // row overhead + long k + string tag
+    assert(8L + right.schema.defaultSize == rowSize)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    withConf(key -> (1000L * rowSize).toString) {
+      assert(broadcasts(999L) && broadcasts(1000L))
+      assert(!broadcasts(1001L))
+    }
+    withConf(key -> "-1") {
+      assert(!broadcasts(0L) && !broadcasts(1L))
+    }
+  }
+
   test("left rows without a right match drop (inner-join semantics)") {
     val sparseRight = Seq((0L, "hub")).toDF("k", "tag")
     val got = resultSet(SkewJoin.joinUniqueRight(left, sparseRight, "k",

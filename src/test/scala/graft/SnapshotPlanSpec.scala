@@ -351,6 +351,37 @@ class SnapshotPlanSpec extends SparkSpec {
     }
   }
 
+  test("append files are sized by AQE: one for a tiny append, several past the advisory size") {
+    val dir = tmpDir("sizing")
+    val base = Seq((1L, 0), (2L, 1))
+    Snapshots.stage(spark, dir, "t", "p1", resume = false,
+      partitionBy = Seq("b"))(appendDf(base))
+    def newFiles: Int =
+      Snapshots.readManifest(dir, "t").metrics("newFiles").toInt
+    def absorbed: String =
+      Snapshots.readManifest(dir, "t").metrics("absorbedSets")
+    val tiny = Seq((10L, 0), (11L, 1), (12L, 2))
+    Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b"))(appendDf(tiny))
+    assert(newFiles == 1 && absorbed == "0")
+    // an equal delta absorbs it: the cascade's merge of two files is
+    // published as one
+    val tiny2 = Seq((20L, 0), (21L, 1), (22L, 2))
+    Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b"))(appendDf(tiny2))
+    assert(newFiles == 1 && absorbed == "1")
+    // past the advisory size, a larger delta and its merge span files
+    val big = (1000L until 21000L).map(i => (i, (i % 4).toInt))
+    withConf(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k") {
+      Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b"))(appendDf(big))
+    }
+    assert(newFiles > 1 && absorbed == "1", s"newFiles = $newFiles")
+    val all = base ++ tiny ++ tiny2 ++ big
+    assert(readSeq(dir) == all.sorted)
+    assert(Snapshots.readManifest(dir, "t").rows == all.size.toLong)
+    deleteRec(Path.of(dir))
+  }
+
   test("compact folds buckets, patches and tombstoned appends into a full snapshot; old versions expire") {
     val dir = tmpDir("compact")
     Snapshots.stage(spark, dir, "t", "p1", resume = false,
