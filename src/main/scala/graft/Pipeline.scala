@@ -102,10 +102,10 @@ object Pipeline {
   /** Run independent publish tasks concurrently and propagate the
     * first failure only after every task finished or failed (no write
     * still in flight when the caller sees the error). Shared by every
-    * concurrent-publish site: the tasks must touch DISJOINT stages,
-    * and crash semantics rely on each stage's own manifest being its
-    * commit record (any partially-published subset heals through the
-    * caller's resume/retry path).
+    * concurrent-publish site: the tasks must touch DISJOINT stages. A
+    * crash that published only a subset heals through the caller's
+    * resume (run) or through the rollback every later writer starts
+    * with (see [[rollbackUncommitted]]).
     */
   private def parallelRun(tasks: Seq[() => Unit]): Unit = {
     if (tasks.isEmpty) return
@@ -124,6 +124,12 @@ object Pipeline {
 
   val Stages: Seq[String] =
     Seq("extract", "entities", "link_edges", "assign", "nodes", "edges")
+
+  /** The stages of a pinned epoch (see [[pinEpoch]]). */
+  private val EpochStages = Seq("ep_census", "ep_shingles", "ep_keys")
+
+  /** Manifest marker of an ingest's slice of a lineage stage. */
+  private val DeltaSlice = Map("delta" -> "true")
 
   /** Stage-3 logic (shared by `run` and the oracle-checked
     * `kg_nodes_exact` query): canonical id per entity via connected
@@ -182,14 +188,15 @@ object Pipeline {
     // a run dir that has received incremental ingests holds MULTIPLE
     // extract versions whose union is the corpus; run()'s resume path
     // reads only the latest (delta-only!) snapshot and would silently
-    // rebuild the downstream graph from the last delta alone. Recovery
-    // of a crashed ingest goes through runIncremental (idempotent per
-    // runId), never through run(). A recompute deletes every version
-    // below, so only a resume is refused.
+    // rebuild the downstream graph from the last delta alone. A crashed
+    // ingest recovers by re-running that ingest (same runId: it rolls
+    // itself back and re-runs), never through run(). A recompute
+    // deletes every version below, so only a resume is refused.
     if (resume)
       require(Snapshots.versions(runDir, "extract").length <= 1,
-        s"$runDir has incremental extract versions — resume a crashed " +
-          "ingest with runIncremental (same runId), or start a fresh runDir")
+        s"$runDir has incremental extract versions — re-run a crashed " +
+          "ingest with its runId (runIncremental or runIncrementalPinned), " +
+          "or start a fresh runDir")
 
     // a recompute (resume=false) starts from an empty lineage: the
     // prior run's stages go (else its extract version would sum with
@@ -197,7 +204,7 @@ object Pipeline {
     // describe the PREVIOUS run's graph, so a later pinned ingest fails
     // fast until pinEpoch re-freezes. A pure resume leaves them alone.
     if (!resume)
-      (Stages ++ Seq(CanonLogStage, "ep_census", "ep_keys", "ep_shingles"))
+      (Stages ++ EpochStages :+ CanonLogStage)
         .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
     val triples = triplesOf(
@@ -279,44 +286,27 @@ object Pipeline {
     *
     * Output equality with a from-scratch run over the full corpus is
     * spec-gated (PipelineSpec): incremental(A) + incremental(B) ≡
-    * full(A ∪ B) on nodes, edges, and counts.
+    * full(A ∪ B) on nodes, edges, and counts. Crash-retry follows the
+    * commit protocol (see [[alreadyCommitted]]).
     */
   def runIncremental(spark: SparkSession, newFiles: Dataset[SourceFile],
                      runDir: String, runId: String,
                      cfg: Config = Config()): Result = {
-    require(Snapshots.isComplete(runDir, "extract"),
-      s"no completed prior run in $runDir — use Pipeline.run for the first ingest")
+    if (alreadyCommitted(runDir, runId)) return resultFrom(runDir, runId, 0)
 
-    extractDeltaOnce(spark, newFiles, runDir, runId, cfg)
+    publishExtract(spark, newFiles, runDir, runId, cfg, resume = false)
 
     // a global relink is an EPOCH BUMP: any pinned epoch state derives
     // from the pre-ingest corpus and is stale the moment entities /
     // link_edges are globally recomputed — drop it so a later
     // runIncrementalPinned fails fast until pinEpoch re-freezes
-    Seq("ep_census", "ep_keys", "ep_shingles")
+    EpochStages
       .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
     val ccIters = downstream(spark, runDir, runId, cfg,
       allTriples(spark, runDir), resume = false)
     resultFrom(runDir, runId, ccIters)
   }
-
-  /** Delta-only extract as a new snapshot version — UNLESS a version
-    * with this runId already exists: a retry after a crash during the
-    * downstream stages must not append the same delta twice (the
-    * version union would double-count its triples). Idempotence key =
-    * the caller's runId, same contract as Streaming.ingestBatch.
-    * Returns this runId's extract rows.
-    */
-  private def extractDeltaOnce(spark: SparkSession,
-                               newFiles: Dataset[SourceFile],
-                               runDir: String, runId: String,
-                               cfg: Config): DataFrame =
-    versionsBy(runDir, "extract", runId).headOption match {
-      case Some(v) => Snapshots.readVersion(spark, runDir, "extract", v)
-      case None =>
-        publishExtract(spark, newFiles, runDir, runId, cfg, resume = false)
-    }
 
   // ------------------------------------------------------------------
   // EPOCH-PINNED incremental linking. runIncremental's global relink
@@ -365,8 +355,7 @@ object Pipeline {
   def pinEpoch(spark: SparkSession, runDir: String, runId: String,
                cfg: Config = Config()): Unit = {
     import spark.implicits._
-    require(Snapshots.isComplete(runDir, "entities"),
-      s"no completed run in $runDir — pinEpoch freezes an existing graph")
+    requireBase(runDir)
     val fuzzy = lineageUnion(spark, runDir, "entities")
       .filter(col("pred").isin(Linking.FuzzyPreds: _*))
     // cap from the entity manifest rows — the SAME n convention the
@@ -382,9 +371,9 @@ object Pipeline {
     }
     val hot = Linking.hotShingles(shingled, cap)
     // ep_census and ep_keys both derive from (shingled, hot) and
-    // publish disjoint stages — overlap the two publishes (same crash
-    // contract as the other concurrent publishes: each stage's own
-    // manifest is the commit record)
+    // publish disjoint stages — overlap the two publishes (a crash
+    // that published only some of the three epoch stages leaves a
+    // mixed epoch, which a re-run of pinEpoch replaces)
     parallelRun(Seq(
       () => {
         Snapshots.stage(spark, runDir, "ep_census", runId, resume = false,
@@ -414,41 +403,41 @@ object Pipeline {
 
   /** Epoch-incremental ingest: delta-only extract AND delta-only
     * linking under the pinned census (see the block comment above).
-    * Idempotent per runId at every appended stage, like
-    * [[runIncremental]].
+    * Each stage gains this ingest's slice as a delta version, and the
+    * merge-on-read tail's canon log commits them all; crash-retry
+    * follows the commit protocol (see [[alreadyCommitted]]).
     */
   def runIncrementalPinned(spark: SparkSession,
                            newFiles: Dataset[SourceFile],
                            runDir: String, runId: String,
                            cfg: Config = Config()): Result = {
     import spark.implicits._
-    require(Snapshots.isComplete(runDir, "extract"),
-      s"no completed prior run in $runDir — use Pipeline.run for the first ingest")
-    Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
+    if (alreadyCommitted(runDir, runId)) return resultFrom(runDir, runId, 0)
+    EpochStages.foreach(st =>
       require(Snapshots.isComplete(runDir, st),
         s"no pinned epoch in $runDir — run Pipeline.pinEpoch first"))
 
-    // lineage maintenance BEFORE this ingest appends anything: only
-    // completed foreign runs consolidate (see compactLineage)
+    // lineage maintenance BEFORE this ingest appends anything
     cfg.maxLineageDeltas.foreach(compactLineage(spark, runDir, runId, _))
 
-    // 1. delta-only extract (idempotent per runId)
+    // 1. delta-only extract
     val deltaTriples = triplesOf(
-      extractDeltaOnce(spark, newFiles, runDir, runId, cfg))
-
-    // "the world before this ingest": lineage versions excluding any
-    // slice a crashed attempt of THIS runId already appended
-    def oldUnion(stage: String): DataFrame = lineageUnion(spark, runDir,
-      stage, excludeRunId = Some(runId))
+      publishExtract(spark, newFiles, runDir, runId, cfg, resume = false))
+    // the rows of the slice `st` just published, from its manifest
+    def sliceRows(st: String): Long = Snapshots.readManifest(runDir, st).rows
+    val extractVersion = Snapshots.readManifest(runDir, "extract").version
+    val deltaExtractRows = sliceRows("extract")
 
     // 2. delta entity forms — distinct forms of the delta not already
     // in the stored entity table (which is only scanned: the delta's
     // ids broadcast into the probe, the survivors anti-join a tiny
     // set). Broadcast hints only while the delta is small (bounded by
-    // the delta extract's manifest rows).
-    val deltaExtractRows = deltaRowsOf(runDir, "extract", runId)
-    val entsOld = oldUnion("entities")
-    val newEnts = appendOnce(spark, runDir, "entities", runId) {
+    // the delta extract's manifest rows). `entsOld` is planned from the
+    // lineage manifests BEFORE the slice publishes: the world before
+    // this ingest.
+    val entsOld = lineageUnion(spark, runDir, "entities")
+    val newEnts = Snapshots.stage(spark, runDir, "entities", runId,
+      resume = false, metrics = DeltaSlice) {
       val deltaForms = Linking.entitiesOf(deltaTriples)
       val existing = entsOld
         .join(SkewJoin.hinted(deltaForms.select("entityId"), deltaExtractRows),
@@ -457,10 +446,12 @@ object Pipeline {
       deltaForms.join(SkewJoin.hinted(existing, deltaExtractRows),
         Seq("entityId"), "left_anti")
     }
+    val newEntRows = sliceRows("entities")
 
     // 3. delta shingles + band keys under the PINNED census
     val hot = pinnedHot(spark, runDir)
-    val deltaShingled = appendOnce(spark, runDir, "ep_shingles", runId) {
+    val deltaShingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
+      resume = false, metrics = DeltaSlice) {
       Linking.shingleTable(
         newEnts.filter(col("pred").isin(Linking.FuzzyPreds: _*)))
     }
@@ -484,9 +475,8 @@ object Pipeline {
     // (the measured set is empty) — known for free from the slice's
     // manifest, so the measurement jobs are skipped outright instead
     // of aggregating empty frames
-    val deltaShRows = deltaRowsOf(runDir, "ep_shingles", runId)
     val drift =
-      if (deltaShRows == 0L) 0.0
+      if (sliceRows("ep_shingles") == 0L) 0.0
       else censusDrift(spark, runDir, cfg, hot, deltaShingled,
         deltaExtractRows)
     val driftSec = (System.nanoTime() - tDrift0) / 1e9
@@ -497,26 +487,32 @@ object Pipeline {
           "(global relink, bumps the epoch) then pinEpoch")
     }
 
-    val deltaKeys = appendOnce(spark, runDir, "ep_keys", runId,
-      Map("censusDrift" -> f"$drift%.6f", "driftSec" -> f"$driftSec%.2f")) {
+    val deltaKeys = Snapshots.stage(spark, runDir, "ep_keys", runId,
+      resume = false, metrics = DeltaSlice ++ Map(
+        "censusDrift" -> f"$drift%.6f", "driftSec" -> f"$driftSec%.2f")) {
       Linking.bandedKeyTable(deltaShingled, cfg.link, hot)
     }
-    val deltaKeyRows = deltaRowsOf(runDir, "ep_keys", runId)
+    val deltaKeyRows = sliceRows("ep_keys")
 
     // 4. new edges = delta-vs-all (exact-norm + banded fuzzy), each
-    // pair carrying >=1 delta endpoint — disjoint from stored edges
-    val deltaLinks = appendOnce(spark, runDir, "link_edges", runId) {
+    // pair carrying >=1 delta endpoint — disjoint from stored edges.
+    // A set, like the global stage's exact ∪ fuzzy union: the distinct
+    // is the one exchange, so AQE sizes the slice's files
+    val deltaLinks = Snapshots.stage(spark, runDir, "link_edges", runId,
+      resume = false, metrics = DeltaSlice) {
       val keysAll = lineageUnion(spark, runDir, "ep_keys")
       val shingledAll = lineageUnion(spark, runDir, "ep_shingles")
       Linking.deltaExactEdges(entsOld, newEnts, deltaExtractRows)
         .unionByName(Linking.deltaFuzzyEdges(deltaKeys, keysAll,
           shingledAll, cfg.link, deltaKeyRows))
+        .distinct()
     }
-    val deltaLinkRows = deltaRowsOf(runDir, "link_edges", runId)
+    val deltaLinkRows = sliceRows("link_edges")
 
     // 5. canonicalize + materialize: the O(delta) merge-on-read tail
-    val ccIters = mergeOnReadTail(spark, runDir, runId, cfg,
-      deltaTriples, newEnts, deltaLinks, deltaLinkRows, deltaExtractRows)
+    val ccIters = mergeOnReadTail(spark, runDir, runId, cfg, extractVersion,
+      deltaTriples, newEnts, newEntRows, deltaLinks, deltaLinkRows,
+      deltaExtractRows)
     resultFrom(runDir, runId, ccIters)
   }
 
@@ -545,7 +541,10 @@ object Pipeline {
   //            stale;
   //   canon_log — the compressed single-hop remap of every root
   //            merged away since the last fold (old root → current
-  //            root), published LAST as the ingest's commit record.
+  //            root), published LAST and stamped with this ingest's
+  //            extract version: the ingest's commit record.
+  // A crash before the log leaves an uncommitted ingest, which the
+  // next writer rolls back whole (see [[rollbackUncommitted]]).
   // Readers resolve stale canonicals through the log (readNodes /
   // readEdges); compactTail applies it physically past the fold
   // threshold. Per-ingest IO = a non-identity probe + delta-sized
@@ -556,28 +555,20 @@ object Pipeline {
   // ------------------------------------------------------------------
 
   /** Returns the CC iterations of the component-pair graph (0 on the
-    * local path, and for a retry of a fully applied ingest, which is
-    * a no-op: idempotent per runId, like every appended stage). A retry
-    * that finds this runId's tail PARTIALLY applied rolls each tail
-    * stage back to its pre-ingest version ([[Snapshots.rollback]]) and
-    * re-runs: the pair graph is derived from the pre-ingest state.
+    * local path). The tail starts from the committed graph (the entry
+    * rule rolled back anything above it), and its pair graph is
+    * derived from that pre-ingest state.
     */
   private def mergeOnReadTail(spark: SparkSession, runDir: String,
                               runId: String, cfg: Config,
+                              extractVersion: Int,
                               deltaTriples: DataFrame,
                               newEnts: DataFrame,
+                              newEntRows: Long,
                               deltaLinks: DataFrame,
                               deltaLinkRows: Long,
                               deltaExtractRows: Long): Int = {
     import spark.implicits._
-    val Tail = Seq("assign", "nodes", "edges")
-    // crash-retry: the canon log is published LAST and is the ingest's
-    // commit record
-    if ((Tail :+ CanonLogStage).forall(st => Snapshots.isComplete(runDir, st)
-        && Snapshots.readManifest(runDir, st).runId == runId)) return 0
-    (Tail :+ CanonLogStage).foreach(Snapshots.rollback(runDir, _, runId))
-    require(Tail.forall(Snapshots.isComplete(runDir, _)),
-      s"no completed base graph in $runDir — resume its Pipeline.run first")
     val hadDirtyLog = canonLogDirty(runDir)
 
     // --- 1. the current root of every stored id the delta touches
@@ -642,7 +633,7 @@ object Pipeline {
       count($"isNew").as("movedNew")).head()
     val merges = counts.getLong(0)
     // delta ids that stayed roots (a new logical node each)
-    val newRoots = deltaRowsOf(runDir, "entities", runId) - counts.getLong(1)
+    val newRoots = newEntRows - counts.getLong(1)
 
     val tailMetrics = Map(
       "ccIterations" -> cc.iterations.toString,
@@ -678,7 +669,7 @@ object Pipeline {
     // --- 4. publish the three appends CONCURRENTLY: each touches ONLY
     // its own stage, so the three narrow publish jobs overlap instead
     // of serializing three rounds of write + commit + footer latency.
-    // ANY partially-published subset rolls back on retry. Each append
+    // Any partially-published subset is uncommitted. Each append
     // is clustered like its stage's full snapshots: assign by its
     // ident partitions, nodes by kind, edges by pred.
     def append(st: String, clusterBy: Seq[String], app: DataFrame): Unit =
@@ -702,9 +693,9 @@ object Pipeline {
       .join(movedTo("newRoot"), Seq("newRoot"), "left")
       .select($"oldRoot", coalesce($"comp", $"newRoot").as("newRoot"))
       .unionByName(mergedAway))
-    Snapshots.stage(spark, runDir, CanonLogStage, runId,
-      resume = false,
+    Snapshots.stage(spark, runDir, CanonLogStage, runId, resume = false,
       metrics = tailMetrics ++ Map("dirty" -> "true",
+        ExtractVersionKey -> extractVersion.toString,
         "logicalNodes" -> (prevLogical + newRoots - merges).toString)) {
       fullLog.coalesce(1)
     }
@@ -719,17 +710,20 @@ object Pipeline {
     * Config.compactAppendFrac): when any of assign/nodes/edges has
     * append rows reaching `frac` of the table, or the dirty canon log
     * reaches `frac` of assign, fold the tables into fresh full
-    * snapshots with the log applied and clear the log. A fold
-    * republishes in the layout of a full run (assign by `ident`,
-    * nodes/edges unpartitioned and clustered by kind/pred). Idempotent
-    * per runId
-    * (a crash between folds re-folds all three on retry; a re-run
-    * after all folds is a no-op). Returns the stages folded.
+    * snapshots with the log applied and clear the log, carrying its
+    * stamp forward. A fold republishes in the layout of a full run
+    * (assign by `ident`, nodes/edges unpartitioned and clustered by
+    * kind/pred). Like every writer it first rolls back an uncommitted
+    * ingest, so it folds committed appends only; a dir with no
+    * committed base folds nothing. A crash between the folds and the
+    * log-clear re-folds all three on the next call. Returns the stages
+    * folded.
     */
   def compactTail(spark: SparkSession, runDir: String, runId: String,
                   frac: Double): Seq[String] = {
     val stages = Seq("assign", "nodes", "edges")
-    if (!stages.forall(Snapshots.isComplete(runDir, _))) return Nil
+    val stamp = rollbackUncommitted(runDir)
+    if (stamp.isEmpty) return Nil
     val dirty = canonLogDirty(runDir)
     def over(st: String): Boolean = {
       val m = Snapshots.readManifest(runDir, st)
@@ -768,9 +762,8 @@ object Pipeline {
       "nodes" -> (d => resolveIf("nodes", d).sortWithinPartitions(col("kind"))),
       "edges" -> (d => resolveIf("edges", d).sortWithinPartitions(col("pred"))))
     // the folds publish DISJOINT stages from already-published inputs
-    // — run them concurrently, same shape and crash contract as the
-    // tail-append parallel publish in mergeOnReadTail (a crashed
-    // subset re-folds on retry while the log is still dirty)
+    // — run them concurrently (a crashed subset re-folds on the next
+    // call while the log is still dirty)
     def fold(st: String): Unit = {
       val m = Snapshots.readManifest(runDir, st)
       val (appendRows, sets) = Snapshots.appendStats(m)
@@ -785,7 +778,7 @@ object Pipeline {
       (): Unit
     }
     parallelRun(stages.map(st => () => fold(st)))
-    clearCanonLog(spark, runDir, runId)
+    if (dirty) commitClean(spark, runDir, runId, stamp.get, resume = false)
     stages
   }
 
@@ -797,43 +790,28 @@ object Pipeline {
     * lineage to length 1 (lineageVersions anchors at the last full),
     * and the folded-in versions expire.
     *
-    * Crash-retry safety: a lineage delta is foldable ONLY when its
-    * ingest COMMITTED (see [[committedRuns]]). Folding an uncommitted
-    * slice — the
-    * in-flight ingest's, or a FOREIGN ingest that crashed mid-append
-    * and will retry — would break both oldUnion's excludeRunId and
-    * appendOnce's idempotence key for that retry (its forms would
-    * ride the consolidated full and re-derive as "already existing",
-    * silently dropping its link edges). A stage holding any
-    * uncommitted delta is skipped this round; it folds once the
-    * crashed ingest retries (or stays unfolded, which is correct —
-    * the state genuinely contains an incomplete ingest). Corollary:
-    * expire edges/canon-log HISTORY only after lineage consolidation
-    * has covered those runs, or their commit records become
-    * unprovable and their deltas stay unfoldable. The consolidation
-    * itself publishes under "<runId>-maint" (never an ingest runId,
-    * so excludeRunId can never drop it), and a retry first expires
-    * anything a crashed consolidation left superseded.
+    * Like every writer it first rolls back an uncommitted ingest, so
+    * every delta left in a lineage is committed and may fold; a dir
+    * with no committed base folds nothing. The consolidation publishes
+    * under "<runId>-maint", which names no extract version, so no
+    * rollback takes it back; a retry first expires anything a crashed
+    * consolidation left superseded.
     */
   def compactLineage(spark: SparkSession, runDir: String, runId: String,
                      maxDeltas: Int): Seq[String] = {
+    if (rollbackUncommitted(runDir).isEmpty) return Nil
     // extract is deliberately NOT here: its versions are disjoint
     // corpus slices under union-of-ALL-versions semantics (no delta
     // marker), so lineageVersions would anchor at the newest slice
     // and the cleanup pass would expire the rest of the corpus
     val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
-    val committed = committedRuns(runDir)
     stages.filter(Snapshots.isComplete(runDir, _)).flatMap { st =>
       // cleanup pass (also the crash-retry of this function): expire
       // versions a previous consolidation superseded
       val lv = lineageVersions(runDir, st)
       Snapshots.versions(runDir, st).filterNot(lv.contains)
         .reverse.foreach(v => Snapshots.expire(runDir, st, v))
-      val uncommitted = lv.tail.exists { v =>
-        val r = Snapshots.readManifestVersion(runDir, st, v).runId
-        r == runId || !committed.contains(r)
-      }
-      if (uncommitted || lv.length - 1 < maxDeltas) None
+      if (lv.length - 1 < maxDeltas) None
       else {
         val df = lineageUnion(spark, runDir, st)
         Snapshots.stage(spark, runDir, st, s"$runId-maint",
@@ -850,37 +828,90 @@ object Pipeline {
   // absorbed → its current root, SINGLE-HOP (each ingest rewrites the
   // whole log, which is bounded by merges-since-last-fold, so readers
   // never chain). `dirty` marks unresolved state; folds and the
-  // global recomputes (run / runIncremental) clear it.
+  // global recomputes (run / runIncremental) publish a clean one.
   private[graft] val CanonLogStage = "canon_log"
 
-  /** The ingest commit record: runIds with a published canon-log
-    * version (the merge-on-read tail's last publish) or an edges
-    * version WITHOUT the defer marker (a global recompute's). A
-    * deferred edges append alone is the crash window before the log.
+  // ---- the COMMIT PROTOCOL: the store holds a committed prefix of
+  // ingests plus at most one in-flight ingest. Every graph publish
+  // (full run, global relink, merge-on-read tail, fold) ends with a
+  // canon-log version stamped `extractVersion`, the newest extract
+  // version the graph covers, so an extract version above the live
+  // stamp is an ingest that crashed before its commit. Every writer
+  // past the base run first rolls such an ingest back whole.
+  private val ExtractVersionKey = "extractVersion"
+
+  /** The live stamp (None: no canon log, so no committed base). */
+  private def committedExtract(runDir: String): Option[Int] =
+    if (!Snapshots.isComplete(runDir, CanonLogStage)) None
+    else Some(Snapshots.readManifest(runDir, CanonLogStage)
+      .metrics(ExtractVersionKey).toInt)
+
+  /** (version, runId) of every published extract version, read first
+    * so that a run dir of another format is refused before anything.
     */
-  private[graft] def committedRuns(runDir: String): Set[String] = {
-    def runs(stage: String, counts: Snapshots.Manifest => Boolean) =
-      Snapshots.versions(runDir, stage)
-        .map(Snapshots.readManifestVersion(runDir, stage, _))
-        .collect { case m if counts(m) => m.runId }
-    (runs(CanonLogStage, _ => true) ++ runs("edges",
-      !_.metrics.get("defer").contains("true"))).toSet
+  private def extractRuns(runDir: String): Seq[(Int, String)] =
+    Snapshots.versions(runDir, "extract").map(v =>
+      v -> Snapshots.readManifestVersion(runDir, "extract", v).runId)
+
+  /** Whether `runId`'s extract version is at or below the live stamp. */
+  private[graft] def committed(runDir: String, runId: String): Boolean = {
+    val runs = extractRuns(runDir)
+    committedExtract(runDir).exists(s =>
+      runs.exists { case (v, r) => r == runId && v <= s })
   }
 
-  /** Publishes a clean, empty canon log once its remaps are applied
-    * physically (a fold or a global recompute), or readers would keep
-    * re-resolving and the next deferred ingest compose stale remaps.
+  /** Rolls back every runId with an extract version above the stamp:
+    * on every stage, while the live version is such a runId's, back to
+    * the version below ([[Snapshots.rollback]]). Extract goes LAST: its
+    * versions identify the uncommitted runIds, so a crash mid-rollback
+    * leaves them findable for the next call. Returns the stamp (None:
+    * no committed base, nothing rolled back).
     */
-  private def clearCanonLog(spark: SparkSession, runDir: String,
-                            runId: String): Unit =
-    if (canonLogDirty(runDir)) {
-      import spark.implicits._
-      Snapshots.stage(spark, runDir, CanonLogStage, runId,
-        resume = false, metrics = Map("dirty" -> "false")) {
-        Seq.empty[(Long, Long)].toDF("oldRoot", "newRoot")
-      }
-      (): Unit
+  private def rollbackUncommitted(runDir: String): Option[Int] = {
+    val runs = extractRuns(runDir)
+    val stamp = committedExtract(runDir)
+    stamp.foreach { s =>
+      val open = runs.collect { case (v, r) if v > s => r }.toSet
+      def rollBack(st: String): Unit =
+        if (Snapshots.isComplete(runDir, st)) {
+          val r = Snapshots.readManifest(runDir, st).runId
+          if (open(r)) { Snapshots.rollback(runDir, st, r); rollBack(st) }
+        }
+      (Stages.tail ++ EpochStages :+ CanonLogStage :+ Stages.head)
+        .foreach(rollBack)
     }
+    stamp
+  }
+
+  /** [[rollbackUncommitted]], refusing a dir with no committed base. */
+  private def requireBase(runDir: String): Unit =
+    require(rollbackUncommitted(runDir).isDefined,
+      s"no completed base graph in $runDir — resume its Pipeline.run first")
+
+  /** The entry rule of both ingests: true when `runId` has committed
+    * (a no-op). Otherwise [[requireBase]], so a crashed attempt re-runs
+    * whole from the committed graph, its O(delta) extract included.
+    */
+  private def alreadyCommitted(runDir: String, runId: String): Boolean = {
+    require(Snapshots.isComplete(runDir, "extract"),
+      s"no completed prior run in $runDir — use Pipeline.run for the first ingest")
+    committed(runDir, runId) || { requireBase(runDir); false }
+  }
+
+  /** Commits a graph with no remap left to resolve: a clean, empty
+    * canon log stamped with `extractVersion`.
+    */
+  private def commitClean(spark: SparkSession, runDir: String,
+                          runId: String, extractVersion: Int,
+                          resume: Boolean): Unit = {
+    import spark.implicits._
+    Snapshots.stage(spark, runDir, CanonLogStage, runId, resume,
+      metrics = Map("dirty" -> "false",
+        ExtractVersionKey -> extractVersion.toString)) {
+      Seq.empty[(Long, Long)].toDF("oldRoot", "newRoot")
+    }
+    (): Unit
+  }
 
   private[graft] def canonLogDirty(runDir: String): Boolean =
     Snapshots.isComplete(runDir, CanonLogStage) &&
@@ -966,38 +997,6 @@ object Pipeline {
     else resolveCanon(spark, runDir, raw, bucketsOf(runDir, "edges"))
   }
 
-  /** Rows this runId appended to `stage` (0 when none): the sum over
-    * this runId's snapshot versions' manifest rows. Lineage folds
-    * publish under "<runId>-maint", so they can never be counted as an
-    * ingest's own delta.
-    */
-  private def deltaRowsOf(runDir: String, stage: String,
-                          runId: String): Long =
-    versionsBy(runDir, stage, runId)
-      .map(Snapshots.readManifestVersion(runDir, stage, _).rows).sum
-
-  /** The versions of `stage` published under `runId`. */
-  private def versionsBy(runDir: String, stage: String,
-                         runId: String): Seq[Int] =
-    Snapshots.versions(runDir, stage).filter(v =>
-      Snapshots.readManifestVersion(runDir, stage, v).runId == runId)
-
-  /** Append a DELTA snapshot version, idempotent per runId: a
-    * crash-retry that already published this ingest's slice reads it
-    * back instead of appending a duplicate.
-    */
-  private def appendOnce(spark: SparkSession, runDir: String,
-                         stage: String, runId: String,
-                         extraMetrics: Map[String, String] = Map.empty)
-                        (compute: => DataFrame): DataFrame = {
-    versionsBy(runDir, stage, runId).headOption match {
-      case Some(v) => Snapshots.readVersion(spark, runDir, stage, v)
-      case None => Snapshots.stage(spark, runDir, stage, runId,
-        resume = false,
-        metrics = Map("delta" -> "true") ++ extraMetrics)(compute)
-    }
-  }
-
   /** The drift measurement behind Config.maxCensusDrift (see the call
     * site in [[runIncrementalPinned]]). Returns 0.0 for an ingest with
     * no fuzzy delta shingles.
@@ -1052,11 +1051,8 @@ object Pipeline {
       .map(Snapshots.readManifestVersion(runDir, stage, _).rows).sum
 
   private def lineageUnion(spark: SparkSession, runDir: String,
-                           stage: String,
-                           excludeRunId: Option[String] = None): DataFrame =
+                           stage: String): DataFrame =
     lineageVersions(runDir, stage)
-      .filter(v => !excludeRunId.contains(
-        Snapshots.readManifestVersion(runDir, stage, v).runId))
       .map(v => Snapshots.readVersion(spark, runDir, stage, v))
       .reduce(_ unionByName _)
 
@@ -1080,28 +1076,22 @@ object Pipeline {
     // against live extraction lineage, which would re-run the content
     // scan. It lives INSIDE the stage block so a resumed run (stage
     // manifest already present) never pays the probe job.
-    // the shingle scratch table only lives for the duration of the
-    // stage compute (the stage snapshot is durable before we return),
-    // so the run-owned scratch dir is deleted afterwards — a
-    // long-running ingest loop (kgIngestStream, repeated
-    // runIncremental) would otherwise leak one corpus-sized parquet
-    // table per ingest. Caller-supplied scratch dirs are caller-owned.
-    val ownScratch = cfg.link.scratchDir.isEmpty
+    // The shared shingle table (read 4x by the link plans; see
+    // Linking.sharedShingles) is materialized under the run dir and
+    // only lives for the stage compute (the stage snapshot is durable
+    // before we return), so it is deleted afterwards — a long-running
+    // ingest loop (kgIngestStream, repeated runIncremental) would
+    // otherwise leak one corpus-sized parquet table per ingest.
     val scratch = s"$runDir/_scratch/link_edges"
     val links = try {
       Snapshots.stage(spark, runDir, "link_edges", runId, resume) {
         val fuzzyNonEmpty =
           !ents.filter(col("pred").isin(Linking.FuzzyPreds: _*)).isEmpty
-        // shared shingle table materialized once under the run dir
-        // (read 4x by the link plans; see Linking.sharedShingles)
-        // unless the caller already chose a scratch location
-        val linkCfg =
-          if (cfg.link.scratchDir.isDefined) cfg.link
-          else cfg.link.copy(scratchDir = Some(scratch))
-        Linking.linkEdges(ents, linkCfg, Some(fuzzyNonEmpty),
+        Linking.linkEdges(ents, cfg.link.copy(scratchDir = Some(scratch)),
+          Some(fuzzyNonEmpty),
           sizeHint = Some(Snapshots.readManifest(runDir, "entities").rows))
       }
-    } finally if (ownScratch) Snapshots.deleteDir(scratch)
+    } finally Snapshots.deleteDir(scratch)
 
     canonicalize(spark, runDir, runId, cfg, triples, ents, links, resume)
   }
@@ -1183,14 +1173,16 @@ object Pipeline {
 
     // nodes and edges both derive from the PUBLISHED assign snapshot
     // and publish disjoint stages — run the two narrow materializations
-    // concurrently (same shape and crash contract as the tail-append
-    // parallel publish in mergeOnReadTail: resume re-checks
-    // each stage's own manifest, so any crashed subset heals)
+    // concurrently (a resumed run re-checks each stage's own manifest,
+    // so any crashed subset heals)
     parallelRun(Seq(() => nodesStage(), () => edgesStage()))
 
-    // everything was recomputed from source, so any deferred-merge
-    // canon log is now fully applied
-    clearCanonLog(spark, runDir, runId)
+    // the commit record, LAST: a clean canon log (everything was
+    // recomputed from source, so no remap is left to resolve) stamped
+    // with the newest extract version, which this graph covers. A
+    // resumed run that already published it skips it.
+    commitClean(spark, runDir, runId,
+      Snapshots.readManifest(runDir, "extract").version, resume)
     ccIters
   }
 

@@ -67,9 +67,11 @@ object Snapshots {
     * scheme, a column's meaning, a manifest field). Readers refuse
     * every other stamp, so a run dir is never misread by code of
     * another format. Format 1 is the first stamped one; run dirs
-    * written before it (no stamp) are refused too.
+    * written before it (no stamp) are refused too. Format 2 stamps
+    * every canon log with the extract version its graph covers (the
+    * commit record of Pipeline's commit protocol).
     */
-  val FormatVersion = 1
+  val FormatVersion = 2
 
   private val ManifestName = "_MANIFEST.json"
 

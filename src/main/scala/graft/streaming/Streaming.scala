@@ -103,10 +103,12 @@ object Streaming {
     * base batch that crashed part-way resumes its
     * [[graft.Pipeline.run]] (stages it already published are read
     * back), then pins. IDEMPOTENT per batch id: foreachBatch replays a
-    * batch after a crash, and re-ingesting it would append duplicate
-    * extract versions — the guard skips any batch whose runId already
-    * committed the graph, so replay ≡ no-op (the streaming twin of the
-    * batch resume contract). Returns true when the batch was applied.
+    * batch after a crash, and a batch whose runId has committed
+    * ([[graft.Pipeline.committed]]: its extract version is covered by
+    * the live canon log's stamp) is skipped, so replay ≡ no-op. A
+    * batch that crashed before its commit re-applies: the ingest rolls
+    * its partial state back and re-runs it. Returns true when the
+    * batch was applied.
     */
   def ingestBatch(batch: Dataset[graft.SourceFile], batchId: Long,
                   runDir: String,
@@ -115,20 +117,7 @@ object Streaming {
   : Boolean = {
     import graft.store.Snapshots
     val runId = s"batch-$batchId"
-    // "applied" means applied THROUGH THE LAST STAGE: a crash between
-    // the extract publish and the edges publish must leave the batch
-    // re-appliable, or the replayed batch would no-op against a graph
-    // that never linked its triples. Every path is idempotent on the
-    // extract side (it reuses a version this runId already published),
-    // so the replay redoes only the downstream stages. Under deferred
-    // merges an edges append without its canon log (the commit record,
-    // Pipeline.committedRuns) is a crash window: the replay must
-    // re-apply, rolling the partial tail back, or the partial state
-    // would become permanent.
-    val applied = Snapshots.isComplete(runDir, "edges") &&
-      Snapshots.readManifest(runDir, "edges").runId == runId &&
-      graft.Pipeline.committedRuns(runDir).contains(runId)
-    if (applied) false
+    if (graft.Pipeline.committed(runDir, runId)) false
     else {
       val spark = batch.sparkSession
       val base = Snapshots.versions(runDir, "extract").forall(v =>
@@ -160,8 +149,8 @@ object Streaming {
     * micro-batch of new source files lands in the same run dir via
     * [[ingestBatch]], so the published node/edge snapshots are always
     * the graph of everything ingested so far (and every prior state
-    * stays time-travelable). Checkpointed; crash-replayed batches are
-    * no-ops via the per-batch idempotence guard.
+    * stays time-travelable). Checkpointed; a crash-replayed batch is a
+    * no-op once committed and re-runs otherwise (see [[ingestBatch]]).
     */
   def kgIngestStream(files: Dataset[graft.SourceFile], runDir: String,
                      cfg: graft.Pipeline.Config = graft.Pipeline.Config(),

@@ -279,12 +279,13 @@ class PipelineSpec extends SparkSpec {
 
     // simulate a crash AFTER link_edges published but BEFORE assign's
     // manifest: data present, manifest missing (the kill window of
-    // FIXTURES.md §5), downstream stages absent entirely
+    // FIXTURES.md §5), downstream stages and the canon log (published
+    // last) absent entirely
     val crashed = tmpDir("b")
     Pipeline.run(spark, files, crashed, "run-b")
     Files.delete(Path.of(Snapshots.stageDir(crashed, "assign"), "_MANIFEST.json"))
-    deleteRec(Path.of(Snapshots.stageDir(crashed, "nodes")))
-    deleteRec(Path.of(Snapshots.stageDir(crashed, "edges")))
+    Seq("nodes", "edges", Pipeline.CanonLogStage).foreach(st =>
+      deleteRec(Path.of(Snapshots.stageDir(crashed, st))))
 
     val r2 = Pipeline.run(spark, files, crashed, "run-b-resumed")
     assert(r2.triples == r1.triples && r2.entities == r1.entities)
@@ -334,12 +335,14 @@ class PipelineSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("first ingest"), ex.getMessage)
 
-    // crash-retry idempotence: simulate a crash AFTER the delta
-    // extract published but BEFORE edges completed, then retry the
-    // SAME ingest — the delta extract must NOT be appended twice
-    // (union would double-count its triples), and the repaired graph
-    // still equals the from-scratch run
-    Files.delete(Path.of(Snapshots.stageDir(inc, "edges"), "_MANIFEST.json"))
+    // crash-retry: simulate a crash AFTER nodes published but BEFORE
+    // edges did (edges and the canon log roll back to their pre-ingest
+    // versions, the state that crash leaves), then retry the SAME
+    // ingest — it rolls its partial state back, so the delta extract
+    // is NOT appended twice (union would double-count its triples),
+    // and the repaired graph still equals the from-scratch run
+    Seq(Pipeline.CanonLogStage, "edges")
+      .foreach(Snapshots.rollback(inc, _, "run-delta"))
     val rRetry = Pipeline.runIncremental(spark, b.toDS(), inc, "run-delta")
     assert(Snapshots.versions(inc, "extract") == Seq(1, 2, 3),
       "retry must not append a duplicate delta extract version")
@@ -431,11 +434,12 @@ class PipelineSpec extends SparkSpec {
     assert(Snapshots.readManifestVersion(inc, "link_edges", 3)
       .metrics.get("delta").contains("true"))
 
-    // crash-retry idempotence mid-chain: kill after the delta link
-    // published but before edges completed; the retry rolls the tail
-    // back to its pre-ingest versions, re-runs the O(delta) tail, and
-    // must not append duplicate delta slices anywhere
-    Files.delete(Path.of(Snapshots.stageDir(inc, "edges"), "_MANIFEST.json"))
+    // crash-retry mid-chain: kill after the assign and nodes appends
+    // published but before the edges append did; the retry rolls the
+    // whole uncommitted ingest back, re-runs it, and must not append
+    // duplicate delta slices anywhere
+    Seq(Pipeline.CanonLogStage, "edges")
+      .foreach(Snapshots.rollback(inc, _, "ep-delta"))
     val rRetry = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
     Seq("entities", "ep_shingles", "ep_keys", "link_edges").foreach { st =>
@@ -530,17 +534,17 @@ class PipelineSpec extends SparkSpec {
     assert(Snapshots.versions(inc, "edges") == vBefore)
     assert(rRetry.copy(runId = "x") == r2.copy(runId = "x"))
 
-    // crash-retry HALF-APPLIED: nodes+edges manifests lost after the
-    // assign append published → the retry rolls every tail stage back
-    // to its pre-ingest version (the pair graph is only derivable
-    // pre-ingest), heals through the O(delta) tail, and still equals
-    // the from-scratch graph
+    // crash-retry HALF-APPLIED: the assign append published, the
+    // nodes and edges appends and the canon log did not → the retry
+    // rolls the uncommitted ingest back (the pair graph is only
+    // derivable pre-ingest), heals through the O(delta) tail, and still
+    // equals the from-scratch graph
     val inc2 = tmpDir("icc2")
     Pipeline.run(spark, a.toDS(), inc2, "icc-base", cfg)
     Pipeline.pinEpoch(spark, inc2, "icc-pin", cfg)
     Pipeline.runIncrementalPinned(spark, b.toDS(), inc2, "icc-d1", cfg)
-    Files.delete(Path.of(Snapshots.stageDir(inc2, "nodes"), "_MANIFEST.json"))
-    Files.delete(Path.of(Snapshots.stageDir(inc2, "edges"), "_MANIFEST.json"))
+    Seq(Pipeline.CanonLogStage, "edges", "nodes")
+      .foreach(Snapshots.rollback(inc2, _, "icc-d1"))
     val rHeal = Pipeline.runIncrementalPinned(spark, b.toDS(), inc2,
       "icc-d1", cfg)
     val fullAb = tmpDir("icc-fullab")
@@ -689,9 +693,8 @@ class PipelineSpec extends SparkSpec {
     assert(edgeSet(inc) == edgeSet(incN))
     assert(r.copy(runId = "x") == rN.copy(runId = "x"))
 
-    // retry of the last ingest is still a no-op (idempotence survives
-    // consolidation of PRIOR runs; the in-flight guard protects its
-    // own slices)
+    // retry of the last ingest is still a no-op (it committed, and
+    // consolidation of PRIOR runs keeps its commit record)
     val vBefore = Snapshots.versions(inc, "edges")
     val rRetry = Pipeline.runIncrementalPinned(spark,
       deltas(2).toDS(), inc, "lc-d2",
@@ -700,19 +703,27 @@ class PipelineSpec extends SparkSpec {
     assert(Snapshots.versions(inc, "edges") == vBefore)
     assert(rRetry.copy(runId = "x") == r.copy(runId = "x"))
 
-    // a FOREIGN crashed ingest (entities slice published, no tail
-    // commit record) must never be folded: its retry's idempotence
-    // key and oldUnion exclusion live on that slice
-    Snapshots.stage(spark, inc, "entities", "lc-crashed",
-      resume = false, metrics = Map("delta" -> "true")) {
-      Snapshots.read(spark, inc, "entities").limit(0)
-    }
-    val entBefore = Snapshots.versions(inc, "entities")
+    // a FOREIGN crashed ingest (every lineage slice published, its
+    // tail and canon log did not) is never folded: compactLineage
+    // rolls it back first, then folds the committed deltas only
+    val crashed = classes.take(3).map(w => f(s"x-$w.txt", Seq(w + "!"))) :+
+      f("xnew.txt", Seq("lcrashed"))
+    Pipeline.runIncrementalPinned(spark, crashed.toDS(), inc, "lc-crashed",
+      Pipeline.Config(canonBuckets = Some(64)))
+    Seq(Pipeline.CanonLogStage, "edges", "nodes", "assign")
+      .foreach(Snapshots.rollback(inc, _, "lc-crashed"))
     val folded = Pipeline.compactLineage(spark, inc, "lc-d3", 1)
-    assert(!folded.contains("entities"),
-      "an uncommitted foreign slice must block entities consolidation")
-    assert(Snapshots.versions(inc, "entities") == entBefore,
-      "the crashed slice must survive untouched")
+    assert(folded.toSet == Set("entities", "link_edges", "ep_keys",
+      "ep_shingles"), folded)
+    ("extract" +: folded).foreach { st =>
+      assert(!Snapshots.versions(inc, st).exists(v => Snapshots
+        .readManifestVersion(inc, st, v).runId == "lc-crashed"),
+        s"$st still holds the crashed slice")
+    }
+    assert(Snapshots.readManifest(inc, "entities").rows == rN.entities)
+    assert(Snapshots.readManifest(inc, "link_edges").rows == rN.linkEdges)
+    assert(nodeSet(inc) == nodeSet(incN))
+    assert(edgeSet(inc) == edgeSet(incN))
   }
 
   test("compactLineage folds no delta of a merge-on-read ingest whose canon log never published") {
@@ -732,19 +743,21 @@ class PipelineSpec extends SparkSpec {
       .get("defer").contains("true"))
     // crash window: the three appends published, the canon log (the
     // ingest's commit record) did not
-    Files.delete(Path.of(Snapshots.stageDir(dir, Pipeline.CanonLogStage),
-      "_MANIFEST.json"))
-    assert(!Pipeline.committedRuns(dir).contains("cr-x"))
+    Snapshots.rollback(dir, Pipeline.CanonLogStage, "cr-x")
+    assert(!Pipeline.committed(dir, "cr-x"))
     val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
     def deltasOfX(st: String): Seq[Int] = Snapshots.versions(dir, st)
       .filter(v => Snapshots.readManifestVersion(dir, st, v).runId == "cr-x")
     val before = stages.map(st => st -> Snapshots.versions(dir, st)).toMap
-    assert(stages.forall(st => deltasOfX(st).nonEmpty), before)
+    val ofX = stages.map(st => st -> deltasOfX(st)).toMap
+    assert(stages.forall(st => ofX(st).nonEmpty), before)
+    // compactLineage rolls the uncommitted ingest back and folds
+    // nothing: no committed delta is left
     val folded = Pipeline.compactLineage(spark, dir, "y", 1)
     assert(folded.isEmpty, s"folded uncommitted deltas of cr-x: $folded")
     stages.foreach { st =>
-      assert(Snapshots.versions(dir, st) == before(st), st)
-      assert(deltasOfX(st).nonEmpty, st)
+      assert(Snapshots.versions(dir, st) == before(st).diff(ofX(st)), st)
+      assert(deltasOfX(st).isEmpty, st)
     }
     deleteRec(Path.of(dir))
   }
@@ -936,11 +949,13 @@ class PipelineSpec extends SparkSpec {
       ex.getMessage.contains("pinEpoch"), ex.getMessage)
 
     // recovery exactly as the message prescribes: the SAME runId
-    // through the global relink (idempotent extract — the refused
-    // ingest's delta is reused, not re-extracted), then re-pin
+    // through the global relink (the refused ingest never committed,
+    // so the relink rolls its slices back and re-extracts its delta in
+    // place of them), then re-pin
     assert(Snapshots.versions(dir, "extract").length == 2)
     Pipeline.runIncremental(spark, b.toDS(), dir, "dr-d1", cfgT(None))
-    assert(Snapshots.versions(dir, "extract").length == 2, "no re-extract")
+    assert(Snapshots.versions(dir, "extract").length == 2,
+      "no duplicate extract version")
     val fullAb = tmpDir("drift-fullab")
     Pipeline.run(spark, (a ++ b).toDS(), fullAb, "dr-fab", cfgT(None))
     assert(nodeSet(dir) == nodeSet(fullAb) && edgeSet(dir) == edgeSet(fullAb))
@@ -994,6 +1009,240 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, all.toDS(), full, "dr-full",
       cfgT(None).copy(link = cfgT(None).link.copy(pinnedHot = Some(hot2))))
     assert(nodeSet(dir) == nodeSet(full) && edgeSet(dir) == edgeSet(full))
+  }
+
+  // ---- the commit protocol: the live canon log's stamp names the
+  // committed extract prefix, and every writer first rolls back what
+  // lies above it. A crash is simulated by Snapshots.rollback on the
+  // stages the crashed ingest had not yet published: exactly the
+  // state a crash leaves (the previous live version, plus an orphan
+  // above it).
+
+  // an asks file: one question per form (exact-norm links only)
+  private def asks(name: String, forms: String*): SourceFile =
+    SourceFile("r", name, "c0", "md", forms.map(w => s"q: $w?").mkString("\n"))
+
+  // hosts: base forms, their upper-case twins (exact-norm links) and
+  // their www. variants (fuzzy links on the banded path)
+  private val hosts = (0 until 24).map(i => s"svc$i-gateway.region$i.example.net")
+  private def host(name: String, h: String): SourceFile =
+    SourceFile("r", name, "c0", "md", s"see https://$h/x")
+  private val bandedCfg = Pipeline.Config(link =
+    graft.link.Linking.Config(exactSmallThreshold = 0L))
+
+  // equal as multisets: exceptAll both ways sees duplicate rows, which
+  // nodeSet / edgeSet would hide
+  private def assertSameGraph(dir: String, full: String, clue: String): Unit = {
+    def same(x: org.apache.spark.sql.DataFrame,
+             y: org.apache.spark.sql.DataFrame): Boolean =
+      x.exceptAll(y).unionByName(y.exceptAll(x)).isEmpty
+    assert(same(Pipeline.readNodes(spark, dir), Pipeline.readNodes(spark, full)),
+      s"nodes differ: $clue")
+    assert(same(Pipeline.readEdges(spark, dir), Pipeline.readEdges(spark, full)),
+      s"edges differ: $clue")
+  }
+
+  // the counts a pinned ingest shares with a from-scratch run
+  private def counts(r: Pipeline.Result) =
+    (r.triples, r.quarantined, r.entities, r.nodes, r.edges)
+
+  // the frozen census of a pinned dir, for a from-scratch comparator
+  private def censusOf(dir: String): Seq[(String, Long)] =
+    Snapshots.read(spark, dir, "ep_census")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  test("a pinned ingest's link_edges slice with exact and fuzzy edges is one file") {
+    val dir = tmpDir("le-files")
+    Pipeline.run(spark, hosts.zipWithIndex.map { case (h, i) =>
+      host(s"a$i.md", h) }.toDS(), dir, "le-base", bandedCfg)
+    Pipeline.pinEpoch(spark, dir, "le-pin", bandedCfg)
+    val delta = hosts.zipWithIndex.map { case (h, i) =>
+      host(s"d$i.md", if (i % 2 == 0) h.toUpperCase else s"www.$h") }
+    Pipeline.runIncrementalPinned(spark, delta.toDS(), dir, "le-d", bandedCfg)
+    val m = Snapshots.readManifest(dir, "link_edges")
+    assert(m.runId == "le-d" && m.metrics.get("delta").contains("true"))
+    // an edge is exact when its endpoints share a norm, fuzzy otherwise
+    val norms = Snapshots.versions(dir, "entities")
+      .map(Snapshots.readVersion(spark, dir, "entities", _))
+      .reduce(_ unionByName _).select("entityId", "norm")
+      .as[(Long, String)].collect().toMap
+    val pairs = Snapshots.read(spark, dir, "link_edges")
+      .select("src", "dst").as[(Long, Long)].collect().toSeq
+    val exact = pairs.count { case (a, b) => norms(a) == norms(b) }
+    assert(exact > 0 && pairs.length - exact > 0,
+      s"need exact and fuzzy delta edges: $exact of ${pairs.length} exact")
+    assert(m.fileRows.size == 1, s"link_edges slice files: ${m.fileRows}")
+    deleteRec(Path.of(dir))
+  }
+
+  test("re-running a committed pinned ingest after a later ingest is a no-op") {
+    val classes = (0 until 20).map(i => s"rword$i")
+    val a = classes.zipWithIndex.map { case (w, i) => asks(s"a$i.txt", w) }
+    val r = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 0 => asks(s"r$i.txt", w.toUpperCase)
+    } :+ asks("rnew.txt", "rbrandnew")
+    val s = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 1 => asks(s"s$i.txt", w + ".")
+    } :+ asks("snew.txt", "sbrandnew")
+    val dir = tmpDir("rerun")
+    Pipeline.run(spark, a.toDS(), dir, "rr-base")
+    Pipeline.pinEpoch(spark, dir, "rr-pin")
+    Pipeline.runIncrementalPinned(spark, r.toDS(), dir, "rr-r")
+    val rS = Pipeline.runIncrementalPinned(spark, s.toDS(), dir, "rr-s")
+    val stages = Pipeline.Stages ++
+      Seq("ep_shingles", "ep_keys", Pipeline.CanonLogStage)
+    val before = stages.map(st => st -> Snapshots.versions(dir, st)).toMap
+    val rAgain = Pipeline.runIncrementalPinned(spark, r.toDS(), dir, "rr-r")
+    val full = tmpDir("rerun-full")
+    Pipeline.run(spark, (a ++ r ++ s).toDS(), full, "rr-full")
+    assertSameGraph(dir, full, "after re-running rr-r")
+    assert(rAgain.copy(runId = "x") == rS.copy(runId = "x"))
+    stages.foreach(st => assert(Snapshots.versions(dir, st) == before(st), st))
+    deleteRec(Path.of(dir)); deleteRec(Path.of(full))
+  }
+
+  test("compactTail between a crashed pinned ingest and its retry folds no uncommitted append") {
+    val classes = (0 until 20).map(i => s"tword$i")
+    val a = classes.zipWithIndex.map { case (w, i) => asks(s"a$i.txt", w) }
+    val x = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 0 => asks(s"x$i.txt", w.toUpperCase)
+    } :+ asks("xnew.txt", "tbrandnew")
+    val dir = tmpDir("foldcrash")
+    Pipeline.run(spark, a.toDS(), dir, "ct-base")
+    Pipeline.pinEpoch(spark, dir, "ct-pin")
+    val rX = Pipeline.runIncrementalPinned(spark, x.toDS(), dir, "ct-x")
+    // crash: the three tail appends published, the canon log did not
+    Snapshots.rollback(dir, Pipeline.CanonLogStage, "ct-x")
+    Pipeline.compactTail(spark, dir, "ct-fold", 1e-9)
+    val rRetry = Pipeline.runIncrementalPinned(spark, x.toDS(), dir, "ct-x")
+    val full = tmpDir("foldcrash-full")
+    Pipeline.run(spark, (a ++ x).toDS(), full, "ct-full")
+    assertSameGraph(dir, full, "retry after a fold")
+    assert(rRetry == rX)
+    deleteRec(Path.of(dir)); deleteRec(Path.of(full))
+  }
+
+  test("an ingest after a crashed ingest builds on the committed graph only") {
+    val classes = (0 until 20).map(i => s"oword$i")
+    val base = classes.zipWithIndex.map { case (w, i) => asks(s"o$i.txt", w) }
+    // A and B share the new form "oshared"
+    val a = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 0 => asks(s"a$i.txt", w.toUpperCase)
+    } :+ asks("ashared.txt", "oshared")
+    val b = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 1 => asks(s"b$i.txt", w + ".")
+    } :+ asks("bshared.txt", "oshared", "obrandnew")
+    val dir = tmpDir("aftercrash")
+    Pipeline.run(spark, base.toDS(), dir, "ac-base")
+    Pipeline.pinEpoch(spark, dir, "ac-pin")
+    Pipeline.runIncrementalPinned(spark, a.toDS(), dir, "ac-a")
+    // crash: A's extract and entities slices published, nothing after
+    Seq(Pipeline.CanonLogStage, "edges", "nodes", "assign", "link_edges",
+      "ep_keys", "ep_shingles").foreach(Snapshots.rollback(dir, _, "ac-a"))
+    val rB = Pipeline.runIncrementalPinned(spark, b.toDS(), dir, "ac-b")
+    val fullB = tmpDir("aftercrash-fullb")
+    val rFullB = Pipeline.run(spark, (base ++ b).toDS(), fullB, "ac-fb")
+    assertSameGraph(dir, fullB, "B after the crashed A")
+    assert(counts(rB) == counts(rFullB))
+    // A's retry then lands on top of B
+    val rA = Pipeline.runIncrementalPinned(spark, a.toDS(), dir, "ac-a")
+    val full = tmpDir("aftercrash-full")
+    val rFull = Pipeline.run(spark, (base ++ a ++ b).toDS(), full, "ac-full")
+    assertSameGraph(dir, full, "A retried after B")
+    assert(counts(rA) == counts(rFull))
+    Seq(dir, fullB, full).foreach(d => deleteRec(Path.of(d)))
+  }
+
+  test("a format-1 run dir is refused by every writer with the rebuild message") {
+    val corpus = (0 until 12).map(i => asks(s"f$i.txt", s"fword$i"))
+    // a format-1 base run has no canon log; a format-1 ingested dir
+    // has one, without the extractVersion stamp
+    Seq("base", "ingested").foreach { variant =>
+      val dir = tmpDir(s"format1-$variant")
+      Pipeline.run(spark, corpus.toDS(), dir, "f1-base")
+      Pipeline.pinEpoch(spark, dir, "f1-pin")
+      if (variant == "base")
+        deleteRec(Path.of(Snapshots.stageDir(dir, Pipeline.CanonLogStage)))
+      def tree(): Map[String, Seq[Byte]] = Files.walk(Path.of(dir))
+        .iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+      tree().keys.filter(_.contains("_MANIFEST")).foreach { f =>
+        val p = Path.of(f)
+        Files.writeString(p, Files.readString(p)
+          .replaceFirst("\"formatVersion\"\\s*:\\s*\\d+", "\"formatVersion\" : 1")
+          .replace("\"extractVersion\"", "\"formerKey\""))
+      }
+      val before = tree()
+      def refused(call: String)(body: => Any): Unit = {
+        val ex = intercept[IllegalArgumentException](body)
+        assert(ex.getMessage.contains("snapshot format 1") &&
+          ex.getMessage.contains(s"needs format ${Snapshots.FormatVersion}") &&
+          ex.getMessage.contains("Rebuild into a fresh runDir"),
+          s"$variant $call: ${ex.getMessage}")
+      }
+      val more = Seq(asks("g.txt", "gword")).toDS()
+      refused("run")(Pipeline.run(spark, corpus.toDS(), dir, "f1-base"))
+      refused("runIncremental")(Pipeline.runIncremental(spark, more, dir, "f1-x"))
+      refused("runIncrementalPinned")(
+        Pipeline.runIncrementalPinned(spark, more, dir, "f1-x"))
+      refused("pinEpoch")(Pipeline.pinEpoch(spark, dir, "f1-pin2"))
+      refused("compactTail")(Pipeline.compactTail(spark, dir, "f1-f", 0.0))
+      refused("compactLineage")(Pipeline.compactLineage(spark, dir, "f1-l", 1))
+      refused("ingestBatch")(
+        graft.streaming.Streaming.ingestBatch(more, 7L, dir))
+      assert(tree() == before, s"$variant: a refused call changed a file")
+      deleteRec(Path.of(dir))
+    }
+  }
+
+  test("crash-point sweep: a pinned ingest crashed after any publish retries to the uncrashed graph and Result") {
+    val a = hosts.zipWithIndex.map { case (h, i) => host(s"a$i.md", h) }
+    val p1 = hosts.take(12).zipWithIndex.map { case (h, i) =>
+      host(s"p$i.md", h.toUpperCase) }
+    // the swept ingest: exact twins of the other hosts, fuzzy variants
+    // of every host
+    val x = hosts.drop(12).zipWithIndex.map { case (h, i) =>
+      host(s"x$i.md", h.toUpperCase) } ++
+      hosts.zipWithIndex.map { case (h, i) => host(s"w$i.md", s"www.$h") }
+    val dir = tmpDir("sweep")
+    Pipeline.run(spark, a.toDS(), dir, "sw-base", bandedCfg)
+    Pipeline.pinEpoch(spark, dir, "sw-pin", bandedCfg)
+    Pipeline.runIncrementalPinned(spark, p1.toDS(), dir, "sw-p1", bandedCfg)
+    val rX = Pipeline.runIncrementalPinned(spark, x.toDS(), dir, "sw-x",
+      bandedCfg)
+    // from-scratch comparator under the pinned census
+    val full = tmpDir("sweep-full")
+    Pipeline.run(spark, (a ++ p1 ++ x).toDS(), full, "sw-full",
+      bandedCfg.copy(link = bandedCfg.link.copy(
+        pinnedHot = Some(censusOf(dir)))))
+    assertSameGraph(dir, full, "uncrashed")
+
+    // the ingest's publishes in order: five sequential lineage slices,
+    // three concurrent tail appends, then the canon log (the commit)
+    val lineage = Seq("extract", "entities", "ep_shingles", "ep_keys",
+      "link_edges")
+    val tail = Seq("assign", "nodes", "edges")
+    val order = lineage ++ tail :+ Pipeline.CanonLogStage
+    val points: Seq[(String, Set[String], Boolean)] =
+      lineage.indices.map(i =>
+        (s"after ${lineage(i)}", lineage.take(i + 1).toSet, false)) ++
+      (for {
+        k <- 1 to 3; sub <- tail.combinations(k); fold <- Seq(false, true)
+      } yield (s"after ${sub.mkString("+")}" +
+        (if (fold) ", compactTail before the retry" else ""),
+        (lineage ++ sub).toSet, fold)) :+
+      (("after the commit", order.toSet, false))
+    points.foreach { case (at, published, fold) =>
+      order.reverse.filterNot(published)
+        .foreach(Snapshots.rollback(dir, _, "sw-x"))
+      if (fold) Pipeline.compactTail(spark, dir, "sw-fold", 1e-9)
+      val r = Pipeline.runIncrementalPinned(spark, x.toDS(), dir, "sw-x",
+        bandedCfg)
+      assert(r == rX, at)
+      assert(Snapshots.versions(dir, "extract") == Seq(1, 2, 3), at)
+      assertSameGraph(dir, full, at)
+    }
+    Seq(dir, full).foreach(d => deleteRec(Path.of(d)))
   }
 
   test("re-run with resume is a no-op yielding identical results") {

@@ -187,12 +187,12 @@ class StreamingSpec extends SparkSpec {
     assert(Snapshots.versions(runDir, "extract") == Seq(1, 2))
     assert(nodes(runDir) == nodes(full))
 
-    // partial-crash repair: extract published but downstream died —
-    // the replayed batch must RE-APPLY (downstream only; the delta
-    // extract is not duplicated) instead of no-op'ing against a graph
-    // that never linked its triples
-    java.nio.file.Files.delete(java.nio.file.Path.of(
-      Snapshots.stageDir(runDir, "edges"), "_MANIFEST.json"))
+    // partial-crash repair: nodes published but edges and the canon
+    // log did not — the replayed batch must RE-APPLY (rolled back and
+    // re-run; the delta extract is not duplicated) instead of
+    // no-op'ing against a graph that never linked its triples
+    Seq(Pipeline.CanonLogStage, "edges")
+      .foreach(Snapshots.rollback(runDir, _, "batch-1"))
     val reapplied = Streaming.ingestBatch(b.toDS(), batchId = 1L, runDir)
     assert(reapplied, "batch with incomplete downstream must re-apply")
     assert(Snapshots.versions(runDir, "extract") == Seq(1, 2))
@@ -251,11 +251,12 @@ class StreamingSpec extends SparkSpec {
     assert(nodes(runDir) == nodes(full))
 
     // crash between base run and pin: drop the epoch state, replay an
-    // UNAPPLIED batch — ensurePinned re-pins from the current state
+    // UNAPPLIED batch (its edges append and canon log rolled back) —
+    // ensurePinned re-pins from the committed state
     Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
       Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
-    java.nio.file.Files.delete(java.nio.file.Path.of(
-      Snapshots.stageDir(runDir, "edges"), "_MANIFEST.json"))
+    Seq(Pipeline.CanonLogStage, "edges")
+      .foreach(Snapshots.rollback(runDir, _, "batch-1"))
     val reapplied = Streaming.ingestBatch(b.toDS(), batchId = 1L, runDir,
       cfg, epochPinned = true)
     assert(reapplied)
@@ -276,7 +277,7 @@ class StreamingSpec extends SparkSpec {
       assert(Streaming.ingestBatch(base.toDS(), batchId = 0L, dir, cfg,
         epochPinned = true))
       val lost = Pipeline.Stages.dropWhile(_ != crashAt) ++
-        Seq("ep_census", "ep_shingles", "ep_keys")
+        Seq(Pipeline.CanonLogStage, "ep_census", "ep_shingles", "ep_keys")
       lost.foreach(st => Snapshots.deleteDir(Snapshots.stageDir(dir, st)))
       assert(Streaming.ingestBatch(base.toDS(), batchId = 0L, dir, cfg,
         epochPinned = true), s"crash before $crashAt must re-apply")
@@ -333,12 +334,10 @@ class StreamingSpec extends SparkSpec {
     assert(nodes(runDir) == nodes(full))
 
     // CRASH WINDOW: appends published, canon log (the commit record)
-    // lost. The replayed batch must NOT be treated as applied — it
-    // re-applies: its partial tail rolls back to the pre-batch
-    // versions and the O(delta) tail re-runs
-    java.nio.file.Files.delete(java.nio.file.Path.of(
-      Snapshots.stageDir(runDir, Pipeline.CanonLogStage),
-      "_MANIFEST.json"))
+    // not. The replayed batch must NOT be treated as applied — it
+    // re-applies: the uncommitted batch rolls back to the pre-batch
+    // versions and re-runs
+    Snapshots.rollback(runDir, Pipeline.CanonLogStage, "batch-1")
     assert(!Pipeline.canonLogDirty(runDir))
     val reapplied = Streaming.ingestBatch(b.toDS(), batchId = 1L, runDir,
       cfg, epochPinned = true)
