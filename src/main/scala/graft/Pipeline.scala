@@ -78,12 +78,12 @@ object Pipeline {
       // next benchmark revision deletes it (compactAppendFrac =
       // Some(0) says the same).
       deferMerges: Boolean = true,
-      // Consolidate a lineage stage (entities / link_edges /
-      // ep_shingles / ep_keys) into a fresh full version whenever its
-      // delta count exceeds this, at the START of the next pinned
-      // ingest (see compactLineage): bounds the K-way union reads and
-      // K-manifest sums that otherwise grow with ingest count. Cost
-      // O(stage) amortized over maxDeltas ingests. None = never.
+      // Fold a lineage stage (entities / link_edges / ep_shingles /
+      // ep_keys) into a fresh full snapshot whenever its append-set
+      // count has reached this at the START of a pinned ingest (see
+      // compactLineage). The append cascade already keeps the count
+      // logarithmic in the ingest count; this caps it. Cost O(stage)
+      // per fold. None = never.
       maxLineageDeltas: Option[Int] = None
   )
 
@@ -127,9 +127,6 @@ object Pipeline {
 
   /** The stages of a pinned epoch (see [[pinEpoch]]). */
   private val EpochStages = Seq("ep_census", "ep_shingles", "ep_keys")
-
-  /** Manifest marker of an ingest's slice of a lineage stage. */
-  private val DeltaSlice = Map("delta" -> "true")
 
   /** Stage-3 logic (shared by `run` and the oracle-checked
     * `kg_nodes_exact` query): canonical id per entity via connected
@@ -351,29 +348,33 @@ object Pipeline {
     * equality only holds for epochs pinned right after a GLOBAL
     * relink. The crash-heal path in Streaming.ingestBatch accepts the
     * blend deliberately (availability over the recall fine print).
+    *
+    * The previous epoch's stages go first, so a pin that crashed
+    * part-way leaves an incomplete epoch, which a pinned ingest
+    * refuses until pinEpoch re-runs, never a mix of two epochs.
     */
   def pinEpoch(spark: SparkSession, runDir: String, runId: String,
                cfg: Config = Config()): Unit = {
     import spark.implicits._
     requireBase(runDir)
-    val fuzzy = lineageUnion(spark, runDir, "entities")
+    EpochStages
+      .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
+    val fuzzy = Snapshots.read(spark, runDir, "entities")
       .filter(col("pred").isin(Linking.FuzzyPreds: _*))
     // cap from the entity manifest rows — the SAME n convention the
     // global link stage uses (sizeHint = entities manifest rows), so
     // an epoch pinned right after a global run freezes EXACTLY the
     // census that run linked under (pinned-vs-base coherence; an
     // upper bound only raises the cap, same contract as linkEdges)
-    val nEnts = lineageRows(runDir, "entities")
+    val nEnts = Snapshots.readManifest(runDir, "entities").rows
     val cap = cfg.link.stopShingleCap(nEnts)
     val shingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
-      resume = false, metrics = Map("delta" -> "false")) {
+      resume = false) {
       Linking.shingleTable(fuzzy)
     }
     val hot = Linking.hotShingles(shingled, cap)
     // ep_census and ep_keys both derive from (shingled, hot) and
-    // publish disjoint stages — overlap the two publishes (a crash
-    // that published only some of the three epoch stages leaves a
-    // mixed epoch, which a re-run of pinEpoch replaces)
+    // publish disjoint stages — overlap the two publishes
     parallelRun(Seq(
       () => {
         Snapshots.stage(spark, runDir, "ep_census", runId, resume = false,
@@ -383,8 +384,7 @@ object Pipeline {
         (): Unit
       },
       () => {
-        Snapshots.stage(spark, runDir, "ep_keys", runId, resume = false,
-          metrics = Map("delta" -> "false")) {
+        Snapshots.stage(spark, runDir, "ep_keys", runId, resume = false) {
           Linking.bandedKeyTable(shingled, cfg.link, hot)
         }
         (): Unit
@@ -403,9 +403,10 @@ object Pipeline {
 
   /** Epoch-incremental ingest: delta-only extract AND delta-only
     * linking under the pinned census (see the block comment above).
-    * Each stage gains this ingest's slice as a delta version, and the
-    * merge-on-read tail's canon log commits them all; crash-retry
-    * follows the commit protocol (see [[alreadyCommitted]]).
+    * Each lineage stage gains this ingest's slice as an append
+    * snapshot ([[Snapshots.stageAppend]]), and the merge-on-read
+    * tail's canon log commits them all; crash-retry follows the commit
+    * protocol (see [[alreadyCommitted]]).
     */
   def runIncrementalPinned(spark: SparkSession,
                            newFiles: Dataset[SourceFile],
@@ -424,7 +425,8 @@ object Pipeline {
     val deltaTriples = triplesOf(
       publishExtract(spark, newFiles, runDir, runId, cfg, resume = false))
     // the rows of the slice `st` just published, from its manifest
-    def sliceRows(st: String): Long = Snapshots.readManifest(runDir, st).rows
+    def sliceRows(st: String): Long =
+      Snapshots.deltaRows(Snapshots.readManifest(runDir, st))
     val extractVersion = Snapshots.readManifest(runDir, "extract").version
     val deltaExtractRows = sliceRows("extract")
 
@@ -433,11 +435,13 @@ object Pipeline {
     // ids broadcast into the probe, the survivors anti-join a tiny
     // set). Broadcast hints only while the delta is small (bounded by
     // the delta extract's manifest rows). `entsOld` is planned from the
-    // lineage manifests BEFORE the slice publishes: the world before
-    // this ingest.
-    val entsOld = lineageUnion(spark, runDir, "entities")
-    val newEnts = Snapshots.stage(spark, runDir, "entities", runId,
-      resume = false, metrics = DeltaSlice) {
+    // live manifest BEFORE the slice publishes: the world before this
+    // ingest. Each lineage slice is clustered by the column its readers
+    // filter or join on: pred (entities, ep_shingles), the band key
+    // (ep_keys), src (link_edges).
+    val entsOld = Snapshots.read(spark, runDir, "entities")
+    val newEnts = Snapshots.stageAppend(spark, runDir, "entities", runId,
+      Seq("pred")) {
       val deltaForms = Linking.entitiesOf(deltaTriples)
       val existing = entsOld
         .join(SkewJoin.hinted(deltaForms.select("entityId"), deltaExtractRows),
@@ -450,8 +454,8 @@ object Pipeline {
 
     // 3. delta shingles + band keys under the PINNED census
     val hot = pinnedHot(spark, runDir)
-    val deltaShingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
-      resume = false, metrics = DeltaSlice) {
+    val deltaShingled = Snapshots.stageAppend(spark, runDir, "ep_shingles",
+      runId, Seq("pred")) {
       Linking.shingleTable(
         newEnts.filter(col("pred").isin(Linking.FuzzyPreds: _*)))
     }
@@ -465,7 +469,7 @@ object Pipeline {
     // recall); a drifted-to-stop one means the pin keeps surfacing
     // candidates a fresh run would drop. Every delta key is priced with
     // its exact df, from one broadcast-filtered scan of the stored
-    // shingle lineage (delta-bounded aggregate, map-side combined).
+    // shingle table (delta-bounded aggregate, map-side combined).
     // The metric lands in this ingest's ep_keys manifest; Config.
     // maxCensusDrift turns it into a refusal (recover by running the
     // SAME runId through runIncremental — the global relink, which
@@ -487,8 +491,8 @@ object Pipeline {
           "(global relink, bumps the epoch) then pinEpoch")
     }
 
-    val deltaKeys = Snapshots.stage(spark, runDir, "ep_keys", runId,
-      resume = false, metrics = DeltaSlice ++ Map(
+    val deltaKeys = Snapshots.stageAppend(spark, runDir, "ep_keys", runId,
+      Seq("key"), Map(
         "censusDrift" -> f"$drift%.6f", "driftSec" -> f"$driftSec%.2f")) {
       Linking.bandedKeyTable(deltaShingled, cfg.link, hot)
     }
@@ -496,12 +500,11 @@ object Pipeline {
 
     // 4. new edges = delta-vs-all (exact-norm + banded fuzzy), each
     // pair carrying >=1 delta endpoint — disjoint from stored edges.
-    // A set, like the global stage's exact ∪ fuzzy union: the distinct
-    // is the one exchange, so AQE sizes the slice's files
-    val deltaLinks = Snapshots.stage(spark, runDir, "link_edges", runId,
-      resume = false, metrics = DeltaSlice) {
-      val keysAll = lineageUnion(spark, runDir, "ep_keys")
-      val shingledAll = lineageUnion(spark, runDir, "ep_shingles")
+    // A set, like the global stage's exact ∪ fuzzy union
+    val deltaLinks = Snapshots.stageAppend(spark, runDir, "link_edges",
+      runId, Seq("src")) {
+      val keysAll = Snapshots.read(spark, runDir, "ep_keys")
+      val shingledAll = Snapshots.read(spark, runDir, "ep_shingles")
       Linking.deltaExactEdges(entsOld, newEnts, deltaExtractRows)
         .unionByName(Linking.deltaFuzzyEdges(deltaKeys, keysAll,
           shingledAll, cfg.link, deltaKeyRows))
@@ -637,8 +640,7 @@ object Pipeline {
 
     val tailMetrics = Map(
       "ccIterations" -> cc.iterations.toString,
-      "merges" -> merges.toString,
-      "delta" -> "append")
+      "merges" -> merges.toString)
 
     // --- 3. the delta's rows at their final canonicals, columns in
     // the full run's read-back order; cb (if any) with the stored
@@ -672,10 +674,12 @@ object Pipeline {
     // Any partially-published subset is uncommitted. Each append
     // is clustered like its stage's full snapshots: assign by its
     // ident partitions, nodes by kind, edges by pred.
-    def append(st: String, clusterBy: Seq[String], app: DataFrame): Unit =
+    def append(st: String, clusterBy: Seq[String], app: DataFrame): Unit = {
       Snapshots.stageAppend(spark, runDir, st, runId, clusterBy, tailMetrics ++
         bucketsOf(runDir, st).map("canonBuckets" -> _.toString) +
         ("defer" -> "true"))(app)
+      (): Unit
+    }
     parallelRun(Seq(
       () => append("assign", Seq("ident"), assignApp),
       () => append("nodes", Seq("kind"), nodesApp),
@@ -769,8 +773,7 @@ object Pipeline {
       val (appendRows, sets) = Snapshots.appendStats(m)
       // carry the canonBuckets stamp: the next ingest's O(delta)
       // precondition reads canonBuckets off the live manifest
-      val keep = m.metrics.view
-        .filterKeys(Set("canonBuckets", "epoch")).toMap
+      val keep = m.metrics.view.filterKeys(Set("canonBuckets")).toMap
       Snapshots.compact(spark, runDir, st, runId,
         if (st == "assign") Seq("ident") else Nil,
         keep ++ Map("appendRowsFolded" -> appendRows.toString,
@@ -782,42 +785,35 @@ object Pipeline {
     stages
   }
 
-  /** LINEAGE maintenance: the pinned-ingest path unions a stage's
-    * last full version plus every delta appended since — after K
-    * ingests that is a K-way union read (and a K-manifest sum) per
-    * ingest, a plan/driver term that grows with INGEST COUNT.
-    * Consolidating the union into a fresh FULL version resets the
-    * lineage to length 1 (lineageVersions anchors at the last full),
-    * and the folded-in versions expire.
+  /** LINEAGE maintenance: a pinned ingest appends one set to each
+    * lineage stage, and the append cascade keeps the set count
+    * logarithmic in the ingest count. Every stage whose count has
+    * reached `maxDeltas` folds into a fresh full snapshot
+    * ([[Snapshots.compact]]), and the versions the fold superseded
+    * expire.
     *
     * Like every writer it first rolls back an uncommitted ingest, so
-    * every delta left in a lineage is committed and may fold; a dir
-    * with no committed base folds nothing. The consolidation publishes
-    * under "<runId>-maint", which names no extract version, so no
-    * rollback takes it back; a retry first expires anything a crashed
-    * consolidation left superseded.
+    * every set it folds is committed; a dir with no committed base
+    * folds nothing. A fold publishes under "<runId>-maint", which
+    * names no extract version, so no rollback takes it back; what a
+    * crashed fold left unexpired goes with the next fold.
     */
   def compactLineage(spark: SparkSession, runDir: String, runId: String,
                      maxDeltas: Int): Seq[String] = {
     if (rollbackUncommitted(runDir).isEmpty) return Nil
     // extract is deliberately NOT here: its versions are disjoint
-    // corpus slices under union-of-ALL-versions semantics (no delta
-    // marker), so lineageVersions would anchor at the newest slice
-    // and the cleanup pass would expire the rest of the corpus
+    // corpus slices, read as the union of every version
     val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
     stages.filter(Snapshots.isComplete(runDir, _)).flatMap { st =>
-      // cleanup pass (also the crash-retry of this function): expire
-      // versions a previous consolidation superseded
-      val lv = lineageVersions(runDir, st)
-      Snapshots.versions(runDir, st).filterNot(lv.contains)
-        .reverse.foreach(v => Snapshots.expire(runDir, st, v))
-      if (lv.length - 1 < maxDeltas) None
+      val (_, sets) = Snapshots.appendStats(Snapshots.readManifest(runDir, st))
+      if (sets < math.max(1, maxDeltas)) None
       else {
-        val df = lineageUnion(spark, runDir, st)
-        Snapshots.stage(spark, runDir, st, s"$runId-maint",
-          resume = false, metrics = Map("compacted" -> "true",
-            "lineageFolded" -> lv.length.toString))(df)
-        lv.reverse.foreach(v => Snapshots.expire(runDir, st, v))
+        Snapshots.compact(spark, runDir, st, s"$runId-maint", Nil,
+          Map("appendSetsFolded" -> sets.toString))()
+        // newest-first: an append version carries its predecessors' files
+        val live = Snapshots.readManifest(runDir, st).version
+        Snapshots.versions(runDir, st).filter(_ < live).reverse
+          .foreach(Snapshots.expire(runDir, st, _))
         Some(st)
       }
     }
@@ -1007,8 +1003,9 @@ object Pipeline {
     import spark.implicits._
     val deltaSh = deltaShingled
       .select($"pred", explode($"shingles").as("sh")).distinct()
-    val freshCap = cfg.link.stopShingleCap(lineageRows(runDir, "entities"))
-    val stored = lineageUnion(spark, runDir, "ep_shingles")
+    val freshCap = cfg.link.stopShingleCap(
+      Snapshots.readManifest(runDir, "entities").rows)
+    val stored = Snapshots.read(spark, runDir, "ep_shingles")
     val dfs = stored.select($"pred", explode($"shingles").as("sh"))
       .join(SkewJoin.hinted(deltaSh, deltaExtractRows), Seq("pred", "sh"))
       .groupBy($"pred", $"sh")
@@ -1022,39 +1019,6 @@ object Pipeline {
     if (row.getLong(0) == 0L) 0.0
     else row.getLong(1).toDouble / row.getLong(0).toDouble
   }
-
-  /** Versions forming the current lineage of an appendable stage: the
-    * last FULL (non-delta) version and every delta appended after it.
-    * A stage that has only ever been globally recomputed has a
-    * single-element lineage (its latest version).
-    */
-  private def lineageVersions(runDir: String, stage: String): Seq[Int] = {
-    val vs = Snapshots.versions(runDir, stage)
-    if (vs.isEmpty) return Nil
-    // a lineage MUST be anchored by a full (non-delta) version: if the
-    // base snapshot was expire()d while delta appends remain, falling
-    // back to the oldest delta would silently drop the entire
-    // pre-delta corpus from every union — fail fast instead
-    val lastFull = vs.filter(v =>
-      !Snapshots.readManifestVersion(runDir, stage, v)
-        .metrics.get("delta").contains("true")).lastOption.getOrElse(
-        throw new IllegalStateException(
-          s"stage '$stage' in $runDir has only delta versions ($vs) — " +
-            "its full base snapshot was expired; the lineage union " +
-            "would silently drop the pre-delta corpus"))
-    vs.filter(_ >= lastFull)
-  }
-
-  /** Rows of a stage's current lineage, summed from its manifests. */
-  private def lineageRows(runDir: String, stage: String): Long =
-    lineageVersions(runDir, stage)
-      .map(Snapshots.readManifestVersion(runDir, stage, _).rows).sum
-
-  private def lineageUnion(spark: SparkSession, runDir: String,
-                           stage: String): DataFrame =
-    lineageVersions(runDir, stage)
-      .map(v => Snapshots.readVersion(spark, runDir, stage, v))
-      .reduce(_ unionByName _)
 
   /** Stages 2–4 (entities → link edges → canonicalize → materialize):
     * everything downstream of the content scan, over narrow tables
@@ -1120,12 +1084,12 @@ object Pipeline {
     val assign = Snapshots.stage(spark, runDir, "assign", runId, resume,
       partitionBy = Seq("ident"),
       metrics = Map("ccIterations" -> ccIters.toString) ++ cbMetrics) {
-      // exact edge count for free from the link_edges lineage
-      // manifests: CC's path decision then costs no count job and no
-      // raw-edge cache (see ConnectedComponents.run's edgeCountHint)
+      // exact edge count for free from the link_edges manifest: CC's
+      // path decision then costs no count job and no raw-edge cache
+      // (see ConnectedComponents.run's edgeCountHint)
       val (a, iters) = assignCanonical(ents, links,
         ccLocalThreshold = cfg.ccLocalThreshold,
-        edgeCountHint = Some(lineageRows(runDir, "link_edges")))
+        edgeCountHint = Some(Snapshots.readManifest(runDir, "link_edges").rows))
       ccIters = iters
       withCb(a, cfg.canonBuckets)
         .withColumn("ident", $"canonicalId" === $"entityId")
@@ -1190,11 +1154,9 @@ object Pipeline {
     * quarantine split falls out of the q= partition-dir keys in the
     * extract manifests' per-file lineage. Extract counts SUM across
     * snapshot versions (a full run has one; each incremental ingest
-    * appends one); entities/link_edges sum their current LINEAGE
-    * (one full version after a global relink; full + disjoint delta
-    * appends under a pinned epoch); the live nodes/edges manifests
-    * count their merge-on-read appends too, so edges is the live
-    * manifest's rows and nodes is read from a dirty canon log (below).
+    * adds one); every other stage's live manifest counts its appends
+    * too, so entities, link edges and edges are live manifest rows and
+    * nodes is read from a dirty canon log (below).
     */
   private def resultFrom(runDir: String, runId: String,
                          ccIters: Int): Result = {
@@ -1208,8 +1170,8 @@ object Pipeline {
       runId = runId,
       triples = rawRows - quarantined,
       quarantined = quarantined,
-      entities = lineageRows(runDir, "entities"),
-      linkEdges = lineageRows(runDir, "link_edges"),
+      entities = Snapshots.readManifest(runDir, "entities").rows,
+      linkEdges = Snapshots.readManifest(runDir, "link_edges").rows,
       // under deferred merges the stored node ROWS over-count merged
       // components; the canon log's manifest carries the exact
       // logical count by driver arithmetic

@@ -57,18 +57,19 @@ object SparkEntry {
     * invocations must not leak disk in a long-lived session.
     */
   private def withStagedTable[T](dir: String, table: String,
-                                 copies: Int = 1)(f: String => T): T = {
-    val staged = java.nio.file.Files.createTempDirectory("graft-stream")
-    try {
+                                 copies: Int = 1)(f: String => T): T =
+    withStagedDir { staged =>
       (1 to copies).foreach(i => java.nio.file.Files.copy(
         java.nio.file.Path.of(s"$dir/$table.parquet"),
         staged.resolve(s"$table$i.parquet")))
       f(staged.toString)
-    } finally {
-      (1 to copies).foreach(i =>
-        java.nio.file.Files.deleteIfExists(staged.resolve(s"$table$i.parquet")))
-      java.nio.file.Files.deleteIfExists(staged)
     }
+
+  /** A fresh, empty dir for a file-stream source, deleted afterwards. */
+  private def withStagedDir[T](f: java.nio.file.Path => T): T = {
+    val staged = java.nio.file.Files.createTempDirectory("graft-stream")
+    try f(staged)
+    finally graft.store.Snapshots.deleteDir(staged.toString)
   }
 
   private def withStagedEvents[T](dir: String, copies: Int = 1)(f: String => T): T =
@@ -749,30 +750,32 @@ object SparkEntry {
     // batch boundary. FilesGen replay/union equality stays spec-gated
     // in StreamingSpec.
     "stream_kg_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sp: SparkSession = s
       import sp.implicits._
       val runDir = freshScratch("kgstream")
-      val corpus = asksCorpus(s, dir)
-      // ONE collect of the corpus, split on the driver: the per-batch
-      // collect re-derived the whole asks corpus (distinctWords +
-      // groupBy + sort_array) once per micro-batch
-      val collected = corpus.select(col("doc_id") % 2 === 0,
-          struct(col("repo"), col("path"), col("commit"), col("lang"),
-            col("content")))
-        .as[(Boolean, SourceFile)].collect()
-      def batch(m: Int): Seq[SourceFile] = collected.toSeq
-        .collect { case (even, f) if even == (m == 0) => f }
-      val input = MemoryStream[SourceFile](s)
-      withCheckpointDir(s, s"$runDir/_ck") {
-        val q = graft.streaming.Streaming.kgIngestStream(input.toDS(), runDir,
-          graft.Pipeline.Config(resume = false))
-        try {
-          input.addData(batch(0): _*)
-          q.processAllAvailable()
-          input.addData(batch(1): _*)
-          q.processAllAvailable()
-        } finally q.stop()
+      withStagedDir { staged =>
+        // the corpus is derived once, one parquet dir per batch under a
+        // hidden dir the file source does not list. Each batch's files
+        // move into the source dir while no query runs, then one query
+        // takes exactly that batch: a restarted query resumes its batch
+        // ids and its seen-files log from the checkpoint
+        val hidden = staged.resolve(".batches")
+        asksCorpus(s, dir).withColumn("b", col("doc_id") % 2 =!= 0)
+          .drop("doc_id").write.partitionBy("b").parquet(hidden.toString)
+        val src = s.readStream
+          .schema(org.apache.spark.sql.Encoders.product[SourceFile].schema)
+          .parquet(staged.toString).as[SourceFile]
+        withCheckpointDir(s, s"$runDir/_ck") {
+          Seq(false, true).foreach { odd =>
+            Option(hidden.resolve(s"b=$odd").toFile.listFiles()).toSeq.flatten
+              .filter(_.getName.endsWith(".parquet"))
+              .foreach(f => java.nio.file.Files.move(f.toPath,
+                staged.resolve(s"b$odd-${f.getName}")))
+            val q = graft.streaming.Streaming.kgIngestStream(src, runDir,
+              graft.Pipeline.Config(resume = false))
+            try q.processAllAvailable() finally q.stop()
+          }
+        }
       }
       asksNodes(s, runDir)
     }),

@@ -69,9 +69,12 @@ object Snapshots {
     * another format. Format 1 is the first stamped one; run dirs
     * written before it (no stamp) are refused too. Format 2 stamps
     * every canon log with the extract version its graph covers (the
-    * commit record of Pipeline's commit protocol).
+    * commit record of Pipeline's commit protocol). Format 3 publishes
+    * every slice a pinned ingest adds to a lineage stage (entities,
+    * link_edges, ep_shingles, ep_keys) as an append snapshot, so a
+    * stage's live manifest is its whole table.
     */
-  val FormatVersion = 2
+  val FormatVersion = 3
 
   private val ManifestName = "_MANIFEST.json"
 
@@ -121,15 +124,17 @@ object Snapshots {
     * recorded schema.
     */
   private def assemble(spark: SparkSession, runDir: String, stage: String,
-                       m: Manifest): DataFrame = IOStat.timed("snap.assemble") {
+                       m: Manifest, only: Option[String] = None
+                      ): DataFrame = IOStat.timed("snap.assemble") {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.types.StructType
     val sd = stageDir(runDir, stage)
     val byRoot = effectiveBytes(m).toSeq.groupBy { case (p, _) => rootOf(p) }
+      .filter { case (r, _) => only.forall(_ == r) }
     val roots =
-      if (byRoot.isEmpty) Seq(s"snap=${m.version}" -> Nil)
+      if (byRoot.isEmpty) Seq(only.getOrElse(s"snap=${m.version}") -> Nil)
       else byRoot.toSeq.sortBy(_._1)
     roots.map { case (r, fs) =>
       val w = r.split('/').head.stripPrefix("snap=").toInt
@@ -379,15 +384,21 @@ object Snapshots {
     *     column stats instead of dir pruning, which is proportionate to
     *     their (delta) size. The Iceberg analog: appended data files in
     *     a new snapshot.
+    * Returns the appended rows re-read from append/d, as [[stage]]
+    * returns its snapshot: a caller consumes the durable delta, never
+    * a live lineage.
     *
     * A binary-counter cascade keeps the live append-set count
-    * logarithmic: each append absorbs (physically merges, into
-    * snap=<v+1>/append/m) every prior set no larger than the
-    * accumulated carry, starting from the delta's size. Per-ingest
-    * append cost is O(delta) amortized ×log(total/delta); re-reading
-    * every prior set per ingest instead would grow without bound
-    * under steady ingestion. Append mass itself is bounded by the
-    * compaction trigger ([[compact]]).
+    * logarithmic. It runs one append late, so that append/d stays the
+    * delta's own set: the previous append's delta set carries, and
+    * absorbs every other prior set no larger than the accumulated
+    * carry, smallest first; when it absorbs any, they are physically
+    * merged into snap=<v+1>/append/m. The sets other than the newest
+    * delta are then exactly those of a counter over the earlier
+    * deltas. Per-ingest append cost is O(delta) amortized
+    * ×log(total/delta); re-reading every prior set per ingest instead
+    * would grow without bound under steady ingestion. Append mass
+    * itself is bounded by the compaction trigger ([[compact]]).
     *
     * The delta and every cascade merge are written [[clustered]] by
     * `clusterBy` (a partitioned stage's partition columns, or the
@@ -406,7 +417,7 @@ object Snapshots {
   def stageAppend(spark: SparkSession, runDir: String, stageName: String,
                   runId: String, clusterBy: Seq[String],
                   metrics: => Map[String, String] = Map.empty)
-                 (append: => DataFrame): Unit = {
+                 (append: => DataFrame): DataFrame = {
     val base = readManifest(runDir, stageName)
     val version = prepareNextVersion(runDir, stageName)
     val dir = snapshotDir(runDir, stageName, version)
@@ -423,37 +434,32 @@ object Snapshots {
     clustered(adf, clusterBy).write.mode(SaveMode.Overwrite)
       .option("compression", StageCompression)
       .parquet(s"$dir/append/d")
-    val deltaStats = footerStats(s"$dir/append/d")
-    // cascade: absorb sets smallest-first while they fit in the carry
-    var carry = deltaStats.values.map(_._1).sum
-    val keep = Vector.newBuilder[String]
-    val absorb = Vector.newBuilder[Vector[String]]
-    priorSets.sortBy(_._3).foreach { case (r, files, n) =>
-      if (n <= carry) { carry += n; absorb += files }
-      else keep += r
-    }
-    val absorbed = absorb.result()
-    if (absorbed.nonEmpty) {
-      val deltaBack =
-        if (deltaStats.isEmpty) Vector.empty
-        else Vector(spark.read.parquet(s"$dir/append/d"))
-      val merged = (deltaBack ++ absorbed.map(fs =>
-        spark.read.parquet(fs.map(f => s"$sd/$f"): _*)))
-        .reduce(_ unionByName _)
-      clustered(merged, clusterBy).write.mode(SaveMode.Overwrite)
+    // cascade: the previous delta's set absorbs the other prior sets
+    // smallest-first while they fit in the carry
+    val (seed, others) =
+      priorSets.partition(_._1 == s"snap=${base.version}/append/d")
+    val smallestFirst = others.sortBy(_._3)
+    // the carry before each set: the seed's rows plus every smaller set's
+    val carries = smallestFirst.scanLeft(seed.map(_._3).sum)(_ + _._3)
+    val absorbed = smallestFirst.zip(carries)
+      .takeWhile { case ((_, _, n), c) => n <= c }.map(_._1)
+    val merged =
+      if (seed.isEmpty || absorbed.isEmpty) Vector.empty else seed ++ absorbed
+    if (merged.nonEmpty)
+      clustered(spark.read.parquet(merged.flatMap(_._2).map(f => s"$sd/$f"): _*),
+        clusterBy).write.mode(SaveMode.Overwrite)
         .option("compression", StageCompression)
         .parquet(s"$dir/append/m")
-      deleteDir(s"$dir/append/d")
-    }
     val wallMs = (System.nanoTime() - t0) / 1000000L
 
-    val keptRoots = keep.result().toSet
+    val mergedRoots = merged.map(_._1).toSet
     val carried = baseEff.filter { case (path, _) =>
-      !isAppend(path) || keptRoots.contains(rootOf(path))
+      !isAppend(path) || !mergedRoots.contains(rootOf(path))
     }
     val tF0 = System.nanoTime()
     val perFile = footerStats(dir)
     val footerSec = (System.nanoTime() - tF0) / 1e9
+    val newSets = perFile.keys.map(k => rootOf(s"snap=$version/$k")).toSet
     val m = Manifest(FormatVersion, runId, stageName,
       rows = perFile.values.map(_._1).sum + carried.values.sum,
       fileRows = perFile.map { case (k, (r, _)) => k -> r }, wallMs = wallMs,
@@ -461,8 +467,8 @@ object Snapshots {
         "footerSec" -> f"$footerSec%.2f",
         "newFiles" -> perFile.size.toString,
         "appendSets" ->
-          (keptRoots.size + (if (perFile.nonEmpty) 1 else 0)).toString,
-        "absorbedSets" -> absorbed.size.toString),
+          (priorSets.size - merged.size + newSets.size).toString,
+        "absorbedSets" -> merged.size.toString),
       version = version,
       baseFiles = Some(carried),
       fileBytes = Some(perFile.map { case (k, (_, b)) => k -> b }),
@@ -476,10 +482,16 @@ object Snapshots {
         Some(readBackSchema(spark, adf, Nil, dir, perFile.keys).json))
     writeManifest(sd, versionedManifestName(version), m)
     writeManifest(sd, ManifestName, m)
-    // NOTE: deliberately returns Unit — no caller consumes an eager
-    // re-read (append consumers re-open the stage via `read` when they
-    // need it)
+    IOStat.timed("snap.reread")(assemble(spark, runDir, stageName, m,
+      only = Some(s"snap=$version/append/d")))
   }
+
+  /** Rows of the delta an append snapshot published (its own append/d
+    * set); a full snapshot's rows.
+    */
+  def deltaRows(m: Manifest): Long =
+    if (m.baseFiles.isEmpty) m.rows
+    else m.fileRows.collect { case (f, n) if f.startsWith("append/d/") => n }.sum
 
   /** `df` REBALANCEd by `by` — AQE coalesces or splits the partitions
     * to `spark.sql.adaptive.advisoryPartitionSizeInBytes` of measured

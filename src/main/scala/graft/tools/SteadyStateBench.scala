@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * see terms that grow with INGEST COUNT; this one runs the production
   * maintenance shape and reports them per ingest: the merge-on-read
   * tail (append-only snapshots + canon log) with the fold trigger at
-  * foldFrac, expiry of every version a fold unpinned, and lineage
-  * consolidation past 4 deltas. Per ingest: append write volume, live
+  * foldFrac, expiry of every version a fold unpinned, and a lineage
+  * fold at 4 append sets. Per ingest: append write volume, live
   * append sets (the binary-counter cascade keeps them O(log K)),
   * canon-log rows, disk.
   *

@@ -16,6 +16,15 @@ class PipelineSpec extends SparkSpec {
     Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
   }
 
+  // the rows `runId` appended to a stage: its version minus the one
+  // below it, as a multiset
+  private def sliceOf(dir: String, st: String, runId: String) = {
+    val v = Snapshots.versions(dir, st)
+      .filter(Snapshots.readManifestVersion(dir, st, _).runId == runId).last
+    Snapshots.readVersion(spark, dir, st, v)
+      .exceptAll(Snapshots.readVersion(spark, dir, st, v - 1))
+  }
+
   private val n = 400
   private lazy val files = FilesGen.dataset(spark, n)
 
@@ -108,39 +117,52 @@ class PipelineSpec extends SparkSpec {
     assert(m2.rows == 6 && m2.version == 2)
     assert(m2.baseFiles.get == base)
     assert(m2.fileRows.keys.forall(_.startsWith("append/d/")))
-    // v3: a one-row delta is smaller than v2's two-row set, so the
-    // cascade CARRIES v2's set by reference
-    Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b")) {
+    // v3: v2's delta set has no other prior set to absorb, so the
+    // cascade CARRIES it by reference, and v3's one-row delta is a
+    // set of its own, returned as the append's re-read
+    val d3 = Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b")) {
       Seq((50L, 1)).toDF("x", "b")
     }
+    assert(d3.select("x", "b").as[(Long, Int)].collect().toSeq == Seq((50L, 1)))
     val m3 = Snapshots.readManifest(dir, "t")
     assert(appendRoots(m3) == Set("snap=2/append/d"))
     assert(m3.rows == 7 && readSet == v1Set ++ Set((10L, 0), (99L, 2), (50L, 1)))
-    // v4: a two-row delta absorbs both prior sets (1 ≤ 2, then
-    // 2 ≤ 3) into one merged set; only the base stays carried
+    // v4: v3's one-row set cannot absorb v2's two rows: three sets
     Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b")) {
       Seq((60L, 0), (61L, 2)).toDF("x", "b")
     }
     val m4 = Snapshots.readManifest(dir, "t")
-    assert(m4.baseFiles.get == base)
-    assert(m4.fileRows.keys.forall(_.startsWith("append/m/")))
-    assert(m4.metrics("absorbedSets") == "2" && m4.metrics("appendSets") == "1")
+    assert(appendRoots(m4) == Set("snap=2/append/d", "snap=3/append/d"))
+    assert(m4.fileRows.keys.forall(_.startsWith("append/d/")))
+    assert(m4.metrics("absorbedSets") == "0" && m4.metrics("appendSets") == "3")
     val v4Set = v1Set ++ Set((10L, 0), (99L, 2), (50L, 1), (60L, 0), (61L, 2))
     assert(m4.rows == 9 && readSet == v4Set)
-    assert(Snapshots.appendStats(m4) == (5L, 1))
-    // an empty append changes nothing but the version
-    Snapshots.stageAppend(spark, dir, "t", "p5", Seq("b")) {
+    assert(Snapshots.appendStats(m4) == (5L, 3))
+    // v5, an empty append, changes nothing but the version; its
+    // cascade merges v4's two-row set with the others it absorbs
+    // (1 ≤ 2, then 2 ≤ 3) into one set, and only the base stays carried
+    val d5 = Snapshots.stageAppend(spark, dir, "t", "p5", Seq("b")) {
       spark.emptyDataset[(Long, Int)].toDF("x", "b")
     }
-    assert(Snapshots.readManifest(dir, "t").rows == 9 && readSet == v4Set)
+    assert(d5.isEmpty)
+    val m5 = Snapshots.readManifest(dir, "t")
+    assert(m5.baseFiles.get == base)
+    assert(m5.fileRows.keys.exists(_.startsWith("append/m/")))
+    assert(m5.metrics("absorbedSets") == "3")
+    assert(Snapshots.appendStats(m5)._1 == 5L)
+    assert(m5.rows == 9 && readSet == v4Set)
     // time travel: every published version reads as it was
     assert(Snapshots.readVersion(spark, dir, "t", 1).count() == 4)
     assert(Snapshots.readVersion(spark, dir, "t", 2).count() == 6)
     assert(Snapshots.readVersion(spark, dir, "t", 3).count() == 7)
+    assert(Snapshots.readVersion(spark, dir, "t", 4).count() == 9)
     // expire guard: a version stays pinned while a published append
-    // carries its files — v1 by every later version, v2 by v3
+    // carries its files — v1 by every later version, v2 by v3 and v4,
+    // v3 by v4
     intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
     intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 2))
+    intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 3))
+    Snapshots.expire(dir, "t", 4)
     Snapshots.expire(dir, "t", 3)
     Snapshots.expire(dir, "t", 2)
     intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
@@ -431,8 +453,10 @@ class PipelineSpec extends SparkSpec {
       .foreach { st =>
         assert(Snapshots.versions(inc, st) == Seq(1, 2, 3), st)
       }
-    assert(Snapshots.readManifestVersion(inc, "link_edges", 3)
-      .metrics.get("delta").contains("true"))
+    Seq("entities", "ep_shingles", "ep_keys", "link_edges").foreach { st =>
+      val m = Snapshots.readManifestVersion(inc, st, 3)
+      assert(m.runId == "ep-delta" && m.baseFiles.exists(_.nonEmpty), st)
+    }
 
     // crash-retry mid-chain: kill after the assign and nodes appends
     // published but before the edges append did; the retry rolls the
@@ -676,10 +700,11 @@ class PipelineSpec extends SparkSpec {
     val (inc, r) = chain(Some(1))
     val (incN, rN) = chain(None)
 
-    // the maintained chain's lineage stayed short: consolidation at
-    // each ingest start folds completed deltas, so at most
-    // [consolidated full, the latest ingest's delta] remain — while
-    // the unmaintained chain accumulated base + 3 deltas
+    // the maintained chain stayed narrow: consolidation at each ingest
+    // start folds the committed append sets and expires what it
+    // superseded, so at most [folded full, the latest ingest's append]
+    // remain, with one append set — while the unmaintained chain
+    // accumulated base + 3 append versions
     Seq("entities", "link_edges", "ep_keys", "ep_shingles").foreach { st =>
       val vs = Snapshots.versions(inc, st)
       assert(vs.length <= 2, s"$st lineage not consolidated: $vs")
@@ -687,6 +712,8 @@ class PipelineSpec extends SparkSpec {
       val live = Snapshots.readManifestVersion(inc, st, vs.head)
       if (vs.length == 2)
         assert(live.metrics.get("compacted").contains("true"), st)
+      assert(Snapshots.appendStats(Snapshots.readManifest(inc, st))._2 <= 1, st)
+      assert(Snapshots.appendStats(Snapshots.readManifest(incN, st))._2 >= 2, st)
     }
     // identical graphs and result counts on both chains
     assert(nodeSet(inc) == nodeSet(incN))
@@ -903,11 +930,8 @@ class PipelineSpec extends SparkSpec {
     val logKeys = Snapshots.read(spark, inc, Pipeline.CanonLogStage)
       .select("oldRoot").as[Long].collect().toSet
     Pipeline.runIncrementalPinned(spark, c.toDS(), inc, "lk-d2", cfg)
-    val d2 = Snapshots.versions(inc, "link_edges").filter(v =>
-      Snapshots.readManifestVersion(inc, "link_edges", v).runId == "lk-d2")
-    val ends = d2.flatMap(v => Snapshots.readVersion(spark, inc,
-      "link_edges", v).select("src", "dst").as[(Long, Long)].collect()
-      .flatMap { case (s, d) => Seq(s, d) }).toSet
+    val ends = sliceOf(inc, "link_edges", "lk-d2").select("src", "dst")
+      .as[(Long, Long)].collect().flatMap { case (s, d) => Seq(s, d) }.toSet
     assert(ends.intersect(logKeys).nonEmpty,
       s"no delta-2 link edge reaches a merged-away root: $logKeys")
     // the log stays single-hop with one row per merged-away root
@@ -974,29 +998,20 @@ class PipelineSpec extends SparkSpec {
     assert(drift >= 0.0 && drift <= 1.0)
 
     // the recorded drift, recomputed with plain collections from the
-    // stored state: the stage's lineage is its last full version plus
-    // the deltas after it; the fresh cap comes from the entity
-    // manifests; a delta key drifted when its df over the stored
-    // shingle lineage classifies it differently from the pinned census
-    def lineage(st: String): Seq[Int] = {
-      val vs = Snapshots.versions(dir, st)
-      val lastFull = vs.filter(v => !Snapshots.readManifestVersion(dir, st, v)
-        .metrics.get("delta").contains("true")).last
-      vs.filter(_ >= lastFull)
-    }
-    def shingleKeys(v: Int): Seq[(String, Long)] =
-      Snapshots.readVersion(spark, dir, "ep_shingles", v)
-        .select("pred", "shingles").as[(String, Seq[Long])].collect()
+    // stored state: the live shingle table includes the delta's append;
+    // the fresh cap comes from the live entity manifest; a delta key
+    // drifted when its df over the stored shingle table classifies it
+    // differently from the pinned census
+    def shingleKeys(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+      df.select("pred", "shingles").as[(String, Seq[Long])].collect()
         .toSeq.flatMap { case (p, shs) => shs.map(p -> _) }
-    val deltaV = lineage("ep_shingles").filter(v =>
-      Snapshots.readManifestVersion(dir, "ep_shingles", v).runId == "dr-d2")
-    assert(deltaV.length == 1)
-    val deltaKeys = shingleKeys(deltaV.head).distinct
+    assert(Snapshots.versions(dir, "ep_shingles").count(v =>
+      Snapshots.readManifestVersion(dir, "ep_shingles", v).runId == "dr-d2") == 1)
+    val deltaKeys = shingleKeys(sliceOf(dir, "ep_shingles", "dr-d2")).distinct
     assert(deltaKeys.nonEmpty)
-    val dfOf = lineage("ep_shingles").flatMap(shingleKeys)
+    val dfOf = shingleKeys(Snapshots.read(spark, dir, "ep_shingles"))
       .groupBy(identity).map { case (k, occ) => k -> occ.length.toLong }
-    val nEnts = lineage("entities")
-      .map(Snapshots.readManifestVersion(dir, "entities", _).rows).sum
+    val nEnts = Snapshots.readManifest(dir, "entities").rows
     val freshCap = cfgT(None).link.stopShingleCap(nEnts)
     val pinnedHot = hot2.toSet
     val drifted = deltaKeys.count(k => (dfOf(k) > freshCap) != pinnedHot(k))
@@ -1060,13 +1075,11 @@ class PipelineSpec extends SparkSpec {
       host(s"d$i.md", if (i % 2 == 0) h.toUpperCase else s"www.$h") }
     Pipeline.runIncrementalPinned(spark, delta.toDS(), dir, "le-d", bandedCfg)
     val m = Snapshots.readManifest(dir, "link_edges")
-    assert(m.runId == "le-d" && m.metrics.get("delta").contains("true"))
+    assert(m.runId == "le-d" && m.baseFiles.exists(_.nonEmpty))
     // an edge is exact when its endpoints share a norm, fuzzy otherwise
-    val norms = Snapshots.versions(dir, "entities")
-      .map(Snapshots.readVersion(spark, dir, "entities", _))
-      .reduce(_ unionByName _).select("entityId", "norm")
+    val norms = Snapshots.read(spark, dir, "entities").select("entityId", "norm")
       .as[(Long, String)].collect().toMap
-    val pairs = Snapshots.read(spark, dir, "link_edges")
+    val pairs = sliceOf(dir, "link_edges", "le-d")
       .select("src", "dst").as[(Long, Long)].collect().toSeq
     val exact = pairs.count { case (a, b) => norms(a) == norms(b) }
     assert(exact > 0 && pairs.length - exact > 0,
@@ -1243,6 +1256,70 @@ class PipelineSpec extends SparkSpec {
       assertSameGraph(dir, full, at)
     }
     Seq(dir, full).foreach(d => deleteRec(Path.of(d)))
+  }
+
+  test("a re-pin crashed part-way leaves an incomplete epoch, which a pinned ingest refuses") {
+    val a = (0 until 12).map(i => asks(s"a$i.txt", s"eword$i"))
+    val x = Seq(asks("x.txt", "EWORD1", "ebrandnew")).toDS()
+    val dir = tmpDir("repin")
+    Pipeline.run(spark, a.toDS(), dir, "rp-base")
+    Pipeline.pinEpoch(spark, dir, "rp-pin")
+    // a re-pin that crashed after its ep_shingles publish: its
+    // ep_census and ep_keys never published
+    Pipeline.pinEpoch(spark, dir, "rp-pin2")
+    Seq("ep_census", "ep_keys").foreach(Snapshots.rollback(dir, _, "rp-pin2"))
+    val ex = intercept[IllegalArgumentException](
+      Pipeline.runIncrementalPinned(spark, x, dir, "rp-x"))
+    assert(ex.getMessage.contains("no pinned epoch"), ex.getMessage)
+    assert(Snapshots.versions(dir, "extract") == Seq(1))
+    // re-running the pin completes the epoch, and the ingest runs
+    Pipeline.pinEpoch(spark, dir, "rp-pin2")
+    val r = Pipeline.runIncrementalPinned(spark, x, dir, "rp-x")
+    val full = tmpDir("repin-full")
+    val rFull = Pipeline.run(spark, (a :+ asks("x.txt", "EWORD1", "ebrandnew"))
+      .toDS(), full, "rp-full")
+    assertSameGraph(dir, full, "after the healed re-pin")
+    assert(counts(r) == counts(rFull))
+    Seq(dir, full).foreach(d => deleteRec(Path.of(d)))
+  }
+
+  test("a six-ingest pinned chain keeps a logarithmic append-set count per lineage stage") {
+    // six deltas of one shape, so each lineage stage gains six equal
+    // slices: six exact twins of base forms, one brand-new form and two
+    // brand-new hosts (a shingle and band-key slice each)
+    val rnd = new scala.util.Random(20261019L)
+    def label(): String =
+      Seq.fill(10)(('a' + rnd.nextInt(26)).toChar).mkString + ".example.org"
+    val classes = (0 until 36).map(i => s"gword$i")
+    val a = classes.zipWithIndex.map { case (w, i) => asks(s"a$i.txt", w) } ++
+      (0 until 8).map(i => host(s"h$i.md", label()))
+    val deltas = (0 until 6).map { d =>
+      classes.slice(6 * d, 6 * d + 6).zipWithIndex.map { case (w, i) =>
+        asks(s"d$d-$i.txt", w.toUpperCase) } ++
+        Seq(asks(s"d$d-new.txt", s"gbrand$d"),
+          host(s"d$d-h0.md", label()), host(s"d$d-h1.md", label()))
+    }
+    def chain(maxDeltas: Option[Int]): (String, Pipeline.Result) = {
+      val cfg = bandedCfg.copy(maxLineageDeltas = maxDeltas)
+      val dir = tmpDir(s"logsets-${maxDeltas.getOrElse(0)}")
+      Pipeline.run(spark, a.toDS(), dir, "lg-base", cfg)
+      Pipeline.pinEpoch(spark, dir, "lg-pin", cfg)
+      val r = deltas.zipWithIndex.map { case (d, i) =>
+        Pipeline.runIncrementalPinned(spark, d.toDS(), dir, s"lg-d$i", cfg)
+      }.last
+      (dir, r)
+    }
+    val (wide, rWide) = chain(None)
+    val (folded, rFolded) = chain(Some(1))
+    Seq("entities", "link_edges", "ep_shingles", "ep_keys").foreach { st =>
+      val sets = Snapshots.appendStats(Snapshots.readManifest(wide, st))._2
+      assert(sets >= 2 && sets <= 3, s"$st: $sets append sets after six ingests")
+      assert(Snapshots.appendStats(Snapshots.readManifest(folded, st))._2 <= 1,
+        st)
+    }
+    assertSameGraph(wide, folded, "unfolded chain vs a fold per ingest")
+    assert(rWide.copy(runId = "x") == rFolded.copy(runId = "x"))
+    Seq(wide, folded).foreach(d => deleteRec(Path.of(d)))
   }
 
   test("re-run with resume is a no-op yielding identical results") {

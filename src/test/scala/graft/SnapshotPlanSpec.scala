@@ -104,7 +104,8 @@ class SnapshotPlanSpec extends SparkSpec {
       partitionBy = Seq("b")) {
       Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)).toDF("x", "b")
     }
-    // v2's set is carried by v3 (a smaller delta), then absorbed by v4
+    // v2's set is carried by v3 and v4 (v3's one-row set, which
+    // carries the cascade at v4, cannot absorb it), then absorbed at v5
     Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b")) {
       Seq((10L, 0), (99L, 2)).toDF("x", "b")
     }
@@ -114,6 +115,10 @@ class SnapshotPlanSpec extends SparkSpec {
     Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b")) {
       Seq((7L, 2), (8L, 0), (9L, 1)).toDF("x", "b")
     }
+    Snapshots.stageAppend(spark, dir, "t", "p5", Seq("b")) {
+      Seq((11L, 1), (12L, 2)).toDF("x", "b")
+    }
+    assert(Snapshots.readManifest(dir, "t").metrics("absorbedSets") == "3")
     // v1 against Spark's reader; every version against the multiset
     // of its inputs, typed like v1
     val v1 = Snapshots.readVersion(spark, dir, "t", 1)
@@ -121,8 +126,8 @@ class SnapshotPlanSpec extends SparkSpec {
     assert(rowsOf(v1) == rowsOf(listed(dir)))
     val inputs = Seq(
       Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)), Seq((10L, 0), (99L, 2)),
-      Seq((50L, 1)), Seq((7L, 2), (8L, 0), (9L, 1)))
-    (1 to 4).foreach { v =>
+      Seq((50L, 1)), Seq((7L, 2), (8L, 0), (9L, 1)), Seq((11L, 1), (12L, 2)))
+    (1 to 5).foreach { v =>
       val planned = Snapshots.readVersion(spark, dir, "t", v).select("x", "b")
       assert(planned.as[(Long, Int)].collect().toSeq.sorted ==
         inputs.take(v).flatten.sorted, s"version $v diverged")
@@ -264,15 +269,27 @@ class SnapshotPlanSpec extends SparkSpec {
     assert(Snapshots.appendStats(m3) == (11L, 2))
     // time travel: v2 still sees base + ten
     assert(Snapshots.readVersion(spark, dir, "t", 2).count() == 13)
-    // v4: a twelve-row delta absorbs both prior sets (1 ≤ 12, then
-    // 10 ≤ 13); their files leave the manifest
+    // v4: a twelve-row delta is a set of its own; v3's one-row set
+    // (the previous delta, which carries the cascade) cannot absorb
+    // the ten rows, so both prior sets stay carried
     val twelve = (400L until 412L).map((_, 0))
     Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b"))(appendDf(twelve))
     val m4 = Snapshots.readManifest(dir, "t")
-    assert(!m4.baseFiles.get.keys.exists(_.contains("/append/")))
-    assert(m4.metrics("absorbedSets") == "2")
+    assert(m4.metrics("absorbedSets") == "0")
+    assert(Snapshots.appendStats(m4) == (23L, 3))
     val expect4 = expect3 ++ twelve.toSet
     assert(readSet(dir) == expect4 && m4.rows == expect4.size.toLong)
+    // v5: v4's twelve-row set absorbs both older sets (1 ≤ 12, then
+    // 10 ≤ 13); their files leave the manifest, v5's delta stands
+    Snapshots.stageAppend(spark, dir, "t", "p5", Seq("b")) {
+      Seq((500L, 2)).toDF("x", "b")
+    }
+    val m5 = Snapshots.readManifest(dir, "t")
+    assert(!m5.baseFiles.get.keys.exists(_.contains("/append/")))
+    assert(m5.metrics("absorbedSets") == "3")
+    assert(Snapshots.appendStats(m5) == (24L, 2))
+    val expect5 = expect4 + ((500L, 2))
+    assert(readSet(dir) == expect5 && m5.rows == expect5.size.toLong)
     deleteRec(Path.of(dir))
   }
 
@@ -363,19 +380,23 @@ class SnapshotPlanSpec extends SparkSpec {
     val tiny = Seq((10L, 0), (11L, 1), (12L, 2))
     Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b"))(appendDf(tiny))
     assert(newFiles == 1 && absorbed == "0")
-    // an equal delta absorbs it: the cascade's merge of two files is
-    // published as one
+    // an equal delta stands beside it (the cascade runs one append
+    // late)
     val tiny2 = Seq((20L, 0), (21L, 1), (22L, 2))
     Snapshots.stageAppend(spark, dir, "t", "p3", Seq("b"))(appendDf(tiny2))
-    assert(newFiles == 1 && absorbed == "1")
-    // past the advisory size, a larger delta and its merge span files
+    assert(newFiles == 1 && absorbed == "0")
+    // past the advisory size, a larger delta spans files, and the
+    // cascade's merge of the two tiny sets is published as one file
     val big = (1000L until 21000L).map(i => (i, (i % 4).toInt))
     withConf(
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k",
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k") {
       Snapshots.stageAppend(spark, dir, "t", "p4", Seq("b"))(appendDf(big))
     }
-    assert(newFiles > 1 && absorbed == "1", s"newFiles = $newFiles")
+    val m4 = Snapshots.readManifest(dir, "t")
+    assert(m4.fileRows.keys.count(_.startsWith("append/m/")) == 1)
+    assert(m4.fileRows.keys.count(_.startsWith("append/d/")) > 1 &&
+      absorbed == "2", s"newFiles = $newFiles")
     val all = base ++ tiny ++ tiny2 ++ big
     assert(readSeq(dir) == all.sorted)
     assert(Snapshots.readManifest(dir, "t").rows == all.size.toLong)
@@ -388,7 +409,7 @@ class SnapshotPlanSpec extends SparkSpec {
       partitionBy = Seq("b")) {
       Seq((1L, 0), (2L, 1), (3L, 2)).toDF("x", "b")
     }
-    // two live append sets: v3's one-row delta carries v2's seven
+    // two live append sets: v3 carries v2's seven rows beside its one
     Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b")) {
       ((100L to 105L).map((_, 1)) :+ ((200L, 2))).toDF("x", "b")
     }
