@@ -12,15 +12,20 @@ import org.apache.spark.storage.StorageLevel
   *
   *   files ─repartitionByRange(repo,path)→
   *   [extract]  mapPartitions rule extractors → triples ∪ quarantine
-  *   [link]     entities → exact-norm + MinHash-LSH edges
+  *   [link]     entities → fuzzy-form shingles (ep_shingles) →
+  *              exact-norm + MinHash-LSH edges (link_edges)
   *   [canon]    connected components → canonical entity ids
   *   [materialize] node + edge tables, clustered by kind / pred
   *
   * Every stage boundary is a durable snapshot (Snapshots.stage) with a
-  * manifest published last — `run` with resume=true skips any stage
-  * whose manifest exists, so a killed run resumes idempotently
+  * manifest published last, in the order of [[Stages]] and then the
+  * canon log (the commit record) — `run` with resume=true skips any
+  * stage whose manifest exists, so a killed run resumes idempotently
   * mid-pipeline and downstream stages always read the durable parquet,
-  * never live lineage.
+  * never live lineage. The shingle table is such a stage too: the link
+  * stage, pinEpoch and every pinned ingest read it, and at every
+  * committed state it equals Linking.shingleTable of the live
+  * entities.
   */
 object Pipeline {
 
@@ -122,11 +127,14 @@ object Pipeline {
     } finally pool.shutdown()
   }
 
-  val Stages: Seq[String] =
-    Seq("extract", "entities", "link_edges", "assign", "nodes", "edges")
+  /** The stages of a graph, in publish order (nodes and edges publish
+    * concurrently).
+    */
+  val Stages: Seq[String] = Seq("extract", "entities", "ep_shingles",
+    "link_edges", "assign", "nodes", "edges")
 
   /** The stages of a pinned epoch (see [[pinEpoch]]). */
-  private val EpochStages = Seq("ep_census", "ep_shingles", "ep_keys")
+  private[graft] val EpochStages = Seq("ep_census", "ep_keys")
 
   /** Stage-3 logic (shared by `run` and the oracle-checked
     * `kg_nodes_exact` query): canonical id per entity via connected
@@ -293,10 +301,11 @@ object Pipeline {
 
     publishExtract(spark, newFiles, runDir, runId, cfg, resume = false)
 
-    // a global relink is an EPOCH BUMP: any pinned epoch state derives
-    // from the pre-ingest corpus and is stale the moment entities /
-    // link_edges are globally recomputed — drop it so a later
-    // runIncrementalPinned fails fast until pinEpoch re-freezes
+    // a global relink is an EPOCH BUMP: the frozen census and keys
+    // derive from the pre-ingest corpus and are stale the moment
+    // entities / link_edges are globally recomputed — drop them so a
+    // later runIncrementalPinned fails fast until pinEpoch re-freezes
+    // (ep_shingles is a graph stage: downstream republishes it)
     EpochStages
       .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
@@ -312,8 +321,8 @@ object Pipeline {
   // relink, not the extract, becomes THE cost (the stop-shingle
   // census, shingling, banding, and candidate scoring all rescan the
   // corpus). An EPOCH freezes the census (Linking.Config.pinnedHot)
-  // and stores the shingle + banded-key tables as appendable
-  // snapshots; each ingest then:
+  // and stores the banded-key table beside the graph's shingle table,
+  // both appendable snapshots; each ingest then:
   //   - extracts ONLY the delta (as before),
   //   - appends the delta's new entity forms / shingles / band keys,
   //   - links DELTA-vs-ALL under the pinned census (the stored narrow
@@ -336,10 +345,10 @@ object Pipeline {
   // ------------------------------------------------------------------
 
   /** Freeze the linking environment of the CURRENT global state as an
-    * epoch: the stop-shingle census (ep_census), the shingle table
-    * (ep_shingles), and the banded key table (ep_keys), each a
-    * versioned snapshot under the run dir. Call after Pipeline.run or
-    * a global runIncremental.
+    * epoch: the stop-shingle census (ep_census) and the banded key
+    * table (ep_keys), each a versioned snapshot under the run dir, both
+    * computed from the live shingle table (ep_shingles) at the current
+    * cap. Call after Pipeline.run or a global runIncremental.
     *
     * Re-pinning over a dir whose link_edges lineage already carries
     * delta appends BLENDS censuses (old edges were scored under the
@@ -359,8 +368,6 @@ object Pipeline {
     requireBase(runDir)
     EpochStages
       .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
-    val fuzzy = Snapshots.read(spark, runDir, "entities")
-      .filter(col("pred").isin(Linking.FuzzyPreds: _*))
     // cap from the entity manifest rows — the SAME n convention the
     // global link stage uses (sizeHint = entities manifest rows), so
     // an epoch pinned right after a global run freezes EXACTLY the
@@ -368,10 +375,7 @@ object Pipeline {
     // upper bound only raises the cap, same contract as linkEdges)
     val nEnts = Snapshots.readManifest(runDir, "entities").rows
     val cap = cfg.link.stopShingleCap(nEnts)
-    val shingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
-      resume = false) {
-      Linking.shingleTable(fuzzy)
-    }
+    val shingled = Snapshots.read(spark, runDir, "ep_shingles")
     val hot = Linking.hotShingles(shingled, cap)
     // ep_census and ep_keys both derive from (shingled, hot) and
     // publish disjoint stages — overlap the two publishes
@@ -456,8 +460,7 @@ object Pipeline {
     val hot = pinnedHot(spark, runDir)
     val deltaShingled = Snapshots.stageAppend(spark, runDir, "ep_shingles",
       runId, Seq("pred")) {
-      Linking.shingleTable(
-        newEnts.filter(col("pred").isin(Linking.FuzzyPreds: _*)))
+      Linking.shingleTable(newEnts)
     }
 
     // 3b. CENSUS DRIFT — what the frozen epoch is silently costing:
@@ -1034,28 +1037,21 @@ object Pipeline {
       Linking.entities(triples.as[Triple])
     }
 
-    // Stage 2b — link edges (exact-norm + LSH candidates + scoring).
-    // The fuzzy-presence probe runs against the MATERIALIZED entities
-    // snapshot (narrow, already on storage, limit-1 semantics) — not
-    // against live extraction lineage, which would re-run the content
-    // scan. It lives INSIDE the stage block so a resumed run (stage
-    // manifest already present) never pays the probe job.
-    // The shared shingle table (read 4x by the link plans; see
-    // Linking.sharedShingles) is materialized under the run dir and
-    // only lives for the stage compute (the stage snapshot is durable
-    // before we return), so it is deleted afterwards — a long-running
-    // ingest loop (kgIngestStream, repeated runIncremental) would
-    // otherwise leak one corpus-sized parquet table per ingest.
-    val scratch = s"$runDir/_scratch/link_edges"
-    val links = try {
-      Snapshots.stage(spark, runDir, "link_edges", runId, resume) {
-        val fuzzyNonEmpty =
-          !ents.filter(col("pred").isin(Linking.FuzzyPreds: _*)).isEmpty
-        Linking.linkEdges(ents, cfg.link.copy(scratchDir = Some(scratch)),
-          Some(fuzzyNonEmpty),
-          sizeHint = Some(Snapshots.readManifest(runDir, "entities").rows))
-      }
-    } finally Snapshots.deleteDir(scratch)
+    // Stage 2b — the shingle table of the fuzzy forms: read by the
+    // link stage's census, blocking keys and both scoring sides, then
+    // by pinEpoch and every pinned ingest. Published even when empty,
+    // so its manifest rows decide whether there is fuzzy work at all.
+    val shingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
+      resume) {
+      Linking.shingleTable(ents)
+    }
+
+    // Stage 2c — link edges (exact-norm + LSH candidates + scoring)
+    val links = Snapshots.stage(spark, runDir, "link_edges", runId, resume) {
+      val fuzzy = Snapshots.readManifest(runDir, "ep_shingles").rows > 0L
+      Linking.linkEdges(ents, if (fuzzy) Some(shingled) else None, cfg.link,
+        sizeHint = Some(Snapshots.readManifest(runDir, "entities").rows))
+    }
 
     canonicalize(spark, runDir, runId, cfg, triples, ents, links, resume)
   }

@@ -147,6 +147,16 @@ object SparkEntry {
     p.toString
   }
 
+  /** [[graft.link.Linking.shingleTable]] of `ents`, written once to
+    * the query's scratch dir and read back as parquet.
+    */
+  private def materializedShingles(s: SparkSession, ents: DataFrame,
+                                   tag: String): DataFrame = {
+    val dir = freshScratch(tag)
+    graft.link.Linking.shingleTable(ents).write.mode("overwrite").parquet(dir)
+    s.read.parquet(dir)
+  }
+
   /** A stable session-owned checkpoint dir — where [[withCheckpointDir]]
     * points the session when there was NO checkpoint dir to restore:
     * SparkContext cannot unset one, and leaving the query's scratch
@@ -796,8 +806,7 @@ object SparkEntry {
           .otherwise(col("word")).as("obj"))
       val ents = graft.link.Linking.entitiesOf(forms)
       // 'mentions' is not a fuzzy pred: exact-norm linking only
-      val links = graft.link.Linking.linkEdges(ents,
-        fuzzyNonEmpty = Some(false))
+      val links = graft.link.Linking.linkEdges(ents, None)
       val (assign, _) = graft.Pipeline.assignCanonical(ents, links)
       graft.Pipeline.nodeTable(assign)
         .select(col("canonical"), col("kind"),
@@ -826,14 +835,12 @@ object SparkEntry {
       // "upper bound only raises the cap — safe" contract and could
       // lower the stop-shingle cap below real dfs at larger SFs
       // (LinkingCcSpec guards the df headroom on the gate corpus).
-      // scratchDir: the shared shingle table is read 4× per link run
-      // (census, blocking, both scoring sides) — materialize it once
-      // instead of re-deriving distinctWords+shingles per consumer
-      // (the Pipeline already does this; round 8 extends it to the
-      // ad-hoc composition queries)
+      // the shingle table is read 4× per link run (census, blocking,
+      // both scoring sides) — materialize it once instead of
+      // re-deriving distinctWords+shingles per consumer (the Pipeline
+      // publishes it as its ep_shingles stage)
       val links = graft.link.Linking.linkEdges(ents,
-        graft.link.Linking.Config(scratchDir = Some(freshScratch("kgfuzzy"))),
-        fuzzyNonEmpty = Some(true), sizeHint = None)
+        Some(materializedShingles(s, ents, "kgfuzzy")), sizeHint = None)
       val (assign, _) = graft.Pipeline.assignCanonical(ents, links)
       graft.Pipeline.nodeTable(assign)
         .select(col("canonical"), col("kind"),
@@ -866,11 +873,10 @@ object SparkEntry {
       val variants = combos.select(lit("tagged").as("pred"),
         expr("substring(obj, 1, length(obj) - 1)").as("obj"))
       val ents = graft.link.Linking.entitiesOf(base.unionByName(variants))
-      // scratchDir: same 4×-read shingle materialization as
-      // kg_nodes_fuzzy above
+      // same 4×-read shingle materialization as kg_nodes_fuzzy above
       val links = graft.link.Linking.linkEdges(ents,
-        graft.link.Linking.Config(scratchDir = Some(freshScratch("kgband"))),
-        fuzzyNonEmpty = Some(true), sizeHint = Some(30000L))
+        Some(materializedShingles(s, ents, "kgband")),
+        sizeHint = Some(30000L))
       val (assign, _) = graft.Pipeline.assignCanonical(ents, links)
       graft.Pipeline.nodeTable(assign)
         .select(col("canonical"), col("kind"),

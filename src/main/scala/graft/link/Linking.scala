@@ -39,9 +39,10 @@ object Linking {
     Seq("mentions_domain", "references", "tagged", "imports")
 
   // The scoring and banding parameters are constants, not Config
-  // fields: a pinned epoch stores band keys and shingle sets computed
-  // under them (Pipeline.pinEpoch), and a later ingest's delta keys
-  // only join those if it computes them under the same values. The
+  // fields: a graph stores shingle sets (ep_shingles) and a pinned
+  // epoch band keys (Pipeline.pinEpoch) computed under them, and a
+  // later ingest's delta keys only join those if it computes them
+  // under the same values. The
   // DuckDB twins of the KG queries hard-code the same 3-grams and 0.5.
 
   /** Min Jaccard similarity on [[ShingleSize]]-gram shingles. */
@@ -102,15 +103,6 @@ object Linking {
       // aggregation buffer is maxBandBucket longs (~80 KB at the
       // default) no matter how pathological the corpus.
       maxBandBucket: Int = 10000,
-      // when set, the shared shingle table (computed from the entity
-      // snapshot, then read by the stop-shingle census, the banded
-      // keys, AND both sides of the scoring join) is materialized to
-      // `<scratchDir>/shingled` parquet once instead of recomputed by
-      // every consumer — the disk-backed equivalent of a persist()
-      // with no block-manager lifetime to manage (the caller owns the
-      // directory). Pipeline points this at the run directory; ad-hoc
-      // queries (small inputs) leave it None and recompute.
-      scratchDir: Option[String] = None,
       // PINNED stop-shingle census: when set, blocking uses exactly
       // these (pred, shingleHash) stop shingles instead of running the
       // df census — the epoch contract of incremental linking
@@ -170,30 +162,28 @@ object Linking {
 
   /** Same-entity edges (src, dst) over entityIds.
     *
-    * `fuzzyNonEmpty`: whether any FuzzyPreds entity exists. Callers
-    * that already know (e.g. Pipeline, from a limit-1 probe of the
-    * entities snapshot) pass Some(_) and skip the probe job the
-    * emptiness guard otherwise costs (MinHashLSH.fit reads a first row
-    * to size the input and throws on an empty dataset).
+    * `shingled`: the [[shingleTable]] of `ents`, or None when `ents`
+    * has no fuzzy form (Pipeline knows from the ep_shingles manifest
+    * rows). The stop-shingle census, the blocking keys and both sides
+    * of the scoring join all read this one table, so a caller that
+    * passes a materialized table (Pipeline's ep_shingles stage) pays
+    * the shingling once; an unmaterialized one is recomputed per
+    * consumer.
     */
-  def linkEdges(ents: DataFrame, cfg: Config = Config(),
-                fuzzyNonEmpty: Option[Boolean] = None,
+  def linkEdges(ents: DataFrame, shingled: Option[DataFrame],
+                cfg: Config = Config(),
                 sizeHint: Option[Long] = None): DataFrame = {
     val exact = exactNormEdges(ents, cfg)
-    val fuzzyEnts = ents.filter(col("pred").isin(FuzzyPreds: _*))
     val spark = ents.sparkSession
     import spark.implicits._
-    val fuzzy =
-      if (!fuzzyNonEmpty.getOrElse(!fuzzyEnts.isEmpty))
-        Seq.empty[(Long, Long)].toDF("src", "dst")
-      else {
-        // stop-shingle cap needs the fuzzy population size; an upper
-        // bound (total entities from the stage manifest) only RAISES
-        // the cap, i.e. keeps more shingles as blocking keys — safe.
-        val n = sizeHint.getOrElse(fuzzyEnts.count())
-        if (n <= cfg.exactSmallThreshold) exactJaccardEdges(fuzzyEnts, cfg, n)
-        else lshEdges(fuzzyEnts, cfg, n)
-      }
+    val fuzzy = shingled.fold(Seq.empty[(Long, Long)].toDF("src", "dst")) { sh =>
+      // stop-shingle cap needs the fuzzy population size; an upper
+      // bound (total entities from the stage manifest) only RAISES
+      // the cap, i.e. keeps more shingles as blocking keys — safe.
+      val n = sizeHint.getOrElse(sh.count())
+      if (n <= cfg.exactSmallThreshold) exactJaccardEdges(sh, cfg, n)
+      else lshEdges(sh, cfg, n)
+    }
     exact.unionByName(fuzzy).distinct()
   }
 
@@ -344,7 +334,7 @@ object Linking {
     * scoring join's intersection count becomes a zero-allocation
     * linear merge ([[graft.functions.SortedIntersectCount]]) instead
     * of a per-pair hash-set build — sortedness is part of the stored
-    * shingle-table contract (scratch and epoch snapshots carry it).
+    * shingle-table contract (the ep_shingles snapshot carries it).
     */
   private[graft] def withShingles(ents: DataFrame, k: Int): DataFrame =
     ents.withColumn("padded",
@@ -353,30 +343,6 @@ object Linking {
       .withColumn("shingles", expr(
         s"sort_array(transform(array_distinct(transform(sequence(0, length(padded) - $k), i -> substring(padded, i + 1, $k))), s -> xxhash64(s)))"))
       .drop("padded")
-
-  /** The shingle table both fuzzy paths share, pruned to the three
-    * columns every consumer needs. Its lineage is read FOUR times per
-    * link run (stop-shingle census, banded keys, and both sides of the
-    * scoring join); with [[Config.scratchDir]] set it is computed once
-    * and materialized as parquet — on a cluster that is exactly where
-    * you'd cut an allocation-heavy subtree (regex norm + substring
-    * explosion over every form) from the widest stage's critical path,
-    * without pinning block-manager memory the way persist() would.
-    */
-  private def sharedShingles(ents: DataFrame, cfg: Config): DataFrame = {
-    val sh = shingleTable(ents)
-    cfg.scratchDir match {
-      case Some(dir) =>
-        // unique subdir per link run: the write is EAGER but the
-        // returned frame reads lazily, so two linkEdges calls sharing
-        // one scratchDir would otherwise let the second write clobber
-        // the table the first call's (unconsumed) result still reads
-        val path = s"$dir/shingled-${java.util.UUID.randomUUID()}"
-        sh.write.mode("overwrite").parquet(path)
-        ents.sparkSession.read.parquet(path)
-      case None => sh
-    }
-  }
 
   /** Adds `bsh`: the shingle array with STOP SHINGLES removed — the
     * blocking universe. A shingle present in more than `cap` same-pred
@@ -482,9 +448,8 @@ object Linking {
     * (a strict superset of what banding can surface), scored by
     * [[scorePairs]] on the full sets.
     */
-  private[link] def exactJaccardEdges(ents: DataFrame, cfg: Config,
+  private[link] def exactJaccardEdges(shingled: DataFrame, cfg: Config,
                                       n: Long): DataFrame = {
-    val shingled = sharedShingles(ents, cfg)
     // explode of an empty filtered array yields no rows — all-stop
     // forms drop out of blocking, same as in the banded path
     val ex = withBlockShingles(shingled, cfg, n)
@@ -511,9 +476,8 @@ object Linking {
     * common substring) → 0.016 — candidate volume stays ~linear in the
     * corpus instead of quadratic.
     */
-  private[link] def lshEdges(ents: DataFrame, cfg: Config,
+  private[link] def lshEdges(shingled: DataFrame, cfg: Config,
                              n: Long): DataFrame = {
-    val shingled = sharedShingles(ents, cfg)
     // no distinct before scoring. True near-dup pairs collide in most
     // of the 20 bands, so candidates carry ~2× duplication (9.06M →
     // 4.46M distinct at 200k files), and halving the scoring join
@@ -530,19 +494,21 @@ object Linking {
 
   // ------------------------------------------------------------------
   // EPOCH-INCREMENTAL entry points (Pipeline.runIncrementalPinned).
-  // An epoch freezes the stop-shingle census and stores the shingle +
-  // banded-key tables as appendable snapshots; an ingest then links
-  // ONLY delta-vs-all — the per-ingest work that touches the old
-  // corpus is broadcast-filtered SCANS of those narrow tables, never
-  // a reshuffle or a re-shingling of the corpus.
+  // The graph stores the shingle table (ep_shingles) as an appendable
+  // stage; an epoch freezes the stop-shingle census and stores the
+  // banded-key table beside it. An ingest then links ONLY
+  // delta-vs-all — the per-ingest work that touches the old corpus is
+  // broadcast-filtered SCANS of those narrow tables, never a
+  // reshuffle or a re-shingling of the corpus.
   // ------------------------------------------------------------------
 
-  /** The (pred, entityId, shingles) table of a set of entities — the
-    * epoch's stored shingle artifact (what [[sharedShingles]] computes
-    * per run, as a value the pipeline can snapshot and append to).
+  /** The (pred, entityId, shingles) table of the [[FuzzyPreds]] forms
+    * among `ents`: the one input of every fuzzy consumer
+    * ([[linkEdges]], the census, the banded keys), which Pipeline
+    * publishes as the ep_shingles stage and appends to.
     */
   private[graft] def shingleTable(ents: DataFrame): DataFrame =
-    withShingles(ents, ShingleSize)
+    withShingles(ents.filter(col("pred").isin(FuzzyPreds: _*)), ShingleSize)
       .select(col("pred"), col("entityId"), col("shingles"))
 
   /** Banded key table under an EXPLICIT (pinned) stop census — the

@@ -72,9 +72,11 @@ object Snapshots {
     * commit record of Pipeline's commit protocol). Format 3 publishes
     * every slice a pinned ingest adds to a lineage stage (entities,
     * link_edges, ep_shingles, ep_keys) as an append snapshot, so a
-    * stage's live manifest is its whole table.
+    * stage's live manifest is its whole table. Format 4 makes
+    * ep_shingles a stage of every graph, published by the build
+    * between entities and link_edges, so a pin no longer writes it.
     */
-  val FormatVersion = 3
+  val FormatVersion = 4
 
   private val ManifestName = "_MANIFEST.json"
 

@@ -99,7 +99,7 @@ object Streaming {
     * global relink, versioned snapshots — or, with `epochPinned`,
     * [[graft.Pipeline.runIncrementalPinned]] — delta-only linking
     * under a census pinned after the base batch). The base batch is
-    * the one while the extract holds no version of another batch: a
+    * the one while the live extract is none or its own version 1: a
     * base batch that crashed part-way resumes its
     * [[graft.Pipeline.run]] (stages it already published are read
     * back), then pins. IDEMPOTENT per batch id: foreachBatch replays a
@@ -120,17 +120,21 @@ object Streaming {
     if (graft.Pipeline.committed(runDir, runId)) false
     else {
       val spark = batch.sparkSession
-      val base = Snapshots.versions(runDir, "extract").forall(v =>
-        Snapshots.readManifestVersion(runDir, "extract", v).runId == runId)
+      // decided from the live extract manifest alone (one read,
+      // whatever the version count): a base run publishes extract as
+      // version 1, and every ingest publishes above it
+      val base = !Snapshots.isComplete(runDir, "extract") || {
+        val m = Snapshots.readManifest(runDir, "extract")
+        m.version == 1 && m.runId == runId
+      }
       // epoch mode: the continuous-maintenance cost profile — linking
       // is delta-vs-all under a census frozen at the base batch
       // (Pipeline.runIncrementalPinned; BENCH.md §10). The pin itself
       // is crash-healed: a batch that died between the base run and
       // the pin (or mid-pin) re-pins from the current global state on
-      // replay (pinEpoch rewrites all three epoch stages together).
+      // replay (pinEpoch rewrites both epoch stages together).
       def ensurePinned(): Unit =
-        if (!Seq("ep_census", "ep_shingles", "ep_keys")
-            .forall(Snapshots.isComplete(runDir, _)))
+        if (!graft.Pipeline.EpochStages.forall(Snapshots.isComplete(runDir, _)))
           graft.Pipeline.pinEpoch(spark, runDir, s"$runId-pin", cfg)
       if (base) {
         graft.Pipeline.run(spark, batch, runDir, runId,

@@ -11,6 +11,7 @@ class LinkingCcSpec extends SparkSpec {
   private lazy val triples = Extraction.triples(
     Extraction.extract(FilesGen.dataset(spark, 400)))
   private lazy val ents = Linking.entities(triples).cache()
+  private lazy val shingled = Some(Linking.shingleTable(ents))
 
   test("entity ids are collision-free on the fixture") {
     assert(ents.count() == ents.select("entityId").distinct().count())
@@ -18,7 +19,7 @@ class LinkingCcSpec extends SparkSpec {
 
   /** canonical groups: entity surface form -> its component's members */
   private lazy val groups: Map[String, Set[String]] = {
-    val links = Linking.linkEdges(ents)
+    val links = Linking.linkEdges(ents, shingled)
     val cc = ConnectedComponents.run(links).assignments
       .withColumnRenamed("id", "entityId")
     val assigned = ents.join(cc, Seq("entityId"), "left")
@@ -46,37 +47,31 @@ class LinkingCcSpec extends SparkSpec {
     // sizeHint below exactSmallThreshold routes through the exact
     // shingle-block join; on fixture scale (LSH recall 1.0) the two
     // paths must produce identical edge sets
-    val viaLsh = Linking.linkEdges(ents)
+    val viaLsh = Linking.linkEdges(ents, shingled)
       .as[(Long, Long)].collect().toSet
-    val viaExact = Linking.linkEdges(ents, Linking.Config(),
-        fuzzyNonEmpty = Some(true), sizeHint = Some(1000L))
+    val viaExact = Linking.linkEdges(ents, shingled, sizeHint = Some(1000L))
       .as[(Long, Long)].collect().toSet
     assert(viaExact == viaLsh,
       s"missing=${(viaLsh -- viaExact).take(3)} extra=${(viaExact -- viaLsh).take(3)}")
   }
 
-  test("scratch-dir shingle materialization changes nothing but the plan") {
-    // Pipeline points Config.scratchDir at the run dir so the shared
-    // shingle table is computed once and read as parquet; ad-hoc
-    // callers recompute it. Same edges either way — the materialized
-    // table is a pure cache, and a parquet round-trip must not perturb
-    // shingles (array<long> element hashes) or ids.
-    val dir = java.nio.file.Files.createTempDirectory("graft-scratch").toString
-    val viaScratch = Linking.linkEdges(ents,
-        Linking.Config(scratchDir = Some(dir)), fuzzyNonEmpty = Some(true),
+  test("a parquet round-tripped shingle table links like the inline one") {
+    // Pipeline links over its published ep_shingles snapshot; ad-hoc
+    // callers pass the table inline. Same edges either way — a parquet
+    // round-trip must not perturb shingles (sorted array<long> element
+    // hashes) or ids.
+    val dir = java.nio.file.Files.createTempDirectory("graft-shingles")
+      .resolve("t").toString
+    shingled.get.write.parquet(dir)
+    val viaParquet = Linking.linkEdges(ents, Some(spark.read.parquet(dir)),
         sizeHint = Some(100000L))
       .as[(Long, Long)].collect().toSet
-    val viaRecompute = Linking.linkEdges(ents, Linking.Config(),
-        fuzzyNonEmpty = Some(true), sizeHint = Some(100000L))
+    val viaInline = Linking.linkEdges(ents, shingled,
+        sizeHint = Some(100000L))
       .as[(Long, Long)].collect().toSet
-    assert(viaScratch == viaRecompute,
-      s"missing=${(viaRecompute -- viaScratch).take(3)} " +
-        s"extra=${(viaScratch -- viaRecompute).take(3)}")
-    // materialization lands in a unique per-call subdir (two calls
-    // sharing a scratchDir must not clobber each other's table)
-    val subdirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shingled-"))
-    assert(subdirs.nonEmpty, "scratchDir must actually be used")
+    assert(viaParquet.nonEmpty && viaParquet == viaInline,
+      s"missing=${(viaInline -- viaParquet).take(3)} " +
+        s"extra=${(viaParquet -- viaInline).take(3)}")
   }
 
   test("distinct entities stay separate") {
@@ -129,8 +124,8 @@ class LinkingCcSpec extends SparkSpec {
     // connectivity preserved end-to-end through the FUZZY path alone
     // (distinct norms → zero exact-norm edges; sizeHint forces banded)
     def comps(cfg: Linking.Config): Long = {
-      val links = Linking.linkEdges(ents, cfg, Some(true),
-        sizeHint = Some(100000L))
+      val links = Linking.linkEdges(ents, Some(Linking.shingleTable(ents)),
+        cfg, sizeHint = Some(100000L))
       val (assign, _) = graft.Pipeline.assignCanonical(ents, links)
       assign.select("canonicalId").distinct().count()
     }

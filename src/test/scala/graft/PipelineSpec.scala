@@ -16,6 +16,12 @@ class PipelineSpec extends SparkSpec {
     Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
   }
 
+  private def copyRec(from: String, to: String): Unit =
+    Files.walk(Path.of(from)).iterator().asScala.foreach { p =>
+      val t = Path.of(to).resolve(Path.of(from).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    }
+
   // the rows `runId` appended to a stage: its version minus the one
   // below it, as a multiset
   private def sliceOf(dir: String, st: String, runId: String) = {
@@ -187,7 +193,7 @@ class PipelineSpec extends SparkSpec {
         (Snapshots.FormatVersion + 1).toString))
     inputs.foreach { case (name, tamper, found) =>
       val dir = tmpDir(s"refuse-$name")
-      (Pipeline.Stages ++ Seq("ep_census", "ep_shingles", "ep_keys"))
+      (Pipeline.Stages ++ Pipeline.EpochStages)
         .foreach { st =>
           Snapshots.stage(spark, dir, st, "cr", resume = false,
             partitionBy = Seq("cb")) {
@@ -298,21 +304,36 @@ class PipelineSpec extends SparkSpec {
   test("resume after kill between stages reproduces the fresh run") {
     val fresh = tmpDir("a")
     val r1 = Pipeline.run(spark, files, fresh, "run-a")
+    val built = tmpDir("b")
+    Pipeline.run(spark, files, built, "run-b")
 
-    // simulate a crash AFTER link_edges published but BEFORE assign's
-    // manifest: data present, manifest missing (the kill window of
-    // FIXTURES.md §5), downstream stages and the canon log (published
-    // last) absent entirely
-    val crashed = tmpDir("b")
-    Pipeline.run(spark, files, crashed, "run-b")
-    Files.delete(Path.of(Snapshots.stageDir(crashed, "assign"), "_MANIFEST.json"))
-    Seq("nodes", "edges", Pipeline.CanonLogStage).foreach(st =>
-      deleteRec(Path.of(Snapshots.stageDir(crashed, st))))
-
-    val r2 = Pipeline.run(spark, files, crashed, "run-b-resumed")
-    assert(r2.triples == r1.triples && r2.entities == r1.entities)
-    assert(edgeSet(crashed) == edgeSet(fresh))
-    assert(nodeSet(crashed) == nodeSet(fresh))
+    // the crash points: after each publish of the run, in publish
+    // order — nodes and edges publish concurrently, so after each
+    // subset of the two — and after the canon log (the commit). Each
+    // point rolls the later stages back on a copy of the built dir
+    // (their data and versioned manifests stay, the kill window of
+    // FIXTURES.md §5) and resumes.
+    val order = Pipeline.Stages :+ Pipeline.CanonLogStage
+    val serial = Pipeline.Stages.takeWhile(_ != "nodes")
+    val points: Seq[Seq[String]] =
+      serial.indices.map(i => serial.take(i + 1)) ++
+        Seq(Seq("nodes"), Seq("edges"), Seq("nodes", "edges"))
+          .map(serial ++ _) :+ order
+    points.foreach { published =>
+      val at = s"published: ${published.mkString(", ")}"
+      val dir = tmpDir("b-crash")
+      copyRec(built, dir)
+      order.reverse.filterNot(published.contains)
+        .foreach(Snapshots.rollback(dir, _, "run-b"))
+      order.foreach(st =>
+        assert(Snapshots.isComplete(dir, st) == published.contains(st), at))
+      val r2 = Pipeline.run(spark, files, dir, "run-b-resumed")
+      assert(r2.copy(runId = "x", ccIterations = 0) ==
+        r1.copy(runId = "x", ccIterations = 0), at)
+      assertSameGraph(dir, fresh, at)
+      deleteRec(Path.of(dir))
+    }
+    Seq(fresh, built).foreach(d => deleteRec(Path.of(d)))
   }
 
   test("incremental ingest equals the from-scratch run over the full corpus") {
@@ -1169,26 +1190,32 @@ class PipelineSpec extends SparkSpec {
   test("a format-1 run dir is refused by every writer with the rebuild message") {
     val corpus = (0 until 12).map(i => asks(s"f$i.txt", s"fword$i"))
     // a format-1 base run has no canon log; a format-1 ingested dir
-    // has one, without the extractVersion stamp
-    Seq("base", "ingested").foreach { variant =>
-      val dir = tmpDir(s"format1-$variant")
+    // has one, without the extractVersion stamp; a format-3 base run
+    // has no ep_shingles stage (its link stage shingled in scratch)
+    Seq(("base", 1), ("ingested", 1), ("format3", 3)).foreach {
+      case (variant, format) =>
+      val dir = tmpDir(s"format$format-$variant")
       Pipeline.run(spark, corpus.toDS(), dir, "f1-base")
-      Pipeline.pinEpoch(spark, dir, "f1-pin")
+      if (format == 1) Pipeline.pinEpoch(spark, dir, "f1-pin")
       if (variant == "base")
         deleteRec(Path.of(Snapshots.stageDir(dir, Pipeline.CanonLogStage)))
+      if (format == 3)
+        deleteRec(Path.of(Snapshots.stageDir(dir, "ep_shingles")))
       def tree(): Map[String, Seq[Byte]] = Files.walk(Path.of(dir))
         .iterator().asScala.filter(Files.isRegularFile(_))
         .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
       tree().keys.filter(_.contains("_MANIFEST")).foreach { f =>
         val p = Path.of(f)
-        Files.writeString(p, Files.readString(p)
-          .replaceFirst("\"formatVersion\"\\s*:\\s*\\d+", "\"formatVersion\" : 1")
-          .replace("\"extractVersion\"", "\"formerKey\""))
+        val restamped = Files.readString(p).replaceFirst(
+          "\"formatVersion\"\\s*:\\s*\\d+", s"\"formatVersion\" : $format")
+        Files.writeString(p,
+          if (format == 1) restamped.replace("\"extractVersion\"", "\"formerKey\"")
+          else restamped)
       }
       val before = tree()
       def refused(call: String)(body: => Any): Unit = {
         val ex = intercept[IllegalArgumentException](body)
-        assert(ex.getMessage.contains("snapshot format 1") &&
+        assert(ex.getMessage.contains(s"snapshot format $format") &&
           ex.getMessage.contains(s"needs format ${Snapshots.FormatVersion}") &&
           ex.getMessage.contains("Rebuild into a fresh runDir"),
           s"$variant $call: ${ex.getMessage}")
@@ -1264,10 +1291,11 @@ class PipelineSpec extends SparkSpec {
     val dir = tmpDir("repin")
     Pipeline.run(spark, a.toDS(), dir, "rp-base")
     Pipeline.pinEpoch(spark, dir, "rp-pin")
-    // a re-pin that crashed after its ep_shingles publish: its
-    // ep_census and ep_keys never published
+    // a re-pin that crashed after its ep_census publish: its ep_keys
+    // never published
     Pipeline.pinEpoch(spark, dir, "rp-pin2")
-    Seq("ep_census", "ep_keys").foreach(Snapshots.rollback(dir, _, "rp-pin2"))
+    Snapshots.rollback(dir, "ep_keys", "rp-pin2")
+    assert(Snapshots.isComplete(dir, "ep_census"))
     val ex = intercept[IllegalArgumentException](
       Pipeline.runIncrementalPinned(spark, x, dir, "rp-x"))
     assert(ex.getMessage.contains("no pinned epoch"), ex.getMessage)
@@ -1320,6 +1348,61 @@ class PipelineSpec extends SparkSpec {
     assertSameGraph(wide, folded, "unfolded chain vs a fold per ingest")
     assert(rWide.copy(runId = "x") == rFolded.copy(runId = "x"))
     Seq(wide, folded).foreach(d => deleteRec(Path.of(d)))
+  }
+
+  test("ep_shingles equals the shingle table of the live entities") {
+    import graft.link.Linking
+    def same(x: org.apache.spark.sql.DataFrame,
+             y: org.apache.spark.sql.DataFrame): Boolean =
+      x.exceptAll(y).unionByName(y.exceptAll(x)).isEmpty
+    def assertShingles(dir: String, clue: String): Unit = {
+      val live = Snapshots.read(spark, dir, "ep_shingles")
+      assert(!live.isEmpty, clue)
+      assert(same(live, Linking.shingleTable(Snapshots.read(spark, dir,
+        "entities").filter($"pred".isin(Linking.FuzzyPreds: _*)))), clue)
+    }
+    // the epoch as the previous format's pinEpoch computed it: shingled
+    // again from the live entities, census at the entities-rows cap
+    def assertEpoch(dir: String, cfg: Pipeline.Config, clue: String): Unit = {
+      val shingled = Linking.shingleTable(Snapshots.read(spark, dir,
+        "entities").filter($"pred".isin(Linking.FuzzyPreds: _*)))
+      val hot = Linking.hotShingles(shingled, cfg.link.stopShingleCap(
+        Snapshots.readManifest(dir, "entities").rows))
+      assert(same(Snapshots.read(spark, dir, "ep_census"),
+        hot.toDF("pred", "sh")), s"ep_census: $clue")
+      assert(same(Snapshots.read(spark, dir, "ep_keys"),
+        Linking.bandedKeyTable(shingled, cfg.link, hot)), s"ep_keys: $clue")
+    }
+    // hosts are fuzzy forms: base hosts, a global ingest of more hosts
+    // and www. variants, then pinned ingests of upper-case twins,
+    // variants and brand-new hosts
+    val cfg = bandedCfg.copy(maxLineageDeltas = Some(1))
+    val a = hosts.take(12).zipWithIndex.map { case (h, i) => host(s"a$i.md", h) }
+    val b = hosts.slice(12, 16).zipWithIndex.map { case (h, i) =>
+      host(s"b$i.md", h) } :+ host("bw.md", s"www.${hosts(0)}")
+    val deltas = (0 until 3).map { d =>
+      Seq(host(s"d$d-u.md", hosts(d).toUpperCase),
+        host(s"d$d-w.md", s"www.${hosts(16 + d)}"),
+        host(s"d$d-n.md", s"fresh$d-api.zone$d.example.org"))
+    }
+    val dir = tmpDir("shtable")
+    Pipeline.run(spark, a.toDS(), dir, "st-base", cfg)
+    assertShingles(dir, "after run")
+    Pipeline.runIncremental(spark, b.toDS(), dir, "st-inc", cfg)
+    assertShingles(dir, "after runIncremental")
+    Pipeline.pinEpoch(spark, dir, "st-pin", cfg)
+    assertEpoch(dir, cfg, "after pinEpoch")
+    deltas.zipWithIndex.foreach { case (d, i) =>
+      Pipeline.runIncrementalPinned(spark, d.toDS(), dir, s"st-d$i", cfg)
+      assertShingles(dir, s"after pinned ingest $i")
+    }
+    // maxLineageDeltas = 1 folded ep_shingles before the later ingests
+    assert(Snapshots.versions(dir, "ep_shingles").exists(v => Snapshots
+      .readManifestVersion(dir, "ep_shingles", v).runId.endsWith("-maint")))
+    // a re-pin after pinned ingests reads the appended table the same way
+    Pipeline.pinEpoch(spark, dir, "st-pin2", cfg)
+    assertEpoch(dir, cfg, "after a re-pin over pinned ingests")
+    deleteRec(Path.of(dir))
   }
 
   test("re-run with resume is a no-op yielding identical results") {

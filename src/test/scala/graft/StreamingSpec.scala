@@ -251,17 +251,18 @@ class StreamingSpec extends SparkSpec {
       .as[(String, String, Long)].collect().toSet
     assert(nodes(runDir) == nodes(full))
 
-    // crash between base run and pin: drop the epoch state, replay an
-    // UNAPPLIED batch (its edges append and canon log rolled back) —
+    // crash between base run and pin: drop the epoch state (the base
+    // run's ep_shingles stays, as a real crash there leaves it), replay
+    // an UNAPPLIED batch (its edges append and canon log rolled back) —
     // ensurePinned re-pins from the committed state
-    Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
+    Pipeline.EpochStages.foreach(st =>
       Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
     Seq(Pipeline.CanonLogStage, "edges")
       .foreach(Snapshots.rollback(runDir, _, "batch-1"))
     val reapplied = Streaming.ingestBatch(b.toDS(), batchId = 1L, runDir,
       cfg, epochPinned = true)
     assert(reapplied)
-    Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
+    Pipeline.EpochStages.foreach(st =>
       assert(Snapshots.isComplete(runDir, st), s"$st not re-pinned"))
     assert(Snapshots.versions(runDir, "extract") == Seq(1, 2))
 
@@ -278,7 +279,7 @@ class StreamingSpec extends SparkSpec {
       assert(Streaming.ingestBatch(base.toDS(), batchId = 0L, dir, cfg,
         epochPinned = true))
       val lost = Pipeline.Stages.dropWhile(_ != crashAt) ++
-        Seq(Pipeline.CanonLogStage, "ep_census", "ep_shingles", "ep_keys")
+        (Pipeline.CanonLogStage +: Pipeline.EpochStages)
       lost.foreach(st => Snapshots.deleteDir(Snapshots.stageDir(dir, st)))
       assert(Streaming.ingestBatch(base.toDS(), batchId = 0L, dir, cfg,
         epochPinned = true), s"crash before $crashAt must re-apply")
