@@ -4,9 +4,10 @@ import graft.canon.ConnectedComponents
 import graft.extract.Extraction
 import graft.link.{Linking, SkewJoin}
 import graft.store.Snapshots
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import java.nio.file.{Files, Path, Paths}
 
 /** The 4-stage KG-construction pipeline (north rule):
   *
@@ -25,7 +26,8 @@ import org.apache.spark.storage.StorageLevel
   * never live lineage. The shingle table is such a stage too: the link
   * stage, pinEpoch and every pinned ingest read it, and at every
   * committed state it equals Linking.shingleTable of the live
-  * entities.
+  * entities. After the base run, every ingest adds its slice to each
+  * growing stage, extract included, as an append snapshot.
   */
 object Pipeline {
 
@@ -190,22 +192,19 @@ object Pipeline {
           runId: String, cfg: Config = Config()): Result = {
     val resume = cfg.resume
 
-    // a run dir that has received incremental ingests holds MULTIPLE
-    // extract versions whose union is the corpus; run()'s resume path
-    // reads only the latest (delta-only!) snapshot and would silently
-    // rebuild the downstream graph from the last delta alone. A crashed
-    // ingest recovers by re-running that ingest (same runId: it rolls
-    // itself back and re-runs), never through run(). A recompute
-    // deletes every version below, so only a resume is refused.
-    if (resume)
-      require(Snapshots.versions(runDir, "extract").length <= 1,
+    // after an ingest (an APPEND extract), run()'s resume would take a
+    // crashed ingest's uncommitted slices for finished stages: that
+    // ingest recovers by re-running with its runId, never through run().
+    // A recompute deletes every version, so only a resume is refused.
+    if (resume && Snapshots.isComplete(runDir, "extract"))
+      require(Snapshots.readManifest(runDir, "extract").baseFiles.isEmpty,
         s"$runDir has incremental extract versions — re-run a crashed " +
           "ingest with its runId (runIncremental or runIncrementalPinned), " +
           "or start a fresh runDir")
 
     // a recompute (resume=false) starts from an empty lineage: the
-    // prior run's stages go (else its extract version would sum with
-    // the new one), and so does any pinned epoch and canon log — they
+    // prior run's stages go (else extract would append to the prior
+    // run's), and so does any pinned epoch and canon log — they
     // describe the PREVIOUS run's graph, so a later pinned ingest fails
     // fast until pinEpoch re-freezes. A pure resume leaves them alone.
     if (!resume)
@@ -218,7 +217,12 @@ object Pipeline {
     resultFrom(runDir, runId, ccIters)
   }
 
-  /** Stage 1 — extraction, published as an `extract` snapshot version.
+  /** Stage 1 — extraction: a full `extract` snapshot on the first
+    * publish into a run dir, an append of the slice
+    * ([[Snapshots.stageAppend]]) on every ingest after it. Each publish
+    * records the cumulative quarantine count (metric `quarantined`, the
+    * Iceberg snapshot-summary shape, counted by an Observation during
+    * the write), then the runId marker ([[committed]]), on a resume too.
     * repartitionByRange(repo, path) over the session's parallelism
     * gives deterministic per-partition lineage and co-locates each
     * repo's files (north star verbatim); the partition count is the
@@ -228,9 +232,9 @@ object Pipeline {
     *  - subj ("repo/path") is derivable — dropped on write,
     *    re-derived on read by [[triplesOf]] (~15% fewer bytes, ~20%
     *    less write wall);
-    *  - partitioned by the quarantine FLAG, not by pred: the only
-    *    partition predicate the pipeline ever applies is
-    *    quarantine-vs-not, and a boolean dynamic-partition sort is
+    *  - partitioned (an append: clustered) by the quarantine FLAG, not
+    *    by pred: the only partition predicate the pipeline ever applies
+    *    is quarantine-vs-not, and a boolean dynamic-partition sort is
     *    far cheaper than a 10-value one (19s vs 25s single-thread at
     *    200k files, and half the bytes — fewer files keep dictionary
     *    pages effective). The published nodes/edges tables cluster
@@ -239,41 +243,44 @@ object Pipeline {
   private def publishExtract(spark: SparkSession,
                              files: Dataset[SourceFile], runDir: String,
                              runId: String, cfg: Config,
-                             resume: Boolean): DataFrame =
-    Snapshots.stage(spark, runDir, "extract", runId, resume,
-      partitionBy = Seq("q")) {
-      val arranged = files.repartitionByRange(
-        spark.sparkContext.defaultParallelism, col("repo"), col("path"))
-      Extraction.extract(arranged, cfg.extraction).toDF()
-        .withColumn("q", col("pred") === lit(Extraction.QuarantinePred))
-        .drop("subj")
-    }
+                             resume: Boolean): DataFrame = {
+    // the first publish into a run dir is full; every ingest appends
+    val prev = if (resume || !Snapshots.isComplete(runDir, "extract")) None
+      else Some(quarantinedOf(Snapshots.readManifest(runDir, "extract")))
+    val obs = Observation()
+    lazy val rows = Extraction.extract(files.repartitionByRange(
+        spark.sparkContext.defaultParallelism, col("repo"), col("path")),
+        cfg.extraction).toDF()
+      .withColumn("q", col("pred") === lit(Extraction.QuarantinePred))
+      .drop("subj").observe(obs, count_if(col("q")).as(QuarantinedKey))
+    // a write whose plan ran no task (no input rows) observes nothing
+    def metrics = Map(QuarantinedKey -> (prev.getOrElse(0L) +
+      obs.get.getOrElse(QuarantinedKey, 0L).asInstanceOf[Long]).toString)
+    val out =
+      if (prev.isEmpty) Snapshots.stage(spark, runDir, "extract", runId,
+        resume, Seq("q"), metrics)(rows)
+      else Snapshots.stageAppend(spark, runDir, "extract", runId, Seq("q"),
+        metrics)(rows.withColumn("q", col("q").cast("string"))) // read-back
+    val m = Snapshots.readManifest(runDir, "extract")
+    Snapshots.writeAtomic(runMarker(runDir, m.runId), m.version.toString)
+    out
+  }
 
   /** The triples of extract rows: quarantine rows dropped, subj
-    * re-derived. q partition pruning: these scans never touch
-    * quarantine rows. The partition column is WRITTEN as boolean but
-    * read back as STRING (partition inference never infers booleans) —
-    * cast explicitly rather than leaning on implicit string→boolean
-    * coercion surviving ANSI rule changes.
+    * re-derived. q reads back as STRING (a partition dir value, or an
+    * append's column of that type): cast explicitly rather than lean
+    * on implicit string→boolean coercion surviving ANSI rule changes.
     */
   private def triplesOf(raw: DataFrame): DataFrame =
     raw.filter(!col("q").cast("boolean")).drop("q")
       .withColumn("subj", concat(col("repo"), lit("/"), col("path")))
 
-  /** The full triple set: the union of every ingest's extract version
-    * (each a disjoint corpus slice).
-    */
-  private def allTriples(spark: SparkSession, runDir: String): DataFrame =
-    triplesOf(Snapshots.versions(runDir, "extract")
-      .map(v => Snapshots.readVersion(spark, runDir, "extract", v))
-      .reduce(_ unionByName _))
-
   /** Incremental ingest: extract ONLY `newFiles` (the content scan —
     * the cost that dominates at 10^12 files — never re-reads old
-    * corpus bytes) as a NEW version of the extract snapshot, then
+    * corpus bytes) as an append to the extract snapshot, then
     * recompute the narrow downstream stages (entities, link edges,
     * canonicalization, node/edge tables — ~1% of the corpus bytes)
-    * over the union of every extract version. Each ingest version-
+    * over the whole extract (one read). Each ingest version-
     * bumps every stage snapshot, so prior graph states stay
     * time-travelable ([[graft.store.Snapshots.readVersion]]) and the
     * published tables are always globally consistent — a new form CAN
@@ -310,7 +317,7 @@ object Pipeline {
       .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
     val ccIters = downstream(spark, runDir, runId, cfg,
-      allTriples(spark, runDir), resume = false)
+      triplesOf(Snapshots.read(spark, runDir, "extract")), resume = false)
     resultFrom(runDir, runId, ccIters)
   }
 
@@ -804,8 +811,8 @@ object Pipeline {
   def compactLineage(spark: SparkSession, runDir: String, runId: String,
                      maxDeltas: Int): Seq[String] = {
     if (rollbackUncommitted(runDir).isEmpty) return Nil
-    // extract is deliberately NOT here: its versions are disjoint
-    // corpus slices, read as the union of every version
+    // extract is deliberately NOT here: folding it would rewrite the
+    // corpus-wide table, and no step parses its old versions any more
     val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
     stages.filter(Snapshots.isComplete(runDir, _)).flatMap { st =>
       val (_, sets) = Snapshots.appendStats(Snapshots.readManifest(runDir, st))
@@ -838,6 +845,10 @@ object Pipeline {
   // stamp is an ingest that crashed before its commit. Every writer
   // past the base run first rolls such an ingest back whole.
   private val ExtractVersionKey = "extractVersion"
+  // extract's cumulative quarantine-row count (see publishExtract)
+  private val QuarantinedKey = "quarantined"
+  private def quarantinedOf(m: Snapshots.Manifest): Long =
+    m.metrics(QuarantinedKey).toLong
 
   /** The live stamp (None: no canon log, so no committed base). */
   private def committedExtract(runDir: String): Option[Int] =
@@ -845,32 +856,36 @@ object Pipeline {
     else Some(Snapshots.readManifest(runDir, CanonLogStage)
       .metrics(ExtractVersionKey).toInt)
 
-  /** (version, runId) of every published extract version, read first
-    * so that a run dir of another format is refused before anything.
-    */
-  private def extractRuns(runDir: String): Seq[(Int, String)] =
-    Snapshots.versions(runDir, "extract").map(v =>
-      v -> Snapshots.readManifestVersion(runDir, "extract", v).runId)
+  /** The runId index: the extract version a runId published last. */
+  private def runMarker(runDir: String, runId: String): Path =
+    Paths.get(Snapshots.stageDir(runDir, "extract"),
+      "_RUN." + java.net.URLEncoder.encode(runId, "UTF-8"))
 
-  /** Whether `runId`'s extract version is at or below the live stamp. */
-  private[graft] def committed(runDir: String, runId: String): Boolean = {
-    val runs = extractRuns(runDir)
-    committedExtract(runDir).exists(s =>
-      runs.exists { case (v, r) => r == runId && v <= s })
-  }
-
-  /** Rolls back every runId with an extract version above the stamp:
-    * on every stage, while the live version is such a runId's, back to
-    * the version below ([[Snapshots.rollback]]). Extract goes LAST: its
-    * versions identify the uncommitted runIds, so a crash mid-rollback
-    * leaves them findable for the next call. Returns the stamp (None:
-    * no committed base, nothing rolled back).
+  /** Whether `runId`'s extract version is at or below the live stamp:
+    * one manifest and one marker read, whatever the ingest count.
     */
-  private def rollbackUncommitted(runDir: String): Option[Int] = {
-    val runs = extractRuns(runDir)
+  private[graft] def committed(runDir: String, runId: String): Boolean =
+    committedExtract(runDir).exists { s =>
+      val p = runMarker(runDir, runId)
+      Files.exists(p) && Files.readString(p).toInt <= s
+    }
+
+  /** Rolls back every runId of an extract version above the stamp (only
+    * those versions are parsed): its marker goes first, so it cannot
+    * outlive the reuse of its version number; then every stage whose
+    * live version is such a runId's steps back ([[Snapshots.rollback]]),
+    * extract LAST, so a crash mid-rollback leaves the runIds findable.
+    * Returns the stamp (None: no committed base, nothing rolled back).
+    */
+  private[graft] def rollbackUncommitted(runDir: String): Option[Int] = {
+    // read first: a run dir of another format is refused before anything
+    val live = if (!Snapshots.isComplete(runDir, "extract")) 0
+      else Snapshots.readManifest(runDir, "extract").version
     val stamp = committedExtract(runDir)
     stamp.foreach { s =>
-      val open = runs.collect { case (v, r) if v > s => r }.toSet
+      val open = (s + 1 to live).map(v =>
+        Snapshots.readManifestVersion(runDir, "extract", v).runId).toSet
+      open.foreach(r => Files.deleteIfExists(runMarker(runDir, r)))
       def rollBack(st: String): Unit =
         if (Snapshots.isComplete(runDir, st)) {
           val r = Snapshots.readManifest(runDir, st).runId
@@ -1146,25 +1161,18 @@ object Pipeline {
     ccIters
   }
 
-  /** All counts come from stage manifests (no recount jobs); the
-    * quarantine split falls out of the q= partition-dir keys in the
-    * extract manifests' per-file lineage. Extract counts SUM across
-    * snapshot versions (a full run has one; each incremental ingest
-    * adds one); every other stage's live manifest counts its appends
-    * too, so entities, link edges and edges are live manifest rows and
-    * nodes is read from a dirty canon log (below).
+  /** All counts come from live stage manifests (no recount jobs): every
+    * stage's live manifest counts its appends too, extract's carries the
+    * cumulative quarantine count, and nodes is read from a dirty canon
+    * log (below).
     */
   private def resultFrom(runDir: String, runId: String,
                          ccIters: Int): Result = {
-    val extractManifests = Snapshots.versions(runDir, "extract")
-      .map(v => Snapshots.readManifestVersion(runDir, "extract", v))
-    val rawRows = extractManifests.map(_.rows).sum
-    val quarantined = extractManifests.flatMap(_.fileRows.collect {
-      case (f, n) if f.startsWith("q=true/") => n
-    }).sum
+    val extract = Snapshots.readManifest(runDir, "extract")
+    val quarantined = quarantinedOf(extract)
     Result(
       runId = runId,
-      triples = rawRows - quarantined,
+      triples = extract.rows - quarantined,
       quarantined = quarantined,
       entities = Snapshots.readManifest(runDir, "entities").rows,
       linkEdges = Snapshots.readManifest(runDir, "link_edges").rows,

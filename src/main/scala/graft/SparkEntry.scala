@@ -884,8 +884,8 @@ object SparkEntry {
     }),
     // the INCREMENTAL-INGEST contract under the hash gate: two
     // Streaming.ingestBatch calls (batch 1 = full pipeline run,
-    // batch 2 = delta-only extract + multi-version union + global
-    // relink) over a source-file corpus DERIVED from the documents
+    // batch 2 = delta-only extract append + global relink) over a
+    // source-file corpus DERIVED from the documents
     // table, so DuckDB can recompute the final graph. Each document
     // becomes one file of "q: <form>?" lines — the asks extractor
     // round-trips each form exactly — with the kg_nodes_exact
@@ -893,7 +893,7 @@ object SparkEntry {
     // Variants (doc_id % 3) and batch split (doc_id % 2) are
     // independent, so norm-equal forms span the two ingests and the
     // final nodes are correct ONLY if the relink merges entities
-    // ACROSS extract versions — the exact property no edge-append
+    // ACROSS ingests — the exact property no edge-append
     // scheme has. Forms are restricted to ^[a-z0-9]+$ words (both
     // engines): ':' or '?' inside a word would not round-trip the
     // asks line format. 'asks' is not a fuzzy pred and linking never

@@ -75,8 +75,10 @@ object Snapshots {
     * stage's live manifest is its whole table. Format 4 makes
     * ep_shingles a stage of every graph, published by the build
     * between entities and link_edges, so a pin no longer writes it.
+    * Format 5 appends every ingest's extract slice too (a format-4
+    * ingested dir's live extract is only its last slice).
     */
-  val FormatVersion = 4
+  val FormatVersion = 5
 
   private val ManifestName = "_MANIFEST.json"
 
@@ -140,7 +142,7 @@ object Snapshots {
       else byRoot.toSeq.sortBy(_._1)
     roots.map { case (r, fs) =>
       val w = r.split('/').head.stripPrefix("snap=").toInt
-      val rm = if (w == m.version) m else readManifestVersion(runDir, stage, w)
+      val rm = if (w == m.version) m else manifestAt(runDir, stage, w)
       val (dSchema, pSchema) =
         if (isAppend(r)) (parseStruct(rm.appendSchema.get), StructType(Nil))
         else (parseStruct(rm.dataSchema), parseStruct(rm.partSchema))
@@ -179,14 +181,10 @@ object Snapshots {
     m.fileBytes.get.map { case (k, b) => s"snap=${m.version}/$k" -> b } ++
       m.baseFileBytes.getOrElse(Map.empty)
 
-  /** All PUBLISHED versions of a stage, ascending. Published = the
-    * live pointer (_MANIFEST.json, always written LAST) has reached
-    * at least that version. A crashed publish leaves a versioned
-    * manifest NEWER than the live pointer — that snapshot was never
-    * visible to any reader and must stay invisible here too:
-    * runIncremental unions versions() and resultFrom sums them, so an
-    * orphan counted once would double-count its delta after the retry
-    * republishes it under the same version number.
+  /** All PUBLISHED versions of a stage, ascending: those the live
+    * pointer (_MANIFEST.json, always written LAST) has reached. A
+    * crashed publish's newer manifest was never visible to a reader and
+    * stays invisible here too, until the retry reuses its number.
     */
   def versions(runDir: String, stage: String): Seq[Int] = {
     val live = liveVersion(runDir, stage)
@@ -214,18 +212,20 @@ object Snapshots {
     * expire_snapshots analog). Refuses to expire the current version.
     */
   def expire(runDir: String, stage: String, version: Int): Unit = {
-    require(readManifest(runDir, stage).version != version,
+    val live = readManifest(runDir, stage).version
+    require(live != version,
       s"cannot expire the current snapshot v$version of $stage")
     // append snapshots CARRY files of earlier snapshots: deleting a
     // snapshot some published append still references would corrupt
-    // that (readable, possibly live) version
+    // that (readable, possibly live) version. Only a later one can.
     val prefix = s"snap=$version/"
-    versions(runDir, stage).filter(_ != version).foreach { v =>
-      val m = readManifestVersion(runDir, stage, v)
-      require(!m.baseFiles.exists(_.keys.exists(_.startsWith(prefix))),
-        s"cannot expire v$version of $stage: append snapshot v$v still " +
-          s"carries its files (expire v$v first)")
-    }
+    manifestVersions(runDir, stage).filter(v => v > version && v <= live)
+      .foreach { v =>
+        require(!manifestAt(runDir, stage, v).baseFiles
+          .exists(_.keys.exists(_.startsWith(prefix))),
+          s"cannot expire v$version of $stage: append snapshot v$v still " +
+            s"carries its files (expire v$v first)")
+      }
     deleteDir(snapshotDir(runDir, stage, version))
     Files.deleteIfExists(
       Paths.get(stageDir(runDir, stage), versionedManifestName(version)))
@@ -245,8 +245,7 @@ object Snapshots {
     if (live > 0 && readManifest(runDir, stage).runId != runId) return
     val sd = stageDir(runDir, stage)
     manifestVersions(runDir, stage).filter(v => live == 0 || v < live)
-      .reverseIterator
-      .map(v => parseManifest(Paths.get(sd, versionedManifestName(v))))
+      .reverseIterator.map(manifestAt(runDir, stage, _))
       .find(_.runId != runId) match {
       case Some(m) => writeManifest(sd, ManifestName, m)
       case None    => Files.deleteIfExists(Paths.get(sd, ManifestName))
@@ -276,9 +275,12 @@ object Snapshots {
     // live pointer never reached it): unpublished data is unreadable
     require(version <= liveVersion(runDir, stage),
       s"snapshot v$version of $stage was never published")
-    parseManifest(
-      Paths.get(stageDir(runDir, stage), versionedManifestName(version)))
+    manifestAt(runDir, stage, version)
   }
+
+  /** The manifest of `v`, which the caller has resolved as published. */
+  private def manifestAt(runDir: String, stage: String, v: Int): Manifest =
+    parseManifest(Paths.get(stageDir(runDir, stage), versionedManifestName(v)))
 
   /** Parses a manifest, refusing any whose [[FormatVersion]] stamp is
     * absent, older or newer: such a run dir was written by code with
@@ -705,10 +707,14 @@ object Snapshots {
     import org.json4s._
     import org.json4s.jackson.Serialization
     implicit val fmts: Formats = DefaultFormats
-    val json = Serialization.writePretty(m)
-    val tmp: Path = Paths.get(dir, s".$name.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(dir, name),
+    writeAtomic(Paths.get(dir, name), Serialization.writePretty(m))
+  }
+
+  /** Writes `text` beside `p`, then renames it over `p` (atomic). */
+  private[graft] def writeAtomic(p: Path, text: String): Unit = {
+    val tmp = p.resolveSibling(s".${p.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, p,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }

@@ -104,8 +104,8 @@ object Streaming {
     * [[graft.Pipeline.run]] (stages it already published are read
     * back), then pins. IDEMPOTENT per batch id: foreachBatch replays a
     * batch after a crash, and a batch whose runId has committed
-    * ([[graft.Pipeline.committed]]: its extract version is covered by
-    * the live canon log's stamp) is skipped, so replay ≡ no-op. A
+    * ([[graft.Pipeline.committed]]: its runId marker names an extract
+    * version the live canon-log stamp covers) is skipped: replay ≡ no-op. A
     * batch that crashed before its commit re-applies: the ingest rolls
     * its partial state back and re-runs it. Returns true when the
     * batch was applied.
@@ -120,9 +120,8 @@ object Streaming {
     if (graft.Pipeline.committed(runDir, runId)) false
     else {
       val spark = batch.sparkSession
-      // decided from the live extract manifest alone (one read,
-      // whatever the version count): a base run publishes extract as
-      // version 1, and every ingest publishes above it
+      // from the live extract manifest alone: a base run publishes
+      // extract as version 1, and every ingest appends above it
       val base = !Snapshots.isComplete(runDir, "extract") || {
         val m = Snapshots.readManifest(runDir, "extract")
         m.version == 1 && m.runId == runId

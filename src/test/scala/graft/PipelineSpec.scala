@@ -358,12 +358,14 @@ class PipelineSpec extends SparkSpec {
     assert(rInc.copy(runId = "x") == rFull.copy(runId = "x"))
 
     // the content scan was honestly incremental: extract has three
-    // versions, the empty ingest's and then one holding ONLY the
-    // delta's triples
+    // versions, the empty ingest's append and then one appending ONLY
+    // the delta's triples
     assert(Snapshots.versions(inc, "extract") == Seq(1, 2, 3))
-    val v1 = Snapshots.readManifestVersion(inc, "extract", 1).rows
-    assert(Snapshots.readManifestVersion(inc, "extract", 2).rows == 0L)
-    val v3 = Snapshots.readManifestVersion(inc, "extract", 3).rows
+    def slice(v: Int) =
+      Snapshots.deltaRows(Snapshots.readManifestVersion(inc, "extract", v))
+    val v1 = slice(1)
+    assert(slice(2) == 0L)
+    val v3 = slice(3)
     assert(v1 + v3 == rFull.triples + rFull.quarantined)
     assert(v3 < v1, s"delta version should be the smaller ingest: $v1/$v3")
     // prior graph state stays time-travelable: the v1 nodes snapshot
@@ -439,7 +441,8 @@ class PipelineSpec extends SparkSpec {
     // stage (its extract writes no file) and changes no count
     val rEmpty = Pipeline.runIncrementalPinned(spark,
       spark.emptyDataset[SourceFile], inc, "ep-empty", cfg(None))
-    assert(Snapshots.readManifestVersion(inc, "extract", 2).rows == 0L)
+    assert(Snapshots.deltaRows(
+      Snapshots.readManifestVersion(inc, "extract", 2)) == 0L)
     assert(rEmpty.nodes == rBase.nodes && rEmpty.edges == rBase.edges)
     val rPinned = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
@@ -1191,16 +1194,25 @@ class PipelineSpec extends SparkSpec {
     val corpus = (0 until 12).map(i => asks(s"f$i.txt", s"fword$i"))
     // a format-1 base run has no canon log; a format-1 ingested dir
     // has one, without the extractVersion stamp; a format-3 base run
-    // has no ep_shingles stage (its link stage shingled in scratch)
-    Seq(("base", 1), ("ingested", 1), ("format3", 3)).foreach {
+    // has no ep_shingles stage (its link stage shingled in scratch); a
+    // format-4 dir after a pinned ingest has two full extract versions
+    // (the second only its slice) and no runId markers
+    Seq(("base", 1), ("ingested", 1), ("format3", 3), ("pinned", 4)).foreach {
       case (variant, format) =>
       val dir = tmpDir(s"format$format-$variant")
       Pipeline.run(spark, corpus.toDS(), dir, "f1-base")
-      if (format == 1) Pipeline.pinEpoch(spark, dir, "f1-pin")
+      if (format == 1 || format == 4) Pipeline.pinEpoch(spark, dir, "f1-pin")
       if (variant == "base")
         deleteRec(Path.of(Snapshots.stageDir(dir, Pipeline.CanonLogStage)))
       if (format == 3)
         deleteRec(Path.of(Snapshots.stageDir(dir, "ep_shingles")))
+      val extractDir = Path.of(Snapshots.stageDir(dir, "extract"))
+      if (format == 4) {
+        Pipeline.runIncrementalPinned(spark, Seq(asks("h.txt", "hword")).toDS(),
+          dir, "f4-x")
+        Files.list(extractDir).iterator().asScala
+          .filter(_.getFileName.toString.startsWith("_RUN.")).foreach(Files.delete)
+      }
       def tree(): Map[String, Seq[Byte]] = Files.walk(Path.of(dir))
         .iterator().asScala.filter(Files.isRegularFile(_))
         .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
@@ -1210,7 +1222,13 @@ class PipelineSpec extends SparkSpec {
           "\"formatVersion\"\\s*:\\s*\\d+", s"\"formatVersion\" : $format")
         Files.writeString(p,
           if (format == 1) restamped.replace("\"extractVersion\"", "\"formerKey\"")
-          else restamped)
+          else if (format == 4 && p.getParent == extractDir) {
+            // every extract version a full snapshot, as format 4 wrote them
+            import org.json4s._
+            import org.json4s.jackson.JsonMethods._
+            pretty(render(parse(restamped).removeField { case (k, _) =>
+              Set("baseFiles", "baseFileBytes", "appendSchema")(k) }))
+          } else restamped)
       }
       val before = tree()
       def refused(call: String)(body: => Any): Unit = {
@@ -1272,9 +1290,21 @@ class PipelineSpec extends SparkSpec {
         (if (fold) ", compactTail before the retry" else ""),
         (lineage ++ sub).toSet, fold)) :+
       (("after the commit", order.toSet, false))
-    points.foreach { case (at, published, fold) =>
+    // two crash windows of the runId index (stage=extract/_RUN.<runId>):
+    // the extract published, its marker not yet written; and a rollback
+    // of the uncommitted ingest that deleted the marker, then crashed
+    // before extract's own rollback
+    val marker = Path.of(Snapshots.stageDir(dir, "extract"), "_RUN.sw-x")
+    val markerPoints = Seq(
+      ("after extract, before its runId marker", Set("extract")),
+      ("in a rollback, after the marker went and before extract's",
+        (lineage ++ tail).toSet))
+    (points.map { case (at, p, fold) => (at, p, fold, false) } ++
+      markerPoints.map { case (at, p) => (at, p, false, true) }).foreach {
+      case (at, published, fold, lostMarker) =>
       order.reverse.filterNot(published)
         .foreach(Snapshots.rollback(dir, _, "sw-x"))
+      if (lostMarker) assert(Files.deleteIfExists(marker), at)
       if (fold) Pipeline.compactTail(spark, dir, "sw-fold", 1e-9)
       val r = Pipeline.runIncrementalPinned(spark, x.toDS(), dir, "sw-x",
         bandedCfg)
@@ -1283,6 +1313,34 @@ class PipelineSpec extends SparkSpec {
       assertSameGraph(dir, full, at)
     }
     Seq(dir, full).foreach(d => deleteRec(Path.of(d)))
+  }
+
+  test("the entry rule parses no extract version below the live one") {
+    val classes = (0 until 12).map(i => s"iword$i")
+    val a = classes.zipWithIndex.map { case (w, i) => asks(s"a$i.txt", w) }
+    val x = Seq(asks("x.txt", "IWORD1", "ibrandnew"))
+    val y = Seq(asks("y.txt", "iword2.", "inewer"))
+    val dir = tmpDir("entry")
+    Pipeline.run(spark, a.toDS(), dir, "en-base")
+    Pipeline.pinEpoch(spark, dir, "en-pin")
+    Pipeline.runIncrementalPinned(spark, x.toDS(), dir, "en-x")
+    Pipeline.runIncrementalPinned(spark, y.toDS(), dir, "en-y")
+    val live = Snapshots.readManifest(dir, "extract").version
+    assert(live == 3)
+    // every extract manifest below the live one made unparseable
+    val below = (1 until live).map(v =>
+      Path.of(Snapshots.stageDir(dir, "extract"), s"_MANIFEST.v$v.json"))
+    val saved = below.map(p => p -> Files.readAllBytes(p))
+    below.foreach(Files.writeString(_, "{ not a manifest"))
+    try {
+      intercept[Exception](Snapshots.readManifestVersion(dir, "extract", 1))
+      Seq("en-base", "en-x", "en-y").foreach(r =>
+        assert(Pipeline.committed(dir, r), r))
+      assert(!Pipeline.committed(dir, "en-absent"))
+      assert(Pipeline.rollbackUncommitted(dir).contains(live))
+    } finally saved.foreach { case (p, b) => Files.write(p, b) }
+    assert(Snapshots.readManifest(dir, "extract").version == live)
+    deleteRec(Path.of(dir))
   }
 
   test("a re-pin crashed part-way leaves an incomplete epoch, which a pinned ingest refuses") {
@@ -1422,10 +1480,20 @@ class PipelineSpec extends SparkSpec {
 
   test("quarantined docs carry through: guard config quarantines and excludes") {
     val dir = tmpDir("d")
-    val res = Pipeline.run(spark, files, dir, "run-d",
-      Pipeline.Config(extraction =
-        graft.extract.Extraction.Config(tokenLimit = 2000)))
+    val cfg = Pipeline.Config(extraction =
+      graft.extract.Extraction.Config(tokenLimit = 2000))
+    val res = Pipeline.run(spark, files, dir, "run-d", cfg)
     assert(res.quarantined > 0)
+    // the count carries across appended extract slices: a base run, a
+    // pinned ingest and a global one count what one run counts
+    val parts = FilesGen.local(n).grouped(n / 4).toSeq
+    val inc = tmpDir("d-inc")
+    Pipeline.run(spark, (parts(0) ++ parts(1)).toDS(), inc, "d-base", cfg)
+    Pipeline.pinEpoch(spark, inc, "d-pin", cfg)
+    Pipeline.runIncrementalPinned(spark, parts(2).toDS(), inc, "d-x", cfg)
+    val rInc = Pipeline.runIncremental(spark, parts(3).toDS(), inc, "d-y", cfg)
+    assert(rInc.quarantined == res.quarantined && rInc.triples == res.triples)
+    deleteRec(Path.of(inc))
     val subjects = Snapshots.read(spark, dir, "edges")
       .select("subj").distinct().as[String].collect().toSet
     val oversize = FilesGen.local(n)
