@@ -15,7 +15,9 @@ import java.nio.file.{Files, Path, Paths}
   *   [extract]  mapPartitions rule extractors → triples ∪ quarantine
   *   [link]     entities → fuzzy-form shingles (ep_shingles) →
   *              exact-norm + MinHash-LSH edges (link_edges)
-  *   [canon]    connected components → canonical entity ids
+  *   [canon]    connected components → the non-identity canonical
+  *              map (assign: entityId → canonicalId, only where the
+  *              two differ; every other entity is its own canonical)
   *   [materialize] node + edge tables, clustered by kind / pred
   *
   * Every stage boundary is a durable snapshot (Snapshots.stage) with a
@@ -27,7 +29,8 @@ import java.nio.file.{Files, Path, Paths}
   * stage, pinEpoch and every pinned ingest read it, and at every
   * committed state it equals Linking.shingleTable of the live
   * entities. After the base run, every ingest adds its slice to each
-  * growing stage, extract included, as an append snapshot.
+  * growing stage, extract included, as an append snapshot. No stage is
+  * partitioned: each clusters its rows inside plain files.
   */
 object Pipeline {
 
@@ -44,9 +47,9 @@ object Pipeline {
       // ride the driver.
       ccLocalThreshold: Long = canon.ConnectedComponents.LocalEdgeThreshold,
       resume: Boolean = true,
-      // CANONICAL BUCKETS (opt-in): when Some(B), the assign / nodes /
-      // edges snapshots gain a cb = pmod(canonicalId, B) int data
-      // column in last position; that is all B does. It sets no
+      // CANONICAL BUCKETS (opt-in): when Some(B), the nodes / edges
+      // snapshots gain a cb = pmod(canonicalId, B) int data column in
+      // last position; that is all B does. It sets no
       // layout, directory or file count, so it needs no sizing. The
       // manifests record it; a pinned ingest's tail and a fold write cb
       // with the stored tables' own stamp, whatever the config says.
@@ -59,10 +62,10 @@ object Pipeline {
       // drift in the manifest but never refuse.
       maxCensusDrift: Option[Double] = None,
       // Fold trigger for the merge-on-read tail: after a pinned
-      // ingest, if the append rows of any of assign/nodes/edges (or
-      // the canon log's rows, against assign) reach this fraction of
-      // the table, all three fold into fresh FULL snapshots with the
-      // log applied (compactTail → Snapshots.compact — the Iceberg
+      // ingest, if the append rows of nodes or edges (or the canon
+      // log's rows, against the entities) reach this fraction of the
+      // table, assign/nodes/edges fold into fresh FULL snapshots with
+      // the log applied (compactTail → Snapshots.compact — the Iceberg
       // rewrite_data_files shape). Amortization: a fold costs O(table)
       // but only fires every ~frac·table/delta ingests, so the
       // amortized per-ingest cost stays O(delta/frac); between folds
@@ -138,23 +141,35 @@ object Pipeline {
   /** The stages of a pinned epoch (see [[pinEpoch]]). */
   private[graft] val EpochStages = Seq("ep_census", "ep_keys")
 
-  /** Stage-3 logic (shared by `run` and the oracle-checked
-    * `kg_nodes_exact` query): canonical id per entity via connected
-    * components over the link edges; singleton entities (no link edge)
-    * canonicalize to themselves. Returns (assignments, cc iterations).
+  /** Stage-3 logic of the oracle-checked `kg_nodes_exact` query:
+    * canonical id per entity via connected components over the link
+    * edges; singleton entities (no link edge) canonicalize to
+    * themselves. Returns (assignments, cc iterations).
     */
   def assignCanonical(ents: DataFrame, links: DataFrame,
                       ccLocalThreshold: Long =
                         ConnectedComponents.LocalEdgeThreshold,
                       edgeCountHint: Option[Long] = None): (DataFrame, Int) = {
+    val (map, iters) = canonicalMap(links, ccLocalThreshold, edgeCountHint)
+    (withCanonical(ents, map), iters)
+  }
+
+  /** The non-identity canonical map (entityId, canonicalId) of the link
+    * graph — what CC computes, and all the `assign` stage stores — and
+    * the CC iterations.
+    */
+  private def canonicalMap(links: DataFrame, ccLocalThreshold: Long,
+                           edgeCountHint: Option[Long]): (DataFrame, Int) = {
     val cc = ConnectedComponents.run(links,
       localThreshold = ccLocalThreshold, edgeCountHint = edgeCountHint)
-    val assign = cc.assignments.withColumnRenamed("id", "entityId")
-    val out = ents.join(assign, Seq("entityId"), "left")
-      .select(col("pred"), col("obj"), col("norm"), col("entityId"),
-        coalesce(col("comp"), col("entityId")).as("canonicalId"))
-    (out, cc.iterations)
+    (cc.assignments.toDF("entityId", "canonicalId"), cc.iterations)
   }
+
+  /** `ents` with each entity's canonicalId: its `map` row's, or itself. */
+  private def withCanonical(ents: DataFrame, map: DataFrame): DataFrame =
+    ents.join(map, Seq("entityId"), "left")
+      .select(col("pred"), col("obj"), col("norm"), col("entityId"),
+        coalesce(col("canonicalId"), col("entityId")).as("canonicalId"))
 
   /** Stage-4a logic: node table from canonical assignments. The
     * canonical surface form is the (norm, obj)-minimal member —
@@ -228,17 +243,16 @@ object Pipeline {
     * repo's files (north star verbatim); the partition count is the
     * session's, not a knob.
     * Extract-stage layout choices are write-cost choices at 10^12
-    * files (all measured in single-thread write A/Bs at 200k files):
+    * files:
     *  - subj ("repo/path") is derivable — dropped on write,
     *    re-derived on read by [[triplesOf]] (~15% fewer bytes, ~20%
-    *    less write wall);
-    *  - partitioned (an append: clustered) by the quarantine FLAG, not
-    *    by pred: the only partition predicate the pipeline ever applies
-    *    is quarantine-vs-not, and a boolean dynamic-partition sort is
-    *    far cheaper than a 10-value one (19s vs 25s single-thread at
-    *    200k files, and half the bytes — fewer files keep dictionary
-    *    pages effective). The published nodes/edges tables cluster
-    *    by kind / pred inside their files instead (see canonicalize).
+    *    less write wall, in single-thread write A/Bs at 200k files);
+    *  - unpartitioned, in the (repo, path) range order of the input
+    *    (an append: clustered by that key). Quarantine rows are rows
+    *    with pred [[Extraction.QuarantinePred]]: no reader lists them
+    *    by path (their count is the manifest metric), so a directory
+    *    per flag value would buy nothing, and its dynamic-partition
+    *    write sorted every row.
     */
   private def publishExtract(spark: SparkSession,
                              files: Dataset[SourceFile], runDir: String,
@@ -251,28 +265,26 @@ object Pipeline {
     lazy val rows = Extraction.extract(files.repartitionByRange(
         spark.sparkContext.defaultParallelism, col("repo"), col("path")),
         cfg.extraction).toDF()
-      .withColumn("q", col("pred") === lit(Extraction.QuarantinePred))
-      .drop("subj").observe(obs, count_if(col("q")).as(QuarantinedKey))
+      .drop("subj").observe(obs, count_if(
+        col("pred") === lit(Extraction.QuarantinePred)).as(QuarantinedKey))
     // a write whose plan ran no task (no input rows) observes nothing
     def metrics = Map(QuarantinedKey -> (prev.getOrElse(0L) +
       obs.get.getOrElse(QuarantinedKey, 0L).asInstanceOf[Long]).toString)
     val out =
       if (prev.isEmpty) Snapshots.stage(spark, runDir, "extract", runId,
-        resume, Seq("q"), metrics)(rows)
-      else Snapshots.stageAppend(spark, runDir, "extract", runId, Seq("q"),
-        metrics)(rows.withColumn("q", col("q").cast("string"))) // read-back
+        resume, metrics)(rows)
+      else Snapshots.stageAppend(spark, runDir, "extract", runId,
+        Seq("repo", "path"), metrics)(rows)
     val m = Snapshots.readManifest(runDir, "extract")
     Snapshots.writeAtomic(runMarker(runDir, m.runId), m.version.toString)
     out
   }
 
   /** The triples of extract rows: quarantine rows dropped, subj
-    * re-derived. q reads back as STRING (a partition dir value, or an
-    * append's column of that type): cast explicitly rather than lean
-    * on implicit string→boolean coercion surviving ANSI rule changes.
+    * re-derived.
     */
   private def triplesOf(raw: DataFrame): DataFrame =
-    raw.filter(!col("q").cast("boolean")).drop("q")
+    raw.filter(col("pred") =!= lit(Extraction.QuarantinePred))
       .withColumn("subj", concat(col("repo"), lit("/"), col("path")))
 
   /** Incremental ingest: extract ONLY `newFiles` (the content scan —
@@ -540,18 +552,17 @@ object Pipeline {
   //   (b) MERGE components — and the set of touched components is
   //       bounded by the delta edge count.
   // So: resolve the delta edges' endpoints to their current canonical
-  // ids (a join against the assign table pruned to its ident=false
-  // slice — the same probe-scan shape as the stored-key scans above —
-  // then against the dirty canon log), run ConnectedComponents over
-  // the resulting component-pair graph (its edge count picks the
-  // local union-find or the distributed star fixpoint, the tail's
-  // only size decision), and publish:
+  // ids (a join against the stored non-identity map, assign — the same
+  // probe-scan shape as the stored-key scans above — then against the
+  // dirty canon log), run ConnectedComponents over the resulting
+  // component-pair graph (its edge count picks the local union-find or
+  // the distributed star fixpoint, the tail's only size decision), and
+  // publish:
   //   assign/nodes/edges — APPEND-ONLY snapshots (Snapshots
-  //            .stageAppend): the delta entities' rows with their
-  //            final canonical, the delta members' node aggregates,
-  //            and the delta triples' edges. No stored row is
-  //            rewritten, so a merged-away root's stored rows stay
-  //            stale;
+  //            .stageAppend): the delta entities whose canonical is not
+  //            themselves, the delta members' node aggregates, and the
+  //            delta triples' edges. No stored row is rewritten, so
+  //            rows naming a merged-away root stay stale;
   //   canon_log — the compressed single-hop remap of every root
   //            merged away since the last fold (old root → current
   //            root), published LAST and stamped with this ingest's
@@ -560,7 +571,7 @@ object Pipeline {
   // next writer rolls back whole (see [[rollbackUncommitted]]).
   // Readers resolve stale canonicals through the log (readNodes /
   // readEdges); compactTail applies it physically past the fold
-  // threshold. Per-ingest IO = a non-identity probe + delta-sized
+  // threshold. Per-ingest IO = a probe of the map + delta-sized
   // writes, whatever the merge count. Equality with a from-scratch run
   // is spec-gated (PipelineSpec, on both CC paths), and the path is
   // oracle-gated end to end (kg_nodes_pinned: a resolving read through
@@ -586,25 +597,21 @@ object Pipeline {
 
     // --- 1. the current root of every stored id the delta touches
     // (`roots`, non-identity ids only): its stored canonical from the
-    // assign table pruned to the ident=false partitions, then through
-    // the dirty canon log (prior merges were recorded, not rewritten;
-    // a merged-away root keeps its identity row, so the log's keys
-    // join in too). Identity rows (canonicalId == entityId — the
-    // overwhelming majority of the corpus) carry nothing the probe
-    // can't infer: a missing id is its own root. Delta ids are
-    // disjoint from stored ids and from the log's keys, so they
-    // resolve to themselves. Probe IO is therefore O(non-identity
-    // rows), i.e. proportional to merge density, not corpus size. The
-    // map is delta-sized and serves both the pair graph and the edges
-    // append, so it is cached for the tail's duration.
+    // assign map, then through the dirty canon log (prior merges were
+    // recorded, not rewritten; a merged-away root was a root, so it
+    // has no map row, and the log's keys join in too). An id with no
+    // row is its own root. Delta ids are disjoint from stored ids and
+    // from the log's keys, so they resolve to themselves. Probe IO is
+    // therefore O(map rows), i.e. proportional to merge density, not
+    // corpus size. The result is delta-sized and serves both the pair
+    // graph and the edges append, so it is cached for the tail's
+    // duration.
     val touchedRows = deltaExtractRows + 2 * deltaLinkRows
     val touched = SkewJoin.hinted(deltaTriples
       .select(Linking.idCol($"pred", $"obj").as("entityId"))
       .unionByName(deltaLinks.select($"src".as("entityId")))
       .unionByName(deltaLinks.select($"dst".as("entityId"))), touchedRows)
     val stored = Snapshots.read(spark, runDir, "assign")
-      .filter(!$"ident".cast("boolean")) // partition-pruned slice
-      .select($"entityId", $"canonicalId")
     val log =
       if (!hadDirtyLog) None
       else Some(Snapshots.read(spark, runDir, CanonLogStage)
@@ -619,6 +626,9 @@ object Pipeline {
           Seq("canonicalId"), "left")
         .select($"entityId",
           coalesce($"newRoot", $"canonicalId").as("canonicalId"))
+        // a fold that crashed before its log-clear left the log's pairs
+        // in the map too: both rows of such a root resolve alike
+        .distinct()
     }.persist(StorageLevel.MEMORY_AND_DISK)
     // `df` plus column `out`: the current root of its id column `id`
     def rooted(df: DataFrame, id: String, out: String): DataFrame =
@@ -654,14 +664,12 @@ object Pipeline {
 
     // --- 3. the delta's rows at their final canonicals, columns in
     // the full run's read-back order; cb (if any) with the stored
-    // tables' own stamp. assign's ident partition column carries its
-    // READ-BACK type (string), as Snapshots.stageAppend requires.
-    val deltaAssign = newEnts.join(movedTo("entityId"), Seq("entityId"), "left")
-      .select($"pred", $"obj", $"norm", $"entityId",
-        coalesce($"comp", $"entityId").as("canonicalId"))
-    val assignApp = withCb(deltaAssign, bucketsOf(runDir, "assign"))
-      .withColumn("ident",
-        ($"canonicalId" === $"entityId").cast("string"))
+    // tables' own stamp. assign gains the moved delta ids, the map
+    // rows of this ingest (an old root merged away goes to the log).
+    val assignApp = moved.filter($"isNew".isNotNull)
+      .select($"id".as("entityId"), $"comp".as("canonicalId"))
+    val deltaAssign = withCanonical(newEnts,
+      SkewJoin.hinted(assignApp, 2 * deltaLinkRows))
     val nodesApp = withCb(nodeTableFull(deltaAssign),
         bucketsOf(runDir, "nodes"))
     val edgesApp = withCb(rooted(deltaTriples.withColumn("entityId",
@@ -682,8 +690,8 @@ object Pipeline {
     // its own stage, so the three narrow publish jobs overlap instead
     // of serializing three rounds of write + commit + footer latency.
     // Any partially-published subset is uncommitted. Each append
-    // is clustered like its stage's full snapshots: assign by its
-    // ident partitions, nodes by kind, edges by pred.
+    // is clustered like its stage's full snapshots: nodes by kind,
+    // edges by pred; assign, a map probed by entityId, by that.
     def append(st: String, clusterBy: Seq[String], app: DataFrame): Unit = {
       Snapshots.stageAppend(spark, runDir, st, runId, clusterBy, tailMetrics ++
         bucketsOf(runDir, st).map("canonBuckets" -> _.toString) +
@@ -691,7 +699,7 @@ object Pipeline {
       (): Unit
     }
     parallelRun(Seq(
-      () => append("assign", Seq("ident"), assignApp),
+      () => append("assign", Seq("entityId"), assignApp),
       () => append("nodes", Seq("kind"), nodesApp),
       () => append("edges", Seq("pred"), edgesApp)))
 
@@ -721,17 +729,17 @@ object Pipeline {
   }
 
   /** Fold maintenance for the merge-on-read tail tables (see
-    * Config.compactAppendFrac): when any of assign/nodes/edges has
-    * append rows reaching `frac` of the table, or the dirty canon log
-    * reaches `frac` of assign, fold the tables into fresh full
+    * Config.compactAppendFrac): when nodes or edges has append rows
+    * reaching `frac` of the table, or the dirty canon log reaches
+    * `frac` of the entities, fold assign/nodes/edges into fresh full
     * snapshots with the log applied and clear the log, carrying its
     * stamp forward. A fold republishes in the layout of a full run
-    * (assign by `ident`, nodes/edges unpartitioned and clustered by
-    * kind/pred). Like every writer it first rolls back an uncommitted
-    * ingest, so it folds committed appends only; a dir with no
-    * committed base folds nothing. A crash between the folds and the
-    * log-clear re-folds all three on the next call. Returns the stages
-    * folded.
+    * (nodes/edges clustered by kind/pred; assign the non-identity map,
+    * the log's pairs included). Like every writer it first rolls back
+    * an uncommitted ingest, so it folds committed appends only; a dir
+    * with no committed base folds nothing. A crash between the folds
+    * and the log-clear re-folds all three on the next call. Returns the
+    * stages folded.
     */
   def compactTail(spark: SparkSession, runDir: String, runId: String,
                   frac: Double): Seq[String] = {
@@ -739,6 +747,8 @@ object Pipeline {
     val stamp = rollbackUncommitted(runDir)
     if (stamp.isEmpty) return Nil
     val dirty = canonLogDirty(runDir)
+    // the map's append fraction says nothing of read tax: only the
+    // tables every resolving read scans trigger a fold
     def over(st: String): Boolean = {
       val m = Snapshots.readManifest(runDir, st)
       val (appendRows, _) = Snapshots.appendStats(m)
@@ -748,28 +758,29 @@ object Pipeline {
     // resolving read, so it counts toward the trigger
     val logOver = dirty && {
       val lm = Snapshots.readManifest(runDir, CanonLogStage)
-      val am = Snapshots.readManifest(runDir, "assign")
-      am.rows > 0 && lm.rows.toDouble / am.rows >= frac
+      val em = Snapshots.readManifest(runDir, "entities")
+      em.rows > 0 && lm.rows.toDouble / em.rows >= frac
     }
     // folds are ALL-OR-NOTHING: applying a dirty log to one table
     // while the others stay log-resolved would mix canonical spaces.
     // (A crash between the folds and the log-clear below is harmless:
     // re-resolving an already-folded table is a no-op — the log's keys
-    // no longer appear as canonicalIds.)
-    if (!stages.exists(over) && !logOver) return Nil
+    // no longer appear as canonicalIds, and assign already holds
+    // their rows.)
+    if (!Seq("nodes", "edges").exists(over) && !logOver) return Nil
 
     def resolveIf(st: String, d: DataFrame): DataFrame =
       if (!dirty) d
-      else {
-        val b = bucketsOf(runDir, st)
-        st match {
-          case "nodes" => resolveNodesFrame(spark, runDir, d, b)
-          case "assign" =>
-            // a remapped row's canonical is no longer itself
-            resolveCanon(spark, runDir, d, b).withColumn("ident",
-              (col("canonicalId") === col("entityId")).cast("string"))
-          case _ => resolveCanon(spark, runDir, d, b)
-        }
+      else st match {
+        case "nodes" => resolveNodesFrame(spark, runDir, d, bucketsOf(runDir, st))
+        case "assign" =>
+          // a merged-away root was a root, so it has no map row: the
+          // log's pair is its row. The anti-join keeps a re-fold after
+          // a crash before the log-clear from adding it twice
+          val log = canonLogDf(spark, runDir).toDF("entityId", "canonicalId")
+          resolveCanon(spark, runDir, d, None)
+            .unionByName(log.join(d, Seq("entityId"), "left_anti"))
+        case _ => resolveCanon(spark, runDir, d, bucketsOf(runDir, st))
       }
     val shapes: Map[String, DataFrame => DataFrame] = Map(
       "assign" -> (d => resolveIf("assign", d)),
@@ -785,7 +796,6 @@ object Pipeline {
       // precondition reads canonBuckets off the live manifest
       val keep = m.metrics.view.filterKeys(Set("canonBuckets")).toMap
       Snapshots.compact(spark, runDir, st, runId,
-        if (st == "assign") Seq("ident") else Nil,
         keep ++ Map("appendRowsFolded" -> appendRows.toString,
           "appendSetsFolded" -> sets.toString))(shapes(st))
       (): Unit
@@ -818,7 +828,7 @@ object Pipeline {
       val (_, sets) = Snapshots.appendStats(Snapshots.readManifest(runDir, st))
       if (sets < math.max(1, maxDeltas)) None
       else {
-        Snapshots.compact(spark, runDir, st, s"$runId-maint", Nil,
+        Snapshots.compact(spark, runDir, st, s"$runId-maint",
           Map("appendSetsFolded" -> sets.toString))()
         // newest-first: an append version carries its predecessors' files
         val live = Snapshots.readManifest(runDir, st).version
@@ -1080,8 +1090,11 @@ object Pipeline {
                            triples: DataFrame, ents: DataFrame,
                            links: DataFrame, resume: Boolean): Int = {
     import spark.implicits._
-    // Stage 3 — connected components → canonical id per entity.
-    // Singleton entities (no link edge) canonicalize to themselves.
+    // Stage 3 — connected components → the non-identity canonical map.
+    // Singleton entities (no link edge) and component roots
+    // canonicalize to themselves and have no row: the map is the small
+    // fraction of entities a link made non-canonical (12.5% of 2.0M at
+    // the 200k-file bench), so every reader joins it whole.
     var ccIters = 0
     // one layout whatever canonBuckets is: nodes/edges unpartitioned,
     // kind / pred CLUSTERED inside each file via sortWithinPartitions
@@ -1089,22 +1102,26 @@ object Pipeline {
     // counts follow each stage's own shuffle). Canonical buckets only
     // add cb as the last column (withCb); no reader filters on cb.
     val cbMetrics = cfg.canonBuckets.map("canonBuckets" -> _.toString).toMap
-    // partitioned by `ident` (canonical == self) so the edges stage can
-    // read the small non-identity DELTA slice partition-pruned, and
-    // count it from the manifest's partition-dir lineage with no job
     val assign = Snapshots.stage(spark, runDir, "assign", runId, resume,
-      partitionBy = Seq("ident"),
-      metrics = Map("ccIterations" -> ccIters.toString) ++ cbMetrics) {
+      metrics = Map("ccIterations" -> ccIters.toString)) {
       // exact edge count for free from the link_edges manifest: CC's
       // path decision then costs no count job and no raw-edge cache
       // (see ConnectedComponents.run's edgeCountHint)
-      val (a, iters) = assignCanonical(ents, links,
-        ccLocalThreshold = cfg.ccLocalThreshold,
-        edgeCountHint = Some(Snapshots.readManifest(runDir, "link_edges").rows))
+      val (map, iters) = canonicalMap(links, cfg.ccLocalThreshold,
+        Some(Snapshots.readManifest(runDir, "link_edges").rows))
       ccIters = iters
-      withCb(a, cfg.canonBuckets)
-        .withColumn("ident", $"canonicalId" === $"entityId")
+      // clustered like the map's appends, so AQE sizes its files by
+      // bytes: the local CC path's driver-side map would otherwise
+      // write one file per core, which every probe then opens
+      Snapshots.clustered(map, Seq("entityId"))
     }
+    // the map, broadcast while its manifest rows fit the session's
+    // threshold ([[SkewJoin.hinted]]): then neither materialization
+    // shuffles its large side for the join (skew-immune by
+    // construction); beyond it the join degrades to a left shuffle join
+    // (AQE covers hub-entity skew there)
+    val map = SkewJoin.hinted(assign,
+      Snapshots.readManifest(runDir, "assign").rows)
 
     // Stage 4a — nodes (shared nodeTable logic; the snapshot keeps the
     // canonicalNorm argmin column so comp merges recombine, see
@@ -1112,33 +1129,20 @@ object Pipeline {
     def nodesStage(): Unit = {
       Snapshots.stage(spark, runDir, "nodes", runId, resume,
         metrics = cbMetrics) {
-        withCb(nodeTableFull(assign), cfg.canonBuckets)
+        withCb(nodeTableFull(withCanonical(ents, map)), cfg.canonBuckets)
           .sortWithinPartitions($"kind")
       }
       (): Unit
     }
 
     // Stage 4b — edges: triples rewritten onto canonical ids via the
-    // canonical DELTA map. Only entities whose canonical id DIFFERS
-    // from their own id need rewriting — a small fraction at any scale
-    // (12.5% of 2.0M at the 200k-file bench; most entities are
-    // unlinked singletons). Left-join the pruned ident=false slice and
-    // coalesce: when the delta fits the session's broadcast threshold
-    // ([[SkewJoin.hinted]]) this stage shuffles NOTHING of the triple
-    // side (skew-immune by construction); beyond it the join
-    // degrades to a left shuffle join against the delta — still
-    // strictly smaller than the full 1:1 map the previous design
-    // joined (AQE covers hub-entity skew there).
+    // map: left-join it and coalesce (an entity with no row is its own
+    // canonical).
     def edgesStage(): Unit = {
       Snapshots.stage(spark, runDir, "edges", runId, resume,
         metrics = cbMetrics) {
       val withId = triples.withColumn("entityId", Linking.idCol($"pred", $"obj"))
-      val deltaRows = Snapshots.readManifest(runDir, "assign").fileRows
-        .collect { case (f, n) if f.contains("ident=false/") => n }.sum
-      val delta = assign.filter(!$"ident".cast("boolean"))
-        .select($"entityId", $"canonicalId")
-      withCb(withId.join(SkewJoin.hinted(delta, deltaRows), Seq("entityId"),
-          "left")
+      withCb(withId.join(map, Seq("entityId"), "left")
         .withColumn("canonicalId", coalesce($"canonicalId", $"entityId"))
         .select(EdgeCols.map(col): _*), cfg.canonBuckets)
         .sortWithinPartitions($"pred")

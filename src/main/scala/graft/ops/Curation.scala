@@ -178,8 +178,7 @@ object Curation {
     // `run(dir, threshold=0.2)` would silently serve the old
     // thresholds' output (the curation twin of the rand()-split
     // leakage class — stale-config reuse).
-    def stage(name: String, params: Map[String, String],
-              partitionBy: Seq[String] = Nil)
+    def stage(name: String, params: Map[String, String])
              (compute: => DataFrame): DataFrame = {
       if (resume && Snapshots.isComplete(runDir, name)) {
         val m = Snapshots.readManifest(runDir, name)
@@ -188,8 +187,7 @@ object Curation {
             s"${m.metrics} but this run asks for $params — " +
             "use a fresh runDir or resume = false")
       }
-      Snapshots.stage(spark, runDir, name, runId, resume,
-        partitionBy, params)(compute)
+      Snapshots.stage(spark, runDir, name, runId, resume, params)(compute)
     }
 
     // common params every stage's output depends on: the eval-set
@@ -229,9 +227,9 @@ object Curation {
       "rates" -> rates.toSeq.sorted.mkString(";"),
       "defaultRate" -> defaultRate.toString,
       "splits" -> splits.mkString(";"),
-      "budget" -> budget.toString),
-      partitionBy = Seq("split")) {
+      "budget" -> budget.toString)) {
       packStage(decon, rates, defaultRate, splits, budget, id, strata)
+        .sortWithinPartitions("split")
     }
   }
 

@@ -10,8 +10,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *
   * Layout: <runDir>/stage=<name>/snap=<v>/  parquet files, plus
   * _MANIFEST.v<v>.json per version and the live pointer _MANIFEST.json.
-  * Every manifest is stamped with [[FormatVersion]], and every read is
-  * planned from the manifest alone.
+  * One layout for every stage: plain files, no partition directories.
+  * A stage clusters its rows inside the files instead (its caller's
+  * sortWithinPartitions, an append's `clusterBy`), so row-group stats
+  * skip what a directory would have pruned, and the file count follows
+  * the data, not a column's value count. Every manifest is stamped
+  * with [[FormatVersion]], and every read is planned from the manifest
+  * alone.
   *
   * Publish protocol: data first, manifest LAST via write-to-temp +
   * atomic rename. A stage directory without _MANIFEST.json is
@@ -52,12 +57,9 @@ object Snapshots {
       // baseFiles (set with it)
       fileBytes: Option[Map[String, Long]],
       baseFileBytes: Option[Map[String, Long]] = None,
-      // StructType.json of the partitioned data files (partition columns
-      // excluded), of the partition columns (empty when unpartitioned),
-      // and, on append snapshots, of this version's unpartitioned
-      // append files
+      // StructType.json of the full snapshot's files and, on append
+      // snapshots, of this version's append files
       dataSchema: String,
-      partSchema: String,
       appendSchema: Option[String] = None
   )
 
@@ -76,9 +78,12 @@ object Snapshots {
     * ep_shingles a stage of every graph, published by the build
     * between entities and link_edges, so a pin no longer writes it.
     * Format 5 appends every ingest's extract slice too (a format-4
-    * ingested dir's live extract is only its last slice).
+    * ingested dir's live extract is only its last slice). Format 6
+    * drops partition directories from every stage: extract loses its
+    * `q` column, and assign holds only the non-identity canonical map
+    * (a format-5 assign is every entity, split by `ident`).
     */
-  val FormatVersion = 5
+  val FormatVersion = 6
 
   private val ManifestName = "_MANIFEST.json"
 
@@ -124,8 +129,8 @@ object Snapshots {
     * earlier snapshots — one root per source snapshot and append set,
     * each typed by the schemas its own publisher recorded (the Iceberg
     * manifest-list read shape). A publish that wrote no file (a
-    * partitioned write of no rows) reads as an empty frame of its
-    * recorded schema.
+    * write of no rows may plan no write task) reads as an empty frame
+    * of its recorded schema.
     */
   private def assemble(spark: SparkSession, runDir: String, stage: String,
                        m: Manifest, only: Option[String] = None
@@ -143,27 +148,19 @@ object Snapshots {
     roots.map { case (r, fs) =>
       val w = r.split('/').head.stripPrefix("snap=").toInt
       val rm = if (w == m.version) m else manifestAt(runDir, stage, w)
-      val (dSchema, pSchema) =
-        if (isAppend(r)) (parseStruct(rm.appendSchema.get), StructType(Nil))
-        else (parseStruct(rm.dataSchema), parseStruct(rm.partSchema))
+      val schema = parseStruct(
+        if (isAppend(r)) rm.appendSchema.get else rm.dataSchema)
       val rel = fs.map { case (p, b) => (p.stripPrefix(r + "/"), b) }
-      val idx = new ManifestFileIndex(spark, new HPath(s"$sd/$r"), rel, pSchema)
-      spark.baseRelationToDataFrame(HadoopFsRelation(idx, pSchema, dSchema,
-        None, new ParquetFileFormat, Map.empty[String, String])(spark))
+      val idx = new ManifestFileIndex(new HPath(s"$sd/$r"), rel)
+      spark.baseRelationToDataFrame(HadoopFsRelation(idx, StructType(Nil),
+        schema, None, new ParquetFileFormat, Map.empty[String, String])(spark))
     }.reduce(_ unionByName _)
   }
 
-  /** Read root of a stage-relative file path: snap=<w> plus any
-    * non-partition subdirs (append/d, append/m). Partition columns parse
-    * relative to the root, and a root with no k=v segments below it
-    * reads as plain files whose partition columns ride as data
-    * columns (the append set).
+  /** Read root of a stage-relative file path: the file's directory
+    * (snap=<w>, or an append set's snap=<w>/append/d or append/m).
     */
-  private def rootOf(p: String): String = {
-    val dirs = p.split('/').init // drop the filename
-    (dirs.head +: dirs.tail.takeWhile(s => !s.contains('=')))
-      .mkString("/")
-  }
+  private def rootOf(p: String): String = p.split('/').init.mkString("/")
 
   private def parseStruct(json: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(json)
@@ -323,7 +320,6 @@ object Snapshots {
     */
   def stage(spark: SparkSession, runDir: String, stageName: String,
             runId: String, resume: Boolean = true,
-            partitionBy: Seq[String] = Nil,
             metrics: => Map[String, String] = Map.empty)
            (compute: => DataFrame): DataFrame = {
     if (resume && isComplete(runDir, stageName))
@@ -333,17 +329,15 @@ object Snapshots {
     val dir = snapshotDir(runDir, stageName, version)
     val t0 = System.nanoTime()
     val df = compute
-    val writer = df.write.mode(SaveMode.Overwrite)
+    df.write.mode(SaveMode.Overwrite)
       .option("compression", StageCompression)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(dir)
     val wallMs = (System.nanoTime() - t0) / 1000000L
 
     // per-partition lineage: row count (and byte size, for planned
     // reads) per produced file, read from the parquet FOOTERS on the
     // driver (no Spark job, no data re-scan — the Iceberg-manifest
-    // approach). Keyed by the snapshot-relative path: partitionBy
-    // layouts reuse part-file basenames across partition dirs.
+    // approach), keyed by the snapshot-relative path
     val perFile = footerStats(dir)
     val rows = perFile.values.map(_._1).sum
 
@@ -351,10 +345,7 @@ object Snapshots {
       perFile.map { case (k, (r, _)) => k -> r }, wallMs, metrics,
       version = version,
       fileBytes = Some(perFile.map { case (k, (_, b)) => k -> b }),
-      dataSchema =
-        readBackSchema(spark, df, partitionBy, dir, perFile.keys).json,
-      partSchema =
-        partSchemaOf(stageName, df, partitionBy, perFile.keys).json)
+      dataSchema = readBackSchema(spark, df, dir, perFile.keys).json)
     val sd = stageDir(runDir, stageName)
     writeManifest(sd, versionedManifestName(version), m)
     writeManifest(sd, ManifestName, m)
@@ -378,16 +369,10 @@ object Snapshots {
   /** APPEND publish: a new snapshot version whose data =
     *   - every file of the current snapshot, CARRIED by reference in
     *     the manifest, never copied;
-    *   - snap=<v+1>/append/d — `append`'s rows, UNPARTITIONED (the
-    *     partition columns ride as data columns). Appends scatter
-    *     across arbitrary partition values (new entities hash
-    *     anywhere), and writing them through the partitioned layout
-    *     would touch one dir+file per value per ingest (dynamic commit
-    *     + footer + listing over ~B tiny files). As unpartitioned delta
-    *     files they cost O(1) files per ingest; readers filter them by
-    *     column stats instead of dir pruning, which is proportionate to
-    *     their (delta) size. The Iceberg analog: appended data files in
-    *     a new snapshot.
+    *   - snap=<v+1>/append/d — `append`'s rows, in files sized by
+    *     their bytes ([[clustered]]), so a delta costs O(1) files per
+    *     ingest. The Iceberg analog: appended data files in a new
+    *     snapshot.
     * Returns the appended rows re-read from append/d, as [[stage]]
     * returns its snapshot: a caller consumes the durable delta, never
     * a live lineage.
@@ -405,14 +390,8 @@ object Snapshots {
     * itself is bounded by the compaction trigger ([[compact]]).
     *
     * The delta and every cascade merge are written [[clustered]] by
-    * `clusterBy` (a partitioned stage's partition columns, or the
-    * columns its full snapshots are sorted by), so AQE sizes their
-    * files from the shuffle bytes it measures.
-    *
-    * NOTE for callers: partition columns read back with
-    * partition-inference types (a boolean dir value such as assign's
-    * ident reads back as a string) — the append frame must carry
-    * them with exactly those types.
+    * `clusterBy` (the columns the stage's full snapshots are clustered
+    * by), so AQE sizes their files from the shuffle bytes it measures.
     *
     * Same publish protocol as [[stage]] (data → versioned manifest →
     * live pointer last), so a crashed append is invisible and the
@@ -478,12 +457,10 @@ object Snapshots {
       fileBytes = Some(perFile.map { case (k, (_, b)) => k -> b }),
       baseFileBytes = Some(effectiveBytes(base).filter { case (k, _) =>
         carried.contains(k) }),
-      // the partitioned data files are all carried: their schemas are
-      // the base's
+      // the full snapshot's files are all carried: their schema is the
+      // base's
       dataSchema = base.dataSchema,
-      partSchema = base.partSchema,
-      appendSchema =
-        Some(readBackSchema(spark, adf, Nil, dir, perFile.keys).json))
+      appendSchema = Some(readBackSchema(spark, adf, dir, perFile.keys).json))
     writeManifest(sd, versionedManifestName(version), m)
     writeManifest(sd, ManifestName, m)
     IOStat.timed("snap.reread")(assemble(spark, runDir, stageName, m,
@@ -504,22 +481,14 @@ object Snapshots {
     * rebalance would locally sort whole rows first), which is what
     * keeps an append as compressible as its input.
     */
-  private def clustered(df: DataFrame, by: Seq[String]): DataFrame = {
+  private[graft] def clustered(df: DataFrame, by: Seq[String]): DataFrame = {
     val cols = by.map(col)
     df.hint("rebalance", cols: _*).sortWithinPartitions(cols: _*)
   }
 
-  /** A stage-relative file path or read root inside an append set
-    * (unpartitioned files; the partition columns ride as data columns).
-    */
+  /** A stage-relative file path or read root inside an append set. */
   private def isAppend(p: String): Boolean =
     p.split('/').contains("append")
-
-  /** Partition columns a snapshot was published with (empty when
-    * unpartitioned).
-    */
-  def partitionColsOf(m: Manifest): Seq[String] =
-    parseStruct(m.partSchema).fieldNames.toSeq
 
   /** Append rows and live append-set count of a snapshot (the
     * compaction trigger's inputs).
@@ -529,34 +498,30 @@ object Snapshots {
     (appended.values.sum, appended.keys.map(rootOf).toSet.size)
   }
 
-  /** MAINTENANCE: fold the current snapshot — carried partitioned
+  /** MAINTENANCE: fold the current snapshot — carried full-snapshot
     * files and every append set — into a fresh FULL version (the
     * Iceberg rewrite_data_files analog). Append mass and set count
     * reset to zero, carry chains break, and every older
     * version becomes expirable. `shape` lets the caller re-cluster
-    * (sortWithinPartitions etc.) on the way through; `partitionBy`
-    * sets the folded version's partitioning. Costs O(table) — run it
-    * when appendStats crosses a threshold
+    * (sortWithinPartitions etc.) on the way through. Costs O(table) —
+    * run it when appendStats crosses a threshold
     * (Pipeline.Config.compactAppendFrac), not per ingest.
     */
   def compact(spark: SparkSession, runDir: String, stageName: String,
-              runId: String, partitionBy: Seq[String],
-              metrics: Map[String, String] = Map.empty)
+              runId: String, metrics: Map[String, String] = Map.empty)
              (shape: DataFrame => DataFrame = identity): DataFrame = {
     val m = readManifest(runDir, stageName)
     val df = shape(assemble(spark, runDir, stageName, m))
     stage(spark, runDir, stageName, runId, resume = false,
-      partitionBy = partitionBy,
       metrics = metrics + ("compacted" -> "true"))(df)
   }
 
   /** Footer-derived (row count, byte size) per *.parquet under `dir`,
     * keyed by dir-relative path — everything scan planning needs.
     *
-    * Footers are opened on a bounded driver-side pool: a partitionBy
-    * layout produces (tasks × partition values) small files, and the
-    * ~10 ms per-open FS overhead is pure latency — serial reads cost
-    * seconds per stage and dominated small pipeline runs.
+    * Footers are opened on a bounded driver-side pool: the ~10 ms
+    * per-open FS overhead is pure latency — serial reads cost seconds
+    * per stage at hundreds of files.
     */
   def footerStats(dir: String): Map[String, (Long, Long)] =
     IOStat.timed("snap.footers") {
@@ -591,7 +556,7 @@ object Snapshots {
       } finally pool.shutdown()
     }
 
-  /** Read-back schema of the data columns of `df` as written to `dir`.
+  /** Read-back schema of `df` as written to `dir`.
     * Derived from the FRAME, skipping the per-publish driver footer
     * read of a written file (~70 ms locally; an object-store GET
     * round-trip at real scale — pure serial driver latency on every
@@ -607,8 +572,7 @@ object Snapshots {
     * misread, and the frame's schema stands.
     */
   private def readBackSchema(spark: SparkSession, df: DataFrame,
-                             partitionBy: Seq[String], dir: String,
-                             files: Iterable[String]
+                             dir: String, files: Iterable[String]
                             ): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     def exact(dt: DataType): Boolean = dt match {
@@ -632,58 +596,10 @@ object Snapshots {
         valueContainsNull = true)
       case other => other
     }
-    val data = df.schema.fields.filterNot(f => partitionBy.contains(f.name))
-    if (data.forall(f => exact(f.dataType)) || files.isEmpty)
-      StructType(data.map(f =>
-        StructField(f.name, nullify(f.dataType), nullable = true, f.metadata)))
+    if (exact(df.schema) || files.isEmpty)
+      nullify(df.schema).asInstanceOf[StructType]
     else IOStat.timed("snap.schemaCap")(
       spark.read.parquet(s"$dir/${files.min}").schema)
-  }
-
-  /** Partition schema of a publish, typed from its dir values the way
-    * Spark's partition inference would type them, so that reads never
-    * re-run inference: per column, all values integral (→ int, or long
-    * past the int range) or all letter-first strings (never mistaken
-    * for a number, date or timestamp). Any other value (date-like,
-    * decimal-like, escaped or null) is refused before the manifest is
-    * written. A publish with no file (no rows) types each partition
-    * column as written, booleans as string: their dirs read back as
-    * strings.
-    */
-  private def partSchemaOf(stageName: String, df: DataFrame,
-                           partitionBy: Seq[String],
-                           relPaths: Iterable[String]
-                          ): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    val IntRe = "-?\\d{1,18}".r
-    val StrRe = "[A-Za-z_][A-Za-z0-9_.\\-]*".r
-    def string(v: String) =
-      StrRe.matches(v) && v != "__HIVE_DEFAULT_PARTITION__"
-    StructType(partitionBy.map { c =>
-      val prefix = c + "="
-      val values = relPaths.map { p =>
-        p.split('/').init.find(_.startsWith(prefix)).getOrElse(
-          throw new IllegalStateException(s"$p lacks partition dir $prefix"))
-          .substring(prefix.length)
-      }.toSet
-      val dt =
-        if (values.isEmpty) df.schema(c).dataType match {
-          case BooleanType => StringType
-          case t           => t
-        } else if (values.forall(IntRe.matches)) {
-          if (values.forall(v => v.toLong.isValidInt)) IntegerType
-          else LongType
-        } else if (values.forall(string)) StringType
-        else {
-          val bad = values.toSeq.sorted.find(!string(_)).get
-          throw new IllegalArgumentException(s"cannot publish stage " +
-            s"$stageName: partition column '$c' has value '$bad'; values " +
-            "must be all integers or all letter-first strings (dates, " +
-            "decimals, escaped and null values cannot be typed without " +
-            "inference)")
-        }
-      StructField(c, dt)
-    })
   }
 
   private implicit class IterAdapter[T](it: java.util.Iterator[T]) {

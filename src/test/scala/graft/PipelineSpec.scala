@@ -106,13 +106,12 @@ class PipelineSpec extends SparkSpec {
     def appendRoots(m: Snapshots.Manifest): Set[String] =
       m.baseFiles.get.keys.filter(_.contains("/append/"))
         .map(_.split("/part").head).toSet
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b")) {
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
       Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)).toDF("x", "b")
     }
     val base = Snapshots.readManifest(dir, "t").fileRows
       .map { case (k, r) => s"snap=1/$k" -> r }
-    // v2 appends two rows to its unpartitioned append set; every base
+    // v2 appends two rows to its append set; every base
     // file is carried by reference, none copied
     Snapshots.stageAppend(spark, dir, "t", "p2", Seq("b")) {
       Seq((10L, 0), (99L, 2)).toDF("x", "b")
@@ -195,8 +194,7 @@ class PipelineSpec extends SparkSpec {
       val dir = tmpDir(s"refuse-$name")
       (Pipeline.Stages ++ Pipeline.EpochStages)
         .foreach { st =>
-          Snapshots.stage(spark, dir, st, "cr", resume = false,
-            partitionBy = Seq("cb")) {
+          Snapshots.stage(spark, dir, st, "cr", resume = false) {
             Seq((1L, 0), (2L, 1)).toDF("canonicalId", "cb")
           }
         }
@@ -242,6 +240,41 @@ class PipelineSpec extends SparkSpec {
     Pipeline.readNodes(spark, runDir)
       .select("canonicalId", "canonical", "kind", "memberCount")
       .as[(Long, String, String, Long)].collect().toSet
+
+  // one snapshot layout: no manifest path has a k=v (partition) segment
+  private def plainPaths(m: Snapshots.Manifest): Boolean =
+    !(m.fileRows.keys.map(k => s"snap=${m.version}/$k") ++
+      m.baseFiles.getOrElse(Map.empty).keys)
+      .exists(_.split('/').tail.init.exists(_.contains("=")))
+
+  // the assign map holds only what CC computes: no identity row
+  private def assertMapRows(dir: String, clue: String): Unit =
+    assert(Snapshots.read(spark, dir, "assign")
+      .filter($"canonicalId" === $"entityId").isEmpty,
+      s"identity row in assign: $clue")
+
+  // the assign map a resolving read sees: stored rows through the dirty
+  // canon log, plus the log's pair of each merged-away root (a root has
+  // no row of its own)
+  private def resolvedMap(dir: String): org.apache.spark.sql.DataFrame = {
+    val map = Snapshots.read(spark, dir, "assign")
+    if (!Pipeline.canonLogDirty(dir)) map
+    else {
+      val log = Snapshots.read(spark, dir, Pipeline.CanonLogStage)
+        .select($"oldRoot", $"newRoot")
+      map.join(log, $"canonicalId" === $"oldRoot", "left")
+        .select($"entityId",
+          org.apache.spark.sql.functions.coalesce($"newRoot", $"canonicalId")
+            .as("canonicalId"))
+        .unionByName(log.toDF("entityId", "canonicalId")
+          .join(map, Seq("entityId"), "left_anti"))
+    }
+  }
+
+  // equal as multisets, both ways
+  private def sameRows(x: org.apache.spark.sql.DataFrame,
+                       y: org.apache.spark.sql.DataFrame): Boolean =
+    x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
 
   // read schemas of bucketed nodes/edges: cb is an int in last position
   private val bucketedNodesSchema = StructType(Seq(
@@ -431,8 +464,8 @@ class PipelineSpec extends SparkSpec {
     val plainEdgesSchema =
       StructType(bucketedEdgesSchema.filterNot(_.name == "cb"))
     def assertPlainLayout(when: String): Unit = {
-      Seq("nodes", "edges").foreach(st => assert(Snapshots.partitionColsOf(
-        Snapshots.readManifest(inc, st)).isEmpty, s"$st $when"))
+      Seq("nodes", "edges").foreach(st => assert(
+        plainPaths(Snapshots.readManifest(inc, st)), s"$st $when"))
       assert(Pipeline.readNodes(spark, inc).schema == plainNodesSchema, when)
       assert(Pipeline.readEdges(spark, inc).schema == plainEdgesSchema, when)
     }
@@ -552,7 +585,9 @@ class PipelineSpec extends SparkSpec {
       val m = Snapshots.readManifest(inc, st)
       assert(m.metrics.get("defer").contains("true"), s"$st not deferred")
       assert(m.runId == "icc-d2" && m.baseFiles.exists(_.nonEmpty), st)
-      assert(m.metrics("canonBuckets") == "64", st)
+      // cb is a nodes/edges column: the assign map has none
+      assert(m.metrics.get("canonBuckets") ==
+        Option.when(st != "assign")("64"), st)
     }
     assert(Pipeline.canonLogDirty(inc))
     assert(Snapshots.readManifest(inc, Pipeline.CanonLogStage).runId ==
@@ -650,23 +685,20 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, a.toDS(), inc, "if-base", cfg)
     // canonical buckets are a plain last column, not a directory tree:
     // every published tail version (base, deferred append, fold) names
-    // no cb= path, assign keeps only its ident partition, and the read
-    // schemas are exactly those of the former cb-partitioned layout
+    // no k=v path, and the read schemas are exactly those of the
+    // former cb-partitioned layout
     def assertPlainCb(): Unit = {
-      val parts = Map("assign" -> Seq("ident"), "nodes" -> Nil,
-        "edges" -> Nil)
-      parts.foreach { case (st, cols) =>
+      Seq("assign", "nodes", "edges").foreach { st =>
         Snapshots.versions(inc, st).foreach { v =>
           val m = Snapshots.readManifestVersion(inc, st, v)
-          val paths = m.fileRows.keys ++ m.baseFiles.getOrElse(Map.empty).keys
-          assert(!paths.exists(_.contains("cb=")), s"$st v$v: $paths")
-          assert(Snapshots.partitionColsOf(m) == cols, s"$st v$v")
+          assert(plainPaths(m), s"$st v$v: ${m.fileRows.keys}")
         }
       }
       assert(Pipeline.readNodes(spark, inc).schema == bucketedNodesSchema)
       assert(Pipeline.readEdges(spark, inc).schema == bucketedEdgesSchema)
     }
     assertPlainCb()
+    assertMapRows(inc, "after the base run")
     Pipeline.pinEpoch(spark, inc, "if-pin", cfg)
     Pipeline.runIncrementalPinned(spark, b.toDS(), inc, "if-d1", cfg)
     // the ingest deferred (an append version by if-d1 carries the
@@ -676,6 +708,7 @@ class PipelineSpec extends SparkSpec {
       m.runId == "if-d1" && m.metrics.get("defer").contains("true")
     })
     assertPlainCb()
+    assertMapRows(inc, "after if-d1")
     // delta 1 appended new entities → the trigger folded; append mass
     // and set count are zero and the fold is stamped
     Seq("assign", "nodes", "edges").foreach { st =>
@@ -695,6 +728,12 @@ class PipelineSpec extends SparkSpec {
     assert(nodeSet(inc) == nodeSet(full))
     assert(edgeSet(inc) == edgeSet(full))
     assert(r2.nodes == rFull.nodes && r2.edges == rFull.edges)
+    // the folded map as stored is the from-scratch map
+    assertMapRows(inc, "after if-d2")
+    assert(!Pipeline.canonLogDirty(inc) &&
+      !Snapshots.read(spark, full, "assign").isEmpty)
+    assert(sameRows(Snapshots.read(spark, inc, "assign"),
+      Snapshots.read(spark, full, "assign")), "folded assign")
   }
 
   test("lineage consolidation bounds the per-ingest union width; chain stays exact") {
@@ -887,6 +926,11 @@ class PipelineSpec extends SparkSpec {
         Pipeline.readEdges(spark, full).selectExpr(ecols: _*)), tag)
       assert(r2.nodes == rFull.nodes && r2.edges == rFull.edges, tag)
       assert(r1.nodes > 0 && r1.nodes <= r2.nodes)
+      // the map before a fold: non-identity rows only, and the
+      // from-scratch map once resolved through the log
+      assertMapRows(inc, tag)
+      assert(sameRows(resolvedMap(inc), Snapshots.read(spark, full, "assign")),
+        s"log-resolved assign ($tag)")
       (inc, r1, r2)
     }
     // the distributed path really ran in both ingests' tails
@@ -906,6 +950,11 @@ class PipelineSpec extends SparkSpec {
     assert(edgeSet(inc) == edgeSet(full))
     assert(Snapshots.read(spark, inc, "nodes").count() == r2.nodes)
     assert(Snapshots.readManifest(inc, "nodes").rows == r2.nodes)
+    // the fold stored the log's pairs in the map: as stored, it is the
+    // from-scratch map
+    assertMapRows(inc, "after the fold")
+    assert(sameRows(Snapshots.read(spark, inc, "assign"),
+      Snapshots.read(spark, full, "assign")), "folded assign")
 
     // a further deferred ingest on the folded base still works
     val d = Seq(f("dnew.txt", Seq(classes(3), "dbrandnew3")))
@@ -1159,6 +1208,63 @@ class PipelineSpec extends SparkSpec {
     deleteRec(Path.of(dir)); deleteRec(Path.of(full))
   }
 
+  test("compactTail crash-point sweep: a fold crashed after any subset of its publishes re-folds to the uncrashed fold") {
+    val classes = (0 until 24).map(i => s"zword$i")
+    val a = classes.zipWithIndex.map { case (w, i) => asks(s"a$i.txt", w) }
+    val b = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 0 => asks(s"b$i.txt", w.toUpperCase)
+    } :+ asks("bnew.txt", "zbrandnew")
+    val c = classes.zipWithIndex.collect {
+      case (w, i) if i % 2 == 1 => asks(s"c$i.txt", w + ".")
+    } :+ asks("cnew.txt", "zbrandnew2")
+    val dir = tmpDir("foldsweep")
+    Pipeline.run(spark, a.toDS(), dir, "fs-base")
+    Pipeline.pinEpoch(spark, dir, "fs-pin")
+    Pipeline.runIncrementalPinned(spark, b.toDS(), dir, "fs-b")
+    Pipeline.runIncrementalPinned(spark, c.toDS(), dir, "fs-c")
+    assert(Snapshots.readManifest(dir, Pipeline.CanonLogStage).rows > 0,
+      "the sweep needs merged-away roots in the log")
+    // an ingest that re-mentions every base form, the merged-away roots
+    // among them
+    val x = classes.zipWithIndex.map { case (w, i) => asks(s"x$i.txt", w) }
+    val fullX = tmpDir("foldsweep-fullx")
+    Pipeline.run(spark, (a ++ b ++ c ++ x).toDS(), fullX, "fs-fullx")
+    val tail = Seq("assign", "nodes", "edges")
+    val ref = tmpDir("foldsweep-ref")
+    copyRec(dir, ref)
+    assert(Pipeline.compactTail(spark, ref, "fs-fold", 1e-9) == tail)
+    // the three folds publish concurrently, so a crash can leave any
+    // subset of them published, the canon log still dirty (all three:
+    // the crash between the folds and the log-clear)
+    (0 to 3).flatMap(tail.combinations).foreach { folded =>
+      val at = s"folded: ${folded.mkString(", ")}"
+      val d = tmpDir("foldsweep-crash")
+      copyRec(dir, d)
+      Pipeline.compactTail(spark, d, "fs-fold", 1e-9)
+      (Pipeline.CanonLogStage +: tail.filterNot(folded.contains))
+        .foreach(Snapshots.rollback(d, _, "fs-fold"))
+      assert(Pipeline.canonLogDirty(d), at)
+      if (folded == tail) {
+        // an ingest in the crash window: the folded map holds the
+        // dirty log's pairs too, and the graph stays exact
+        val dx = tmpDir("foldsweep-ingest")
+        copyRec(d, dx)
+        Pipeline.runIncrementalPinned(spark, x.toDS(), dx, "fs-x")
+        assertSameGraph(dx, fullX, s"an ingest after the crash, $at")
+        deleteRec(Path.of(dx))
+      }
+      assert(Pipeline.compactTail(spark, d, "fs-refold", 1e-9) == tail, at)
+      assert(!Pipeline.canonLogDirty(d), at)
+      val map = Snapshots.read(spark, d, "assign")
+      assert(map.count() == map.select("entityId").distinct().count(),
+        s"duplicate entityId in assign, $at")
+      tail.foreach(st => assert(sameRows(Snapshots.read(spark, d, st),
+        Snapshots.read(spark, ref, st)), s"$st differs from the uncrashed fold, $at"))
+      deleteRec(Path.of(d))
+    }
+    Seq(dir, ref, fullX).foreach(d => deleteRec(Path.of(d)))
+  }
+
   test("an ingest after a crashed ingest builds on the committed graph only") {
     val classes = (0 until 20).map(i => s"oword$i")
     val base = classes.zipWithIndex.map { case (w, i) => asks(s"o$i.txt", w) }
@@ -1196,8 +1302,10 @@ class PipelineSpec extends SparkSpec {
     // has one, without the extractVersion stamp; a format-3 base run
     // has no ep_shingles stage (its link stage shingled in scratch); a
     // format-4 dir after a pinned ingest has two full extract versions
-    // (the second only its slice) and no runId markers
-    Seq(("base", 1), ("ingested", 1), ("format3", 3), ("pinned", 4)).foreach {
+    // (the second only its slice) and no runId markers; a format-5 base
+    // run's extract and assign were partitioned by q and ident
+    Seq(("base", 1), ("ingested", 1), ("format3", 3), ("pinned", 4),
+      ("format5", 5)).foreach {
       case (variant, format) =>
       val dir = tmpDir(s"format$format-$variant")
       Pipeline.run(spark, corpus.toDS(), dir, "f1-base")
@@ -1490,8 +1598,19 @@ class PipelineSpec extends SparkSpec {
     val inc = tmpDir("d-inc")
     Pipeline.run(spark, (parts(0) ++ parts(1)).toDS(), inc, "d-base", cfg)
     Pipeline.pinEpoch(spark, inc, "d-pin", cfg)
-    Pipeline.runIncrementalPinned(spark, parts(2).toDS(), inc, "d-x", cfg)
+    // quarantine rows are extract rows with the quarantine pred: exactly
+    // the counted ones, and none reaches the entities
+    def assertQuarantine(r: Pipeline.Result, clue: String): Unit = {
+      val isQ = $"pred" === graft.extract.Extraction.QuarantinePred
+      assert(Snapshots.read(spark, inc, "extract").filter(isQ).count() ==
+        r.quarantined, clue)
+      assert(Snapshots.read(spark, inc, "entities").filter(isQ).isEmpty, clue)
+    }
+    val rPinned = Pipeline.runIncrementalPinned(spark, parts(2).toDS(), inc,
+      "d-x", cfg)
+    assertQuarantine(rPinned, "after the pinned ingest")
     val rInc = Pipeline.runIncremental(spark, parts(3).toDS(), inc, "d-y", cfg)
+    assertQuarantine(rInc, "after the global ingest")
     assert(rInc.quarantined == res.quarantined && rInc.triples == res.triples)
     deleteRec(Path.of(inc))
     val subjects = Snapshots.read(spark, dir, "edges")

@@ -9,8 +9,7 @@ import scala.jdk.CollectionConverters._
 /** Manifest-planned snapshot reads: `Snapshots.read` plans scans from
   * the manifest's file list + recorded schemas — zero directory
   * listing — and must be indistinguishable from Spark's own reader
-  * (`spark.read.parquet` on the snapshot dir) in schema, values,
-  * partition column typing, and partition pruning.
+  * (`spark.read.parquet` on the snapshot dir) in schema and values.
   */
 class SnapshotPlanSpec extends SparkSpec {
   import spark.implicits._
@@ -31,13 +30,12 @@ class SnapshotPlanSpec extends SparkSpec {
 
   test("planned read == listed read on a partitioned full snapshot (schema, values, no listing)") {
     val dir = tmpDir("full")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b")) {
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
       Seq((1L, 0, "x"), (2L, 0, "y"), (3L, 1, "z"), (4L, 2, "w"))
         .toDF("x", "b", "s")
     }
     val planned = Snapshots.read(spark, dir, "t")
-    assert(planned.schema == listed(dir).schema) // incl. b inferred as int
+    assert(planned.schema == listed(dir).schema) // incl. b read as int
     assert(planned.schema("b").dataType.typeName == "integer")
     assert(rowsOf(planned) == rowsOf(listed(dir)))
     // the scan really is manifest-planned
@@ -49,59 +47,9 @@ class SnapshotPlanSpec extends SparkSpec {
     deleteRec(Path.of(dir))
   }
 
-  test("planned partition pruning: filter on the partition column scans only its files") {
-    val dir = tmpDir("prune")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b")) {
-      (0L until 30L).map(i => (i, (i % 3).toInt)).toDF("x", "b")
-    }
-    val df = Snapshots.read(spark, dir, "t").filter($"b" === 1)
-    assert(df.as[(Long, Int)].collect().toSet ==
-      (0L until 30L).filter(_ % 3 == 1).map(i => (i, 1)).toSet)
-    val scan = df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f
-    }.head
-    val all = Snapshots.readManifest(dir, "t").fileRows.keys
-    val b1 = all.count(_.startsWith("b=1/"))
-    assert(b1 > 0 && b1 < all.size)
-    assert(scan.inputRDDs().head.partitions.nonEmpty)
-    df.count() // populate metrics
-    assert(scan.metrics("numFiles").value == b1)
-    deleteRec(Path.of(dir))
-  }
-
-  test("probe-shaped filter !cast(ident as boolean) prunes to ident=false files") {
-    // the mergeOnReadTail probe reads the stored assign table
-    // filtered on its string ident partition via a boolean cast; this
-    // pins that exact predicate shape to PARTITION pruning (not a
-    // post-scan filter) under the manifest-planned index
-    val dir = tmpDir("identprune")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("ident", "cb")) {
-      (0L until 40L).map(i => (i, (i % 4 != 0).toString, (i % 5).toInt))
-        .toDF("x", "ident", "cb")
-    }
-    val df = Snapshots.read(spark, dir, "t")
-      .filter(!$"ident".cast("boolean"))
-    assert(df.select($"x").as[Long].collect().toSet ==
-      (0L until 40L).filter(_ % 4 == 0).toSet)
-    val scan = df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f
-    }.head
-    val all = Snapshots.readManifest(dir, "t").fileRows.keys
-    val falseFiles = all.count(_.contains("ident=false/"))
-    assert(falseFiles > 0 && falseFiles < all.size)
-    assert(scan.inputRDDs().head.partitions.nonEmpty) // force file listing
-    df.count() // populate metrics
-    assert(scan.metrics("numFiles").value == falseFiles,
-      s"expected only the $falseFiles ident=false files to be scanned")
-    deleteRec(Path.of(dir))
-  }
-
   test("planned read == listed read across an append chain incl. time travel") {
     val dir = tmpDir("chain")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b")) {
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
       Seq((1L, 0), (2L, 0), (3L, 1), (4L, 2)).toDF("x", "b")
     }
     // v2's set is carried by v3 and v4 (v3's one-row set, which
@@ -140,36 +88,26 @@ class SnapshotPlanSpec extends SparkSpec {
     deleteRec(Path.of(dir))
   }
 
-  test("string-valued partition columns (true/false dirs) type as string on both paths") {
-    val dir = tmpDir("strpart")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("q")) {
-      Seq((1L, "true"), (2L, "false"), (3L, "false")).toDF("x", "q")
+  test("an empty publish reads back empty, typed by its recorded schema") {
+    val dir = tmpDir("empty")
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
+      Seq((1L, true), (2L, false)).toDF("x", "q")
     }
-    val planned = Snapshots.read(spark, dir, "t")
-    assert(planned.schema("q").dataType.typeName == "string")
-    assert(planned.schema == listed(dir).schema)
-    assert(rowsOf(planned) == rowsOf(listed(dir)))
-    assert(planned.filter(!$"q".cast("boolean")).count() == 2)
-    // an empty partitioned publish (the extract of an empty ingest)
-    // writes no file: it reads back empty, its boolean partition
-    // column typed string like the dirs of a non-empty publish
-    Snapshots.stage(spark, dir, "t", "p2", resume = false,
-      partitionBy = Seq("q")) {
+    // the extract of an empty ingest: no row, whatever Spark writes
+    Snapshots.stage(spark, dir, "t", "p2", resume = false) {
       spark.emptyDataset[(Long, Boolean)].toDF("x", "q")
     }
-    assert(Snapshots.readManifest(dir, "t").fileRows.isEmpty)
+    assert(Snapshots.readManifest(dir, "t").rows == 0L)
+    val v1 = Snapshots.readVersion(spark, dir, "t", 1)
     val empty = Snapshots.read(spark, dir, "t")
-    assert(empty.isEmpty && empty.schema == planned.schema)
-    assert(rowsOf(Snapshots.readVersion(spark, dir, "t", 1)
-      .unionByName(empty)) == rowsOf(planned))
+    assert(empty.isEmpty && empty.schema == v1.schema)
+    assert(rowsOf(v1.unionByName(empty)) == rowsOf(v1))
     deleteRec(Path.of(dir))
   }
 
   test("derived manifest schema == real file inference (nested, non-nullable source)") {
     val dir = tmpDir("dschema")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("k")) {
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
       // typed source → non-nullable longs, nested struct + array:
       // the derived read-back schema must match inference exactly
       // (everything asNullable'd at the relation level)
@@ -208,29 +146,6 @@ class SnapshotPlanSpec extends SparkSpec {
     deleteRec(Path.of(dir))
   }
 
-  test("ambiguous partition values are refused unpublished; typable values publish") {
-    val dir = tmpDir("amb")
-    // date-like partition values: Spark inference would type them as
-    // DATE, which a planned read cannot reproduce without inference
-    val ex = intercept[IllegalArgumentException] {
-      Snapshots.stage(spark, dir, "t", "p1", resume = false,
-        partitionBy = Seq("d")) {
-        Seq((1L, "2024-01-02"), (2L, "2024-01-03")).toDF("x", "d")
-      }
-    }
-    assert(ex.getMessage.contains("'d'") &&
-      ex.getMessage.contains("'2024-01-02'"), ex.getMessage)
-    assert(!Snapshots.isComplete(dir, "t"))
-    assert(Snapshots.versions(dir, "t").isEmpty)
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("d")) {
-      Seq((1L, "d20240102"), (2L, "d20240103")).toDF("x", "d")
-    }
-    assert(Snapshots.versions(dir, "t") == Seq(1))
-    assert(rowsOf(Snapshots.read(spark, dir, "t")) == rowsOf(listed(dir)))
-    deleteRec(Path.of(dir))
-  }
-
   private def readSet(dir: String): Set[(Long, Int)] =
     Snapshots.read(spark, dir, "t").select("x", "b")
       .as[(Long, Int)].collect().toSet
@@ -245,8 +160,7 @@ class SnapshotPlanSpec extends SparkSpec {
 
   test("tiered appends: a large prior set is CARRIED by reference, rows exact") {
     val dir = tmpDir("tier")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b")) {
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
       Seq((1L, 0), (2L, 1), (3L, 2)).toDF("x", "b")
     }
     // v2: append TEN rows spanning b=1 / b=2
@@ -303,8 +217,7 @@ class SnapshotPlanSpec extends SparkSpec {
       Seq((100L, 0), (101L, 1), (102L, 2)),
       // duplicates of stored rows stay duplicates: appends never dedup
       Seq((0L, 0), (301L, 2)))
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b"))(appendDf(base))
+    Snapshots.stage(spark, dir, "t", "p1", resume = false)(appendDf(base))
     appends.zipWithIndex.foreach { case (app, i) =>
       Snapshots.stageAppend(spark, dir, "t", s"p${i + 2}", Seq("b"))(
         appendDf(app))
@@ -317,8 +230,7 @@ class SnapshotPlanSpec extends SparkSpec {
 
   test("binary-counter cascade keeps the live append-set count logarithmic") {
     val dir = tmpDir("cascade")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b")) {
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
       Seq((1L, 0), (2L, 1)).toDF("x", "b")
     }
     val k = 8
@@ -353,8 +265,7 @@ class SnapshotPlanSpec extends SparkSpec {
         Seq.fill(rnd.nextInt(16))((1000L + rnd.nextInt(9000), rnd.nextInt(4))))
       val dir = tmpDir(s"rand$trial")
       try {
-        Snapshots.stage(spark, dir, "t", "p0", resume = false,
-          partitionBy = Seq("b"))(appendDf(base))
+        Snapshots.stage(spark, dir, "t", "p0", resume = false)(appendDf(base))
         steps.zipWithIndex.foreach { case (app, i) =>
           Snapshots.stageAppend(spark, dir, "t", s"p${i + 1}", Seq("b"))(
             appendDf(app))
@@ -371,8 +282,7 @@ class SnapshotPlanSpec extends SparkSpec {
   test("append files are sized by AQE: one for a tiny append, several past the advisory size") {
     val dir = tmpDir("sizing")
     val base = Seq((1L, 0), (2L, 1))
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b"))(appendDf(base))
+    Snapshots.stage(spark, dir, "t", "p1", resume = false)(appendDf(base))
     def newFiles: Int =
       Snapshots.readManifest(dir, "t").metrics("newFiles").toInt
     def absorbed: String =
@@ -405,8 +315,7 @@ class SnapshotPlanSpec extends SparkSpec {
 
   test("compact folds buckets, patches and tombstoned appends into a full snapshot; old versions expire") {
     val dir = tmpDir("compact")
-    Snapshots.stage(spark, dir, "t", "p1", resume = false,
-      partitionBy = Seq("b")) {
+    Snapshots.stage(spark, dir, "t", "p1", resume = false) {
       Seq((1L, 0), (2L, 1), (3L, 2)).toDF("x", "b")
     }
     // two live append sets: v3 carries v2's seven rows beside its one
@@ -422,15 +331,15 @@ class SnapshotPlanSpec extends SparkSpec {
     // pre-compact: carried files pin old versions against expiry
     intercept[IllegalArgumentException](Snapshots.expire(dir, "t", 1))
 
-    Snapshots.compact(spark, dir, "t", "maint", Seq("b"))()
+    Snapshots.compact(spark, dir, "t", "maint")()
     val mC = Snapshots.readManifest(dir, "t")
     assert(mC.metrics.get("compacted").contains("true"))
     assert(mC.baseFiles.forall(_.isEmpty) &&
       Snapshots.appendStats(mC) == (0L, 0))
     assert(readSet(dir) == before, "compaction changed the content")
     assert(mC.rows == before.size.toLong)
-    // the fold kept the layout it was asked for: files live under b=* dirs
-    assert(mC.fileRows.keys.forall(_.contains("b=")))
+    // the fold wrote plain files: no manifest path has a k=v segment
+    assert(!mC.fileRows.keys.exists(_.split('/').init.exists(_.contains("="))))
     // every pre-compact version is now expirable (newest-first: the
     // guard also protects files carried by EXPIRED-LATER manifests)
     Seq(3, 2, 1).foreach(Snapshots.expire(dir, "t", _))
