@@ -4,7 +4,7 @@ import graft.canon.ConnectedComponents
 import graft.extract.Extraction
 import graft.link.{Linking, SkewJoin}
 import graft.store.Snapshots
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Path, Paths}
@@ -13,7 +13,7 @@ import java.nio.file.{Files, Path, Paths}
   *
   *   files ─repartitionByRange(repo,path)→
   *   [extract]  mapPartitions rule extractors → triples ∪ quarantine
-  *   [link]     entities → fuzzy-form shingles (ep_shingles) →
+  *   [link]     entities, each fuzzy form with its shingle set →
   *              exact-norm + MinHash-LSH edges (link_edges)
   *   [canon]    connected components → the non-identity canonical
   *              map (assign: entityId → canonicalId, only where the
@@ -25,10 +25,10 @@ import java.nio.file.{Files, Path, Paths}
   * canon log (the commit record) — `run` with resume=true skips any
   * stage whose manifest exists, so a killed run resumes idempotently
   * mid-pipeline and downstream stages always read the durable parquet,
-  * never live lineage. The shingle table is such a stage too: the link
-  * stage, pinEpoch and every pinned ingest read it, and at every
-  * committed state it equals Linking.shingleTable of the live
-  * entities. After the base run, every ingest adds its slice to each
+  * never live lineage. The shingle table is a column of the entities
+  * stage: the link stage, pinEpoch and every pinned ingest read it as
+  * Linking.shingleTable of the live entities, so it cannot drift from
+  * them. After the base run, every ingest adds its slice to each
   * growing stage, extract included, as an append snapshot. No stage is
   * partitioned: each clusters its rows inside plain files.
   */
@@ -88,9 +88,9 @@ object Pipeline {
       // next benchmark revision deletes it (compactAppendFrac =
       // Some(0) says the same).
       deferMerges: Boolean = true,
-      // Fold a lineage stage (entities / link_edges / ep_shingles /
-      // ep_keys) into a fresh full snapshot whenever its append-set
-      // count has reached this at the START of a pinned ingest (see
+      // Fold a lineage stage (entities / link_edges / ep_keys) into a
+      // fresh full snapshot whenever its append-set count has reached
+      // this at the START of a pinned ingest (see
       // compactLineage). The append cascade already keeps the count
       // logarithmic in the ingest count; this caps it. Cost O(stage)
       // per fold. None = never.
@@ -135,8 +135,8 @@ object Pipeline {
   /** The stages of a graph, in publish order (nodes and edges publish
     * concurrently).
     */
-  val Stages: Seq[String] = Seq("extract", "entities", "ep_shingles",
-    "link_edges", "assign", "nodes", "edges")
+  val Stages: Seq[String] = Seq("extract", "entities", "link_edges",
+    "assign", "nodes", "edges")
 
   /** The stages of a pinned epoch (see [[pinEpoch]]). */
   private[graft] val EpochStages = Seq("ep_census", "ep_keys")
@@ -261,15 +261,11 @@ object Pipeline {
     // the first publish into a run dir is full; every ingest appends
     val prev = if (resume || !Snapshots.isComplete(runDir, "extract")) None
       else Some(quarantinedOf(Snapshots.readManifest(runDir, "extract")))
-    val obs = Observation()
-    lazy val rows = Extraction.extract(files.repartitionByRange(
+    val q = new Counted(col("pred") === lit(Extraction.QuarantinePred))
+    lazy val rows = q(Extraction.extract(files.repartitionByRange(
         spark.sparkContext.defaultParallelism, col("repo"), col("path")),
-        cfg.extraction).toDF()
-      .drop("subj").observe(obs, count_if(
-        col("pred") === lit(Extraction.QuarantinePred)).as(QuarantinedKey))
-    // a write whose plan ran no task (no input rows) observes nothing
-    def metrics = Map(QuarantinedKey -> (prev.getOrElse(0L) +
-      obs.get.getOrElse(QuarantinedKey, 0L).asInstanceOf[Long]).toString)
+        cfg.extraction).toDF().drop("subj"))
+    def metrics = Map(QuarantinedKey -> (prev.getOrElse(0L) + q.n).toString)
     val out =
       if (prev.isEmpty) Snapshots.stage(spark, runDir, "extract", runId,
         resume, metrics)(rows)
@@ -278,6 +274,14 @@ object Pipeline {
     val m = Snapshots.readManifest(runDir, "extract")
     Snapshots.writeAtomic(runMarker(runDir, m.runId), m.version.toString)
     out
+  }
+
+  /** Counts the `cond` rows of the one frame it wraps as it is written
+    * (an Observation, no count job); `n` is 0 if the write ran no task. */
+  private final class Counted(cond: Column) {
+    private val obs = Observation()
+    def apply(df: DataFrame): DataFrame = df.observe(obs, count_if(cond).as("n"))
+    def n: Long = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
   }
 
   /** The triples of extract rows: quarantine rows dropped, subj
@@ -324,7 +328,6 @@ object Pipeline {
     // derive from the pre-ingest corpus and are stale the moment
     // entities / link_edges are globally recomputed — drop them so a
     // later runIncrementalPinned fails fast until pinEpoch re-freezes
-    // (ep_shingles is a graph stage: downstream republishes it)
     EpochStages
       .foreach(st => Snapshots.deleteDir(Snapshots.stageDir(runDir, st)))
 
@@ -340,10 +343,10 @@ object Pipeline {
   // relink, not the extract, becomes THE cost (the stop-shingle
   // census, shingling, banding, and candidate scoring all rescan the
   // corpus). An EPOCH freezes the census (Linking.Config.pinnedHot)
-  // and stores the banded-key table beside the graph's shingle table,
-  // both appendable snapshots; each ingest then:
+  // and stores the banded-key table beside the graph's entities (their
+  // fuzzy rows carry the shingle sets), both appendable; each ingest:
   //   - extracts ONLY the delta (as before),
-  //   - appends the delta's new entity forms / shingles / band keys,
+  //   - appends the delta's new entity forms (with shingles) / band keys,
   //   - links DELTA-vs-ALL under the pinned census (the stored narrow
   //     tables are broadcast-filtered SCANS — never reshuffled, never
   //     re-shingled) and appends the new edges,
@@ -366,8 +369,8 @@ object Pipeline {
   /** Freeze the linking environment of the CURRENT global state as an
     * epoch: the stop-shingle census (ep_census) and the banded key
     * table (ep_keys), each a versioned snapshot under the run dir, both
-    * computed from the live shingle table (ep_shingles) at the current
-    * cap. Call after Pipeline.run or a global runIncremental.
+    * computed from the shingle table of the live entities at the
+    * current cap. Call after Pipeline.run or a global runIncremental.
     *
     * Re-pinning over a dir whose link_edges lineage already carries
     * delta appends BLENDS censuses (old edges were scored under the
@@ -394,7 +397,7 @@ object Pipeline {
     // upper bound only raises the cap, same contract as linkEdges)
     val nEnts = Snapshots.readManifest(runDir, "entities").rows
     val cap = cfg.link.stopShingleCap(nEnts)
-    val shingled = Snapshots.read(spark, runDir, "ep_shingles")
+    val shingled = liveShingles(spark, runDir)
     val hot = Linking.hotShingles(shingled, cap)
     // ep_census and ep_keys both derive from (shingled, hot) and
     // publish disjoint stages — overlap the two publishes
@@ -421,6 +424,8 @@ object Pipeline {
   private def pinnedHot(spark: SparkSession,
                         runDir: String): Seq[(String, Long)] =
     if (Snapshots.readManifest(runDir, "ep_census").rows == 0L) Nil
+    // driver bound, as Linking.hotShingles: a census row is a shingle
+    // in over `cap` forms, so |hot| ≤ Σ|shingles| / cap at the pin
     else Snapshots.read(spark, runDir, "ep_census")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
 
@@ -460,11 +465,12 @@ object Pipeline {
     // the delta extract's manifest rows). `entsOld` is planned from the
     // live manifest BEFORE the slice publishes: the world before this
     // ingest. Each lineage slice is clustered by the column its readers
-    // filter or join on: pred (entities, ep_shingles), the band key
-    // (ep_keys), src (link_edges).
+    // filter or join on: pred (entities), the band key (ep_keys), src
+    // (link_edges). The slice's fuzzy forms carry their shingle sets.
     val entsOld = Snapshots.read(spark, runDir, "entities")
+    val fuzzy = new Counted(Linking.isFuzzy)
     val newEnts = Snapshots.stageAppend(spark, runDir, "entities", runId,
-      Seq("pred")) {
+      Seq("pred"), Map(FuzzyRowsKey -> fuzzy.n.toString))(fuzzy {
       val deltaForms = Linking.entitiesOf(deltaTriples)
       val existing = entsOld
         .join(SkewJoin.hinted(deltaForms.select("entityId"), deltaExtractRows),
@@ -472,15 +478,12 @@ object Pipeline {
         .select("entityId").distinct()
       deltaForms.join(SkewJoin.hinted(existing, deltaExtractRows),
         Seq("entityId"), "left_anti")
-    }
+    })
     val newEntRows = sliceRows("entities")
 
-    // 3. delta shingles + band keys under the PINNED census
+    // 3. delta band keys under the PINNED census
     val hot = pinnedHot(spark, runDir)
-    val deltaShingled = Snapshots.stageAppend(spark, runDir, "ep_shingles",
-      runId, Seq("pred")) {
-      Linking.shingleTable(newEnts)
-    }
+    val deltaShingled = Linking.shingleTable(newEnts)
 
     // 3b. CENSUS DRIFT — what the frozen epoch is silently costing:
     // of the delta's distinct (pred, shingle) keys, the fraction whose
@@ -497,12 +500,12 @@ object Pipeline {
     // SAME runId through runIncremental — the global relink, which
     // bumps the epoch — then pinEpoch).
     val tDrift0 = System.nanoTime()
-    // an ingest with NO fuzzy delta shingles has drift 0 by definition
+    // an ingest with NO fuzzy delta form has drift 0 by definition
     // (the measured set is empty) — known for free from the slice's
     // manifest, so the measurement jobs are skipped outright instead
     // of aggregating empty frames
     val drift =
-      if (sliceRows("ep_shingles") == 0L) 0.0
+      if (fuzzyRows(runDir) == 0L) 0.0
       else censusDrift(spark, runDir, cfg, hot, deltaShingled,
         deltaExtractRows)
     val driftSec = (System.nanoTime() - tDrift0) / 1e9
@@ -526,7 +529,7 @@ object Pipeline {
     val deltaLinks = Snapshots.stageAppend(spark, runDir, "link_edges",
       runId, Seq("src")) {
       val keysAll = Snapshots.read(spark, runDir, "ep_keys")
-      val shingledAll = Snapshots.read(spark, runDir, "ep_shingles")
+      val shingledAll = liveShingles(spark, runDir)
       Linking.deltaExactEdges(entsOld, newEnts, deltaExtractRows)
         .unionByName(Linking.deltaFuzzyEdges(deltaKeys, keysAll,
           shingledAll, cfg.link, deltaKeyRows))
@@ -823,7 +826,7 @@ object Pipeline {
     if (rollbackUncommitted(runDir).isEmpty) return Nil
     // extract is deliberately NOT here: folding it would rewrite the
     // corpus-wide table, and no step parses its old versions any more
-    val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
+    val stages = Seq("entities", "link_edges", "ep_keys")
     stages.filter(Snapshots.isComplete(runDir, _)).flatMap { st =>
       val (_, sets) = Snapshots.appendStats(Snapshots.readManifest(runDir, st))
       if (sets < math.max(1, maxDeltas)) None
@@ -1033,8 +1036,8 @@ object Pipeline {
       .select($"pred", explode($"shingles").as("sh")).distinct()
     val freshCap = cfg.link.stopShingleCap(
       Snapshots.readManifest(runDir, "entities").rows)
-    val stored = Snapshots.read(spark, runDir, "ep_shingles")
-    val dfs = stored.select($"pred", explode($"shingles").as("sh"))
+    val dfs = liveShingles(spark, runDir)
+      .select($"pred", explode($"shingles").as("sh"))
       .join(SkewJoin.hinted(deltaSh, deltaExtractRows), Seq("pred", "sh"))
       .groupBy($"pred", $"sh")
       .agg(count(lit(1)).cast("double").as("df"))
@@ -1048,6 +1051,14 @@ object Pipeline {
     else row.getLong(1).toDouble / row.getLong(0).toDouble
   }
 
+  // the fuzzy rows an entities version wrote itself ([[Counted]])
+  private val FuzzyRowsKey = "fuzzyRows"
+  private def fuzzyRows(runDir: String): Long =
+    Snapshots.readManifest(runDir, "entities").metrics(FuzzyRowsKey).toLong
+
+  private def liveShingles(spark: SparkSession, runDir: String): DataFrame =
+    Linking.shingleTable(Snapshots.read(spark, runDir, "entities"))
+
   /** Stages 2–4 (entities → link edges → canonicalize → materialize):
     * everything downstream of the content scan, over narrow tables
     * only. Shared verbatim by [[run]] and [[runIncremental]].
@@ -1057,24 +1068,17 @@ object Pipeline {
                          triples: DataFrame, resume: Boolean): Int = {
     import spark.implicits._
 
-    // Stage 2a — entity surface forms
-    val ents = Snapshots.stage(spark, runDir, "entities", runId, resume) {
-      Linking.entities(triples.as[Triple])
-    }
+    // Stage 2a — entity surface forms, each fuzzy form with its shingle
+    // set: the table every fuzzy consumer reads (Linking.shingleTable)
+    val fuzzy = new Counted(Linking.isFuzzy)
+    val ents = Snapshots.stage(spark, runDir, "entities", runId, resume,
+      Map(FuzzyRowsKey -> fuzzy.n.toString))(fuzzy(
+      Linking.entities(triples.as[Triple])))
 
-    // Stage 2b — the shingle table of the fuzzy forms: read by the
-    // link stage's census, blocking keys and both scoring sides, then
-    // by pinEpoch and every pinned ingest. Published even when empty,
-    // so its manifest rows decide whether there is fuzzy work at all.
-    val shingled = Snapshots.stage(spark, runDir, "ep_shingles", runId,
-      resume) {
-      Linking.shingleTable(ents)
-    }
-
-    // Stage 2c — link edges (exact-norm + LSH candidates + scoring)
+    // Stage 2b — link edges (exact-norm + LSH candidates + scoring)
     val links = Snapshots.stage(spark, runDir, "link_edges", runId, resume) {
-      val fuzzy = Snapshots.readManifest(runDir, "ep_shingles").rows > 0L
-      Linking.linkEdges(ents, if (fuzzy) Some(shingled) else None, cfg.link,
+      Linking.linkEdges(ents, Option.when(fuzzyRows(runDir) > 0L)(
+        Linking.shingleTable(ents)), cfg.link,
         sizeHint = Some(Snapshots.readManifest(runDir, "entities").rows))
     }
 

@@ -838,7 +838,7 @@ object SparkEntry {
       // the shingle table is read 4× per link run (census, blocking,
       // both scoring sides) — materialize it once instead of
       // re-deriving distinctWords+shingles per consumer (the Pipeline
-      // publishes it as its ep_shingles stage)
+      // reads it off its stored entities)
       val links = graft.link.Linking.linkEdges(ents,
         Some(materializedShingles(s, ents, "kgfuzzy")), sizeHint = None)
       val (assign, _) = graft.Pipeline.assignCanonical(ents, links)

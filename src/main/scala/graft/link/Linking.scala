@@ -1,7 +1,7 @@
 package graft.link
 
 import graft.Triple
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Stage 2 — blocking-key entity linking.
@@ -37,13 +37,13 @@ object Linking {
     */
   val FuzzyPreds: Seq[String] =
     Seq("mentions_domain", "references", "tagged", "imports")
+  private[graft] def isFuzzy: Column = col("pred").isin(FuzzyPreds: _*)
 
   // The scoring and banding parameters are constants, not Config
-  // fields: a graph stores shingle sets (ep_shingles) and a pinned
-  // epoch band keys (Pipeline.pinEpoch) computed under them, and a
-  // later ingest's delta keys only join those if it computes them
-  // under the same values. The
-  // DuckDB twins of the KG queries hard-code the same 3-grams and 0.5.
+  // fields: a graph stores shingle sets (entities' `shingles`) and a
+  // pinned epoch band keys (Pipeline.pinEpoch) computed under them, and a
+  // later ingest's delta keys only join those if it computes them under
+  // the same values. The DuckDB twins hard-code the same 3-grams and 0.5.
 
   /** Min Jaccard similarity on [[ShingleSize]]-gram shingles. */
   val Threshold = 0.5
@@ -147,7 +147,10 @@ object Linking {
             obj: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     xxhash64(pred, lit("\u0000"), obj)
 
-  /** Distinct entity surface forms: (pred, obj, norm, entityId). */
+  /** Distinct entity surface forms: (pred, obj, norm, entityId,
+    * shingles), `shingles` the [[withShingles]] set of a [[FuzzyPreds]]
+    * form, null on every other (pruned unevaluated where unselected).
+    */
   def entities(triples: Dataset[Triple]): DataFrame =
     entitiesOf(triples.toDF())
 
@@ -156,19 +159,18 @@ object Linking {
     * pipeline (e.g. the oracle-checked kg_nodes_exact query).
     */
   def entitiesOf(predObj: DataFrame): DataFrame =
-    predObj.select(col("pred"), col("obj")).distinct()
-      .withColumn("norm", normCol(col("obj")))
-      .withColumn("entityId", idCol(col("pred"), col("obj")))
+    withShingles(predObj.select(col("pred"), col("obj")).distinct()
+        .withColumn("norm", normCol(col("obj")))
+        .withColumn("entityId", idCol(col("pred"), col("obj"))), ShingleSize)
+      .withColumn("shingles", when(isFuzzy, col("shingles")))
 
   /** Same-entity edges (src, dst) over entityIds.
     *
     * `shingled`: the [[shingleTable]] of `ents`, or None when `ents`
-    * has no fuzzy form (Pipeline knows from the ep_shingles manifest
-    * rows). The stop-shingle census, the blocking keys and both sides
-    * of the scoring join all read this one table, so a caller that
-    * passes a materialized table (Pipeline's ep_shingles stage) pays
-    * the shingling once; an unmaterialized one is recomputed per
-    * consumer.
+    * has no fuzzy form. The stop-shingle census, the blocking keys and
+    * both sides of the scoring join all read this one table, so a
+    * materialized one (Pipeline's stored entities) pays the shingling
+    * once; an unmaterialized one is recomputed per consumer.
     */
   def linkEdges(ents: DataFrame, shingled: Option[DataFrame],
                 cfg: Config = Config(),
@@ -334,7 +336,7 @@ object Linking {
     * scoring join's intersection count becomes a zero-allocation
     * linear merge ([[graft.functions.SortedIntersectCount]]) instead
     * of a per-pair hash-set build — sortedness is part of the stored
-    * shingle-table contract (the ep_shingles snapshot carries it).
+    * shingle-table contract (the entities' `shingles` column carries it).
     */
   private[graft] def withShingles(ents: DataFrame, k: Int): DataFrame =
     ents.withColumn("padded",
@@ -355,12 +357,10 @@ object Linking {
     * is what keeps the exact path a strict candidate superset of the
     * banded path.
     *
-    * The hot set is collected to the driver and inlined as literal
-    * arrays: it is MATHEMATICALLY tiny — Σ df over hot shingles ≤
-    * total shingle rows, so |hot| ≤ rows/cap (≈185 at the 200k-file
-    * bench) — and a literal `array_except` keeps the filter a pure
-    * map, where the previous exploded anti-join shuffled every
-    * (form, shingle) row.
+    * The hot set ([[hotShingles]] names its driver bound, ≈185 at the
+    * 200k-file bench) is inlined as literal arrays: `array_except`
+    * keeps the filter a pure map, where the previous exploded
+    * anti-join shuffled every (form, shingle) row.
     */
   private def withBlockShingles(shingled: DataFrame, cfg: Config,
                                 n: Long): DataFrame =
@@ -370,9 +370,9 @@ object Linking {
 
   /** The stop-shingle census: every (pred, shingleHash) whose document
     * frequency exceeds `cap`. Collected to the driver — MATHEMATICALLY
-    * tiny (Σ df over hot shingles ≤ total shingle rows ⇒ |hot| ≤
-    * rows/cap). Public to the pipeline so an EPOCH can freeze it
-    * ([[Config.pinnedHot]]).
+    * tiny (Σ df over hot shingles ≤ Σ|shingles| ⇒ |hot| ≤
+    * Σ|shingles| / cap). Public to the pipeline so an EPOCH can freeze
+    * it ([[Config.pinnedHot]]).
     */
   private[graft] def hotShingles(shingled: DataFrame,
                                  cap: Long): Seq[(String, Long)] =
@@ -494,22 +494,21 @@ object Linking {
 
   // ------------------------------------------------------------------
   // EPOCH-INCREMENTAL entry points (Pipeline.runIncrementalPinned).
-  // The graph stores the shingle table (ep_shingles) as an appendable
-  // stage; an epoch freezes the stop-shingle census and stores the
-  // banded-key table beside it. An ingest then links ONLY
-  // delta-vs-all — the per-ingest work that touches the old corpus is
-  // broadcast-filtered SCANS of those narrow tables, never a
+  // The graph's entity rows carry their shingle sets, and the entity
+  // table is an appendable stage; an epoch freezes the stop-shingle
+  // census and stores the banded-key table beside it. An ingest then
+  // links ONLY delta-vs-all — the per-ingest work that touches the old
+  // corpus is broadcast-filtered SCANS of those tables, never a
   // reshuffle or a re-shingling of the corpus.
   // ------------------------------------------------------------------
 
   /** The (pred, entityId, shingles) table of the [[FuzzyPreds]] forms
-    * among `ents`: the one input of every fuzzy consumer
-    * ([[linkEdges]], the census, the banded keys), which Pipeline
-    * publishes as the ep_shingles stage and appends to.
+    * among `ents` (an [[entitiesOf]] frame, or the stored entities): a
+    * projection that computes nothing, and the one input of every
+    * fuzzy consumer ([[linkEdges]], the census, the banded keys).
     */
   private[graft] def shingleTable(ents: DataFrame): DataFrame =
-    withShingles(ents.filter(col("pred").isin(FuzzyPreds: _*)), ShingleSize)
-      .select(col("pred"), col("entityId"), col("shingles"))
+    ents.filter(isFuzzy).select(col("pred"), col("entityId"), col("shingles"))
 
   /** Banded key table under an EXPLICIT (pinned) stop census — the
     * epoch artifact the incremental ingest appends a delta slice to.

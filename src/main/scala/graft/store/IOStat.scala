@@ -7,11 +7,11 @@ import java.util.concurrent.atomic.LongAdder
   * stage walls (listings, reader construction, footer reads, manifest
   * IO): `Snapshots.stage`'s wallMs covers compute+write of the stage
   * body, but an ingest also pays driver-side filesystem work every
-  * time a stored table is opened — at B≈thousands of partition dirs
-  * that overhead grows with the CORPUS even when the data read is
-  * delta-sized, which is exactly the regime the O(delta) tail exists
-  * for. The benchmark's trace reads this breakdown per operation so
-  * the growing off-stage term is attributable instead of "unaccounted".
+  * time a stored table is opened — per file and per append set, so it
+  * grows with a stage's file count even when the data read is
+  * delta-sized, the regime the O(delta) tail exists for. The
+  * benchmark's trace reads this breakdown per operation so the
+  * off-stage term is attributable instead of "unaccounted".
   *
   * Counters are process-global and thread-safe; `snapshot()` returns
   * (calls, seconds) per name.

@@ -81,9 +81,11 @@ object Snapshots {
     * ingested dir's live extract is only its last slice). Format 6
     * drops partition directories from every stage: extract loses its
     * `q` column, and assign holds only the non-identity canonical map
-    * (a format-5 assign is every entity, split by `ident`).
+    * (a format-5 assign is every entity, split by `ident`). Format 7
+    * stores each fuzzy form's shingle set in a `shingles` column of its
+    * entities row and deletes the ep_shingles stage.
     */
-  val FormatVersion = 6
+  val FormatVersion = 7
 
   private val ManifestName = "_MANIFEST.json"
 
@@ -517,7 +519,10 @@ object Snapshots {
   }
 
   /** Footer-derived (row count, byte size) per *.parquet under `dir`,
-    * keyed by dir-relative path — everything scan planning needs.
+    * keyed by dir-relative path — everything scan planning needs. A
+    * zero-row file (a write of no rows may leave one) is deleted with
+    * its checksum sidecar, so no manifest lists a file every read opens
+    * for nothing; an empty publish reads as [[assemble]] says.
     *
     * Footers are opened on a bounded driver-side pool: the ~10 ms
     * per-open FS overhead is pure latency — serial reads cost seconds
@@ -542,17 +547,18 @@ object Snapshots {
         math.max(1, math.min(48, files.size)))
       try {
         val futures = files.map { p =>
-          pool.submit(new java.util.concurrent.Callable[(String, (Long, Long))] {
-            def call(): (String, (Long, Long)) = {
+          pool.submit(new java.util.concurrent.Callable[Option[(String, (Long, Long))]] {
+            def call(): Option[(String, (Long, Long))] = {
               val reader = ParquetFileReader.open(
                 HadoopInputFile.fromPath(new HPath(p.toString), conf))
-              try base.relativize(p).toString ->
-                (reader.getRecordCount, Files.size(p))
-              finally reader.close()
+              val rows = try reader.getRecordCount finally reader.close()
+              if (rows == 0L) Seq(p, p.resolveSibling(s".${p.getFileName}.crc"))
+                .foreach(Files.deleteIfExists)
+              Option.when(rows > 0L)(base.relativize(p).toString -> (rows, Files.size(p)))
             }
           })
         }
-        futures.map(_.get()).toMap
+        futures.flatMap(_.get()).toMap
       } finally pool.shutdown()
     }
 

@@ -56,8 +56,8 @@ class LinkingCcSpec extends SparkSpec {
   }
 
   test("a parquet round-tripped shingle table links like the inline one") {
-    // Pipeline links over its published ep_shingles snapshot; ad-hoc
-    // callers pass the table inline. Same edges either way — a parquet
+    // Pipeline links over the shingles column of its stored entities;
+    // ad-hoc callers pass the table inline. Same edges either way — a parquet
     // round-trip must not perturb shingles (sorted array<long> element
     // hashes) or ids.
     val dir = java.nio.file.Files.createTempDirectory("graft-shingles")

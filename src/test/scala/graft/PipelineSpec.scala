@@ -470,24 +470,38 @@ class PipelineSpec extends SparkSpec {
       assert(Pipeline.readEdges(spark, inc).schema == plainEdgesSchema, when)
     }
     assertPlainLayout("after the base run")
+    // no manifest lists a zero-row file: the base run's clean canon log
+    // is empty and lists none
+    assert(Snapshots.readManifestVersion(inc, Pipeline.CanonLogStage, 1)
+      .fileRows.isEmpty)
     // an empty pinned ingest appends an empty slice to every delta
-    // stage (its extract writes no file) and changes no count
+    // stage (its extract writes no file) and changes no count; it moves
+    // no delta id, so its assign append lists no file and adds no
+    // append set
     val rEmpty = Pipeline.runIncrementalPinned(spark,
       spark.emptyDataset[SourceFile], inc, "ep-empty", cfg(None))
     assert(Snapshots.deltaRows(
       Snapshots.readManifestVersion(inc, "extract", 2)) == 0L)
     assert(rEmpty.nodes == rBase.nodes && rEmpty.edges == rBase.edges)
+    val emptyAssign = Snapshots.readManifest(inc, "assign")
+    assert(emptyAssign.runId == "ep-empty" && emptyAssign.fileRows.isEmpty &&
+      emptyAssign.metrics.get("newFiles").contains("0"), emptyAssign.metrics)
+    assert(Snapshots.appendStats(emptyAssign) == Snapshots.appendStats(
+      Snapshots.readManifestVersion(inc, "assign", 1)))
     val rPinned = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
     // the default-Config ingest took the O(delta) merge-on-read tail:
     // defer-marked appends and a dirty canon log as its commit record.
-    // AQE sizes each small rebalanced append as one file
+    // AQE sizes each small rebalanced append as one file, and an append
+    // of no rows (an assign slice that moved no delta id) as none
     Seq("assign", "nodes", "edges").foreach { st =>
       val m = Snapshots.readManifest(inc, st)
       assert(m.runId == "ep-delta" && m.metrics.get("defer").contains("true"),
         s"$st not deferred")
-      assert(m.metrics.get("newFiles").contains("1"), s"$st: ${m.metrics}")
+      val files = if (Snapshots.deltaRows(m) > 0L) "1" else "0"
+      assert(m.metrics.get("newFiles").contains(files), s"$st: ${m.metrics}")
     }
+    assert(Snapshots.deltaRows(Snapshots.readManifest(inc, "nodes")) > 0L)
     assert(Pipeline.canonLogDirty(inc))
     assertPlainLayout("after the deferred ingest (resolving read)")
 
@@ -504,13 +518,13 @@ class PipelineSpec extends SparkSpec {
       rPinned.entities == rFull.entities)
 
     // the ingests appended DELTA slices (no global relink): entities,
-    // shingles, keys, and link_edges all carry the empty ingest's and
-    // the delta's versions; the extract stayed delta-only
-    Seq("extract", "entities", "ep_shingles", "ep_keys", "link_edges")
+    // keys, and link_edges all carry the empty ingest's and the delta's
+    // versions; the extract stayed delta-only
+    Seq("extract", "entities", "ep_keys", "link_edges")
       .foreach { st =>
         assert(Snapshots.versions(inc, st) == Seq(1, 2, 3), st)
       }
-    Seq("entities", "ep_shingles", "ep_keys", "link_edges").foreach { st =>
+    Seq("entities", "ep_keys", "link_edges").foreach { st =>
       val m = Snapshots.readManifestVersion(inc, st, 3)
       assert(m.runId == "ep-delta" && m.baseFiles.exists(_.nonEmpty), st)
     }
@@ -523,7 +537,7 @@ class PipelineSpec extends SparkSpec {
       .foreach(Snapshots.rollback(inc, _, "ep-delta"))
     val rRetry = Pipeline.runIncrementalPinned(spark, b.toDS(), inc,
       "ep-delta", cfg(None))
-    Seq("entities", "ep_shingles", "ep_keys", "link_edges").foreach { st =>
+    Seq("entities", "ep_keys", "link_edges").foreach { st =>
       assert(Snapshots.versions(inc, st) == Seq(1, 2, 3), s"$st dup delta")
     }
     assert(rRetry.copy(runId = "x") == rPinned.copy(runId = "x"))
@@ -633,12 +647,15 @@ class PipelineSpec extends SparkSpec {
     val fullAb = tmpDir("icc-fullab")
     Pipeline.run(spark, (a ++ b).toDS(), fullAb, "icc-fab", cfg)
     // healed O(delta): every icc-d1 tail version is a defer-marked
-    // append (no full tail version), and the log is dirty
+    // append (no full tail version), and the log is dirty. The base
+    // corpus links nothing, so its assign map is empty and lists no
+    // file: only nodes and edges carry base files
     Seq("assign", "nodes", "edges").foreach { st =>
       val ms = Snapshots.versions(inc2, st)
         .map(Snapshots.readManifestVersion(inc2, st, _))
         .filter(_.runId == "icc-d1")
-      assert(ms.nonEmpty && ms.forall(m => m.baseFiles.exists(_.nonEmpty) &&
+      assert(ms.nonEmpty && ms.forall(m =>
+        m.baseFiles.exists(_.nonEmpty || st == "assign") &&
         m.metrics.get("defer").contains("true")), st)
       assert(Snapshots.readManifest(inc2, st).runId == "icc-d1", st)
     }
@@ -767,8 +784,12 @@ class PipelineSpec extends SparkSpec {
     // start folds the committed append sets and expires what it
     // superseded, so at most [folded full, the latest ingest's append]
     // remain, with one append set — while the unmaintained chain
-    // accumulated base + 3 append versions
-    Seq("entities", "link_edges", "ep_keys", "ep_shingles").foreach { st =>
+    // accumulated base + 3 append versions. Asks forms are not fuzzy,
+    // so every ep_keys slice is empty: it lists no file and adds no
+    // append set, on either chain, and leaves nothing to fold
+    Seq(inc, incN).foreach(d => assert(
+      Snapshots.appendStats(Snapshots.readManifest(d, "ep_keys")) == (0L, 0), d))
+    Seq("entities", "link_edges").foreach { st =>
       val vs = Snapshots.versions(inc, st)
       assert(vs.length <= 2, s"$st lineage not consolidated: $vs")
       assert(Snapshots.versions(incN, st).length == 4, st)
@@ -803,8 +824,7 @@ class PipelineSpec extends SparkSpec {
     Seq(Pipeline.CanonLogStage, "edges", "nodes", "assign")
       .foreach(Snapshots.rollback(inc, _, "lc-crashed"))
     val folded = Pipeline.compactLineage(spark, inc, "lc-d3", 1)
-    assert(folded.toSet == Set("entities", "link_edges", "ep_keys",
-      "ep_shingles"), folded)
+    assert(folded.toSet == Set("entities", "link_edges"), folded)
     ("extract" +: folded).foreach { st =>
       assert(!Snapshots.versions(inc, st).exists(v => Snapshots
         .readManifestVersion(inc, st, v).runId == "lc-crashed"),
@@ -835,7 +855,7 @@ class PipelineSpec extends SparkSpec {
     // ingest's commit record) did not
     Snapshots.rollback(dir, Pipeline.CanonLogStage, "cr-x")
     assert(!Pipeline.committed(dir, "cr-x"))
-    val stages = Seq("entities", "link_edges", "ep_shingles", "ep_keys")
+    val stages = Seq("entities", "link_edges", "ep_keys")
     def deltasOfX(st: String): Seq[Int] = Snapshots.versions(dir, st)
       .filter(v => Snapshots.readManifestVersion(dir, st, v).runId == "cr-x")
     val before = stages.map(st => st -> Snapshots.versions(dir, st)).toMap
@@ -897,8 +917,10 @@ class PipelineSpec extends SparkSpec {
         assert(m.metrics.get("defer").contains("true"), s"$st not deferred")
         assert(baseFiles(st).subsetOf(m.baseFiles.get.keySet), st)
         assert(m.fileRows.keys.forall(_.startsWith("append/")), st)
+        // an append version has baseFiles, a full one none (the base
+        // corpus links nothing, so assign's base lists no file to carry)
         assert(Snapshots.versions(inc, st).tail.forall(v => Snapshots
-          .readManifestVersion(inc, st, v).baseFiles.exists(_.nonEmpty)),
+          .readManifestVersion(inc, st, v).baseFiles.isDefined),
           s"$st: a full tail version ($tag)")
       }
       assert(Pipeline.canonLogDirty(inc))
@@ -1078,11 +1100,13 @@ class PipelineSpec extends SparkSpec {
     def shingleKeys(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
       df.select("pred", "shingles").as[(String, Seq[Long])].collect()
         .toSeq.flatMap { case (p, shs) => shs.map(p -> _) }
-    assert(Snapshots.versions(dir, "ep_shingles").count(v =>
-      Snapshots.readManifestVersion(dir, "ep_shingles", v).runId == "dr-d2") == 1)
-    val deltaKeys = shingleKeys(sliceOf(dir, "ep_shingles", "dr-d2")).distinct
+    assert(Snapshots.versions(dir, "entities").count(v =>
+      Snapshots.readManifestVersion(dir, "entities", v).runId == "dr-d2") == 1)
+    val deltaKeys = shingleKeys(graft.link.Linking.shingleTable(
+      sliceOf(dir, "entities", "dr-d2"))).distinct
     assert(deltaKeys.nonEmpty)
-    val dfOf = shingleKeys(Snapshots.read(spark, dir, "ep_shingles"))
+    val dfOf = shingleKeys(graft.link.Linking.shingleTable(
+      Snapshots.read(spark, dir, "entities")))
       .groupBy(identity).map { case (k, occ) => k -> occ.length.toLong }
     val nEnts = Snapshots.readManifest(dir, "entities").rows
     val freshCap = cfgT(None).link.stopShingleCap(nEnts)
@@ -1175,8 +1199,7 @@ class PipelineSpec extends SparkSpec {
     Pipeline.pinEpoch(spark, dir, "rr-pin")
     Pipeline.runIncrementalPinned(spark, r.toDS(), dir, "rr-r")
     val rS = Pipeline.runIncrementalPinned(spark, s.toDS(), dir, "rr-s")
-    val stages = Pipeline.Stages ++
-      Seq("ep_shingles", "ep_keys", Pipeline.CanonLogStage)
+    val stages = Pipeline.Stages ++ Seq("ep_keys", Pipeline.CanonLogStage)
     val before = stages.map(st => st -> Snapshots.versions(dir, st)).toMap
     val rAgain = Pipeline.runIncrementalPinned(spark, r.toDS(), dir, "rr-r")
     val full = tmpDir("rerun-full")
@@ -1281,7 +1304,7 @@ class PipelineSpec extends SparkSpec {
     Pipeline.runIncrementalPinned(spark, a.toDS(), dir, "ac-a")
     // crash: A's extract and entities slices published, nothing after
     Seq(Pipeline.CanonLogStage, "edges", "nodes", "assign", "link_edges",
-      "ep_keys", "ep_shingles").foreach(Snapshots.rollback(dir, _, "ac-a"))
+      "ep_keys").foreach(Snapshots.rollback(dir, _, "ac-a"))
     val rB = Pipeline.runIncrementalPinned(spark, b.toDS(), dir, "ac-b")
     val fullB = tmpDir("aftercrash-fullb")
     val rFullB = Pipeline.run(spark, (base ++ b).toDS(), fullB, "ac-fb")
@@ -1299,21 +1322,29 @@ class PipelineSpec extends SparkSpec {
   test("a format-1 run dir is refused by every writer with the rebuild message") {
     val corpus = (0 until 12).map(i => asks(s"f$i.txt", s"fword$i"))
     // a format-1 base run has no canon log; a format-1 ingested dir
-    // has one, without the extractVersion stamp; a format-3 base run
-    // has no ep_shingles stage (its link stage shingled in scratch); a
-    // format-4 dir after a pinned ingest has two full extract versions
-    // (the second only its slice) and no runId markers; a format-5 base
-    // run's extract and assign were partitioned by q and ident
+    // has one, without the extractVersion stamp; a format-3 base run's
+    // entities have no shingles column (its link stage shingled in
+    // scratch); a format-4 dir after a pinned ingest has two full
+    // extract versions (the second only its slice) and no runId
+    // markers; a format-5 base run's extract and assign were
+    // partitioned by q and ident; a format-6 base run kept its shingle
+    // table as an ep_shingles stage beside entities without the column
     Seq(("base", 1), ("ingested", 1), ("format3", 3), ("pinned", 4),
-      ("format5", 5)).foreach {
+      ("format5", 5), ("format6", 6)).foreach {
       case (variant, format) =>
       val dir = tmpDir(s"format$format-$variant")
       Pipeline.run(spark, corpus.toDS(), dir, "f1-base")
       if (format == 1 || format == 4) Pipeline.pinEpoch(spark, dir, "f1-pin")
       if (variant == "base")
         deleteRec(Path.of(Snapshots.stageDir(dir, Pipeline.CanonLogStage)))
-      if (format == 3)
-        deleteRec(Path.of(Snapshots.stageDir(dir, "ep_shingles")))
+      if (format == 6)
+        Snapshots.stage(spark, dir, "ep_shingles", "f1-base", resume = false) {
+          graft.link.Linking.shingleTable(Snapshots.read(spark, dir, "entities"))
+        }
+      if (format == 3 || format == 6)
+        Snapshots.stage(spark, dir, "entities", "f1-base", resume = false) {
+          Snapshots.read(spark, dir, "entities").drop("shingles")
+        }
       val extractDir = Path.of(Snapshots.stageDir(dir, "extract"))
       if (format == 4) {
         Pipeline.runIncrementalPinned(spark, Seq(asks("h.txt", "hword")).toDS(),
@@ -1383,10 +1414,9 @@ class PipelineSpec extends SparkSpec {
         pinnedHot = Some(censusOf(dir)))))
     assertSameGraph(dir, full, "uncrashed")
 
-    // the ingest's publishes in order: five sequential lineage slices,
+    // the ingest's publishes in order: four sequential lineage slices,
     // three concurrent tail appends, then the canon log (the commit)
-    val lineage = Seq("extract", "entities", "ep_shingles", "ep_keys",
-      "link_edges")
+    val lineage = Seq("extract", "entities", "ep_keys", "link_edges")
     val tail = Seq("assign", "nodes", "edges")
     val order = lineage ++ tail :+ Pipeline.CanonLogStage
     val points: Seq[(String, Set[String], Boolean)] =
@@ -1505,7 +1535,7 @@ class PipelineSpec extends SparkSpec {
     }
     val (wide, rWide) = chain(None)
     val (folded, rFolded) = chain(Some(1))
-    Seq("entities", "link_edges", "ep_shingles", "ep_keys").foreach { st =>
+    Seq("entities", "link_edges", "ep_keys").foreach { st =>
       val sets = Snapshots.appendStats(Snapshots.readManifest(wide, st))._2
       assert(sets >= 2 && sets <= 3, s"$st: $sets append sets after six ingests")
       assert(Snapshots.appendStats(Snapshots.readManifest(folded, st))._2 <= 1,
@@ -1516,22 +1546,86 @@ class PipelineSpec extends SparkSpec {
     Seq(wide, folded).foreach(d => deleteRec(Path.of(d)))
   }
 
-  test("ep_shingles equals the shingle table of the live entities") {
+  test("compactLineage crash-point sweep: a crash between the folds and the expiry heals, and the next fold expires what it left") {
+    val lineage = Seq("entities", "link_edges", "ep_keys")
+    val a = hosts.take(16).zipWithIndex.map { case (h, i) => host(s"a$i.md", h) }
+    // each delta: an exact twin, a fuzzy variant and a brand-new host,
+    // so every lineage stage gains a non-empty slice
+    val deltas = (0 until 2).map { d =>
+      Seq(host(s"d$d-u.md", hosts(d).toUpperCase),
+        host(s"d$d-w.md", s"www.${hosts(4 + d)}"),
+        host(s"d$d-n.md", hosts(16 + d)))
+    }
+    val cfg = bandedCfg.copy(maxLineageDeltas = Some(1))
+    val dir = tmpDir("linsweep")
+    Pipeline.run(spark, a.toDS(), dir, "ls-base", bandedCfg)
+    Pipeline.pinEpoch(spark, dir, "ls-pin", bandedCfg)
+    Pipeline.runIncrementalPinned(spark, deltas(0).toDS(), dir, "ls-d0",
+      bandedCfg)
+    lineage.foreach(st => assert(
+      Snapshots.appendStats(Snapshots.readManifest(dir, st))._2 == 1, st))
+    // the uncrashed chain: ls-d1 folds all three stages, then ingests
+    val ref = tmpDir("linsweep-ref")
+    copyRec(dir, ref)
+    val rRef = Pipeline.runIncrementalPinned(spark, deltas(1).toDS(), ref,
+      "ls-d1", cfg)
+    // a crash between a fold and its expiry leaves folded versions
+    // whose superseded versions stay: every subset of the three folds,
+    // none expired (a superset of the states a real crash reaches)
+    (0 to 3).flatMap(lineage.combinations).foreach { folded =>
+      val at = s"folded: ${folded.mkString(", ")}"
+      val d = tmpDir("linsweep-crash")
+      copyRec(dir, d)
+      folded.foreach { st =>
+        val (_, sets) = Snapshots.appendStats(Snapshots.readManifest(d, st))
+        Snapshots.compact(spark, d, st, "ls-d1-maint",
+          Map("appendSetsFolded" -> sets.toString))()
+      }
+      val r = Pipeline.runIncrementalPinned(spark, deltas(1).toDS(), d,
+        "ls-d1", cfg)
+      assert(r == rRef, at)
+      assertSameGraph(d, ref, at)
+      lineage.foreach(st => assert(sameRows(Snapshots.read(spark, d, st),
+        Snapshots.read(spark, ref, st)), s"$st differs, $at"))
+      // the next fold folds every stage and expires every version below
+      // it, the ones the crashed fold left included
+      assert(Pipeline.compactLineage(spark, d, "ls-next", 1).toSet ==
+        lineage.toSet, at)
+      lineage.foreach { st =>
+        assert(Snapshots.versions(d, st) ==
+          Seq(Snapshots.readManifest(d, st).version), s"$st, $at")
+      }
+      assertSameGraph(d, ref, s"after the next fold, $at")
+      deleteRec(Path.of(d))
+    }
+    Seq(dir, ref).foreach(d => deleteRec(Path.of(d)))
+  }
+
+  test("the entities' shingles column equals the shingle sets recomputed from norm") {
     import graft.link.Linking
     def same(x: org.apache.spark.sql.DataFrame,
              y: org.apache.spark.sql.DataFrame): Boolean =
       x.exceptAll(y).unionByName(y.exceptAll(x)).isEmpty
-    def assertShingles(dir: String, clue: String): Unit = {
-      val live = Snapshots.read(spark, dir, "ep_shingles")
-      assert(!live.isEmpty, clue)
-      assert(same(live, Linking.shingleTable(Snapshots.read(spark, dir,
-        "entities").filter($"pred".isin(Linking.FuzzyPreds: _*)))), clue)
+    val fuzzy = $"pred".isin(Linking.FuzzyPreds: _*)
+    // the shingle table recomputed from the norms of the fuzzy rows
+    def recomputed(ents: org.apache.spark.sql.DataFrame) =
+      Linking.withShingles(ents.filter(fuzzy).drop("shingles"),
+        Linking.ShingleSize).select("pred", "entityId", "shingles")
+    // a fuzzy row's shingles are its recomputed set, every other row's null
+    def assertShingles(ents: org.apache.spark.sql.DataFrame,
+                       clue: String): Unit = {
+      assert(!ents.filter(fuzzy).isEmpty && !ents.filter(!fuzzy).isEmpty, clue)
+      assert(ents.filter(!fuzzy && $"shingles".isNotNull).isEmpty,
+        s"shingles on a non-fuzzy row: $clue")
+      assert(same(ents.filter(fuzzy).select("pred", "entityId", "shingles"),
+        recomputed(ents)), clue)
     }
-    // the epoch as the previous format's pinEpoch computed it: shingled
-    // again from the live entities, census at the entities-rows cap
+    def assertLive(dir: String, clue: String): Unit =
+      assertShingles(Snapshots.read(spark, dir, "entities"), clue)
+    // the epoch as the format-6 pinEpoch computed it: shingled again
+    // from the live entities, census at the entities-rows cap
     def assertEpoch(dir: String, cfg: Pipeline.Config, clue: String): Unit = {
-      val shingled = Linking.shingleTable(Snapshots.read(spark, dir,
-        "entities").filter($"pred".isin(Linking.FuzzyPreds: _*)))
+      val shingled = recomputed(Snapshots.read(spark, dir, "entities"))
       val hot = Linking.hotShingles(shingled, cfg.link.stopShingleCap(
         Snapshots.readManifest(dir, "entities").rows))
       assert(same(Snapshots.read(spark, dir, "ep_census"),
@@ -1541,9 +1635,10 @@ class PipelineSpec extends SparkSpec {
     }
     // hosts are fuzzy forms: base hosts, a global ingest of more hosts
     // and www. variants, then pinned ingests of upper-case twins,
-    // variants and brand-new hosts
+    // variants and brand-new hosts; asks forms are not fuzzy
     val cfg = bandedCfg.copy(maxLineageDeltas = Some(1))
-    val a = hosts.take(12).zipWithIndex.map { case (h, i) => host(s"a$i.md", h) }
+    val a = hosts.take(12).zipWithIndex.map { case (h, i) =>
+      host(s"a$i.md", h) } :+ asks("aq.txt", "stword")
     val b = hosts.slice(12, 16).zipWithIndex.map { case (h, i) =>
       host(s"b$i.md", h) } :+ host("bw.md", s"www.${hosts(0)}")
     val deltas = (0 until 3).map { d =>
@@ -1553,18 +1648,22 @@ class PipelineSpec extends SparkSpec {
     }
     val dir = tmpDir("shtable")
     Pipeline.run(spark, a.toDS(), dir, "st-base", cfg)
-    assertShingles(dir, "after run")
+    assertLive(dir, "after run")
     Pipeline.runIncremental(spark, b.toDS(), dir, "st-inc", cfg)
-    assertShingles(dir, "after runIncremental")
+    assertLive(dir, "after runIncremental")
     Pipeline.pinEpoch(spark, dir, "st-pin", cfg)
     assertEpoch(dir, cfg, "after pinEpoch")
     deltas.zipWithIndex.foreach { case (d, i) =>
       Pipeline.runIncrementalPinned(spark, d.toDS(), dir, s"st-d$i", cfg)
-      assertShingles(dir, s"after pinned ingest $i")
+      assertLive(dir, s"after pinned ingest $i")
     }
-    // maxLineageDeltas = 1 folded ep_shingles before the later ingests
-    assert(Snapshots.versions(dir, "ep_shingles").exists(v => Snapshots
-      .readManifestVersion(dir, "ep_shingles", v).runId.endsWith("-maint")))
+    // maxLineageDeltas = 1 folded entities before the later ingests: the
+    // folded version carries the column as written
+    val folds = Snapshots.versions(dir, "entities").filter(v => Snapshots
+      .readManifestVersion(dir, "entities", v).runId.endsWith("-maint"))
+    assert(folds.nonEmpty)
+    folds.foreach(v => assertShingles(
+      Snapshots.readVersion(spark, dir, "entities", v), s"lineage fold v$v"))
     // a re-pin after pinned ingests reads the appended table the same way
     Pipeline.pinEpoch(spark, dir, "st-pin2", cfg)
     assertEpoch(dir, cfg, "after a re-pin over pinned ingests")

@@ -223,7 +223,7 @@ class StreamingSpec extends SparkSpec {
 
     // batch 1 pinned the epoch; batch 2 APPENDED delta slices instead
     // of relinking globally
-    Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
+    Seq("ep_census", "ep_keys").foreach(st =>
       assert(Snapshots.isComplete(runDir, st), st))
     Seq("entities", "link_edges").foreach { st =>
       assert(Snapshots.versions(runDir, st) == Seq(1, 2), st)
@@ -252,7 +252,7 @@ class StreamingSpec extends SparkSpec {
     assert(nodes(runDir) == nodes(full))
 
     // crash between base run and pin: drop the epoch state (the base
-    // run's ep_shingles stays, as a real crash there leaves it), replay
+    // run's stages stay, as a real crash there leaves them), replay
     // an UNAPPLIED batch (its edges append and canon log rolled back) —
     // ensurePinned re-pins from the committed state
     Pipeline.EpochStages.foreach(st =>
@@ -284,7 +284,7 @@ class StreamingSpec extends SparkSpec {
       assert(Streaming.ingestBatch(base.toDS(), batchId = 0L, dir, cfg,
         epochPinned = true), s"crash before $crashAt must re-apply")
       assert(Snapshots.versions(dir, "extract") == Seq(1), crashAt)
-      Seq("ep_census", "ep_shingles", "ep_keys").foreach(st =>
+      Seq("ep_census", "ep_keys").foreach(st =>
         assert(Snapshots.isComplete(dir, st), s"$st not pinned ($crashAt)"))
       assert(nodes(dir) == nodes(fresh), crashAt)
       assert(edges(dir) == edges(fresh), crashAt)
