@@ -25,12 +25,11 @@ import java.nio.file.{Files, Path, Paths}
   * canon log (the commit record) — `run` with resume=true skips any
   * stage whose manifest exists, so a killed run resumes idempotently
   * mid-pipeline and downstream stages always read the durable parquet,
-  * never live lineage. The shingle table is a column of the entities
-  * stage: the link stage, pinEpoch and every pinned ingest read it as
-  * Linking.shingleTable of the live entities, so it cannot drift from
-  * them. After the base run, every ingest adds its slice to each
-  * growing stage, extract included, as an append snapshot. No stage is
-  * partitioned: each clusters its rows inside plain files.
+  * never live lineage; the fuzzy forms' shingle sets are a column of
+  * entities (Linking.shingleTable). After the base run, every ingest
+  * adds its slice to each growing stage, extract included, as an
+  * append snapshot. No stage is partitioned: each clusters its rows
+  * inside plain files.
   */
 object Pipeline {
 
@@ -496,16 +495,11 @@ object Pipeline {
     // its exact df, from one broadcast-filtered scan of the stored
     // shingle table (delta-bounded aggregate, map-side combined).
     // The metric lands in this ingest's ep_keys manifest; Config.
-    // maxCensusDrift turns it into a refusal (recover by running the
-    // SAME runId through runIncremental — the global relink, which
-    // bumps the epoch — then pinEpoch).
+    // maxCensusDrift turns it into a refusal that names the recovery.
+    // A slice with no fuzzy form has drift 0 (its count says so free).
     val tDrift0 = System.nanoTime()
-    // an ingest with NO fuzzy delta form has drift 0 by definition
-    // (the measured set is empty) — known for free from the slice's
-    // manifest, so the measurement jobs are skipped outright instead
-    // of aggregating empty frames
     val drift =
-      if (fuzzyRows(runDir) == 0L) 0.0
+      if (fuzzy.n == 0L) 0.0
       else censusDrift(spark, runDir, cfg, hot, deltaShingled,
         deltaExtractRows)
     val driftSec = (System.nanoTime() - tDrift0) / 1e9
@@ -813,7 +807,8 @@ object Pipeline {
     * logarithmic in the ingest count. Every stage whose count has
     * reached `maxDeltas` folds into a fresh full snapshot
     * ([[Snapshots.compact]]), and the versions the fold superseded
-    * expire.
+    * expire; any other stage expires its versions that own no file
+    * (an empty slice adds no set), so its chain stays bounded too.
     *
     * Like every writer it first rolls back an uncommitted ingest, so
     * every set it folds is committed; a dir with no committed base
@@ -829,16 +824,16 @@ object Pipeline {
     val stages = Seq("entities", "link_edges", "ep_keys")
     stages.filter(Snapshots.isComplete(runDir, _)).flatMap { st =>
       val (_, sets) = Snapshots.appendStats(Snapshots.readManifest(runDir, st))
-      if (sets < math.max(1, maxDeltas)) None
-      else {
-        Snapshots.compact(spark, runDir, st, s"$runId-maint",
-          Map("appendSetsFolded" -> sets.toString))()
-        // newest-first: an append version carries its predecessors' files
-        val live = Snapshots.readManifest(runDir, st).version
-        Snapshots.versions(runDir, st).filter(_ < live).reverse
-          .foreach(Snapshots.expire(runDir, st, _))
-        Some(st)
-      }
+      val fold = sets >= math.max(1, maxDeltas)
+      if (fold) Snapshots.compact(spark, runDir, st, s"$runId-maint",
+        Map("appendSetsFolded" -> sets.toString))()
+      // newest-first: an append version carries its predecessors' files
+      val live = Snapshots.readManifest(runDir, st).version
+      Snapshots.versions(runDir, st).filter(_ < live).reverse
+        .filter(v => fold ||
+          Snapshots.readManifestVersion(runDir, st, v).fileRows.isEmpty)
+        .foreach(Snapshots.expire(runDir, st, _))
+      Option.when(fold)(st)
     }
   }
 
@@ -1053,8 +1048,6 @@ object Pipeline {
 
   // the fuzzy rows an entities version wrote itself ([[Counted]])
   private val FuzzyRowsKey = "fuzzyRows"
-  private def fuzzyRows(runDir: String): Long =
-    Snapshots.readManifest(runDir, "entities").metrics(FuzzyRowsKey).toLong
 
   private def liveShingles(spark: SparkSession, runDir: String): DataFrame =
     Linking.shingleTable(Snapshots.read(spark, runDir, "entities"))
@@ -1068,8 +1061,7 @@ object Pipeline {
                          triples: DataFrame, resume: Boolean): Int = {
     import spark.implicits._
 
-    // Stage 2a — entity surface forms, each fuzzy form with its shingle
-    // set: the table every fuzzy consumer reads (Linking.shingleTable)
+    // Stage 2a — entity surface forms, fuzzy ones with their shingle sets
     val fuzzy = new Counted(Linking.isFuzzy)
     val ents = Snapshots.stage(spark, runDir, "entities", runId, resume,
       Map(FuzzyRowsKey -> fuzzy.n.toString))(fuzzy(
@@ -1077,9 +1069,9 @@ object Pipeline {
 
     // Stage 2b — link edges (exact-norm + LSH candidates + scoring)
     val links = Snapshots.stage(spark, runDir, "link_edges", runId, resume) {
-      Linking.linkEdges(ents, Option.when(fuzzyRows(runDir) > 0L)(
-        Linking.shingleTable(ents)), cfg.link,
-        sizeHint = Some(Snapshots.readManifest(runDir, "entities").rows))
+      val m = Snapshots.readManifest(runDir, "entities")
+      Linking.linkEdges(ents, Option.when(m.metrics(FuzzyRowsKey).toLong > 0L)(
+        Linking.shingleTable(ents)), cfg.link, sizeHint = Some(m.rows))
     }
 
     canonicalize(spark, runDir, runId, cfg, triples, ents, links, resume)

@@ -147,10 +147,8 @@ object Linking {
             obj: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     xxhash64(pred, lit("\u0000"), obj)
 
-  /** Distinct entity surface forms: (pred, obj, norm, entityId,
-    * shingles), `shingles` the [[withShingles]] set of a [[FuzzyPreds]]
-    * form, null on every other (pruned unevaluated where unselected).
-    */
+  /** Distinct entity surface forms: (pred, obj, norm, entityId, shingles);
+    * `shingles` is a [[FuzzyPreds]] form's [[withShingles]] set, else null. */
   def entities(triples: Dataset[Triple]): DataFrame =
     entitiesOf(triples.toDF())
 

@@ -520,9 +520,8 @@ object Snapshots {
 
   /** Footer-derived (row count, byte size) per *.parquet under `dir`,
     * keyed by dir-relative path — everything scan planning needs. A
-    * zero-row file (a write of no rows may leave one) is deleted with
-    * its checksum sidecar, so no manifest lists a file every read opens
-    * for nothing; an empty publish reads as [[assemble]] says.
+    * zero-row file is deleted with its checksum sidecar, so no manifest
+    * lists a file every read would open for nothing.
     *
     * Footers are opened on a bounded driver-side pool: the ~10 ms
     * per-open FS overhead is pure latency — serial reads cost seconds

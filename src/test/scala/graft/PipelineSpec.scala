@@ -784,21 +784,25 @@ class PipelineSpec extends SparkSpec {
     // start folds the committed append sets and expires what it
     // superseded, so at most [folded full, the latest ingest's append]
     // remain, with one append set — while the unmaintained chain
-    // accumulated base + 3 append versions. Asks forms are not fuzzy,
-    // so every ep_keys slice is empty: it lists no file and adds no
-    // append set, on either chain, and leaves nothing to fold
-    Seq(inc, incN).foreach(d => assert(
-      Snapshots.appendStats(Snapshots.readManifest(d, "ep_keys")) == (0L, 0), d))
-    Seq("entities", "link_edges").foreach { st =>
+    // accumulated base + 3 append versions
+    Seq("entities", "link_edges", "ep_keys").foreach { st =>
       val vs = Snapshots.versions(inc, st)
       assert(vs.length <= 2, s"$st lineage not consolidated: $vs")
       assert(Snapshots.versions(incN, st).length == 4, st)
+      assert(Snapshots.appendStats(Snapshots.readManifest(inc, st))._2 <= 1, st)
+    }
+    Seq("entities", "link_edges").foreach { st =>
+      val vs = Snapshots.versions(inc, st)
       val live = Snapshots.readManifestVersion(inc, st, vs.head)
       if (vs.length == 2)
         assert(live.metrics.get("compacted").contains("true"), st)
-      assert(Snapshots.appendStats(Snapshots.readManifest(inc, st))._2 <= 1, st)
       assert(Snapshots.appendStats(Snapshots.readManifest(incN, st))._2 >= 2, st)
     }
+    // asks forms are not fuzzy, so every ep_keys slice is empty: it
+    // lists no file and adds no append set, on either chain, so nothing
+    // folds it; the maintained chain expires its file-less versions
+    Seq(inc, incN).foreach(d => assert(
+      Snapshots.appendStats(Snapshots.readManifest(d, "ep_keys")) == (0L, 0), d))
     // identical graphs and result counts on both chains
     assert(nodeSet(inc) == nodeSet(incN))
     assert(edgeSet(inc) == edgeSet(incN))
@@ -825,11 +829,15 @@ class PipelineSpec extends SparkSpec {
       .foreach(Snapshots.rollback(inc, _, "lc-crashed"))
     val folded = Pipeline.compactLineage(spark, inc, "lc-d3", 1)
     assert(folded.toSet == Set("entities", "link_edges"), folded)
-    ("extract" +: folded).foreach { st =>
+    Seq("extract", "entities", "link_edges", "ep_keys").foreach { st =>
       assert(!Snapshots.versions(inc, st).exists(v => Snapshots
         .readManifestVersion(inc, st, v).runId == "lc-crashed"),
         s"$st still holds the crashed slice")
     }
+    // ep_keys, unfolded, kept only its live version: every older one
+    // owned no file
+    assert(Snapshots.versions(inc, "ep_keys") ==
+      Seq(Snapshots.readManifest(inc, "ep_keys").version))
     assert(Snapshots.readManifest(inc, "entities").rows == rN.entities)
     assert(Snapshots.readManifest(inc, "link_edges").rows == rN.linkEdges)
     assert(nodeSet(inc) == nodeSet(incN))
